@@ -1,4 +1,4 @@
-"""Trace assembly: spans -> one TraceSummary row per trace_id.
+"""Trace assembly: spans -> one TraceSummary row per trace.
 
 Re-expresses the reference's incremental TraceMetadata update
 (/root/reference/src/storage/memory.rs:139-164, summary emit 230-269; same
@@ -10,11 +10,16 @@ Heavy-hitter skew (1% of traces with 20k spans, scripts/load_simulation.rs:52-55
 is handled two ways, selectable:
 
 * default: rely on map-side partial aggregation — each input split emits at
-  most one partial row per trace_id, so a 20k-span trace costs its reducer
+  most one partial row per trace, so a 20k-span trace costs its reducer
   O(#splits), not O(#spans);
 * ``salt_buckets=N``: explicit two-phase salted aggregation
-  (groupBy(trace_id, salt) -> groupBy(trace_id)) for the collect_set-bearing
-  plan, where partial state is not reduced map-side for high-cardinality sets.
+  (groupBy(key, salt) -> groupBy(key)) for the collect_set-bearing plan,
+  where partial state is not reduced map-side for high-cardinality sets.
+
+The group key is the 128-bit trace id as the int64 pair (trace_k1,
+trace_k2) both parsers emit: 16 fixed bytes, no string hashing in the
+shuffle. Every TraceSummary producer (batch, salted, streaming session
+windows) builds its rows from :func:`summary_aggs` + :func:`summary_columns`.
 
 Root-span election is deterministic: the root (parent IS NULL) with the
 smallest (timestamp_ms, span_id) wins — the reference is order-dependent here
@@ -24,8 +29,12 @@ and encode it via min(struct(ts, span_id)).
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from otel_tail_sampler_spark.operators.parser import TRACE_KEY, hex_from_keys
 
 TRACE_SUMMARY_COLS = [
     "trace_id",
@@ -55,33 +64,55 @@ def _root_key() -> Column:
     )
 
 
-def _first_span_key() -> Column:
-    # service_name comes from the trace's first span (memory.rs:250-254)
-    return F.struct(
-        F.col("timestamp_ms").alias("ts"),
-        F.col("span_id").alias("sid"),
-        F.col("service_name").alias("svc"),
-    )
+def summary_aggs(svc: Column, op: Column) -> list[Column]:
+    """The TraceSummary aggregates over a span frame, for any grouping that
+    includes the trace key. ``svc``/``op`` are the service and operation
+    name columns (the streaming job passes undecoded code-point CSVs).
+
+    service_name comes from the trace's first span (memory.rs:250-254):
+    ``_first`` is the (ts, span_id)-min struct carrying it; ``_root`` is the
+    root election. Both are resolved by :func:`summary_columns`."""
+    return [
+        F.min(
+            F.struct(
+                F.col("timestamp_ms").alias("ts"),
+                F.col("span_id").alias("sid"),
+                svc.alias("svc"),
+            )
+        ).alias("_first"),
+        F.count(F.lit(1)).alias("span_count"),
+        F.max(_err()).cast("boolean").alias("has_error"),
+        F.sum(_err()).alias("error_count"),
+        F.max("duration_ms").alias("max_duration_ms"),
+        F.min("timestamp_ms").alias("min_timestamp_ms"),
+        F.max("timestamp_ms").alias("max_timestamp_ms"),
+        F.array_sort(F.collect_set(op)).alias("operations"),
+        F.min(_root_key()).alias("_root"),
+    ]
 
 
-def _group_keys(spans: DataFrame) -> list[str]:
-    """Prefer the two-int64 trace key (16 fixed bytes, no string hashing in
-    the shuffle) when the parser provided it; fall back to the hex string."""
-    if "trace_k1" in spans.columns:
-        return ["trace_k1", "trace_k2"]
-    return ["trace_id"]
-
-
-def _with_trace_id(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Derive the canonical hex trace_id per TRACE (post-agg, O(traces) not
-    O(spans)) when grouping ran on the int64 key pair."""
-    if keys == ["trace_id"]:
-        return df
-    from otel_tail_sampler_spark.operators.parser import hex_from_keys
-
-    return df.withColumn(
-        "trace_id", hex_from_keys(F.col("trace_k1"), F.col("trace_k2"))
-    )
+def summary_columns(
+    decode: Callable[[Column], Column] | None = None,
+) -> list[Column | str]:
+    """Final TraceSummary projection over :func:`summary_aggs`' output. The
+    hex trace_id is derived here, once per TRACE (O(traces), not O(spans)).
+    ``decode`` maps the aggregated name payloads to strings (applied after
+    the aggregation, once per distinct value); the operation set is
+    re-sorted on the decoded strings."""
+    svc, ops = F.col("_first.svc"), F.col("operations")
+    if decode is not None:
+        # sort the DECODED strings: CSV order and decoded order differ
+        # ("100" < "65" as strings)
+        svc, ops = decode(svc), F.array_sort(F.transform(ops, decode))
+    return [
+        *TRACE_KEY,
+        hex_from_keys(F.col("trace_k1"), F.col("trace_k2")).alias("trace_id"),
+        svc.alias("service_name"),
+        "span_count", "has_error", "error_count",
+        "max_duration_ms", "min_timestamp_ms", "max_timestamp_ms",
+        ops.alias("operations"),
+        F.col("_root.sid").alias("root_span_id"),
+    ]
 
 
 def detect_salt_buckets(
@@ -102,10 +133,9 @@ def detect_salt_buckets(
     """
     import math
 
-    keys = _group_keys(spans)
     top = (
         spans.sample(fraction=sample_fraction, seed=seed)
-        .groupBy(*keys)
+        .groupBy(*TRACE_KEY)
         .agg(F.count(F.lit(1)).alias("c"))
         .agg(F.max("c"))
         .collect()[0][0]
@@ -121,91 +151,49 @@ def detect_salt_buckets(
 def assemble_traces(
     spans: DataFrame, salt_buckets: int | str | None = None
 ) -> DataFrame:
-    """spans -> TraceSummary (one row per trace_id). A1 of SURVEY.md §2.4.
+    """spans -> TraceSummary (one row per trace). A1 of SURVEY.md §2.4.
 
     ``salt_buckets``: None = single two-phase hash agg (map-side combine),
     an int = explicit salted two-phase plan, 'auto' = probe the key skew
     (detect_salt_buckets) and salt only when a heavy hitter is found.
     """
-    keys = _group_keys(spans)
     if salt_buckets == "auto":
         salt_buckets = detect_salt_buckets(spans)
     if salt_buckets and salt_buckets > 1:
-        return _assemble_salted(spans, salt_buckets, keys)
-    agg = (
-        spans.groupBy(*keys)
-        .agg(
-            F.min(_first_span_key()).alias("_first"),
-            F.count(F.lit(1)).alias("span_count"),
-            F.max(_err()).cast("boolean").alias("has_error"),
-            F.sum(_err()).alias("error_count"),
-            F.max("duration_ms").alias("max_duration_ms"),
-            F.min("timestamp_ms").alias("min_timestamp_ms"),
-            F.max("timestamp_ms").alias("max_timestamp_ms"),
-            F.array_sort(F.collect_set("operation_name")).alias("operations"),
-            F.min(_root_key()).alias("_root"),
-        )
-    )
-    return _with_trace_id(agg, keys).select(
-        *keys if keys != ["trace_id"] else [],
-        "trace_id",
-        F.col("_first.svc").alias("service_name"),
-        "span_count",
-        "has_error",
-        "error_count",
-        "max_duration_ms",
-        "min_timestamp_ms",
-        "max_timestamp_ms",
-        "operations",
-        F.col("_root.sid").alias("root_span_id"),
+        return _assemble_salted(spans, salt_buckets)
+    return (
+        spans.groupBy(*TRACE_KEY)
+        .agg(*summary_aggs(F.col("service_name"), F.col("operation_name")))
+        .select(*summary_columns())
     )
 
 
-def _assemble_salted(spans: DataFrame, salt_buckets: int, keys: list[str] | None = None) -> DataFrame:
-    """Explicit two-phase salted aggregation for heavy-hitter trace_ids.
+def _assemble_salted(spans: DataFrame, salt_buckets: int) -> DataFrame:
+    """Explicit two-phase salted aggregation for heavy-hitter traces.
 
-    Phase 1 groups by (trace_id, salt) — a 20k-span trace is split across
-    ``salt_buckets`` reducers; phase 2 merges the <=salt_buckets partial rows
-    per trace. Algebra: min/max/sum merge trivially; sets merge via
-    flatten+array_distinct; root/first elections merge via min of the partial
-    struct minima.
+    Phase 1 runs :func:`summary_aggs` per (trace key, salt) — a 20k-span
+    trace is split across ``salt_buckets`` reducers; phase 2 merges the
+    <=salt_buckets partial rows per trace. Algebra: min/max/sum merge
+    trivially; sets merge via flatten+array_distinct; root/first elections
+    merge via min of the partial struct minima.
     """
-    keys = keys or _group_keys(spans)
     salted = spans.withColumn(
         "_salt", F.pmod(F.xxhash64("span_id"), F.lit(salt_buckets))
     )
-    partial = salted.groupBy(*keys, "_salt").agg(
-        F.min(_first_span_key()).alias("_first"),
-        F.count(F.lit(1)).alias("_cnt"),
-        F.sum(_err()).alias("_errs"),
-        F.max("duration_ms").alias("_maxd"),
-        F.min("timestamp_ms").alias("_mints"),
-        F.max("timestamp_ms").alias("_maxts"),
-        F.collect_set("operation_name").alias("_ops"),
-        F.min(_root_key()).alias("_root"),
+    partial = salted.groupBy(*TRACE_KEY, "_salt").agg(
+        *summary_aggs(F.col("service_name"), F.col("operation_name"))
     )
-    final = partial.groupBy(*keys).agg(
+    final = partial.groupBy(*TRACE_KEY).agg(
         F.min("_first").alias("_first"),
-        F.sum("_cnt").alias("span_count"),
-        F.sum("_errs").alias("error_count"),
-        F.max("_maxd").alias("max_duration_ms"),
-        F.min("_mints").alias("min_timestamp_ms"),
-        F.max("_maxts").alias("max_timestamp_ms"),
+        F.sum("span_count").alias("span_count"),
+        F.max("has_error").alias("has_error"),
+        F.sum("error_count").alias("error_count"),
+        F.max("max_duration_ms").alias("max_duration_ms"),
+        F.min("min_timestamp_ms").alias("min_timestamp_ms"),
+        F.max("max_timestamp_ms").alias("max_timestamp_ms"),
         F.array_sort(
-            F.array_distinct(F.flatten(F.collect_list("_ops")))
+            F.array_distinct(F.flatten(F.collect_list("operations")))
         ).alias("operations"),
         F.min("_root").alias("_root"),
     )
-    return _with_trace_id(final, keys).select(
-        *keys if keys != ["trace_id"] else [],
-        "trace_id",
-        F.col("_first.svc").alias("service_name"),
-        "span_count",
-        (F.col("error_count") > 0).alias("has_error"),
-        "error_count",
-        "max_duration_ms",
-        "min_timestamp_ms",
-        "max_timestamp_ms",
-        "operations",
-        F.col("_root.sid").alias("root_span_id"),
-    )
+    return final.select(*summary_columns())

@@ -5,19 +5,22 @@ hex-encoded ids, nanos->ms arithmetic, default service name) for the tokenized
 input of FIXTURES.md §1.
 
 * ``parse_spans_jvm`` — pure whole-stage-codegen expressions (slot math,
-  hex/lpad, char() payload decode). The pipeline DEFAULT since round 4:
-  with it the flagship DAG has ZERO Python stages. Measured ~5x faster
-  than the Arrow kernel on bench0.1 (1.26s vs 6.30s full decode of 3.08M
-  spans) because the corpus never crosses the JVM<->Python socket — the
-  socket crossing, not the numpy math, was the Arrow stage's cost.
+  hex/lpad, char() payload decode). The only parser of the batch job
+  (plans.pipeline.run_pipeline, which the resumable job also runs) and of
+  the streaming job; the batch DAG has ZERO Python stages. Measured ~5x
+  faster than the Arrow kernel on bench0.1 (1.26s vs 6.30s full decode of
+  3.08M spans) because the corpus never crosses the JVM<->Python socket.
 * ``parse_spans`` — the Arrow-vectorized numpy kernel via
   ``DataFrame.mapInArrow``: every field extracted with gather/slice math
   on the flattened list buffer, no per-row Python. Kept as the
-  equality-tested reference implementation and the template for decodes
-  too irregular for SQL expressions.
+  independently written reference decode (tests/test_parser.py checks both
+  parsers field by field against the generator's oracle) and as the parse
+  stage that bench.py times and the ``parse_spans`` oracle query runs.
 
 Both are narrow (no shuffle): Spark pipelines scan -> parse inside one
-task, so they scale linearly with input splits at any table size.
+task, so they scale linearly with input splits at any table size. Both
+emit the trace key pair (trace_k1, trace_k2): the only trace key that
+assembly groups on and routing joins on.
 """
 
 from __future__ import annotations
@@ -51,6 +54,9 @@ SPAN_FIELDS = [
     ("operation_name", pa.string()),
     ("parse_ok", pa.bool_()),
 ]
+
+# the only trace key downstream operators group and join on
+TRACE_KEY = ["trace_k1", "trace_k2"]
 
 PARSED_DDL = (
     "trace_k1 long, trace_k2 long, "
@@ -297,14 +303,6 @@ def parse_ok_expr(tokens: Column) -> Column:
     )
 
 
-def trace_id_expr(tokens: Column) -> Column:
-    """JVM-side trace_id extraction (hex of words 0-3) — the routing-side
-    fast path: the wide token column never crosses the Arrow boundary just to
-    recover its join key. Whole-stage-codegen'd; null for malformed rows."""
-    tid = F.concat(*[_hex_word(tokens, i) for i in range(1, 5)])
-    return F.when(parse_ok_expr(tokens), tid)
-
-
 def trace_key_exprs(tokens: Column) -> tuple[Column, Column]:
     """JVM-side 128-bit trace key as two int64 — pure integer ops, no string
     allocation per span (the hot-path join key)."""
@@ -355,10 +353,11 @@ def name_csv_exprs(tokens: Column) -> tuple[Column, Column]:
 
 def csv_name_expr(c: Column) -> Column:
     """Inverse of :func:`name_csv_exprs`: code-point CSV -> string.
-    Empty CSV decodes to "" (split yields [""], char(NULL) drops in
-    array_join)."""
+    Empty CSV (an empty name) decodes to "": split yields [""], which
+    ``try_cast`` turns into NULL instead of raising CAST_INVALID_INPUT
+    under ANSI mode, and array_join skips the resulting char(NULL)."""
     return F.array_join(
-        F.transform(F.split(c, ","), lambda x: F.char(x.cast("int"))), ""
+        F.transform(F.split(c, ","), lambda x: F.char(x.try_cast("int"))), ""
     )
 
 
@@ -378,16 +377,6 @@ def with_routing_key(tokenized: DataFrame) -> DataFrame:
             "trace_k1": _i64_word(F.col("tokens"), 0),
             "trace_k2": _i64_word(F.col("tokens"), 2),
             "parse_ok": parse_ok_expr(F.col("tokens")),
-        }
-    )
-
-
-def spans_with_flags(parsed: DataFrame) -> DataFrame:
-    """Cheap derived predicates used throughout (P2/P3 of SURVEY.md §2.2)."""
-    return parsed.withColumns(
-        {
-            "is_error": F.col("status_code") == F.lit(2),
-            "is_root": F.col("parent_span_id").isNull(),
         }
     )
 

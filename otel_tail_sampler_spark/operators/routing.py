@@ -4,17 +4,18 @@ Re-expresses the evaluator's export flow (/root/reference/src/sampling/
 evaluator.rs:241-336 — fetch kept traces' spans, export, account) as one
 shuffle join + a single-pass partitioned write:
 
-    routed = spans JOIN decided(trace_id, decision, decision_policy)
+    routed = spans JOIN decided(trace_k1, trace_k2, decision, decision_policy)
     write routed partitioned by decision  (keep / drop / overflow in ONE pass)
 
 The join is the 'metadata-first' pattern (docs/ARCHITECTURE_V2_ICEBERG.md:27-33):
 the decision table carries ~50 bytes/trace; the wide token payload stays in the
 span table and is only moved once. At scale the join shuffles both sides by
-trace_id — the SAME key the assembly aggregation shuffled on, so with AQE the
+the trace key — the SAME key the assembly aggregation shuffled on, so with AQE the
 exchange is reused; heavy-hitter traces are split by AQE skew-join.
 
 Metrics (A9, src/observability/metrics.rs:20-58): per-(policy, decision) trace
-counts and per-sink routed-row counts, emitted as DataFrames — the per-sink
+counts as a DataFrame; per-sink routed-row counts are observed on the sink
+write itself (plans.pipeline.run_and_write) — together the per-sink
 aggregate-count parity artifact of the north rule.
 """
 
@@ -23,8 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.operators.parser import TRACE_KEY
+
 DECISION_COLS = ["trace_id", "decision", "decision_policy"]
-SINKS = ("keep", "drop", "overflow")
 DROP_SINK = "drop"
 DROP_POLICY = "no_policy_matched"
 
@@ -32,10 +34,12 @@ DROP_POLICY = "no_policy_matched"
 def route_spans(spans: DataFrame, decided: DataFrame) -> DataFrame:
     """Attach (decision, decision_policy) to every span row of the input.
 
-    ``spans`` must carry trace_id (parser output, tokens preserved). A left
-    join keeps malformed rows (parse_ok=false, null trace_id) in the stream:
-    they route to the ``malformed`` sink instead of aborting or vanishing —
-    one scan, one join, no separate quarantine pass.
+    ``spans`` must carry the trace key pair and ``parse_ok`` (parser output
+    or ``with_routing_key``, tokens preserved); ``decided`` carries the key
+    pair plus DECISION_COLS. A left join keeps malformed rows
+    (parse_ok=false) in the stream: they route to the ``malformed`` sink
+    instead of aborting or vanishing — one scan, one join, no separate
+    quarantine pass.
     """
     # Broadcast only the NON-DEFAULT decisions: 'drop'/'no_policy_matched' is
     # the overwhelming majority at real sampling rates, so the join build side
@@ -52,51 +56,31 @@ def route_spans(spans: DataFrame, decided: DataFrame) -> DataFrame:
     # Operators can pin either behavior via that threshold; tests/test_plans.py
     # asserts the broadcast shape at sampled-keep sizes.
     #
-    # Join on the int64 trace-key pair when both sides carry it (16-byte
-    # fixed keys, no per-span string hashing); the hex trace_id then comes
-    # from the build side for matched (non-drop) rows only.
-    int_keys = "trace_k1" in spans.columns and "trace_k1" in decided.columns
-    join_keys = ["trace_k1", "trace_k2"] if int_keys else ["trace_id"]
-    cols = join_keys + [
-        c
-        for c in DECISION_COLS
-        if c not in join_keys and not (c in spans.columns and c != "trace_id")
-    ]
-    if "trace_id" in spans.columns and "trace_id" not in join_keys:
-        cols = [c for c in cols if c != "trace_id"]
+    # The join key is the int64 trace-key pair (16-byte fixed keys, no
+    # per-span string hashing); when the spans carry no hex trace_id it
+    # comes from the build side for matched (non-drop) rows only.
+    cols = TRACE_KEY + [c for c in DECISION_COLS if c not in spans.columns]
     interesting = decided.select(*cols).filter(
         (F.col("decision") != DROP_SINK)
         | (F.col("decision_policy") != DROP_POLICY)
     )
-    out = spans.join(interesting, join_keys, "left")
-    bad = (
-        ~F.col("parse_ok")
-        if "parse_ok" in spans.columns
-        else F.col("decision").isNull()
+    bad = ~F.col("parse_ok")
+    return spans.join(interesting, TRACE_KEY, "left").withColumns(
+        {
+            "decision": F.when(bad, F.lit("malformed")).otherwise(
+                F.coalesce(F.col("decision"), F.lit(DROP_SINK))
+            ),
+            "decision_policy": F.when(bad, F.lit("parse_error")).otherwise(
+                F.coalesce(F.col("decision_policy"), F.lit(DROP_POLICY))
+            ),
+            # with_routing_key's keys are UNgated: a malformed row whose
+            # junk key slots collide with a real trace would otherwise
+            # surface that trace's hex id from the build side
+            "trace_id": F.when(bad, F.lit(None).cast("string")).otherwise(
+                F.col("trace_id")
+            ),
+        }
     )
-    override = {
-        "decision": F.when(bad, F.lit("malformed")).otherwise(
-            F.coalesce(F.col("decision"), F.lit(DROP_SINK))
-        ),
-        "decision_policy": F.when(bad, F.lit("parse_error")).otherwise(
-            F.coalesce(F.col("decision_policy"), F.lit(DROP_POLICY))
-        ),
-    }
-    if "trace_id" in out.columns and "trace_id" not in join_keys:
-        # spans carry UNgated int keys (with_routing_key): a malformed row
-        # whose junk key slots collide with a real trace would otherwise
-        # surface that trace's hex id from the build side
-        override["trace_id"] = F.when(bad, F.lit(None).cast("string")).otherwise(
-            F.col("trace_id")
-        )
-    return out.withColumns(override)
-
-
-def route_spans_semi(spans: DataFrame, decided: DataFrame, sink: str) -> DataFrame:
-    """Left-semi variant (J1): only the rows for one sink, no added columns —
-    what you use when only the keep stream is exported (evaluator.rs:244)."""
-    ids = decided.filter(F.col("decision") == sink).select("trace_id")
-    return spans.join(ids, "trace_id", "semi")
 
 
 def decision_metrics(decided: DataFrame) -> DataFrame:
@@ -106,13 +90,6 @@ def decision_metrics(decided: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("trace_count"))
         .withColumnRenamed("decision", "sink")
     )
-
-
-def sink_row_metrics(routed: DataFrame) -> DataFrame:
-    """Per-sink routed span-row counts (the routed-row count parity metric)."""
-    return routed.groupBy("decision").agg(
-        F.count(F.lit(1)).alias("row_count")
-    ).withColumnRenamed("decision", "sink")
 
 
 def write_routed(

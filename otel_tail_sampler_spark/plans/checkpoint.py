@@ -7,16 +7,19 @@ reference's analog is Redis exported-keys dedup across restarts
 native per-partition resume (SURVEY.md §7.4.5), so we build it from
 idempotent primitives:
 
-* the unit of work is a deterministic LOGICAL bucket
-  ``pmod(xxhash64(trace_id), n_buckets)`` — trace-aligned, so a bucket is
-  decidable in isolation (all spans of a trace share its bucket; never bucket
-  by input split, which would tear traces apart);
+* the unit of work is a deterministic LOGICAL bucket hashed from the trace
+  key (``bucket_col``) — trace-aligned, so a bucket is decidable in
+  isolation (all spans of a trace share its bucket; never bucket by input
+  split, which would tear traces apart);
 * sinks are written ``partitionBy(bucket, decision)`` with dynamic partition
   overwrite -> re-writing a bucket is idempotent;
 * the manifest (parquet under ``_checkpoint/``) gains one row per completed
   bucket AFTER its sink data is committed; a resumed run reads the manifest
-  and filters completed buckets out right after the parse stage, so their
-  assembly/join cost is never paid again.
+  and filters completed buckets out of the scan, BEFORE the parse, so their
+  parse/assembly/join cost is never paid again;
+* the buckets still to do run through the flagship DAG itself
+  (plans.pipeline.run_pipeline over the bucket-filtered scan): the
+  resumable job and the benchmarked job are one program.
 
 Crash window: between sink commit and manifest append a bucket may be
 rewritten on resume — harmless by idempotence (exactly the Iceberg
@@ -29,26 +32,26 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from otel_tail_sampler_spark.operators.assembly import assemble_traces
-from otel_tail_sampler_spark.operators.parser import parse_spans
-from otel_tail_sampler_spark.operators.policies import SamplerConfig, decide
-from otel_tail_sampler_spark.operators.routing import route_spans
-from otel_tail_sampler_spark.plans.pipeline import read_tokenized
+from otel_tail_sampler_spark.operators.parser import trace_key_exprs
+from otel_tail_sampler_spark.operators.policies import SamplerConfig
+from otel_tail_sampler_spark.plans.pipeline import read_tokenized, run_pipeline
 
 MANIFEST_SCHEMA = "bucket int, status string, rows long, committed_at_ms long"
 
 
 def bucket_col(n_buckets: int):
-    # trace-aligned bucket from the int64 key pair when present; malformed
-    # rows (null key) fall back to doc_id so they land in a deterministic
-    # bucket instead of all colliding in one
+    # trace-aligned bucket from the gated int64 key pair, computed from the
+    # raw tokens (no parse needed); malformed rows (null key) fall back to
+    # doc_id so they land in a deterministic bucket instead of all
+    # colliding in one
+    k1, k2 = trace_key_exprs(F.col("tokens"))
     return F.pmod(
         F.xxhash64(
-            F.coalesce(F.col("trace_k1").cast("string"), F.col("doc_id")),
-            F.coalesce(F.col("trace_k2").cast("string"), F.lit("")),
+            F.coalesce(k1.cast("string"), F.col("doc_id")),
+            F.coalesce(k2.cast("string"), F.lit("")),
         ),
         F.lit(n_buckets),
     ).cast("int")
@@ -80,7 +83,6 @@ def run_resumable(
     """One resumable pass: process all not-yet-committed buckets, commit
     sinks, then append the checkpoint manifest. Re-running after any failure
     completes exactly the remaining buckets."""
-    cfg = cfg or SamplerConfig()
     ckpt_dir = os.path.join(out_dir, "_checkpoint")
     routed_dir = os.path.join(out_dir, "routed")
     done = read_manifest(spark, ckpt_dir)
@@ -88,27 +90,12 @@ def run_resumable(
     if not remaining:
         return ResumableResult([], sorted(done), {})
 
-    spans = parse_spans(read_tokenized(spark, input_path)).withColumn(
+    tokenized = read_tokenized(spark, input_path).withColumn(
         "bucket", bucket_col(n_buckets)
     )
-    if done:  # prune completed buckets BEFORE any shuffle
-        spans = spans.filter(~F.col("bucket").isin([int(b) for b in done]))
-
-    good = spans.filter(F.col("parse_ok")).drop("tokens", "n_tok")
-    traces = assemble_traces(good.drop("bucket"))
-    if force_rules:
-        from otel_tail_sampler_spark.operators.force_rules import apply_force_rules
-
-        traces = apply_force_rules(traces, good, force_rules)
-    decided = decide(traces, cfg)
-    # persist ONLY the slim decision projection (mirrors pipeline.py): the
-    # route join build side and the trace count reuse it without recomputing
-    # parse + assembly
-    slim_cols = ["trace_id", "decision", "decision_policy"]
-    if "trace_k1" in decided.columns:
-        slim_cols = ["trace_k1", "trace_k2"] + slim_cols
-    decisions = decided.select(*slim_cols).persist()
-    routed = route_spans(spans, decisions)
+    if done:  # prune completed buckets BEFORE the parse and any shuffle
+        tokenized = tokenized.filter(~F.col("bucket").isin(sorted(done)))
+    res = run_pipeline(spark, tokenized, cfg, force_rules=force_rules)
 
     # idempotent sink commit FIRST — the single full pass over the data.
     # Dynamic partition overwrite is the correctness contract here: with
@@ -123,11 +110,13 @@ def run_resumable(
     spark.conf.set(ow_key, "dynamic")
     try:
         (
-            routed.write.mode("overwrite")
+            res.routed.write.mode("overwrite")
             .partitionBy("bucket", "decision")
             .parquet(routed_dir)
         )
+        n_traces = res.decisions.count()  # persisted slim: no recompute
     finally:
+        res.decisions.unpersist()
         if prev_ow is not None:
             spark.conf.set(ow_key, prev_ow)
         else:
@@ -139,7 +128,7 @@ def run_resumable(
     # this run's buckets) — no second pass over the input
     counts = (
         spark.read.parquet(routed_dir)
-        .filter(F.col("bucket").isin([int(b) for b in remaining]))
+        .filter(F.col("bucket").isin(remaining))
         .groupBy("bucket", "decision")
         .agg(F.count(F.lit(1)).alias("rows"))
         .collect()
@@ -152,8 +141,7 @@ def run_resumable(
         )
         per_bucket[r["bucket"]] = per_bucket.get(r["bucket"], 0) + r["rows"]
     stage_metrics["input_rows"] = sum(per_bucket.values())
-    stage_metrics["traces"] = decisions.count()
-    decisions.unpersist()
+    stage_metrics["traces"] = n_traces
 
     # manifest append AFTER data commit
     now_ms = int(time.time() * 1000)

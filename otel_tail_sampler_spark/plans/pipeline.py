@@ -2,15 +2,17 @@
 
 Stage layout (SURVEY.md §3.2 re-expression):
 
-    spans   = read(tokenized).parse()                      # narrow
-    traces  = assemble_traces(spans)                       # shuffle(trace_id)
+    spans   = read(tokenized).parse()                      # narrow, JVM only
+    traces  = assemble_traces(spans)                       # shuffle(trace key)
     decided = decide(traces, cfg)  [+ force rules]         # narrow
-    routed  = spans  JOIN  decided  ON trace_id            # shuffle(trace_id)
+    routed  = spans  JOIN  decided  ON (trace_k1, trace_k2) # broadcast/shuffle
     metrics = per-policy / per-sink counts                 # tiny agg
     write keep/drop/overflow + metrics                     # partitioned write
 
 Replaces the reference's evaluator loop (/root/reference/src/sampling/
-evaluator.rs:150-336) with one deterministic DAG.
+evaluator.rs:150-336) with one deterministic DAG. ``run_pipeline`` is the
+only builder of that DAG: ``run_and_write`` writes it, and
+plans.checkpoint.run_resumable runs it over the not-yet-committed buckets.
 """
 
 from __future__ import annotations
@@ -23,15 +25,15 @@ from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.operators.assembly import assemble_traces
 from otel_tail_sampler_spark.operators.parser import (
-    parse_spans,
+    TRACE_KEY,
     parse_spans_jvm,
     with_routing_key,
 )
 from otel_tail_sampler_spark.operators.policies import SamplerConfig, decide
 from otel_tail_sampler_spark.operators.routing import (
+    DECISION_COLS,
     decision_metrics,
     route_spans,
-    sink_row_metrics,
     write_routed,
 )
 
@@ -41,7 +43,7 @@ class PipelineResult:
     spans: DataFrame
     traces: DataFrame
     decided: DataFrame  # full TraceSummary + policy flags (lazy, unpersisted)
-    decisions: DataFrame  # slim (trace_id, decision, decision_policy), persisted
+    decisions: DataFrame  # slim (trace key, decision, policy), persisted
     routed: DataFrame
 
 
@@ -72,14 +74,12 @@ def run_pipeline(
     input_path: str | DataFrame,
     cfg: SamplerConfig | None = None,
     force_rules: list[dict] | None = None,
-    salt_buckets: int | None = None,
-    parser: str = "jvm",
+    salt_buckets: int | str | None = None,
 ) -> PipelineResult:
-    """``parser`` selects the decode stage: ``"jvm"`` (default) runs the
-    whole-stage-codegen expression parser — the flagship DAG then has ZERO
-    Python stages — while ``"arrow"`` keeps the vectorized numpy kernel
-    (the two are equality-tested; measured on bench0.1 the JVM decode is
-    ~5x faster because the corpus never crosses the JVM<->Python socket)."""
+    """Build the flagship DAG over ``input_path`` (a path or a tokenized
+    DataFrame). The decode is the whole-stage-codegen expression parser,
+    so the DAG has ZERO Python stages. ``decisions`` is persisted: the
+    caller owns it and unpersists it once the sinks are written."""
     cfg = cfg or SamplerConfig()
     tokenized = (
         input_path
@@ -92,13 +92,8 @@ def run_pipeline(
     #    into nothing (dropped inside the parse projection)
     #  * routing side: trace keys only, tokens pass through untouched
     # This is the metadata-first split — the wide payload only ever moves
-    # through the broadcast-joined route stage. With parser="arrow" the
-    # pruning is explicit (mapInArrow is opaque to Catalyst); the JVM
-    # parser is ordinary expressions Catalyst prunes itself.
-    if parser == "arrow":
-        full = parse_spans(tokenized.select("tokens"), keep_tokens=False)
-    else:
-        full = parse_spans_jvm(tokenized.select("tokens"), keep_tokens=False)
+    # through the route stage; Catalyst prunes each side's decode itself.
+    full = parse_spans_jvm(tokenized.select("tokens"), keep_tokens=False)
     spans = with_routing_key(tokenized)  # pure JVM: no Arrow roundtrip
 
     # malformed rows (parse_ok=false) never reach assembly; they route to the
@@ -117,10 +112,7 @@ def run_pipeline(
     # struct-mins, string decode) that Catalyst otherwise prunes to the 3
     # aggregates the decision needs. Slim = megabytes at any trace count,
     # reused by the route join build side and the metrics action.
-    slim_cols = ["trace_id", "decision", "decision_policy"]
-    if "trace_k1" in decided.columns:
-        slim_cols = ["trace_k1", "trace_k2"] + slim_cols
-    decisions = decided.select(*slim_cols).persist()
+    decisions = decided.select(*TRACE_KEY, *DECISION_COLS).persist()
     routed = route_spans(spans, decisions)
     return PipelineResult(
         spans=spans, traces=traces, decided=decided, decisions=decisions,
@@ -151,41 +143,46 @@ def run_and_write(
 
     t0 = time.time()
     res = run_pipeline(spark, input_path, cfg, **kw)
-    obs = Observation()
-    routed_obs = res.routed.observe(
-        obs,
-        F.count(F.lit(1)).alias("routed_rows"),
-        *[
-            F.sum((F.col("decision") == s).cast("long")).alias(f"{s}_rows")
-            for s in SINK_NAMES
-        ],
-    )
-    write_routed(routed_obs, os.path.join(out_dir, "routed"), day_partition=day_partition)
-    counts = obs.get  # available after the write action
+    try:
+        obs = Observation()
+        routed_obs = res.routed.observe(
+            obs,
+            F.count(F.lit(1)).alias("routed_rows"),
+            *[
+                F.sum((F.col("decision") == s).cast("long")).alias(f"{s}_rows")
+                for s in SINK_NAMES
+            ],
+        )
+        write_routed(routed_obs, os.path.join(out_dir, "routed"), day_partition=day_partition)
+        counts = obs.get  # available after the write action
 
-    dm = decision_metrics(res.decisions)
-    dm.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "metrics_decisions"))
-    rm = spark.createDataFrame(
-        [(s, int(counts[f"{s}_rows"] or 0)) for s in SINK_NAMES
-         if (counts[f"{s}_rows"] or 0) > 0],
-        "sink string, row_count long",
-    )
-    rm.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "metrics_rows"))
-    # exported manifest (J2 dedup source on re-runs; replaces Redis
-    # exported:{trace_id} keys, evaluator.rs:358-401)
-    (
-        res.decisions.filter(F.col("decision") == "keep")
-        .select("trace_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "exported"))
-    )
-    run_rows = [
-        ("input_rows", int(counts["routed_rows"] or 0)),
-        ("traces", int(res.decisions.count())),  # persisted slim: no recompute
-        *[(f"routed_{s}", int(counts[f"{s}_rows"] or 0)) for s in SINK_NAMES],
-        ("wall_ms", int((time.time() - t0) * 1000)),
-        ("finished_at_ms", int(time.time() * 1000)),
-    ]
+        dm = decision_metrics(res.decisions)
+        dm.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "metrics_decisions"))
+        rm = spark.createDataFrame(
+            [(s, int(counts[f"{s}_rows"] or 0)) for s in SINK_NAMES
+             if (counts[f"{s}_rows"] or 0) > 0],
+            "sink string, row_count long",
+        )
+        rm.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "metrics_rows"))
+        # exported manifest (J2 dedup source on re-runs; replaces Redis
+        # exported:{trace_id} keys, evaluator.rs:358-401)
+        (
+            res.decisions.filter(F.col("decision") == "keep")
+            .select("trace_id")
+            .write.mode("overwrite")
+            .parquet(os.path.join(out_dir, "exported"))
+        )
+        run_rows = [
+            ("input_rows", int(counts["routed_rows"] or 0)),
+            ("traces", int(res.decisions.count())),  # persisted slim: no recompute
+            *[(f"routed_{s}", int(counts[f"{s}_rows"] or 0)) for s in SINK_NAMES],
+            ("wall_ms", int((time.time() - t0) * 1000)),
+            ("finished_at_ms", int(time.time() * 1000)),
+        ]
+    finally:
+        # the slim decisions are only reused inside this call; returned
+        # frames stay valid (they recompute lazily if read again)
+        res.decisions.unpersist()
     run_metrics = spark.createDataFrame(run_rows, "metric string, value long")
     run_metrics.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "metrics_run")

@@ -16,8 +16,10 @@ the inherent streaming tail: sessions newer than (max_ts - gap - delay) stay
 open at stream end (the reference has the same behavior — its buffer holds
 unexpired traces until shutdown).
 
-The parse stage reuses the SAME vectorized Arrow parser as batch
-(mapInArrow is supported in streaming queries).
+The parse stage is the batch job's JVM expression parser
+(parser.parse_spans_jvm), pruned to the fields assembly reads; the
+session-window strategy reuses the batch TraceSummary aggregates
+(assembly.summary_aggs / summary_columns).
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.operators.assembly import summary_aggs, summary_columns
 from otel_tail_sampler_spark.operators.parser import parse_spans_jvm
 from otel_tail_sampler_spark.operators.policies import KEEP, SamplerConfig, decide
 
@@ -89,7 +92,6 @@ def assemble_sessions(
     spans: DataFrame,
     gap_seconds: int = 30,
     watermark_delay: str = "10 seconds",
-    names_from_csv: bool = False,
 ) -> DataFrame:
     """Streaming trace assembly: session_window(gap) == inactivity timeout.
 
@@ -99,77 +101,25 @@ def assemble_sessions(
     spans as a fresh trace (evaluator re-export is prevented by the Redis
     dedup key, here by the exported-manifest anti-join).
 
-    ``names_from_csv=True``: the input carries the service/operation
-    payloads as raw code-point CSVs (``_svc_csv``/``_op_csv``,
-    parser.name_csv_exprs) and the string decode runs AFTER the
-    aggregation — once per distinct value per trace instead of once per
-    span (guide §4.1: defer interpreted work past the agg). Emitted
-    summaries are identical.
+    The input carries the service/operation payloads as raw code-point
+    CSVs (``_svc_csv``/``_op_csv``, parser.name_csv_exprs); the aggregates
+    are the batch ones (assembly.summary_aggs) and the string decode runs
+    AFTER the aggregation — once per distinct value per trace instead of
+    once per span (guide §4.1: defer interpreted work past the agg).
     """
     from otel_tail_sampler_spark.operators.parser import csv_name_expr
 
-    svc_col = F.col("_svc_csv") if names_from_csv else F.col("service_name")
-    op_col = "_op_csv" if names_from_csv else "operation_name"
     with_ts = spans.withColumn(
         "event_time", F.timestamp_millis(F.col("timestamp_ms"))
     ).withWatermark("event_time", watermark_delay)
-    agg = (
+    return (
         with_ts.groupBy(
             F.session_window("event_time", f"{gap_seconds} seconds"),
             F.col("trace_k1"),
             F.col("trace_k2"),
         )
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("timestamp_ms").alias("ts"),
-                    F.col("span_id").alias("sid"),
-                    svc_col.alias("svc"),
-                )
-            ).alias("_first"),
-            F.count(F.lit(1)).alias("span_count"),
-            F.max((F.col("status_code") == 2).cast("int"))
-            .cast("boolean")
-            .alias("has_error"),
-            F.sum((F.col("status_code") == 2).cast("int")).alias("error_count"),
-            F.max("duration_ms").alias("max_duration_ms"),
-            F.min("timestamp_ms").alias("min_timestamp_ms"),
-            F.max("timestamp_ms").alias("max_timestamp_ms"),
-            F.array_sort(F.collect_set(op_col)).alias("_ops"),
-            F.min(
-                F.when(
-                    F.col("parent_span_id").isNull(),
-                    F.struct(
-                        F.col("timestamp_ms").alias("ts"),
-                        F.col("span_id").alias("sid"),
-                    ),
-                )
-            ).alias("_root"),
-        )
-    )
-    if names_from_csv:
-        svc_out = csv_name_expr(F.col("_first.svc"))
-        # decode each distinct op, then sort the DECODED strings (CSV
-        # order and decoded order differ — "100" < "65" as strings)
-        ops_out = F.array_sort(F.transform(F.col("_ops"), csv_name_expr))
-    else:
-        svc_out = F.col("_first.svc")
-        ops_out = F.col("_ops")
-    return agg.select(
-        F.col("trace_k1"),
-        F.col("trace_k2"),
-        F.format_string("%016X%016X", F.col("trace_k1"), F.col("trace_k2")).alias(
-            "trace_id"
-        ),
-        svc_out.alias("service_name"),
-        "span_count",
-        "has_error",
-        "error_count",
-        "max_duration_ms",
-        "min_timestamp_ms",
-        "max_timestamp_ms",
-        ops_out.alias("operations"),
-        F.col("_root.sid").alias("root_span_id"),
+        .agg(*summary_aggs(F.col("_svc_csv"), F.col("_op_csv")))
+        .select(*summary_columns(csv_name_expr))
     )
 
 
@@ -300,8 +250,6 @@ def assemble_with_state(
     spans: DataFrame,
     gap_seconds: int = 30,
     watermark_delay: str = "10 seconds",
-    n_buckets: int | None = None,
-    names_from_csv: bool = False,
 ) -> DataFrame:
     """Custom per-trace state with event-time timeout — the second
     streaming strategy, mirroring the reference's TraceState inactivity
@@ -312,14 +260,14 @@ def assemble_with_state(
 
     State LAYOUT is the reference's shard-local trace map
     (memory.rs:185-228 keeps ONE HashMap of TraceState per shard, not one
-    Redis row per trace): traces hash into ``n_buckets`` buckets and each
+    Redis row per trace): traces hash into buckets and each
     bucket keys ONE Spark state row holding its traces as parallel
     arrays. The earlier one-state-row-per-trace formulation paid the
     applyInPandasWithState per-group protocol cost (state decode, pandas
     slice, fn call, state encode — measured ~10 ms/trace at sf0.1) once
     per TRACE per micro-batch: 120k traces made the bounded sf0.1 run
     ~86 s of pure per-group overhead. Bucketing pays it once per BUCKET
-    (default 2x shuffle partitions — pinned at query start exactly like
+    (2x shuffle partitions — pinned at query start exactly like
     the state-store partition count, and sized by the same knob that
     scales the cluster) and folds each bucket's spans with ONE vectorized
     lexsort kernel per Arrow batch; measured 89.8 -> 9.2 s wall on the
@@ -341,9 +289,7 @@ def assemble_with_state(
     import pandas as pd
 
     gap_ms = gap_seconds * 1000
-    spark = spans.sparkSession
-    if n_buckets is None:
-        n_buckets = 2 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_buckets = 2 * int(spans.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     with_ts = spans.withColumn(
         "event_time", F.timestamp_millis(F.col("timestamp_ms"))
@@ -351,35 +297,23 @@ def assemble_with_state(
         "_bucket",
         F.pmod(
             F.xxhash64(F.col("trace_k1"), F.col("trace_k2")),
-            F.lit(int(n_buckets)),
+            F.lit(n_buckets),
         ).cast("int"),
     ).select(
         # guide §4.1: the grouped batches are opaque to Catalyst — ship
         # only the columns the fold reads (plus the watermark column).
-        # names_from_csv: the svc/op payloads arrive as code-point CSVs
+        # The svc/op payloads arrive as code-point CSVs
         # (parser.name_csv_exprs) and decode in Python AT EMIT — once
         # per distinct value per trace, not once per span.
         "_bucket", "trace_k1", "trace_k2", "span_id", "parent_span_id",
         "timestamp_ms", "duration_ms", "status_code",
-        F.col("_svc_csv" if names_from_csv else "service_name").alias(
-            "service_name"
-        ),
-        F.col("_op_csv" if names_from_csv else "operation_name").alias(
-            "operation_name"
-        ),
+        F.col("_svc_csv").alias("service_name"),
+        F.col("_op_csv").alias("operation_name"),
         "event_time",
     )
 
-    if names_from_csv:
-        def _dec(csv: str) -> str:
-            return (
-                bytes(map(int, csv.split(","))).decode("ascii")
-                if csv
-                else ""
-            )
-    else:
-        def _dec(s: str) -> str:
-            return s
+    def _dec(csv: str) -> str:
+        return bytes(map(int, csv.split(","))).decode("ascii") if csv else ""
 
     def _emit_frame(rows: list):
         m = (1 << 64) - 1
@@ -540,13 +474,9 @@ def run_streaming_pipeline(
         .filter(F.col("parse_ok"))
     )
     if strategy == "state":
-        sessions = assemble_with_state(
-            spans, gap_seconds, watermark_delay, names_from_csv=True
-        )
+        sessions = assemble_with_state(spans, gap_seconds, watermark_delay)
     elif strategy == "session_window":
-        sessions = assemble_sessions(
-            spans, gap_seconds, watermark_delay, names_from_csv=True
-        )
+        sessions = assemble_sessions(spans, gap_seconds, watermark_delay)
     else:
         raise ValueError(f"unknown streaming strategy: {strategy}")
 

@@ -49,11 +49,11 @@ def main() -> None:
     section(
         "Flagship pipeline: routed output",
         "What to check: ZERO Python stages anywhere (round 4: the decode\n"
-        "is whole-stage-codegen expressions; the Arrow kernel remains as\n"
-        "the equality-tested parser='arrow' variant); the decision build\n"
-        "side is BroadcastHashJoin (only non-drop decisions broadcast —\n"
-        "O(kept)); assembly is a two-phase HashAggregate (partial ->\n"
-        "final) on the int64 key pair.",
+        "is whole-stage-codegen expressions, the only parser any job runs;\n"
+        "the Arrow kernel stays as the field-tested reference decode); the\n"
+        "decision build side is BroadcastHashJoin (only non-drop decisions\n"
+        "broadcast — O(kept)); assembly is a two-phase HashAggregate\n"
+        "(partial -> final) on the int64 key pair.",
         res.routed,
     )
 

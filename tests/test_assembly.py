@@ -65,7 +65,8 @@ def test_auto_salt_detection(spark, spans_df):
 
     # plant one 200k-span trace next to small ones
     heavy = spark.range(200_000).select(
-        F.lit("HEAVY").alias("trace_id"),
+        F.lit(-1).cast("long").alias("trace_k1"),
+        F.lit(-1).cast("long").alias("trace_k2"),
         F.format_string("h%06d", F.col("id")).alias("span_id"),
         F.lit(None).cast("string").alias("parent_span_id"),
         F.lit("svc").alias("service_name"),
@@ -75,7 +76,8 @@ def test_auto_salt_detection(spark, spans_df):
         F.lit(0).alias("status_code"),
     )
     small = spark.range(1000).select(
-        F.format_string("T%04d", F.col("id")).alias("trace_id"),
+        F.col("id").alias("trace_k1"),
+        F.lit(0).cast("long").alias("trace_k2"),
         F.format_string("s%06d", F.col("id")).alias("span_id"),
         F.lit(None).cast("string").alias("parent_span_id"),
         F.lit("svc").alias("service_name"),

@@ -125,6 +125,64 @@ def test_resume_preserves_prior_buckets_under_static_overwrite(
     assert _routed_counts(out) == want
 
 
+def _executed_plans(spark, run):
+    """Physical plan descriptions of every SQL execution ``run()`` starts."""
+    listener_bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+    listener_bus.waitUntilEmpty(60_000)
+    first = store.executionsCount()
+    run()
+    listener_bus.waitUntilEmpty(60_000)
+    seq = store.executionsList()
+    return [seq.apply(i).physicalPlanDescription() for i in range(first, seq.size())]
+
+
+def test_resumable_run_equals_flagship_run(spark, small_dataset, tmp_path):
+    """run_resumable runs the flagship DAG: per-sink row counts and the keep
+    sink's doc_id -> tokens map equal run_and_write's, and no execution of
+    the resumable run has a Python stage."""
+    from otel_tail_sampler_spark.operators.policies import (
+        CardinalityPolicy,
+        ErrorPolicy,
+        LatencyPolicy,
+        SamplerConfig,
+    )
+    from otel_tail_sampler_spark.plans.pipeline import run_and_write
+
+    cfg = SamplerConfig(
+        error=ErrorPolicy(sample_rate=0.8),
+        latency=LatencyPolicy(threshold_ms=4000, sample_rate=1.0),
+        cardinality=CardinalityPolicy(max_span_count=100),
+    )
+    src = small_dataset["tokenized"]
+    res_out, flag_out = str(tmp_path / "resumable"), str(tmp_path / "flagship")
+    plans = _executed_plans(
+        spark, lambda: run_resumable(spark, src, res_out, cfg, n_buckets=N_BUCKETS)
+    )
+    run_and_write(spark, src, flag_out, cfg)
+
+    assert plans
+    for plan in plans:
+        for node in ("MapInArrow", "MapInPandas", "EvalPython"):
+            assert node not in plan, node
+
+    flag_glob = f"{flag_out}/routed/*/*.parquet"
+    res_glob = f"{res_out}/routed/*/*/*.parquet"
+    counts = duckdb.sql(
+        f"select decision, count(*) n from parquet_scan('{flag_glob}', hive_partitioning=1) group by 1 order by 1"
+    ).fetchall()
+    assert "keep" in dict(counts)
+    assert _routed_counts(res_out) == counts
+
+    def keep_tokens(glob):
+        rows = duckdb.sql(
+            f"select doc_id, tokens from parquet_scan('{glob}', hive_partitioning=1) where decision = 'keep'"
+        ).fetchall()
+        return {doc_id: list(tokens) for doc_id, tokens in rows}
+
+    assert keep_tokens(res_glob) == keep_tokens(flag_glob)
+
+
 def test_corpus_prep_stage_resume(spark, tmp_path):
     """Stage-level resume of the prep DAG: a resumed run with unchanged
     parameters reuses both stage artifacts WITHOUT rescanning the source

@@ -307,14 +307,11 @@ def test_orc_source_matches_parquet(spark, small_dataset, tmp_path):
     assert b.spans.schema["tokens"].dataType.simpleString() == "array<int>"
 
 
-def test_jvm_parser_pipeline_matches_arrow(spark, small_dataset):
-    """The default (JVM-expression) parser and the Arrow kernel drive the
-    pipeline to IDENTICAL decisions and routed counts."""
-    a = run_pipeline(spark, small_dataset["tokenized"], CFG, parser="arrow")
-    b = run_pipeline(spark, small_dataset["tokenized"], CFG, parser="jvm")
-    da = {(r["trace_id"], r["decision"]) for r in a.decided.collect()}
-    db = {(r["trace_id"], r["decision"]) for r in b.decided.collect()}
-    assert da == db
-    ca = {r["decision"]: r["count"] for r in a.routed.groupBy("decision").count().collect()}
-    cb = {r["decision"]: r["count"] for r in b.routed.groupBy("decision").count().collect()}
-    assert ca == cb
+def test_run_and_write_releases_cached_decisions(spark, small_dataset, tmp_path):
+    """run_and_write persists the slim decisions for its own reuse only: it
+    must leave the session's cache as it found it (empty here)."""
+    from otel_tail_sampler_spark.plans.pipeline import run_and_write
+
+    spark.catalog.clearCache()
+    run_and_write(spark, small_dataset["tokenized"], str(tmp_path / "out"), CFG)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

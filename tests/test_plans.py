@@ -37,21 +37,12 @@ def test_route_join_is_broadcast(plans):
 
 def test_pipeline_is_pure_jvm(plans):
     """The flagship DAG has ZERO Python stages (round 4: the expression
-    parser replaced the Arrow kernel as the default — the corpus crossing
-    the JVM<->Python socket was ~60% of the skewed headline; the Arrow
-    variant stays available via parser='arrow' and is equality-tested)."""
+    parser replaced the Arrow kernel — the corpus crossing the JVM<->Python
+    socket was ~60% of the skewed headline; tests/test_parser.py keeps the
+    two parsers equal field by field)."""
     for key in ("routed", "decided"):
         for node in ("MapInArrow", "MapInPandas", "EvalPython"):
             assert node not in plans[key], (key, node)
-
-
-def test_arrow_parser_variant_still_has_one_stage(spark, small_dataset):
-    """parser='arrow' keeps the single vectorized Arrow stage."""
-    spark.catalog.clearCache()
-    res = run_pipeline(
-        spark, small_dataset["tokenized"], E.ENTRY_CFG, parser="arrow"
-    )
-    assert _explain(res.decided).count("MapInArrow") == 2  # tree + detail
 
 
 def test_assembly_is_partial_final(plans):
