@@ -3,21 +3,18 @@
 The reference samples with ``fastrand::f64() < rate``
 (/root/reference/src/sampling/policies.rs:201,242) — non-reproducible, so
 per-sink counts could never match run-to-run (SURVEY.md §7.4.2). We replace it
-with seeded hash-sampling. Two flavors:
+with seeded hash-sampling. Both hashes here are md5-based, chosen because md5 is
+bit-identical in Spark and DuckDB, so oracle SQL can reproduce every value
+exactly:
 
-* ``hash_frac`` — md5-based, chosen because md5 is bit-identical in Spark and
-  DuckDB, so oracle SQL can reproduce every decision exactly:
-  frac(key, seed) = int(md5(key||'|'||seed)[:8 hex], 16) / 2^32  in [0, 1).
-* ``fast_frac`` — xxhash64-based, JVM-codegen fast, for hot paths that are
-  verified by the pytest pandas oracle instead of DuckDB.
-
-DuckDB equivalent of hash_frac (used in oracle_sql):
+* ``hash_frac`` — frac(key, seed) = int(md5(key||'|'||seed)[:8 hex], 16) / 2^32
+  in [0, 1). DuckDB equivalent (used in oracle_sql):
   ('0x' || substring(md5(key || '|' || seed), 1, 8))::bigint / 4294967296.0
+* ``portable_hash64`` — the first 15 hex digits of the same md5 as a 60-bit
+  int (fingerprints, LSH).
 """
 
 from __future__ import annotations
-
-import hashlib
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -31,41 +28,8 @@ def hash_frac(key: Column | str, seed: str) -> Column:
     return F.conv(hex8, 16, 10).cast("long") / F.lit(TWO_32)
 
 
-def hash_frac_sql(key_sql: str, seed: str) -> str:
-    """DuckDB-dialect rendering of the identical expression."""
-    return (
-        f"(('0x' || substring(md5({key_sql} || '|' || '{seed}'), 1, 8))::BIGINT"
-        f" / {TWO_32})"
-    )
-
-
-def hash_frac_py(key: str, seed: str) -> float:
-    """Pure-python reference (pandas-oracle side)."""
-    return int(hashlib.md5(f"{key}|{seed}".encode()).hexdigest()[:8], 16) / TWO_32
-
-
-def fast_frac(key: Column | str, seed: str, *more: Column) -> Column:
-    """``more`` appends extra native-value key columns (e.g. a position
-    index) into the one xxhash64 call — the multi-key form mask_tokens'
-    per-position fast path uses; with no extras the expression is
-    unchanged."""
-    key = F.col(key) if isinstance(key, str) else key
-    return (
-        F.pmod(
-            F.xxhash64(key, *more, F.lit(seed)), F.lit(1_000_000)
-        ).cast("double")
-        / F.lit(1_000_000.0)
-    )
-
-
 def portable_hash64(col: Column | str, seed: str = "") -> Column:
     """md5-derived 60-bit int, identical in Spark/DuckDB (fingerprints, LSH)."""
     col = F.col(col) if isinstance(col, str) else col
     hex15 = F.substring(F.md5(F.concat_ws("|", col, F.lit(seed))), 1, 15)
     return F.conv(hex15, 16, 10).cast("long")
-
-
-def portable_hash64_sql(col_sql: str, seed: str = "") -> str:
-    return (
-        f"(('0x' || substring(md5({col_sql} || '|' || '{seed}'), 1, 15))::BIGINT)"
-    )

@@ -62,7 +62,7 @@ def _has_wide_node(df: DataFrame) -> bool:
     return False
 
 
-def spread_small_input(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def spread_small_input(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to the session default parallelism iff it is a
     NARROW plan (scan/filter/project/map only) whose planned partition
     count is smaller. No-op otherwise — a post-shuffle input already has
@@ -73,8 +73,7 @@ def spread_small_input(df: DataFrame, min_parts: int | None = None) -> DataFrame
         return df
     if _has_wide_node(df):
         return df
-    sc = df.sparkSession.sparkContext
-    target = min_parts if min_parts is not None else sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     # narrow plan: no exchanges, so .rdd plans lazily without running jobs
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from otel_tail_sampler_spark.functions.hashing import fast_frac, hash_frac
+from otel_tail_sampler_spark.functions.hashing import hash_frac
 
 
 def fim_transform(
@@ -201,7 +201,6 @@ def mask_tokens(
     seed: str = "mlm",
     id_col: str = "doc_id",
     tok_col: str = "tokens",
-    fast: bool = False,
 ) -> DataFrame:
     """Deterministic MLM-style corruption: position i of a document is
     replaced with ``mask_id`` iff md5-frac(doc_id:i|seed) < ``rate`` —
@@ -215,18 +214,10 @@ def mask_tokens(
     Scale shape: scan-time projection, no shuffle. The mask-bool array is
     computed ONCE per row into its own projection and reused by both the
     rewrite and the count (CollapseProject keeps multiply-referenced
-    non-cheap expressions un-inlined, so the per-position hash runs once).
-
-    ``fast=True`` swaps the per-position md5 for xxhash64 — the repo's
-    standard two-tier hashing (functions/hashing.py): md5 is the
-    DuckDB-replayable oracle family (~11M positions/s measured — string
-    build + md5 per position), xxhash64 is pure codegen over native
-    values for the 100 TB hot path, pytest-verified instead of
-    oracle-compared. Same determinism and per-seed epochs either way.
+    non-cheap expressions un-inlined, so the per-position hash runs once;
+    ~11M positions/s measured — string build + md5 per position).
     """
     def frac(i):
-        if fast:  # multi-key fast_frac: xxhash64 over native values
-            return fast_frac(F.col(id_col), seed, i)
         # hash_frac(doc_id:i, seed) = md5(doc_id:i|seed)-fraction
         key = F.concat(
             F.col(id_col).cast("string"), F.lit(":"), i.cast("string")

@@ -51,8 +51,6 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
-from otel_tail_sampler_spark.operators.similarity import _int_dot
-
 
 def _tdiv(s: int, n: int) -> int:
     """Truncate-toward-zero integer division — the shared semantics of
@@ -316,7 +314,6 @@ def semantic_dedup(
     max_cluster_anchors: int | None = 256,
     id_col: str = "vec_id",
     qvec_col: str = "qvec",
-    pair_kernel: str = "arrow",
 ) -> DataFrame:
     """SemDeDup: survivors after within-cluster cosine near-dup removal.
 
@@ -390,72 +387,51 @@ def semantic_dedup(
         .filter(F.col("_ida") < F.col("_idb"))
         .filter((F.col("_na") > 0) & (F.col("_nb") > 0))
     )
-    if pair_kernel == "arrow":
-        # vectorized pair scoring (r7): the join output streams through
-        # one einsum + integer compare per Arrow batch — measured ~1 s
-        # faster than the per-pair zip_with/aggregate HOF dot at sf0.1
-        # (each HOF element-lambda runs interpreted). Exact int64 math:
-        # |dot| <= 127^2*dim and n2 <= 127^2*dim keep every term far
-        # inside int64 for dim <= 2^15. The pair stream crosses the
-        # JVM<->Python socket (2*dim ints/pair) — the jvm witness below
-        # keeps the zero-Python shape for deployments where socket
-        # bandwidth, not CPU, is the pole.
-        # (An unrolled fixed-dim sum of get() products was also tried:
-        # 6x SLOWER than the HOF — codegen expression-budget blowout.)
-        from typing import Iterator
+    # vectorized pair scoring (r7): the join output streams through
+    # one einsum + integer compare per Arrow batch — measured ~1 s
+    # faster than the per-pair zip_with/aggregate HOF dot at sf0.1
+    # (each HOF element-lambda runs interpreted). Exact int64 math:
+    # |dot| <= 127^2*dim and n2 <= 127^2*dim keep every term far
+    # inside int64 for dim <= 2^15. The pair stream crosses the
+    # JVM<->Python socket (2*dim ints/pair).
+    # (An unrolled fixed-dim sum of get() products was also tried:
+    # 6x SLOWER than the HOF — codegen expression-budget blowout.)
+    from typing import Iterator
 
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        def fn(
-            batches: "Iterator[pd.DataFrame]",
-        ) -> "Iterator[pd.DataFrame]":
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                A = np.asarray(
-                    [np.asarray(x, np.int64) for x in pdf["_qa"]]
-                )
-                B = np.asarray(
-                    [np.asarray(x, np.int64) for x in pdf["_qb"]]
-                )
-                d = np.einsum("ij,ij->i", A, B)
-                na = pdf["_na"].to_numpy(np.int64)
-                nb = pdf["_nb"].to_numpy(np.int64)
-                keep = (d > 0) & (
-                    den * den * d * d >= num * num * na * nb
-                )
-                if keep.any():
-                    yield pd.DataFrame(
-                        {
-                            id_col: pd.unique(
-                                pdf["_idb"].to_numpy()[keep]
-                            )
-                        }
-                    )
-
-        id_type = df_q.schema[id_col].dataType.simpleString()
-        dropped = (
-            pairs.select("_idb", "_qa", "_qb", "_na", "_nb")
-            .mapInPandas(fn, f"{id_col} {id_type}")
-            .distinct()
-        )
-    elif pair_kernel == "jvm":
-        dot = _int_dot(F.col("_qa"), F.col("_qb"))
-        dropped = (
-            pairs.withColumn("_dot", dot)
-            .filter(
-                (F.col("_dot") > 0)
-                & (
-                    F.lit(den * den) * F.col("_dot") * F.col("_dot")
-                    >= F.lit(num * num) * F.col("_na") * F.col("_nb")
-                )
+    def fn(
+        batches: "Iterator[pd.DataFrame]",
+    ) -> "Iterator[pd.DataFrame]":
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            A = np.asarray(
+                [np.asarray(x, np.int64) for x in pdf["_qa"]]
             )
-            .select(F.col("_idb").alias(id_col))
-            .distinct()
-        )
-    else:
-        raise ValueError(
-            f"unknown pair_kernel: {pair_kernel!r} (want 'arrow' or 'jvm')"
-        )
+            B = np.asarray(
+                [np.asarray(x, np.int64) for x in pdf["_qb"]]
+            )
+            d = np.einsum("ij,ij->i", A, B)
+            na = pdf["_na"].to_numpy(np.int64)
+            nb = pdf["_nb"].to_numpy(np.int64)
+            keep = (d > 0) & (
+                den * den * d * d >= num * num * na * nb
+            )
+            if keep.any():
+                yield pd.DataFrame(
+                    {
+                        id_col: pd.unique(
+                            pdf["_idb"].to_numpy()[keep]
+                        )
+                    }
+                )
+
+    id_type = df_q.schema[id_col].dataType.simpleString()
+    dropped = (
+        pairs.select("_idb", "_qa", "_qb", "_na", "_nb")
+        .mapInPandas(fn, f"{id_col} {id_type}")
+        .distinct()
+    )
     return a.join(dropped, id_col, "left_anti").select(id_col, "cluster")

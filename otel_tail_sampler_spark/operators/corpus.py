@@ -453,7 +453,7 @@ def split_corpus(
 
 
 def _batch_bigram_pairs(arrs, lens):
-    """numpy twin of ``_adjacent_bigrams`` over a whole Arrow batch of
+    """numpy twin of ``_exploded_bigrams`` over a whole Arrow batch of
     ragged token arrays: ONE flat packed-pair stream for the batch ->
     (pairs int64, cross bool mask, starts, nz). ``cross`` marks pairs
     that span two documents (masked out of every per-doc reduction);
@@ -490,15 +490,14 @@ def _segment_sums(per_pair, cross, starts, nbi, nz):
     return out
 
 
-def _adjacent_bigrams(tok_col: str):
-    """Packed adjacent-bigram array expression, shared by
-    :func:`build_bigram_model` and :func:`score_bigram_novelty` so the
-    packing formula is single-sourced (a formula divergence between
-    build and score would silently zero every hit).
-
-    Retained as the array-expression form of the pack formula (the
-    explode call sites now ride ``_exploded_bigrams``' codegen
-    zip-explode-pack — HOF lambdas run interpreted per element).
+def _exploded_bigrams(df: DataFrame, tok_col: str) -> DataFrame:
+    """One ``bigram`` row per adjacent token pair, WHOLE-STAGE CODEGEN:
+    zip the two shifted slices with ``arrays_zip`` (a plain expression),
+    explode the struct stream, and apply the pack arithmetic
+    POST-explode (a ``zip_with`` lambda would run INTERPRETED per
+    element — measured 2x slower on the ngram/DSIR shapes at sf0.1).
+    Single-token/empty docs drop (no pairs), as explode of the empty
+    array would.
 
     Packing: t1 * 2^32 + (t2 & 0xFFFFFFFF) — signed high word, UNSIGNED
     low word. The unshifted t1*2^32 + t2 overflows at t1 = INT32_MIN
@@ -508,45 +507,15 @@ def _adjacent_bigrams(tok_col: str):
     way. bitwiseAND gives Catalyst nothing to reassociate and bounds
     the packed value at exactly [-2^63, 2^63 - 1] for all int32 pairs.
     """
-    t = F.col(tok_col)
-    n = F.size(tok_col)
-    return F.when(
-        n >= 2,
-        F.zip_with(
-            F.slice(t, 1, n - 1),
-            F.slice(t, 2, n - 1),
-            lambda a, b: a.cast("bigint") * F.lit(4294967296)
-            + b.cast("bigint").bitwiseAND(F.lit(4294967295)),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-
-
-def _exploded_bigrams(
-    df: DataFrame, tok_col: str, extras=(), pair_name: str = "bigram"
-) -> DataFrame:
-    """One row per adjacent bigram, WHOLE-STAGE CODEGEN: zip the two
-    shifted slices with ``arrays_zip`` (a plain expression), explode the
-    struct stream, and apply the pack arithmetic POST-explode — the
-    same ``t1 * 2^32 + (t2 & 0xFFFFFFFF)`` formula as
-    ``_adjacent_bigrams`` (whose zip_with lambda runs INTERPRETED per
-    element — measured 2x slower on the ngram/DSIR shapes at sf0.1),
-    with the same bitwiseAND reassociation guard. ``extras`` is a
-    sequence of (Column, alias) carried through the explode (e.g. the
-    doc id, a target flag). Single-token/empty docs drop (no pairs), as
-    explode of the empty array would."""
     m = F.size(tok_col) - 1
     z = F.arrays_zip(
         F.slice(F.col(tok_col), 1, m), F.slice(F.col(tok_col), 2, m)
     )
-    names = [a for _, a in extras]
-    ex = (
-        df.where(F.size(tok_col) >= 2)
-        .select(*[c.alias(a) for c, a in extras], F.explode(z).alias("_zz"))
-    )
+    ex = df.where(F.size(tok_col) >= 2).select(F.explode(z).alias("_zz"))
     pk = F.col("_zz")["0"].cast("bigint") * F.lit(4294967296) + F.col(
         "_zz"
     )["1"].cast("bigint").bitwiseAND(F.lit(4294967295))
-    return ex.select(*[F.col(a) for a in names], pk.alias(pair_name))
+    return ex.select(pk.alias("bigram"))
 
 
 def build_bigram_model(
@@ -560,8 +529,9 @@ def build_bigram_model(
     signed high word, unsigned low word: injective AND overflow-free
     over the FULL int32 token range including negatives (packed spans
     exactly [-2^63, 2^63 - 1]; identical arithmetic in Spark SQL, numpy
-    int64, and DuckDB BIGINT — see the in-body note on why a plain or
-    shifted add is NOT safe), with pmi_collocations carrying the decode.
+    int64, and DuckDB BIGINT — see ``_exploded_bigrams`` on why a plain
+    or shifted add is NOT safe), with pmi_collocations carrying the
+    decode.
     Deterministic cap tie-break (freq DESC, bigram ASC) keeps the model
     identical across engines and reruns.
 
@@ -593,7 +563,6 @@ def score_bigram_novelty(
     model: DataFrame,
     id_col: str = "doc_id",
     tok_col: str = "tokens",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Score each document against a built bigram model:
     -> (id, n_bigrams int, n_unseen int, hit_freq_sum bigint).
@@ -607,58 +576,15 @@ def score_bigram_novelty(
     noisy text); near-zero ≈ boilerplate (see the transcendental-free
     rationale on build_bigram_model).
 
-    Two value-identical kernels (equality-tested incl. edge docs and an
-    empty model); the default is the MEASURED winner, not the assumed
-    one. ``kernel="arrow"`` (default): shuffle-free mapInPandas — model
-    collected once and broadcast as two sorted numpy arrays, one
-    batch-vectorized searchsorted probe per Arrow batch; the corpus
-    crosses the JVM<->Python socket but never shuffles.
-    ``kernel="jvm"``: explode the packed bigram stream (the SAME
-    ``_exploded_bigrams`` pack formula the build uses),
-    broadcast-hash-join the cap-bounded model, aggregate per document —
-    zero Python, but the explode materializes one row per adjacent pair
-    through the join. A/B at sf0.1 (600k docs, min-of-5 full query):
-    arrow 7.1s vs jvm 9.5s — the flagship parser's "socket crossing
-    dominates" lesson does NOT transfer here because the JVM
-    alternative pays an 8x row explosion the parser's slot-math never
-    did; kept as the zero-Python variant and independent-formulation
-    equality witness (the two kernels share only the packing
-    expression, which has its own planted INT32_MIN test). Same
-    determinism precondition either way: the model is materialized once
-    (broadcast or collect), scoring runs in a later job over the same
-    input.
+    Shuffle-free mapInPandas: the model is collected once and broadcast
+    as two sorted numpy arrays, one batch-vectorized searchsorted probe
+    per Arrow batch; the corpus crosses the JVM<->Python socket but
+    never shuffles. A/B at sf0.1 (600k docs, min-of-5 full query): 7.1s
+    vs 9.5s for an explode + broadcast-join + per-doc aggregate
+    formulation, which pays an 8x row explosion through the join.
+    Determinism precondition: the model is materialized once (collect),
+    scoring runs in a later job over the same input.
     """
-    if kernel == "jvm":
-        ex = _exploded_bigrams(
-            df, tok_col, extras=((F.col(id_col), id_col),)
-        )
-        agg = (
-            ex.join(F.broadcast(model.select("bigram", "freq")), "bigram", "left")
-            .groupBy(id_col)
-            .agg(
-                F.sum(
-                    F.when(F.col("freq").isNull(), 1).otherwise(0)
-                ).cast("int").alias("_nu"),
-                F.sum(F.coalesce(F.col("freq"), F.lit(0))).alias("_hs"),
-            )
-        )
-        base = df.select(
-            F.col(id_col),
-            F.greatest(F.size(tok_col) - 1, F.lit(0)).cast("int").alias(
-                "n_bigrams"
-            ),
-        )
-        return base.join(agg, id_col, "left").select(
-            id_col,
-            "n_bigrams",
-            F.coalesce(F.col("_nu"), F.lit(0)).cast("int").alias("n_unseen"),
-            F.coalesce(F.col("_hs"), F.lit(0)).cast("long").alias(
-                "hit_freq_sum"
-            ),
-        )
-    if kernel != "arrow":
-        raise ValueError(f"unknown kernel: {kernel!r} (want 'jvm' or 'arrow')")
-
     from typing import Iterator
 
     import numpy as np

@@ -28,23 +28,20 @@ T ~ 1e12 tokens at the default scale; shrink scale_bits beyond that.
 
 Two tiers (mirroring ivf_build/ivf_search):
 
-* ``bm25_topk`` — one-shot, stateless. Default kernel: a two-phase
+* ``bm25_topk`` / ``bm25_matches`` — one-shot, stateless: a two-phase
   exact-LOOKUP formulation — pass A reduces the corpus to its distinct
   (term, tf, dl) triple counts (2,043 triples under 11M matched rows
   at sf0.1), the driver computes every observed triple's exact weight
   with Python big ints, pass B gathers weights and reduces per-(query,
   doc) scores in-kernel, emitting only per-batch top-k candidates —
   two map-only corpus passes, nothing corpus-sized joins, aggregates,
-  or shuffles (measured 2.5x the jvm witness at sf0.1).
-  ``kernel="jvm"``: broadcast-semi-filtered explode + groupBy with the
-  documented twice-evaluated tf lineage (Spark cannot reuse the
-  exchange across the df and scoring subtrees). Fine for a query
-  batch; wrong shape for a standing index.
+  or shuffles. The triple pack caps a document at 2^21 tokens.
 * ``bm25_index`` + ``bm25_search`` — the scale path: ONE corpus pass
   builds the inverted index (postings + per-term df + corpus stats),
   materialized once (pass ``out_dir``) and amortized across every query
-  batch; search touches only broadcast-filtered index rows and proves
-  equal to the one-shot (tests).
+  batch; search touches only broadcast-filtered index rows, ranks the
+  same corpus as the one-shot (tests), and has no document-length
+  limit.
 
 Reference parity: the reference engine has no retrieval tier; this is
 part of the training-data extension (BM25: Robertson & Zaragoza 2009).
@@ -260,8 +257,8 @@ def _bm25_topk_arrow(
             dd, tt, tf, lens = m
             if lens.max() >= _BM25_PACK:
                 raise ValueError(
-                    "bm25_topk arrow kernel: document length >= 2^21 "
-                    "tokens overflows the triple pack — use kernel='jvm'"
+                    "bm25_topk: document length >= 2^21 tokens overflows "
+                    "the triple pack — rank with bm25_index + bm25_search"
                 )
             key = (tt * _BM25_PACK + tf) * _BM25_PACK + lens[dd]
             uk, uc = np.unique(key, return_counts=True)
@@ -296,7 +293,7 @@ def _bm25_topk_arrow(
         return empty
 
     # -- driver: exact weights per observed triple (Python big ints; the
-    # identical formula the jvm witness evaluates in DECIMAL(38,0))
+    # identical formula bm25_search evaluates in DECIMAL(38,0))
     df_per_term = [0] * nq
     for r in triples:
         df_per_term[(r["tkey"] // (_BM25_PACK * _BM25_PACK))] += int(r["n"])
@@ -389,7 +386,6 @@ def bm25_topk(
     tokens_col: str = "tokens",
     query_id: str = "query_id",
     query_tokens: str = "tokens",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """One-shot top-k corpus docs per query doc by fixed-point BM25.
 
@@ -398,62 +394,37 @@ def bm25_topk(
     absent (score 0 by definition). The query side must be small enough
     to broadcast — the standard sparse-retrieval regime.
 
-    ``kernel="arrow"`` (default) is the two-phase lookup formulation:
-    pass A is a map-only bincount kernel whose per-partition output is
-    the distinct (term, tf, dl) TRIPLE counts plus corpus stats —
-    bounded by triple cardinality (2,043 triples under 11M matched
-    (doc, term) rows at sf0.1), never by corpus size. The driver then
-    computes the exact fixed-point weight of every observed triple with
-    arbitrary-precision Python integers (the same two-div formula, so
-    DECIMAL(38,0) never enters) and broadcasts the packed-key lookup;
-    pass B maps the corpus again, gathers each matched triple's weight
-    (int64 — a weight is < 2.2 * idf_fp), reduces per-(query, doc)
-    scores in-kernel, and emits only per-batch top-k candidates. The
-    only shuffled rows are O(partitions x triples + queries x k x
-    batches); the corpus-scale join + aggregation of the ``jvm``
-    witness (explode + semi-filter + groupBy with the documented
-    two-pass lineage trade) never exists. Both passes must see the same
-    input (the pack_sequences determinism precondition) — a triple in
-    pass B unseen by pass A raises instead of mis-scoring. Use
-    bm25_index/bm25_search for a standing index.
+    Two-phase lookup formulation: pass A is a map-only bincount kernel
+    whose per-partition output is the distinct (term, tf, dl) TRIPLE
+    counts plus corpus stats — bounded by triple cardinality (2,043
+    triples under 11M matched (doc, term) rows at sf0.1), never by
+    corpus size. The driver then computes the exact fixed-point weight
+    of every observed triple with arbitrary-precision Python integers
+    (the same two-div formula, so DECIMAL(38,0) never enters) and
+    broadcasts the packed-key lookup; pass B maps the corpus again,
+    gathers each matched triple's weight (int64 — a weight is < 2.2 *
+    idf_fp), reduces per-(query, doc) scores in-kernel, and emits only
+    per-batch top-k candidates. The only shuffled rows are
+    O(partitions x triples + queries x k x batches). Both passes must
+    see the same input (the pack_sequences determinism precondition) —
+    a triple in pass B unseen by pass A raises instead of mis-scoring.
+    A document of 2^21 or more tokens overflows the triple pack and
+    raises. Use bm25_index/bm25_search for such a corpus and for a
+    standing index.
     """
     s = 1 << scale_bits
-    if kernel == "arrow":
-        # stats fused into pass A; the dedup exchange is skipped because
-        # the kernel's collect set-ifies terms anyway
-        return _bm25_topk_arrow(
-            corpus,
-            _query_terms(queries, query_id, query_tokens, distinct=False),
-            None,
-            None,
-            k,
-            s,
-            id_col,
-            tokens_col,
-        )
-    if kernel != "jvm":
-        raise ValueError(
-            f"unknown kernel: {kernel!r} (want 'jvm' or 'arrow')"
-        )
-    n_docs, n_tokens = _corpus_stats(corpus, tokens_col)
-    qterms = _query_terms(queries, query_id, query_tokens)
-    terms_only = qterms.select("term").distinct()
-
-    post = corpus.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(F.col(tokens_col)).alias("dl"),
-        F.explode(F.col(tokens_col)).alias("term"),
+    # stats fused into pass A; the dedup exchange is skipped because
+    # the kernel's collect set-ifies terms anyway
+    return _bm25_topk_arrow(
+        corpus,
+        _query_terms(queries, query_id, query_tokens, distinct=False),
+        None,
+        None,
+        k,
+        s,
+        id_col,
+        tokens_col,
     )
-    # broadcast semi filter FIRST: everything downstream sees only terms
-    # some query contains — the corpus-sized explode never shuffles
-    matched = post.join(F.broadcast(terms_only), "term", "left_semi")
-    tf = matched.groupBy("doc_id", "dl", "term").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-    dfreq = _with_idf(
-        tf.groupBy("term").agg(F.count(F.lit(1)).alias("_df")), n_docs, s
-    )
-    return _rank(tf, dfreq, qterms, n_docs, n_tokens, k)
 
 
 def bm25_matches(
@@ -465,53 +436,26 @@ def bm25_matches(
     tokens_col: str = "tokens",
     query_id: str = "query_id",
     query_tokens: str = "tokens",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """THRESHOLD retrieval: every (query, doc) pair whose fixed-point
     BM25 score reaches ``min_score_fp`` -> (query_id, doc_id,
     score_fp). The decontamination shape — a contaminated document
     outside some top-k must still be flagged, so the cut is a score
-    bar, not a rank. Same kernels and exact arithmetic as
-    ``bm25_topk``; in threshold mode the arrow path needs NO window at
-    all (per-doc scores complete inside one batch, so the per-batch
-    filter IS the final answer)."""
+    bar, not a rank. Same kernel and exact arithmetic as
+    ``bm25_topk``; in threshold mode it needs NO window at all (per-doc
+    scores complete inside one batch, so the per-batch filter IS the
+    final answer)."""
     s = 1 << scale_bits
-    if kernel == "arrow":
-        return _bm25_topk_arrow(
-            corpus,
-            _query_terms(queries, query_id, query_tokens, distinct=False),
-            None,
-            None,
-            0,
-            s,
-            id_col,
-            tokens_col,
-            min_score=int(min_score_fp),
-        )
-    if kernel != "jvm":
-        raise ValueError(
-            f"unknown kernel: {kernel!r} (want 'jvm' or 'arrow')"
-        )
-    n_docs, n_tokens = _corpus_stats(corpus, tokens_col)
-    qterms = _query_terms(queries, query_id, query_tokens)
-    # same shape as the bm25_topk jvm witness: broadcast semi filter on
-    # the exploded stream BEFORE any aggregation
-    post = corpus.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(F.col(tokens_col)).alias("dl"),
-        F.explode(F.col(tokens_col)).alias("term"),
-    )
-    matched = post.join(
-        F.broadcast(qterms.select("term").distinct()), "term", "left_semi"
-    )
-    tf = matched.groupBy("doc_id", "dl", "term").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-    dfreq = _with_idf(
-        tf.groupBy("term").agg(F.count(F.lit(1)).alias("_df")), n_docs, s
-    )
-    return _scored(tf, dfreq, qterms, n_docs, n_tokens).filter(
-        F.col("score_fp") >= int(min_score_fp)
+    return _bm25_topk_arrow(
+        corpus,
+        _query_terms(queries, query_id, query_tokens, distinct=False),
+        None,
+        None,
+        0,
+        s,
+        id_col,
+        tokens_col,
+        min_score=int(min_score_fp),
     )
 
 

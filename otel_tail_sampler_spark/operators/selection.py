@@ -34,18 +34,17 @@ a caller that wants sampled diversity can rank on
 
 Scale shape (100 TB posture):
 * ``build_dsir_model`` — output bounded by ``n_buckets`` (default
-  2^16), NOT corpus size. Default kernel: a bincount partial-aggregate
-  Arrow stage (each partition emits at most ``n_buckets`` partial
-  rows; the merge groupBy shuffles only those) — measured 2x the
-  ``kernel="jvm"`` explode + map-combinable agg witness at sf0.1,
-  whose interpreted ``zip_with`` bigram HOF dominates the DAG.
+  2^16), NOT corpus size: a bincount partial-aggregate Arrow stage
+  (each partition emits at most ``n_buckets`` partial rows; the merge
+  groupBy shuffles only those) — measured 2x an explode +
+  map-combinable agg build at sf0.1, whose interpreted ``zip_with``
+  bigram HOF dominated the DAG.
 * ``dsir_score`` — shuffle-free: the bucket model broadcasts as two
   dense numpy arrays (8 B * n_buckets each) into a batch-vectorized
   Arrow kernel (one concatenate + modulo + gather + reduceat per Arrow
   batch — the ``score_bigram_novelty`` kernel shape); the corpus
-  crosses the socket once and never shuffles. ``kernel="jvm"`` is the
-  zero-Python equality witness (explode + broadcast join), which pays
-  the pair-stream row materialization the arrow kernel avoids.
+  crosses the socket once and never shuffles, and no per-pair row is
+  ever materialized.
 * ``dsir_select`` — TakeOrderedAndProject on the bounded k.
 
 Reference parity: the reference engine has no selection tier; this is
@@ -57,15 +56,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .corpus import _exploded_bigrams
-
 _DEFAULT_BUCKETS = 1 << 16
-
-
-def _bucket_expr(packed: Column, n_buckets: int) -> Column:
-    """Non-negative hash bucket of a packed bigram: ``pmod`` matches
-    numpy's sign-of-divisor ``%`` and DuckDB's ``((x % B) + B) % B``."""
-    return F.pmod(packed, F.lit(n_buckets)).cast("int")
 
 
 def _bucket_counts_arrow(
@@ -80,9 +71,9 @@ def _bucket_counts_arrow(
     each partition emits at most ``n_buckets`` rows no matter how much
     corpus it read, and the merging groupBy shuffles only those
     (partitions x nonzero-buckets) partials. The corpus crosses the
-    socket once and the interpreted ``zip_with`` HOF of the JVM builder
-    (measured as the dominant cost of the whole selection DAG at sf0.1:
-    ~2.5 s of dsir_select's ~3.6 s) never runs."""
+    socket once and no interpreted ``zip_with`` bigram HOF runs (in an
+    explode-based build it was the dominant cost of the whole selection
+    DAG at sf0.1: ~2.5 s of dsir_select's ~3.6 s)."""
     from typing import Iterator
 
     import numpy as np
@@ -128,8 +119,8 @@ def _bucket_counts_arrow(
                 }
             )
 
-    # NULL predicate -> not-target, matching the JVM witness's
-    # when(_is_t, 1).otherwise(0) (a None reaching np.repeat would raise)
+    # NULL predicate -> not-target, like SQL's when(_is_t, 1).otherwise(0)
+    # (a None reaching np.repeat would raise)
     partials = flagged.select(
         F.coalesce(F.col("_is_t").cast("boolean"), F.lit(False)).alias(
             "_is_t"
@@ -147,7 +138,6 @@ def build_dsir_model(
     raw: DataFrame,
     n_buckets: int = _DEFAULT_BUCKETS,
     tok_col: str = "tokens",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Hashed-bigram bucket counts for both corpora:
     -> (bucket int, t_freq bigint, r_freq bigint), one row per bucket
@@ -156,49 +146,23 @@ def build_dsir_model(
     ``R = sum(r_freq)`` are recoverable from the model itself, which is
     how ``dsir_score`` avoids extra corpus passes.
 
-    ``kernel="arrow"`` (default) runs the bincount partial-aggregate
-    kernel (see ``_bucket_counts_arrow``); ``kernel="jvm"`` is the
-    zero-Python explode + groupBy equality witness. The two corpora
-    union under a flag so the arrow path stays ONE pass; a target
-    document also present in ``raw`` is counted on both sides either
-    way."""
-    if kernel == "arrow":
-        flagged = target.select(
-            F.lit(True).alias("_is_t"), F.col(tok_col)
-        ).unionByName(
-            raw.select(F.lit(False).alias("_is_t"), F.col(tok_col))
-        )
-        counts = _bucket_counts_arrow(flagged, n_buckets, tok_col)
-        # the union double-counts nothing: t_freq comes from flagged
-        # rows only, r_freq needs the raw-side rows only
-        return counts.select(
-            "bucket",
-            "t_freq",
-            (F.col("r_freq") - F.col("t_freq")).alias("r_freq"),
-        ).where((F.col("t_freq") > 0) | (F.col("r_freq") > 0))
-    if kernel != "jvm":
-        raise ValueError(
-            f"unknown kernel: {kernel!r} (want 'jvm' or 'arrow')"
-        )
-
-    def counts(df: DataFrame, name: str) -> DataFrame:
-        return (
-            _exploded_bigrams(df, tok_col, pair_name="_pk")
-            .select(_bucket_expr(F.col("_pk"), n_buckets).alias("bucket"))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-
-    t = counts(target, "t_freq")
-    r = counts(raw, "r_freq")
-    return (
-        t.join(r, "bucket", "full_outer")
-        .select(
-            "bucket",
-            F.coalesce("t_freq", F.lit(0)).cast("long").alias("t_freq"),
-            F.coalesce("r_freq", F.lit(0)).cast("long").alias("r_freq"),
-        )
+    Runs the bincount partial-aggregate kernel (see
+    ``_bucket_counts_arrow``). The two corpora union under a flag so
+    the build stays ONE pass; a target document also present in
+    ``raw`` is counted on both sides."""
+    flagged = target.select(
+        F.lit(True).alias("_is_t"), F.col(tok_col)
+    ).unionByName(
+        raw.select(F.lit(False).alias("_is_t"), F.col(tok_col))
     )
+    counts = _bucket_counts_arrow(flagged, n_buckets, tok_col)
+    # the union double-counts nothing: t_freq comes from flagged
+    # rows only, r_freq needs the raw-side rows only
+    return counts.select(
+        "bucket",
+        "t_freq",
+        (F.col("r_freq") - F.col("t_freq")).alias("r_freq"),
+    ).where((F.col("t_freq") > 0) | (F.col("r_freq") > 0))
 
 
 def _model_arrays(model: DataFrame, n_buckets: int):
@@ -220,130 +184,84 @@ def dsir_score(
     scale_bits: int = 20,
     id_col: str = "doc_id",
     tok_col: str = "tokens",
-    kernel: str = "arrow",
     keep_cols: tuple = (),
 ) -> DataFrame:
     """Score each document against a built DSIR model:
     -> (id, *keep_cols, n_feat int, target_mass bigint, raw_mass bigint,
     ratio_fp bigint). See the module docstring for the exact formula.
     ``keep_cols`` ride through the scoring stage unchanged (payload
-    pass-through for pipeline/streaming composition — the arrow kernel
-    echoes them per batch; the jvm kernel re-selects them from the
-    input).
+    pass-through for pipeline/streaming composition — the kernel echoes
+    them per batch).
 
-    Streaming: the default arrow kernel is a STATELESS map, legal in a
-    streaming plan when ``model`` is a batch DataFrame (collected at
-    composition time) — run_prep_stream's DSIR gate uses exactly this;
-    the jvm kernel's groupBy/join is batch-only.
+    Streaming: the kernel is a STATELESS map, legal in a streaming plan
+    when ``model`` is a batch DataFrame (collected at composition time)
+    — run_prep_stream's DSIR gate uses exactly this.
 
     Determinism precondition (shared with ``score_bigram_novelty``):
     the model is materialized once (collect/broadcast) and scoring runs
     in a later job; the model input must not mutate in between."""
     s = 1 << scale_bits
 
-    if kernel == "jvm":
-        # jvm keeps the model as a broadcast-joined DataFrame, so the
-        # totals need their own (model-lineage) aggregation job
-        totals = model.agg(
-            F.sum("t_freq").alias("t"), F.sum("r_freq").alias("r")
-        ).first()
-        t_total, r_total = int(totals["t"] or 0), int(totals["r"] or 0)
-        ex = _exploded_bigrams(
-            df, tok_col, extras=((F.col(id_col), id_col),), pair_name="_pk"
-        ).select(
-            id_col, _bucket_expr(F.col("_pk"), n_buckets).alias("bucket")
-        )
-        agg = (
-            ex.join(F.broadcast(model), "bucket", "left")
-            .groupBy(id_col)
-            .agg(
-                F.count(F.lit(1)).cast("int").alias("_nf"),
-                F.sum(
-                    F.coalesce(F.col("t_freq"), F.lit(0)) + 1
-                ).alias("_tm"),
-                F.sum(
-                    F.coalesce(F.col("r_freq"), F.lit(0)) + 1
-                ).alias("_rm"),
-            )
-        )
-        stats = df.select(
-            F.col(id_col), *[F.col(c) for c in keep_cols]
-        ).join(agg, id_col, "left").select(
-            id_col,
-            *keep_cols,
-            F.coalesce(F.col("_nf"), F.lit(0)).alias("n_feat"),
-            F.coalesce(F.col("_tm"), F.lit(0)).cast("long").alias(
-                "target_mass"
-            ),
-            F.coalesce(F.col("_rm"), F.lit(0)).cast("long").alias(
-                "raw_mass"
-            ),
-        )
-    elif kernel == "arrow":
-        from typing import Iterator
+    from typing import Iterator
 
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        # ONE model materialization: the totals are sums of the collected
-        # arrays — a second model.agg job would re-run the un-persisted
-        # model lineage (a full corpus pass for the standard builders)
-        tf, rf = _model_arrays(model, n_buckets)
-        t_total, r_total = int(tf.sum()), int(rf.sum())
-        b = df.sparkSession.sparkContext.broadcast((tf, rf))
+    # ONE model materialization: the totals are sums of the collected
+    # arrays — a second model.agg job would re-run the un-persisted
+    # model lineage (a full corpus pass for the standard builders)
+    tf, rf = _model_arrays(model, n_buckets)
+    t_total, r_total = int(tf.sum()), int(rf.sum())
+    b = df.sparkSession.sparkContext.broadcast((tf, rf))
 
-        def fn(
-            batches: "Iterator[pd.DataFrame]",
-        ) -> "Iterator[pd.DataFrame]":
-            # the score_bigram_novelty batch kernel with a dense gather
-            # in place of searchsorted (buckets are 0..B-1 by
-            # construction); flat-stream segmentation shared via
-            # _batch_bigram_pairs/_segment_sums.
-            from otel_tail_sampler_spark.operators.corpus import (
-                _batch_bigram_pairs,
-                _segment_sums,
-            )
-
-            vtf, vrf = b.value
-            nb = np.int64(len(vtf))
-            for pdf in batches:
-                n = len(pdf)
-                if not n:
-                    continue
-                arrs = [np.asarray(t, np.int64) for t in pdf[tok_col]]
-                lens = np.fromiter((a.size for a in arrs), np.int64, n)
-                nfe = np.maximum(lens - 1, 0)
-                tm = np.zeros(n, np.int64)
-                rm = np.zeros(n, np.int64)
-                if int(lens.sum()) >= 2:
-                    pairs, cross, starts, nz = _batch_bigram_pairs(
-                        arrs, lens
-                    )
-                    bk = pairs % nb  # numpy %: sign of divisor, == pmod
-                    tm = _segment_sums(vtf[bk] + 1, cross, starts, nfe, nz)
-                    rm = _segment_sums(vrf[bk] + 1, cross, starts, nfe, nz)
-                out = {id_col: pdf[id_col]}
-                for c in keep_cols:
-                    out[c] = pdf[c]
-                out["n_feat"] = nfe.astype(np.int32)
-                out["target_mass"] = tm
-                out["raw_mass"] = rm
-                yield pd.DataFrame(out)
-
-        typ = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        keep_ddl = "".join(f", {c} {typ[c]}" for c in keep_cols)
-        in_cols = [id_col, *keep_cols]
-        if tok_col not in in_cols:  # tok_col may already ride keep_cols
-            in_cols.append(tok_col)
-        stats = df.select(*[F.col(c) for c in in_cols]).mapInPandas(
-            fn,
-            f"{id_col} {typ[id_col]}{keep_ddl}, n_feat int,"
-            " target_mass long, raw_mass long",
+    def fn(
+        batches: "Iterator[pd.DataFrame]",
+    ) -> "Iterator[pd.DataFrame]":
+        # the score_bigram_novelty batch kernel with a dense gather
+        # in place of searchsorted (buckets are 0..B-1 by
+        # construction); flat-stream segmentation shared via
+        # _batch_bigram_pairs/_segment_sums.
+        from otel_tail_sampler_spark.operators.corpus import (
+            _batch_bigram_pairs,
+            _segment_sums,
         )
-    else:
-        raise ValueError(
-            f"unknown kernel: {kernel!r} (want 'jvm' or 'arrow')"
-        )
+
+        vtf, vrf = b.value
+        nb = np.int64(len(vtf))
+        for pdf in batches:
+            n = len(pdf)
+            if not n:
+                continue
+            arrs = [np.asarray(t, np.int64) for t in pdf[tok_col]]
+            lens = np.fromiter((a.size for a in arrs), np.int64, n)
+            nfe = np.maximum(lens - 1, 0)
+            tm = np.zeros(n, np.int64)
+            rm = np.zeros(n, np.int64)
+            if int(lens.sum()) >= 2:
+                pairs, cross, starts, nz = _batch_bigram_pairs(
+                    arrs, lens
+                )
+                bk = pairs % nb  # numpy %: sign of divisor, == pmod
+                tm = _segment_sums(vtf[bk] + 1, cross, starts, nfe, nz)
+                rm = _segment_sums(vrf[bk] + 1, cross, starts, nfe, nz)
+            out = {id_col: pdf[id_col]}
+            for c in keep_cols:
+                out[c] = pdf[c]
+            out["n_feat"] = nfe.astype(np.int32)
+            out["target_mass"] = tm
+            out["raw_mass"] = rm
+            yield pd.DataFrame(out)
+
+    typ = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    keep_ddl = "".join(f", {c} {typ[c]}" for c in keep_cols)
+    in_cols = [id_col, *keep_cols]
+    if tok_col not in in_cols:  # tok_col may already ride keep_cols
+        in_cols.append(tok_col)
+    stats = df.select(*[F.col(c) for c in in_cols]).mapInPandas(
+        fn,
+        f"{id_col} {typ[id_col]}{keep_ddl}, n_feat int,"
+        " target_mass long, raw_mass long",
+    )
 
     # fixed-point ratio: intermediates exceed int64 (S * mass * (R+B)),
     # ride DECIMAL(38,0) exactly as BM25's scorer does; operands are
@@ -373,7 +291,6 @@ def dsir_select(
     scale_bits: int = 20,
     id_col: str = "doc_id",
     tok_col: str = "tokens",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Deterministic importance selection: the ``k`` most target-like
     documents by ``ratio_fp`` (ties to the smaller id):
@@ -389,7 +306,6 @@ def dsir_select(
         scale_bits=scale_bits,
         id_col=id_col,
         tok_col=tok_col,
-        kernel=kernel,
     )
     top = scored.orderBy(F.desc("ratio_fp"), F.asc(id_col)).limit(int(k))
     w = Window.orderBy(F.desc("ratio_fp"), F.asc(id_col))
@@ -405,7 +321,6 @@ def dsir_sample(
     id_col: str = "doc_id",
     tok_col: str = "tokens",
     seed: str = "dsir",
-    kernel: str = "arrow",
     keep_cols: tuple = (),
 ) -> DataFrame:
     """DSIR's importance RESAMPLING as a deterministic weighted Bernoulli
@@ -447,7 +362,6 @@ def dsir_sample(
         scale_bits=scale_bits,
         id_col=id_col,
         tok_col=tok_col,
-        kernel=kernel,
         keep_cols=keep_cols,
     )
     h32 = F.conv(
@@ -485,7 +399,6 @@ def build_dsir_model_partitioned(
     target_pred: Column,
     n_buckets: int = _DEFAULT_BUCKETS,
     tok_col: str = "tokens",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Single-pass ``build_dsir_model`` for the common case where the
     target corpus IS a slice of the raw corpus (a source/domain/label
@@ -496,25 +409,10 @@ def build_dsir_model_partitioned(
     buckets only the target would contribute — impossible here, since
     the target is a subset. Equality is pinned in tests.
 
-    ``kernel="arrow"`` (default) is the bincount partial-aggregate
-    kernel of ``_bucket_counts_arrow``; ``kernel="jvm"`` keeps the
-    zero-Python explode + conditional-sum witness."""
-    if kernel == "arrow":
-        return _bucket_counts_arrow(
-            raw.select(target_pred.alias("_is_t"), F.col(tok_col)),
-            n_buckets,
-            tok_col,
-        )
-    if kernel != "jvm":
-        raise ValueError(
-            f"unknown kernel: {kernel!r} (want 'jvm' or 'arrow')"
-        )
-    ex = _exploded_bigrams(
-        raw, tok_col, extras=((target_pred, "_is_t"),), pair_name="_pk"
-    ).select("_is_t", _bucket_expr(F.col("_pk"), n_buckets).alias("bucket"))
-    return ex.groupBy("bucket").agg(
-        F.sum(F.when(F.col("_is_t"), 1).otherwise(0))
-        .cast("long")
-        .alias("t_freq"),
-        F.count(F.lit(1)).cast("long").alias("r_freq"),
+    Runs the bincount partial-aggregate kernel of
+    ``_bucket_counts_arrow``."""
+    return _bucket_counts_arrow(
+        raw.select(target_pred.alias("_is_t"), F.col(tok_col)),
+        n_buckets,
+        tok_col,
     )

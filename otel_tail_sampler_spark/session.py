@@ -9,8 +9,28 @@ not hard-coded.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_LOCAL_MASTER = re.compile(r"local(?:\[(\d+|\*)(?:,\d+)?\])?")
+
+
+def default_driver_memory(master: str) -> str:
+    """Driver heap for ``master``: 0.5 GiB per core of ``local[N]`` (all
+    host cores for ``local[*]``), never under 8 GiB; ``local[32]`` ->
+    ``16g``.
+
+    local[N] runs every executor thread inside the driver JVM, so the heap
+    follows the concurrency (result collects + 32-way execution GC-thrash
+    an 8 GiB heap). A non-local master gets the floor: its executors are
+    sized by the cluster manager."""
+    m = _LOCAL_MASTER.fullmatch(master)
+    if m is None:
+        return "8g"
+    n = m.group(1) or "1"
+    cores = (os.cpu_count() or 1) if n == "*" else int(n)
+    return f"{max(8, -(-cores // 2))}g"
 
 
 def build_session(
@@ -58,11 +78,11 @@ def build_session(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.enableVectorizedReader", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # local[N] runs every executor thread inside the driver JVM: size
-        # the heap to the concurrency (~0.5 GiB/core) or result collects +
-        # 32-way execution GC-thrash an 8 GiB heap. Env-overridable; on a
-        # real cluster executors get their own sizing.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or default_driver_memory(master),
+        )
         .config("spark.ui.enabled", "false")
         # Dynamic partition overwrite -> idempotent per-partition sink commits
         # (the checkpoint/resume contract in plans.checkpoint).

@@ -123,12 +123,6 @@ def assemble_sessions(
     )
 
 
-STATE_SCHEMA = (
-    "span_count long, error_count long, max_duration_ms long, "
-    "min_ts long, max_ts long, first_ts long, first_sid string, "
-    "first_svc string, root_ts long, root_sid string, ops array<string>"
-)
-
 # Bucketed state: ONE state row per hash bucket holding the parallel-array
 # trace map (the reference's shard-local HashMap<trace_id, TraceState>,
 # memory.rs:185-228, expressed as Spark state). `dl` is each trace's armed

@@ -9,6 +9,12 @@ from otel_tail_sampler_spark.session import build_session  # noqa: E402
 from otel_tail_sampler_spark.sources.generator import GenSpec, generate_dataset  # noqa: E402
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: multi-example property tests (several Spark jobs each)"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = build_session(

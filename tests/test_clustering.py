@@ -257,21 +257,42 @@ def test_kmeans_distributed_fit_edge_cases(spark):
         kmeans_fit(_qdf(spark, []), k=2, driver_fit_threshold=0)
 
 
-def test_semantic_dedup_pair_kernels_equal(spark):
-    # the vectorized arrow pair scorer (r7 default) must keep the exact
-    # int64 drop set of the zero-Python jvm witness on planted near-dups
+def _ref_semantic_dedup(vecs, clusters, tau):
+    """Scalar SemDeDup drop rule: within a cluster, drop id b iff some
+    smaller id a has dot(a, b) > 0 and den^2*dot^2 >= num^2*|a|^2*|b|^2
+    (exact Python ints; zero vectors never match). -> survivors as
+    sorted (id, cluster)."""
+    num, den = tau
+    n2 = [sum(x * x for x in v) for v in vecs]
+    dropped = set()
+    for b in range(len(vecs)):
+        for a in range(b):
+            if clusters[a] != clusters[b] or not (n2[a] and n2[b]):
+                continue
+            dot = sum(x * y for x, y in zip(vecs[a], vecs[b]))
+            if dot > 0 and den * den * dot * dot >= num * num * n2[a] * n2[b]:
+                dropped.add(b)
+    return sorted(
+        (i, clusters[i]) for i in range(len(vecs)) if i not in dropped
+    )
+
+
+def test_semantic_dedup_matches_scalar_reference(spark):
+    # the vectorized pair scorer's drop set equals the exact cosine test
+    # over every same-cluster pair of the kmeans_assign clusters, on
+    # planted near-dups plus a zero vector
     vecs = [[10, 0], [0, 10], [10, 1], [9, 0], [0, 0], [5, 5], [10, 2]]
     df = _qdf(spark, vecs)
-    want = sorted(
-        (r["vec_id"], r["cluster"])
-        for r in semantic_dedup(
-            df, k=2, iters=1, tau=(19, 20), pair_kernel="jvm"
-        ).collect()
-    )
+    assign = {
+        r["vec_id"]: r["cluster"]
+        for r in kmeans_assign(df, kmeans_fit(df, k=2, iters=1)).collect()
+    }
     got = sorted(
         (r["vec_id"], r["cluster"])
-        for r in semantic_dedup(
-            df, k=2, iters=1, tau=(19, 20), pair_kernel="arrow"
-        ).collect()
+        for r in semantic_dedup(df, k=2, iters=1, tau=(19, 20)).collect()
+    )
+    want = _ref_semantic_dedup(
+        vecs, [assign[i] for i in range(len(vecs))], (19, 20)
     )
     assert got == want
+    assert len(want) < len(vecs)  # the planted near-dups really drop

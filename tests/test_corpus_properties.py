@@ -253,7 +253,7 @@ def test_subrange_rank_matches_scalar_order(spark, rows, reset, use_value):
 
 
 # ---------------------------------------------------------------------------
-# DSIR kernels (arrow vs jvm) over arbitrary corpora
+# DSIR scoring kernel vs the scalar reference over arbitrary corpora
 # ---------------------------------------------------------------------------
 
 DSIR_CORPUS = st.lists(
@@ -274,9 +274,9 @@ DSIR_CORPUS = st.lists(
 @given(DSIR_CORPUS, st.integers(min_value=2, max_value=64))
 @settings(max_examples=8, deadline=None)
 def test_dsir_kernels_agree_on_arbitrary_corpora(spark, rows, n_buckets):
-    """Property: the arrow (numpy flat-stream) and jvm (explode+join)
-    DSIR scoring kernels agree on arbitrary corpora including full
-    int32-range tokens, and both match a scalar reference."""
+    """Property: the DSIR model builder and scoring kernel (numpy flat
+    stream) match a scalar reference on arbitrary corpora including
+    full int32-range tokens."""
     from otel_tail_sampler_spark.operators.selection import (
         build_dsir_model,
         dsir_score,
@@ -289,21 +289,15 @@ def test_dsir_kernels_agree_on_arbitrary_corpora(spark, rows, n_buckets):
     )
     model = build_dsir_model(target, df, n_buckets=n_buckets)
 
-    def score(kernel):
-        return {
-            r["doc_id"]: (
-                r["n_feat"],
-                r["target_mass"],
-                r["raw_mass"],
-                r["ratio_fp"],
-            )
-            for r in dsir_score(
-                df, model, n_buckets=n_buckets, kernel=kernel
-            ).collect()
-        }
-
-    a = score("arrow")
-    assert a == score("jvm")
+    a = {
+        r["doc_id"]: (
+            r["n_feat"],
+            r["target_mass"],
+            r["raw_mass"],
+            r["ratio_fp"],
+        )
+        for r in dsir_score(df, model, n_buckets=n_buckets).collect()
+    }
 
     # scalar reference
     tf, rf = {}, {}
@@ -313,8 +307,12 @@ def test_dsir_kernels_agree_on_arbitrary_corpora(spark, rows, n_buckets):
             rf[f] = rf.get(f, 0) + 1
             if did in target_ids:
                 tf[f] = tf.get(f, 0) + 1
+    assert sorted(map(tuple, model.collect())) == sorted(
+        (f, tf.get(f, 0), rf[f]) for f in rf
+    )
     t_tot, r_tot = sum(tf.values()), sum(rf.values())
     s = 1 << 20
+    assert set(a) == {did for did, _ in rows}
     for did, toks in rows:
         feats = [
             (x * 4294967296 + (y & 0xFFFFFFFF)) % n_buckets

@@ -150,53 +150,38 @@ def test_bm25_hot_query_topk_is_group_limited(spark):
 
 
 def test_bm25_corpus_side_never_sort_merge_joins(spark, corpus, queries):
-    # jvm witness: query terms broadcast; the corpus explode must hit a
-    # broadcast semi probe, never a corpus-wide SortMergeJoin
+    # NO joins and NO aggregation above the scoring kernel — candidates
+    # go straight into the bounded window
     plan = (
-        bm25_topk(corpus, queries, k=3, kernel="jvm")
+        bm25_topk(corpus, queries, k=3)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-    # arrow path (default): NO joins and NO aggregation above the
-    # scoring kernel — candidates go straight into the bounded window
-    plan_a = (
-        bm25_topk(corpus, queries, k=3, kernel="arrow")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Join" not in plan_a
-    assert "MapInPandas" in plan_a and "HashAggregate" not in plan_a
+    assert "Join" not in plan
+    assert "MapInPandas" in plan and "HashAggregate" not in plan
 
 
 def test_bm25_kernels_equal(spark, corpus, queries):
-    # r6: the arrow matched-tf bincount kernel vs the zero-Python
-    # explode witness — full (score, rank) equality, plus edge shapes
-    # (empty doc, no-match doc, duplicated tokens) via the shared corpus
-    a = {
+    # the matched-tf bincount kernel vs the scalar reference at k=5 —
+    # full (score, rank) equality over every matching doc of the shared
+    # corpus (no-match doc, duplicated tokens)
+    got = {
         (r["query_id"], r["doc_id"]): (r["score_fp"], r["rank"])
-        for r in bm25_topk(corpus, queries, k=5, kernel="arrow").collect()
+        for r in bm25_topk(corpus, queries, k=5).collect()
     }
-    j = {
-        (r["query_id"], r["doc_id"]): (r["score_fp"], r["rank"])
-        for r in bm25_topk(corpus, queries, k=5, kernel="jvm").collect()
-    }
-    assert a == j and a
+    assert got == _ref(DOCS, QUERIES, k=5) and got
 
 
 def test_bm25_arrow_kernel_no_query_terms(spark, corpus):
     qs = spark.createDataFrame(
         [("qe", [])], "query_id string, tokens array<int>"
     )
-    assert bm25_topk(corpus, qs, k=3, kernel="arrow").count() == 0
+    assert bm25_topk(corpus, qs, k=3).count() == 0
 
 
 def test_bm25_k_zero_is_empty_both_kernels(spark, corpus, queries):
-    for kern in ("arrow", "jvm"):
-        assert bm25_topk(corpus, queries, k=0, kernel=kern).count() == 0
+    assert bm25_topk(corpus, queries, k=0).count() == 0
 
 
 def test_bm25_matches_threshold_equals_scored_reference(spark, corpus, queries):
@@ -231,17 +216,46 @@ def test_bm25_matches_threshold_equals_scored_reference(spark, corpus, queries):
                 ref_pairs[(qid, did)] = sc
     bar = sorted(ref_pairs.values())[len(ref_pairs) // 2]  # a real cut
     want = {kv for kv in ref_pairs.items() if kv[1] >= bar}
-    for kern in ("arrow", "jvm"):
-        got = {
-            ((r["query_id"], r["doc_id"]), r["score_fp"])
-            for r in bm25_matches(
-                corpus, queries, min_score_fp=bar, kernel=kern
-            ).collect()
-        }
-        assert got == want, kern
+    got = {
+        ((r["query_id"], r["doc_id"]), r["score_fp"])
+        for r in bm25_matches(corpus, queries, min_score_fp=bar).collect()
+    }
+    assert got == want
     # apply side: every flagged doc gone, everything else intact
     flagged = {d for (_, d), _ in want}
     kept = decontaminate_by_retrieval(corpus, queries, min_score_fp=bar)
     assert {r["doc_id"] for r in kept.collect()} == (
         {d for d, _ in DOCS} - flagged
     )
+
+
+def test_bm25_oversize_document_routes_to_index(spark):
+    # a 2^21-token document overflows the one-shot kernel's triple pack:
+    # bm25_topk must refuse it with a message naming the escape route,
+    # and bm25_index + bm25_search (no length limit) must rank the corpus
+    from otel_tail_sampler_spark.operators.retrieval import (
+        bm25_index,
+        bm25_search,
+    )
+
+    n = 1 << 21
+    big = spark.range(1).select(
+        F.lit("big").alias("doc_id"),
+        F.array_repeat(F.lit(1), n).alias("tokens"),
+    )
+    small = spark.createDataFrame(
+        [("small", [1, 2])], "doc_id string, tokens array<int>"
+    )
+    corpus = big.unionByName(small)
+    qs = [("q", [1])]
+    queries = spark.createDataFrame(qs, "query_id string, tokens array<int>")
+    with pytest.raises(Exception, match="bm25_index \\+ bm25_search"):
+        bm25_topk(corpus, queries, k=2).collect()
+    post, ts, stats = bm25_index(corpus)
+    got = {
+        (r["query_id"], r["doc_id"]): (r["score_fp"], r["rank"])
+        for r in bm25_search(post, ts, stats, queries, k=2).collect()
+    }
+    assert stats == (2, n + 2)
+    assert got == _ref([("big", [1] * n), ("small", [1, 2])], qs, k=2)
+    assert len(got) == 2

@@ -2,8 +2,9 @@
 
 The Spark kernels and the DuckDB oracle share the pack/bucket/smoothing
 formulas, so (symmetric-bug rule) correctness rests on an independent
-pure-Python scalar reference plus arrow-vs-jvm kernel equality over
-edge shapes — the two kernels share only the packing expression.
+pure-Python scalar reference of the model counts and the scores, checked
+over edge shapes (empty and single-token docs, INT32_MIN packs, negative
+modulo).
 """
 
 import pytest
@@ -35,8 +36,8 @@ def _pack(a, b):
     return a * 4294967296 + (b & 0xFFFFFFFF)
 
 
-def _ref(rows, target_ids, n_buckets, scale_bits=20):
-    """Independent scalar reference of the documented formulas."""
+def _ref_counts(rows, target_ids, n_buckets):
+    """Scalar bucket counts: (t_freq, r_freq) dicts keyed by bucket."""
     tf: dict = {}
     rf: dict = {}
     for did, toks in rows:
@@ -45,6 +46,19 @@ def _ref(rows, target_ids, n_buckets, scale_bits=20):
             rf[f] = rf.get(f, 0) + 1
             if did in target_ids:
                 tf[f] = tf.get(f, 0) + 1
+    return tf, rf
+
+
+def _ref_model(rows, target_ids, n_buckets):
+    """The model rows a builder must emit: (bucket, t_freq, r_freq) for
+    every bucket observed in either corpus."""
+    tf, rf = _ref_counts(rows, target_ids, n_buckets)
+    return sorted((f, tf.get(f, 0), rf[f]) for f in rf)
+
+
+def _ref(rows, target_ids, n_buckets, scale_bits=20):
+    """Independent scalar reference of the documented formulas."""
+    tf, rf = _ref_counts(rows, target_ids, n_buckets)
     t_total, r_total = sum(tf.values()), sum(rf.values())
     s = 1 << scale_bits
     out = {}
@@ -64,8 +78,7 @@ def _ref(rows, target_ids, n_buckets, scale_bits=20):
     return out
 
 
-@pytest.mark.parametrize("kernel", ["arrow", "jvm"])
-def test_score_matches_scalar_reference(spark, kernel):
+def test_score_matches_scalar_reference(spark):
     n_buckets = 64  # tiny: forces real bucket collisions
     rows = [(d, t) for d, t in VECS]
     df = _df(spark, rows)
@@ -78,9 +91,7 @@ def test_score_matches_scalar_reference(spark, kernel):
             r["raw_mass"],
             r["ratio_fp"],
         )
-        for r in dsir_score(
-            df, model, n_buckets=n_buckets, kernel=kernel
-        ).collect()
+        for r in dsir_score(df, model, n_buckets=n_buckets).collect()
     }
     assert got == _ref(rows, TARGET_IDS, n_buckets)
 
@@ -99,16 +110,20 @@ def test_model_counts_planted(spark):
 
 
 def test_kernels_equal_on_edge_shapes(spark):
+    # the scoring kernel vs the scalar reference over the edge corpus
     df = _df(spark, VECS)
     target = df.filter(df.doc_id.isin(*TARGET_IDS))
     model = build_dsir_model(target, df, n_buckets=32)
-    a = sorted(
-        dsir_score(df, model, n_buckets=32, kernel="arrow").collect()
-    )
-    j = sorted(
-        dsir_score(df, model, n_buckets=32, kernel="jvm").collect()
-    )
-    assert a == j
+    got = {
+        r["doc_id"]: (
+            r["n_feat"],
+            r["target_mass"],
+            r["raw_mass"],
+            r["ratio_fp"],
+        )
+        for r in dsir_score(df, model, n_buckets=32).collect()
+    }
+    assert got == _ref(VECS, TARGET_IDS, 32)
 
 
 def test_select_topk_rank_and_ties(spark):
@@ -217,9 +232,9 @@ def test_sample_saturation_survives_decimal_range(spark):
 
 @pytest.mark.parametrize("build", ["two", "partitioned"])
 def test_model_builder_kernels_equal_on_edge_shapes(spark, build):
-    # r6: the arrow bincount builder vs the zero-Python explode witness,
-    # over the edge corpus (empty docs, single-token docs, negative ids,
-    # INT32_MIN boundary packs) — they share only the packing formula.
+    # the bincount builders vs the scalar bucket counts over the edge
+    # corpus (empty docs, single-token docs, negative ids, INT32_MIN
+    # boundary packs)
     from pyspark.sql import functions as F
 
     from otel_tail_sampler_spark.operators.selection import (
@@ -229,24 +244,18 @@ def test_model_builder_kernels_equal_on_edge_shapes(spark, build):
     df = _df(spark, VECS)
     if build == "two":
         target = df.filter(df.doc_id.isin(*TARGET_IDS))
-        a = build_dsir_model(target, df, n_buckets=32, kernel="arrow")
-        j = build_dsir_model(target, df, n_buckets=32, kernel="jvm")
+        m = build_dsir_model(target, df, n_buckets=32)
     else:
         pred = F.col("doc_id").isin(*TARGET_IDS)
-        a = build_dsir_model_partitioned(
-            df, pred, n_buckets=32, kernel="arrow"
-        )
-        j = build_dsir_model_partitioned(
-            df, pred, n_buckets=32, kernel="jvm"
-        )
-    assert sorted(map(tuple, a.collect())) == sorted(
-        map(tuple, j.collect())
+        m = build_dsir_model_partitioned(df, pred, n_buckets=32)
+    assert sorted(map(tuple, m.collect())) == _ref_model(
+        VECS, TARGET_IDS, 32
     )
 
 
 def test_model_builder_null_predicate_is_not_target(spark):
-    # NULL predicate rows count raw-only in BOTH kernels (the jvm
-    # witness's otherwise(0); the arrow path's coalesce-to-False)
+    # NULL predicate rows count raw-only (SQL's otherwise(0) semantics;
+    # the kernel coalesces the flag to False)
     from pyspark.sql import functions as F
 
     from otel_tail_sampler_spark.operators.selection import (
@@ -258,8 +267,5 @@ def test_model_builder_null_predicate_is_not_target(spark):
         "doc_id string, lab string, tokens array<int>",
     )
     pred = F.when(F.col("lab").isNotNull(), F.col("lab") == "t")
-    for kern in ("arrow", "jvm"):
-        m = build_dsir_model_partitioned(
-            df, pred, n_buckets=16, kernel=kern
-        ).collect()
-        assert [(r["t_freq"], r["r_freq"]) for r in m] == [(1, 2)]
+    m = build_dsir_model_partitioned(df, pred, n_buckets=16).collect()
+    assert [(r["t_freq"], r["r_freq"]) for r in m] == [(1, 2)]

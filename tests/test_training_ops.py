@@ -1045,6 +1045,23 @@ def test_ngram_counts_plan_is_take_ordered(spark):
     assert "partial_count" in plan
 
 
+def _ref_bigram_novelty(rows, mref):
+    """Scalar score_bigram_novelty: doc_id -> (n_bigrams, n_unseen,
+    hit_freq_sum) against the {packed bigram: freq} model ``mref``."""
+    out = {}
+    for doc_id, toks in rows:
+        pairs = [
+            toks[i] * 4294967296 + (toks[i + 1] & 0xFFFFFFFF)
+            for i in range(len(toks) - 1)
+        ]
+        out[doc_id] = (
+            len(pairs),
+            sum(1 for p in pairs if p not in mref),
+            sum(mref.get(p, 0) for p in pairs),
+        )
+    return out
+
+
 def test_score_bigram_novelty_scalar_reference(spark):
     """Spark scoring == a pure-python scalar reference on random docs."""
     from otel_tail_sampler_spark.operators.corpus import (
@@ -1060,27 +1077,16 @@ def test_score_bigram_novelty_scalar_reference(spark):
     df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
     model = build_bigram_model(df, model_size=20)
     mref = {r["bigram"]: r["freq"] for r in model.collect()}
-    for kernel in ("jvm", "arrow"):
-        got = {
-            r["doc_id"]: (r["n_bigrams"], r["n_unseen"], r["hit_freq_sum"])
-            for r in score_bigram_novelty(df, model, kernel=kernel).collect()
-        }
-        for doc_id, toks in rows:
-            pairs = [
-                toks[i] * 4294967296 + (toks[i + 1] & 0xFFFFFFFF)
-                for i in range(len(toks) - 1)
-            ]
-            exp = (
-                len(pairs),
-                sum(1 for p in pairs if p not in mref),
-                sum(mref.get(p, 0) for p in pairs),
-            )
-            assert got[doc_id] == exp, (kernel, doc_id)
+    got = {
+        r["doc_id"]: (r["n_bigrams"], r["n_unseen"], r["hit_freq_sum"])
+        for r in score_bigram_novelty(df, model).collect()
+    }
+    assert got == _ref_bigram_novelty(rows, mref)
 
 
 def test_score_bigram_novelty_arrow_kernel_is_shuffle_free(spark):
-    """kernel='arrow': the corpus never shuffles during scoring — model
-    broadcast, one Arrow stage over the scan."""
+    """The corpus never shuffles during scoring — model broadcast, one
+    Arrow stage over the scan."""
     from otel_tail_sampler_spark.operators.corpus import (
         build_bigram_model,
         score_bigram_novelty,
@@ -1091,7 +1097,7 @@ def test_score_bigram_novelty_arrow_kernel_is_shuffle_free(spark):
     )
     model = build_bigram_model(df, model_size=10)
     plan = (
-        score_bigram_novelty(df, model, kernel="arrow")
+        score_bigram_novelty(df, model)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -1101,41 +1107,27 @@ def test_score_bigram_novelty_arrow_kernel_is_shuffle_free(spark):
 
 
 def test_score_bigram_novelty_jvm_kernel_plan_and_edges(spark):
-    """kernel='jvm' (the zero-Python variant): no Python stages, the
-    model side is a broadcast hash join (the corpus never builds a
-    shuffle for the lookup); kernels agree on edge docs (empty,
-    single-token, INT32_MIN-adjacent tokens) and on an empty model."""
+    """The scoring kernel matches the scalar reference on edge docs
+    (empty, single-token, INT32_MIN-adjacent tokens) and on an empty
+    model (every bigram unseen)."""
     from otel_tail_sampler_spark.operators.corpus import (
         build_bigram_model,
         score_bigram_novelty,
     )
 
     lo = -(2**31)
-    df = spark.createDataFrame(
-        [("a", [1, 2, 3, 1, 2]), ("b", []), ("c", [7]),
-         ("d", [lo, -1, lo, lo + 1])],
-        "doc_id string, tokens array<int>",
-    )
+    rows = [("a", [1, 2, 3, 1, 2]), ("b", []), ("c", [7]),
+            ("d", [lo, -1, lo, lo + 1])]
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
     model = build_bigram_model(df, model_size=3)
-    plan = (
-        score_bigram_novelty(df, model, kernel="jvm")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan
-    for py_node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert py_node not in plan
-    for m in (model, model.limit(0)):  # empty model: all bigrams unseen
-        jvm = {
-            tuple(r)
-            for r in score_bigram_novelty(df, m, kernel="jvm").collect()
+    for m in (model, model.limit(0)):
+        mref = {r["bigram"]: r["freq"] for r in m.collect()}
+        got = {
+            r["doc_id"]: (r["n_bigrams"], r["n_unseen"], r["hit_freq_sum"])
+            for r in score_bigram_novelty(df, m).collect()
         }
-        arr = {
-            tuple(r)
-            for r in score_bigram_novelty(df, m, kernel="arrow").collect()
-        }
-        assert jvm == arr
+        assert got == _ref_bigram_novelty(rows, mref)
+    assert len(mref) == 0  # the empty-model case really ran
 
 
 def test_quantize_embeddings_hand_computed(spark):
@@ -1402,24 +1394,6 @@ def test_pick_dedup_representatives_longest_wins(spark):
     # longest wins; 11-word tie between docs 2 and 3 -> min id (2)
     assert got[1] == (2, 11, 3)
     assert got[9] == (9, 2, 1) and got[10] == (10, 7, 1)
-
-
-def test_mask_tokens_fast_path_contract(spark):
-    """fast=True (xxhash64) keeps the contract: deterministic reruns,
-    seed-epoch independence, ~rate density, n_masked consistent."""
-    from otel_tail_sampler_spark.operators.augment import mask_tokens
-
-    rows = [(f"d{i}", list(range(100, 160))) for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
-    a = mask_tokens(df, mask_id=-9, rate=0.15, fast=True).toPandas()
-    b = mask_tokens(df, mask_id=-9, rate=0.15, fast=True).toPandas()
-    assert list(map(list, a["tokens"])) == list(map(list, b["tokens"]))
-    other = mask_tokens(df, mask_id=-9, rate=0.15, seed="e2", fast=True).toPandas()
-    assert list(map(list, other["tokens"])) != list(map(list, a["tokens"]))
-    masked = int(a["n_masked"].sum())
-    assert 120 <= masked <= 240  # 1200 positions at 15%
-    for _, r in a.iterrows():
-        assert sum(1 for t in r["tokens"] if t == -9) == r["n_masked"]
 
 
 def test_pick_dedup_representatives_nulls_rank_last(spark):
