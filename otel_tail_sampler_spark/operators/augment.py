@@ -35,14 +35,11 @@ def fim_transform(
     suf_id: int,
     rate: float = 0.5,
     min_len: int = 4,
-    seed: str = "fim",
-    id_col: str = "doc_id",
-    tok_col: str = "tokens",
 ) -> DataFrame:
     """Apply PSM fill-in-the-middle to a deterministic ``rate`` fraction
     of documents (hash-selected by id; documents shorter than ``min_len``
     tokens always pass through). Adds ``fim_applied`` and rewrites
-    ``tok_col``/its size.
+    ``tokens``.
 
     Split points: with n = len(tokens), p1 = floor(f1 * (n+1)) and
     p2 = p1 + floor(f2 * (n-p1+1)) where f1, f2 are md5 hash fractions of
@@ -53,14 +50,12 @@ def fim_transform(
     The three sentinel ids are the caller's vocabulary business (reserve
     them outside the token id space, e.g. negative or >= vocab_size).
     """
-    t = F.col(tok_col)
-    n = F.size(tok_col)
-    key = F.col(id_col).cast("string")
-    sel = (hash_frac(key, f"{seed}|apply") < float(rate)) & (
-        n >= int(min_len)
-    )
-    f1 = hash_frac(key, f"{seed}|p1")
-    f2 = hash_frac(key, f"{seed}|p2")
+    t = F.col("tokens")
+    n = F.size("tokens")
+    key = F.col("doc_id").cast("string")
+    sel = (hash_frac(key, "fim|apply") < float(rate)) & (n >= int(min_len))
+    f1 = hash_frac(key, "fim|p1")
+    f2 = hash_frac(key, "fim|p2")
     p1 = F.floor(f1 * (n + F.lit(1))).cast("int")
     p2 = (p1 + F.floor(f2 * (n - p1 + F.lit(1)))).cast("int")
     psm = F.concat(
@@ -72,7 +67,7 @@ def fim_transform(
         F.slice(t, p1 + 1, p2 - p1),
     ).cast("array<int>")
     return df.withColumn("fim_applied", sel).withColumn(
-        tok_col, F.when(sel, psm).otherwise(t)
+        "tokens", F.when(sel, psm).otherwise(t)
     )
 
 
@@ -83,8 +78,6 @@ def span_corruption(
     span_len: int = 8,
     rate: float = 0.25,
     seed: str = "t5",
-    id_col: str = "doc_id",
-    tok_col: str = "tokens",
 ) -> DataFrame:
     """Deterministic T5-style span corruption (Raffel et al. 2020): the
     denoising objective next to :func:`mask_tokens` (MLM) and
@@ -117,9 +110,9 @@ def span_corruption(
     if span_len > block:
         raise ValueError("span_corruption: span_len must be <= block")
     B, L, sb = int(block), int(span_len), int(sentinel_base)
-    t = F.col(tok_col)
-    n = F.size(tok_col)
-    key = F.col(id_col).cast("string")
+    t = F.col("tokens")
+    n = F.size("tokens")
+    key = F.col("doc_id").cast("string")
 
     nb = F.floor((n + F.lit(B - 1)) / F.lit(B)).cast("int")
     blocks = F.when(n > 0, F.sequence(F.lit(0), nb - 1)).otherwise(
@@ -195,17 +188,12 @@ def span_corruption(
 
 
 def mask_tokens(
-    df: DataFrame,
-    mask_id: int,
-    rate: float = 0.15,
-    seed: str = "mlm",
-    id_col: str = "doc_id",
-    tok_col: str = "tokens",
+    df: DataFrame, mask_id: int, rate: float = 0.15, seed: str = "mlm"
 ) -> DataFrame:
     """Deterministic MLM-style corruption: position i of a document is
     replaced with ``mask_id`` iff md5-frac(doc_id:i|seed) < ``rate`` —
     the masked-language-model counterpart of fim_transform's causal
-    infilling. -> input columns with ``tok_col`` rewritten + ``n_masked``.
+    infilling. -> input columns with ``tokens`` rewritten + ``n_masked``.
 
     Per-POSITION hash (not per-document): masking density concentrates
     like independent coin flips, reruns and engines agree exactly, and a
@@ -220,19 +208,19 @@ def mask_tokens(
     def frac(i):
         # hash_frac(doc_id:i, seed) = md5(doc_id:i|seed)-fraction
         key = F.concat(
-            F.col(id_col).cast("string"), F.lit(":"), i.cast("string")
+            F.col("doc_id").cast("string"), F.lit(":"), i.cast("string")
         )
         return hash_frac(key, seed)
 
-    mb = F.transform(F.col(tok_col), lambda x, i: frac(i) < float(rate))
+    mb = F.transform(F.col("tokens"), lambda x, i: frac(i) < float(rate))
     step = df.withColumn("_mb", mb)
     masked = F.zip_with(
-        F.col(tok_col),
+        F.col("tokens"),
         F.col("_mb"),
         lambda x, m: F.when(m, F.lit(int(mask_id))).otherwise(x),
     ).cast("array<int>")
     return (
-        step.withColumn(tok_col, masked)
+        step.withColumn("tokens", masked)
         .withColumn(
             "n_masked",
             F.size(F.filter(F.col("_mb"), lambda b: b)).cast("int"),

@@ -138,16 +138,14 @@ def encode_word(w: str, merges: list[tuple[str, str]]) -> tuple[str, ...]:
     return s
 
 
-def _sample_texts(
-    df: DataFrame, sample_docs: int, text_col: str, id_col: str
-) -> list[str | None]:
+def _sample_texts(df: DataFrame, sample_docs: int) -> list[str | None]:
     """The ONE sampling recipe the oracle replica replays: texts of the
     ``sample_docs`` smallest md5(id|'bpe') hex ranks (tie-break id ASC).
     TakeOrdered keeps the collect bounded at any corpus size."""
     rows = (
         df.select(
-            F.col(id_col).cast("string").alias("_id"),
-            F.col(text_col).alias("_t"),
+            F.col("doc_id").cast("string").alias("_id"),
+            F.col("text").alias("_t"),
         )
         .withColumn("_r", F.md5(F.concat_ws("|", F.col("_id"), F.lit("bpe"))))
         .orderBy("_r", "_id")
@@ -158,18 +156,12 @@ def _sample_texts(
 
 
 def learn_bpe_merges(
-    df: DataFrame,
-    num_merges: int = 64,
-    sample_docs: int = 512,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    df: DataFrame, num_merges: int = 64, sample_docs: int = 512
 ) -> list[tuple[str, str]]:
     """Learn BPE merges on a bounded deterministic sample of ``df``
     (see :func:`_sample_texts`; the oracle replica selects the identical
     sample from the same parquet with pure Python md5)."""
-    return learn_bpe_from_texts(
-        _sample_texts(df, sample_docs, text_col, id_col), num_merges
-    )
+    return learn_bpe_from_texts(_sample_texts(df, sample_docs), num_merges)
 
 
 def sample_alphabet(texts: list[str | None]) -> list[str]:
@@ -190,27 +182,18 @@ def bpe_vocab(
 
 
 def learn_bpe(
-    df: DataFrame,
-    num_merges: int = 64,
-    sample_docs: int = 512,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    df: DataFrame, num_merges: int = 64, sample_docs: int = 512
 ) -> tuple[list[tuple[str, str]], dict[str, int]]:
     """One bounded sample collect -> (merges, vocab). The id-emitting
     sibling of :func:`learn_bpe_merges` for pipelines that need the
     ``tokens array<int>`` shape downstream."""
-    texts = _sample_texts(df, sample_docs, text_col, id_col)
+    texts = _sample_texts(df, sample_docs)
     merges = learn_bpe_from_texts(texts, num_merges)
     return merges, bpe_vocab(merges, sample_alphabet(texts))
 
 
 def _apply_encoder(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    out_col: str,
-    out_type: str,
-    encode_cached,
+    df: DataFrame, out_col: str, out_type: str, encode_cached
 ) -> DataFrame:
     """The ONE word-cached mapInPandas scaffold behind both apply paths
     (batch loop, Arrow empty-frame skip, NULL-text contract, schema
@@ -218,7 +201,7 @@ def _apply_encoder(
     encoding; the per-batch cache makes it vocabulary-rate."""
     import pandas as pd
 
-    id_type = df.schema[id_col].dataType.simpleString()
+    id_type = df.schema["doc_id"].dataType.simpleString()
     n_col_name = "n_pieces" if out_col == "pieces" else "n_tok"
 
     def fn(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -228,7 +211,7 @@ def _apply_encoder(
                 continue  # empty frames break Arrow array-type inference
             vals: list[list] = []
             ns: list[int] = []
-            for t in pdf[text_col]:
+            for t in pdf["text"]:
                 out: list = []
                 for w in _py_words(t):
                     enc = cache.get(w)
@@ -239,22 +222,17 @@ def _apply_encoder(
                 vals.append(out)
                 ns.append(len(out))
             yield pd.DataFrame(
-                {id_col: pdf[id_col], out_col: vals, n_col_name: ns}
+                {"doc_id": pdf["doc_id"], out_col: vals, n_col_name: ns}
             )
 
-    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
+    return df.select(F.col("doc_id"), F.col("text")).mapInPandas(
         fn,
-        f"{id_col} {id_type}, {out_col} array<{out_type}>, "
+        f"doc_id {id_type}, {out_col} array<{out_type}>, "
         f"{n_col_name} int",
     )
 
 
-def apply_bpe(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def apply_bpe(df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Encode every document with a learned merge list:
     -> (id, pieces array<string>, n_pieces int).
 
@@ -265,17 +243,13 @@ def apply_bpe(
     """
     mlist = [(str(a), str(b)) for a, b in merges]
     return _apply_encoder(
-        df, text_col, id_col, "pieces", "string",
+        df, "pieces", "string",
         lambda w: encode_word(w, mlist),
     )
 
 
 def apply_bpe_ids(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    vocab: dict[str, int],
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    df: DataFrame, merges: list[tuple[str, str]], vocab: dict[str, int]
 ) -> DataFrame:
     """Encode documents straight to dense ids:
     -> (id, tokens array<int>, n_tok int) — the input_hint tokenized
@@ -288,6 +262,6 @@ def apply_bpe_ids(
     mlist = [(str(a), str(b)) for a, b in merges]
     vmap = dict(vocab)
     return _apply_encoder(
-        df, text_col, id_col, "tokens", "int",
+        df, "tokens", "int",
         lambda w: tuple(vmap.get(p, 0) for p in encode_word(w, mlist)),
     )

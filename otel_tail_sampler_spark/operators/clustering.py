@@ -92,11 +92,7 @@ def _batch_matrix(pdf, qvec_col: str, dim: int):
 
 
 def _assign_frame(
-    df_q: DataFrame,
-    centroids,
-    id_col: str,
-    qvec_col: str,
-    keep_vec: bool = False,
+    df_q: DataFrame, centroids, keep_vec: bool = False
 ) -> DataFrame:
     """-> (id, cluster int, dist2 bigint) via the broadcast-argmin kernel.
     ``keep_vec=True`` additionally echoes the vector and its squared norm
@@ -115,29 +111,29 @@ def _assign_frame(
         for pdf in batches:
             if not len(pdf):  # empty yields break Arrow array typing
                 continue
-            V = _batch_matrix(pdf, qvec_col, dim)
+            V = _batch_matrix(pdf, "qvec", dim)
             vnorm = (V * V).sum(axis=1)
             d2 = vnorm[:, None] - 2 * (V @ C.T) + cnorm
             cl = np.argmin(d2, axis=1)  # first min == lowest cluster
             out = {
-                id_col: pdf[id_col],
+                "vec_id": pdf["vec_id"],
                 "cluster": cl.astype(np.int32),
                 "dist2": d2[np.arange(len(cl)), cl],
             }
             if keep_vec:
-                out["_q"] = pdf[qvec_col]
+                out["_q"] = pdf["qvec"]
                 out["_n2"] = vnorm
             yield pd.DataFrame(out)
 
-    id_type = df_q.schema[id_col].dataType.simpleString()
-    qv_type = df_q.schema[qvec_col].dataType.simpleString()
-    ddl = f"{id_col} {id_type}, cluster int, dist2 bigint"
+    id_type = df_q.schema["vec_id"].dataType.simpleString()
+    qv_type = df_q.schema["qvec"].dataType.simpleString()
+    ddl = f"vec_id {id_type}, cluster int, dist2 bigint"
     if keep_vec:
         ddl += f", _q {qv_type}, _n2 bigint"
-    return df_q.select(F.col(id_col), F.col(qvec_col)).mapInPandas(fn, ddl)
+    return df_q.select(F.col("vec_id"), F.col("qvec")).mapInPandas(fn, ddl)
 
 
-def _partial_sums(df_q: DataFrame, centroids, qvec_col: str) -> DataFrame:
+def _partial_sums(df_q: DataFrame, centroids) -> DataFrame:
     """-> (cluster, pos, s, n) per-batch partial sums for one Lloyd
     update: assignment AND the per-cluster scatter-add happen inside the
     kernel, so the exchange sees k*dim rows per Arrow batch instead of a
@@ -154,7 +150,7 @@ def _partial_sums(df_q: DataFrame, centroids, qvec_col: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = _batch_matrix(pdf, qvec_col, dim)
+            V = _batch_matrix(pdf, "qvec", dim)
             d2 = (V * V).sum(axis=1, keepdims=True) - 2 * (V @ C.T) + cnorm
             cl = np.argmin(d2, axis=1)
             sums = np.zeros((k, dim), np.int64)
@@ -172,7 +168,7 @@ def _partial_sums(df_q: DataFrame, centroids, qvec_col: str) -> DataFrame:
                 }
             )
 
-    return df_q.select(F.col(qvec_col)).mapInPandas(
+    return df_q.select(F.col("qvec")).mapInPandas(
         fn, "cluster int, pos int, s bigint, n bigint"
     )
 
@@ -181,8 +177,6 @@ def kmeans_fit(
     df_q: DataFrame,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    qvec_col: str = "qvec",
     driver_fit_threshold: int = 1 << 16,
 ) -> list[list[int]]:
     """Fit k-means centroids over int8-quantized vectors.
@@ -222,7 +216,7 @@ def kmeans_fit(
     from otel_tail_sampler_spark.functions.spread import spread_small_input
 
     probe = (
-        df_q.select(F.col(id_col).alias("_id"), F.col(qvec_col).alias("_q"))
+        df_q.select(F.col("vec_id").alias("_id"), F.col("qvec").alias("_q"))
         .limit(int(driver_fit_threshold) + 1)
         .collect()
     )
@@ -251,7 +245,7 @@ def kmeans_fit(
     # so iterations run cores-wide (no-op at scale)
     df_q = spread_small_input(df_q)
     init_rows = (
-        df_q.select(F.col(id_col).alias("_id"), F.col(qvec_col).alias("_q"))
+        df_q.select(F.col("vec_id").alias("_id"), F.col("qvec").alias("_q"))
         .orderBy("_id")
         .limit(k)
         .collect()
@@ -260,7 +254,7 @@ def kmeans_fit(
 
     for _ in range(iters):
         stats = (
-            _partial_sums(df_q, centroids, qvec_col)
+            _partial_sums(df_q, centroids)
             .groupBy("cluster", "pos")
             .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
             .collect()
@@ -272,12 +266,7 @@ def kmeans_fit(
     return centroids
 
 
-def kmeans_assign(
-    df_q: DataFrame,
-    centroids: list[list[int]],
-    id_col: str = "vec_id",
-    qvec_col: str = "qvec",
-) -> DataFrame:
+def kmeans_assign(df_q: DataFrame, centroids: list[list[int]]) -> DataFrame:
     """-> (vec_id, cluster int, dist2 bigint) under the given centroids.
 
     Shuffle-free: the centroid matrix rides one broadcast variable into an
@@ -287,22 +276,12 @@ def kmeans_assign(
     """
     from otel_tail_sampler_spark.functions.spread import spread_small_input
 
-    return _assign_frame(
-        spread_small_input(df_q), centroids, id_col, qvec_col
-    )
+    return _assign_frame(spread_small_input(df_q), centroids)
 
 
-def kmeans_quantized(
-    df_q: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    qvec_col: str = "qvec",
-) -> DataFrame:
+def kmeans_quantized(df_q: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
     """fit + assign in one call (the oracle-checked query shape)."""
-    return kmeans_assign(
-        df_q, kmeans_fit(df_q, k, iters, id_col, qvec_col), id_col, qvec_col
-    )
+    return kmeans_assign(df_q, kmeans_fit(df_q, k, iters))
 
 
 def semantic_dedup(
@@ -312,8 +291,6 @@ def semantic_dedup(
     iters: int = 2,
     tau: tuple[int, int] = (19, 20),
     max_cluster_anchors: int | None = 256,
-    id_col: str = "vec_id",
-    qvec_col: str = "qvec",
 ) -> DataFrame:
     """SemDeDup: survivors after within-cluster cosine near-dup removal.
 
@@ -349,21 +326,19 @@ def semantic_dedup(
     # (no-op at scale, and idempotent under the nested spreads)
     df_q = spread_small_input(df_q)
     if centroids is None:
-        centroids = kmeans_fit(df_q, k, iters, id_col, qvec_col)
+        centroids = kmeans_fit(df_q, k, iters)
     # ONE kernel pass emits assignment AND vector/norm (keep_vec) — the
     # previous assign-then-self-join shape shuffled the corpus twice and
     # re-ran the argmin kernel once per plan reference. The tiny
     # (id, cluster, _q, _n2) frame is persisted because the pair stage
     # references it three times (anchors, right side, survivor base).
-    m = _assign_frame(
-        df_q, centroids, id_col, qvec_col, keep_vec=True
-    ).drop("dist2").persist()
-    a = m.select(id_col, "cluster")
+    m = _assign_frame(df_q, centroids, keep_vec=True).drop("dist2").persist()
+    a = m.select("vec_id", "cluster")
     anchors = m
     if max_cluster_anchors is not None:
         from pyspark.sql import Window
 
-        w = Window.partitionBy("cluster").orderBy(id_col)
+        w = Window.partitionBy("cluster").orderBy("vec_id")
         anchors = (
             m.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= int(max_cluster_anchors))
@@ -371,13 +346,13 @@ def semantic_dedup(
         )
     left = anchors.select(
         F.col("cluster"),
-        F.col(id_col).alias("_ida"),
+        F.col("vec_id").alias("_ida"),
         F.col("_q").alias("_qa"),
         F.col("_n2").alias("_na"),
     )
     right = m.select(
         F.col("cluster"),
-        F.col(id_col).alias("_idb"),
+        F.col("vec_id").alias("_idb"),
         F.col("_q").alias("_qb"),
         F.col("_n2").alias("_nb"),
     )
@@ -422,16 +397,16 @@ def semantic_dedup(
             if keep.any():
                 yield pd.DataFrame(
                     {
-                        id_col: pd.unique(
+                        "vec_id": pd.unique(
                             pdf["_idb"].to_numpy()[keep]
                         )
                     }
                 )
 
-    id_type = df_q.schema[id_col].dataType.simpleString()
+    id_type = df_q.schema["vec_id"].dataType.simpleString()
     dropped = (
         pairs.select("_idb", "_qa", "_qb", "_na", "_nb")
-        .mapInPandas(fn, f"{id_col} {id_type}")
+        .mapInPandas(fn, f"vec_id {id_type}")
         .distinct()
     )
-    return a.join(dropped, id_col, "left_anti").select(id_col, "cluster")
+    return a.join(dropped, "vec_id", "left_anti").select("vec_id", "cluster")

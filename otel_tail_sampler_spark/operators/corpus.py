@@ -15,10 +15,12 @@ from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.functions.hashing import hash_frac
 
+# hash_frac salt shared by mixture_sample and mixture_upsample, so a doc's
+# keep draw is the same fraction in both
+MIXTURE_SEED = "mixture"
 
-def vocab_histogram(
-    df: DataFrame, tok_col: str = "tokens", top_k: int | None = None
-) -> DataFrame:
+
+def vocab_histogram(df: DataFrame, top_k: int | None = None) -> DataFrame:
     """(token, freq) unigram histogram of the token-array column.
 
     explode -> two-phase count: the partial aggregation combines map-side,
@@ -27,7 +29,7 @@ def vocab_histogram(
     the op behind vocab pruning / OOV-rate checks before training.
     """
     out = (
-        df.select(F.explode(F.col(tok_col)).alias("token"))
+        df.select(F.explode(F.col("tokens")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -36,15 +38,10 @@ def vocab_histogram(
     return out
 
 
-def mixture_sample(
-    docs: DataFrame,
-    rates: dict[str, float],
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    seed: str = "mixture",
-) -> DataFrame:
+def mixture_sample(docs: DataFrame, rates: dict[str, float]) -> DataFrame:
     """Deterministic domain-mixing sample: keep a doc iff
-    md5-fraction(doc_id | seed) < rates[source] (unlisted sources drop).
+    md5-fraction(doc_id | MIXTURE_SEED) < rates[source] (unlisted sources
+    drop).
 
     Same consistent-sampling family as the policy engine's hash sampling:
     raising a source's rate only ADDS documents (nested keep sets), reruns
@@ -54,16 +51,13 @@ def mixture_sample(
     pairs: list[Column] = []
     for s, r in rates.items():
         pairs += [F.lit(s), F.lit(float(r))]
-    rate = F.coalesce(F.create_map(*pairs)[F.col(source_col)], F.lit(0.0))
-    return docs.filter(hash_frac(F.col(id_col).cast("string"), seed) < rate)
+    rate = F.coalesce(F.create_map(*pairs)[F.col("source")], F.lit(0.0))
+    key = F.col("doc_id").cast("string")
+    return docs.filter(hash_frac(key, MIXTURE_SEED) < rate)
 
 
 def remap_rare_tokens(
-    df: DataFrame,
-    min_freq: int = 2,
-    unk_id: int = -1,
-    tok_col: str = "tokens",
-    id_col: str = "doc_id",
+    df: DataFrame, min_freq: int = 2, unk_id: int = -1
 ) -> DataFrame:
     """Replace tokens whose CORPUS-WIDE frequency is below ``min_freq``
     with ``unk_id`` (OOV/UNK collapse before vocabulary finalization).
@@ -90,7 +84,7 @@ def remap_rare_tokens(
     import pandas as pd
 
     rare_pdf = (
-        vocab_histogram(df, tok_col=tok_col)
+        vocab_histogram(df)
         .filter(F.col("freq") < min_freq)
         .select("token")
         .toPandas()
@@ -108,7 +102,7 @@ def remap_rare_tokens(
             n = len(pdf)
             if not n:  # empty batch would yield untyped columns
                 continue
-            arrs = [np.asarray(t, np.int64) for t in pdf[tok_col]]
+            arrs = [np.asarray(t, np.int64) for t in pdf["tokens"]]
             lens = np.fromiter((a.size for a in arrs), np.int64, n)
             total = int(lens.sum())
             if total and rset.size:
@@ -130,23 +124,19 @@ def remap_rare_tokens(
             n_unk[lens == 0] = 0
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
-                    tok_col: np.split(out_flat, cum[:-1]),
+                    "doc_id": pdf["doc_id"],
+                    "tokens": np.split(out_flat, cum[:-1]),
                     "n_unk": n_unk.astype(np.int32),
                 }
             )
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(F.col(id_col), F.col(tok_col)).mapInPandas(
-        fn, f"{id_col} {id_type}, {tok_col} array<int>, n_unk int"
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return df.select(F.col("doc_id"), F.col("tokens")).mapInPandas(
+        fn, f"doc_id {id_type}, tokens array<int>, n_unk int"
     )
 
 
-def build_vocab(
-    df: DataFrame,
-    vocab_size: int,
-    tok_col: str = "tokens",
-) -> DataFrame:
+def build_vocab(df: DataFrame, vocab_size: int) -> DataFrame:
     """Learned-vocabulary build: the ``vocab_size`` most frequent tokens,
     assigned DENSE ranked ids 0..vocab_size-1 by (freq DESC, token ASC) —
     the deterministic tie-break makes the table identical across engines,
@@ -166,7 +156,7 @@ def build_vocab(
     """
     from pyspark.sql import Window
 
-    hist = vocab_histogram(df, tok_col=tok_col)
+    hist = vocab_histogram(df)
     top = hist.orderBy(F.desc("freq"), F.asc("token")).limit(int(vocab_size))
     w = Window.orderBy(F.desc("freq"), F.asc("token"))
     return top.withColumn(
@@ -175,11 +165,7 @@ def build_vocab(
 
 
 def encode_with_vocab(
-    df: DataFrame,
-    vocab: DataFrame,
-    unk_id: int = -1,
-    tok_col: str = "tokens",
-    id_col: str = "doc_id",
+    df: DataFrame, vocab: DataFrame, unk_id: int = -1
 ) -> DataFrame:
     """Remap token arrays onto a built vocabulary's dense rank ids
     (tokens absent from the vocab -> ``unk_id``).
@@ -213,7 +199,7 @@ def encode_with_vocab(
             n = len(pdf)
             if not n:
                 continue
-            arrs = [np.asarray(t, np.int64) for t in pdf[tok_col]]
+            arrs = [np.asarray(t, np.int64) for t in pdf["tokens"]]
             lens = np.fromiter((a.size for a in arrs), np.int64, n)
             total = int(lens.sum())
             if total and vt.size:
@@ -233,28 +219,22 @@ def encode_with_vocab(
             n_unk[lens == 0] = 0
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
-                    tok_col: np.split(out_flat, cum[:-1]),
+                    "doc_id": pdf["doc_id"],
+                    "tokens": np.split(out_flat, cum[:-1]),
                     "n_unk": n_unk.astype(np.int32),
                 }
             )
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(F.col(id_col), F.col(tok_col)).mapInPandas(
-        fn, f"{id_col} {id_type}, {tok_col} array<int>, n_unk int"
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return df.select(F.col("doc_id"), F.col("tokens")).mapInPandas(
+        fn, f"doc_id {id_type}, tokens array<int>, n_unk int"
     )
 
 
-def mixture_upsample(
-    docs: DataFrame,
-    weights: dict[str, float],
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    seed: str = "mixture",
-) -> DataFrame:
+def mixture_upsample(docs: DataFrame, weights: dict[str, float]) -> DataFrame:
     """Deterministic domain mixing with weights ABOVE 1: emit
     floor(w) copies of every doc plus one more iff
-    md5-fraction(doc_id | seed) < frac(w) — the standard "epochs per
+    md5-fraction(doc_id | MIXTURE_SEED) < frac(w) — the standard "epochs per
     source" upsampling a pre-training mixture needs (a 2.5-weighted
     source contributes each doc 2 times plus a consistent extra half).
     Weights < 1 degrade to exactly mixture_sample's keep rule; unlisted
@@ -270,8 +250,8 @@ def mixture_upsample(
     pairs: list[Column] = []
     for s, w in weights.items():
         pairs += [F.lit(s), F.lit(float(w))]
-    w = F.coalesce(F.create_map(*pairs)[F.col(source_col)], F.lit(0.0))
-    frac_keep = hash_frac(F.col(id_col).cast("string"), seed) < (
+    w = F.coalesce(F.create_map(*pairs)[F.col("source")], F.lit(0.0))
+    frac_keep = hash_frac(F.col("doc_id").cast("string"), MIXTURE_SEED) < (
         w - F.floor(w)
     )
     n_copies = (F.floor(w) + frac_keep.cast("long")).cast("int")
@@ -282,12 +262,7 @@ def mixture_upsample(
     ).drop("_n_copies")
 
 
-def doc_rarity(
-    df: DataFrame,
-    rare_threshold: int = 2,
-    tok_col: str = "tokens",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def doc_rarity(df: DataFrame, rare_threshold: int = 2) -> DataFrame:
     """Per-document token-rarity quality signals from CORPUS-WIDE unigram
     frequencies: -> (id, n_tok, mean_freq, rare_frac, min_freq).
 
@@ -319,7 +294,7 @@ def doc_rarity(
     import numpy as np
     import pandas as pd
 
-    freq_pdf = vocab_histogram(df, tok_col=tok_col).toPandas()
+    freq_pdf = vocab_histogram(df).toPandas()
     toks = freq_pdf["token"].to_numpy(np.int64)
     order = np.argsort(toks)
     vocab = toks[order]
@@ -340,7 +315,7 @@ def doc_rarity(
             n = len(pdf)
             if not n:
                 continue
-            arrs = [np.asarray(t, np.int64) for t in pdf[tok_col]]
+            arrs = [np.asarray(t, np.int64) for t in pdf["tokens"]]
             lens = np.fromiter((a.size for a in arrs), np.int64, n)
             total = int(lens.sum())
             if total and v.size:
@@ -369,7 +344,7 @@ def doc_rarity(
             safe = np.maximum(lens, 1).astype(np.float64)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "n_tok": lens.astype(np.int32),
                     "mean_freq": sums.astype(np.float64) / safe,
                     "rare_frac": rare.astype(np.float64) / safe,
@@ -377,10 +352,10 @@ def doc_rarity(
                 }
             )
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(F.col(id_col), F.col(tok_col)).mapInPandas(
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return df.select(F.col("doc_id"), F.col("tokens")).mapInPandas(
         fn,
-        f"{id_col} {id_type}, n_tok int, mean_freq double, "
+        f"doc_id {id_type}, n_tok int, mean_freq double, "
         "rare_frac double, min_freq long",
     )
 
@@ -391,7 +366,6 @@ def prepare_corpus(
     min_words: int = 5,
     max_words: int = 5000,
     max_dup_word_frac: float = 0.6,
-    seed: str = "mixture",
 ) -> DataFrame:
     """The standard corpus-prep filter chain in one call:
     exact dedup -> length gate -> repetition gate -> deterministic
@@ -424,15 +398,11 @@ def prepare_corpus(
             & (F.col("dup_word_frac") <= max_dup_word_frac)
         )
     )
-    return mixture_sample(gated, rates, seed=seed)
+    return mixture_sample(gated, rates)
 
 
 def split_corpus(
-    docs: DataFrame,
-    train: float = 0.8,
-    val: float = 0.1,
-    id_col: str = "doc_id",
-    seed: str = "split",
+    docs: DataFrame, train: float = 0.8, val: float = 0.1
 ) -> DataFrame:
     """Deterministic train/val/test assignment: split by the md5 fraction
     of the doc id (train < ``train`` <= val < ``train+val`` <= test).
@@ -443,7 +413,7 @@ def split_corpus(
     reshuffles the rest) — the property that keeps eval sets frozen while
     the train fraction is tuned.
     """
-    f = hash_frac(F.col(id_col).cast("string"), seed)
+    f = hash_frac(F.col("doc_id").cast("string"), "split")
     return docs.withColumn(
         "split",
         F.when(f < train, "train")
@@ -490,7 +460,7 @@ def _segment_sums(per_pair, cross, starts, nbi, nz):
     return out
 
 
-def _exploded_bigrams(df: DataFrame, tok_col: str) -> DataFrame:
+def _exploded_bigrams(df: DataFrame) -> DataFrame:
     """One ``bigram`` row per adjacent token pair, WHOLE-STAGE CODEGEN:
     zip the two shifted slices with ``arrays_zip`` (a plain expression),
     explode the struct stream, and apply the pack arithmetic
@@ -507,22 +477,18 @@ def _exploded_bigrams(df: DataFrame, tok_col: str) -> DataFrame:
     way. bitwiseAND gives Catalyst nothing to reassociate and bounds
     the packed value at exactly [-2^63, 2^63 - 1] for all int32 pairs.
     """
-    m = F.size(tok_col) - 1
+    m = F.size("tokens") - 1
     z = F.arrays_zip(
-        F.slice(F.col(tok_col), 1, m), F.slice(F.col(tok_col), 2, m)
+        F.slice(F.col("tokens"), 1, m), F.slice(F.col("tokens"), 2, m)
     )
-    ex = df.where(F.size(tok_col) >= 2).select(F.explode(z).alias("_zz"))
+    ex = df.where(F.size("tokens") >= 2).select(F.explode(z).alias("_zz"))
     pk = F.col("_zz")["0"].cast("bigint") * F.lit(4294967296) + F.col(
         "_zz"
     )["1"].cast("bigint").bitwiseAND(F.lit(4294967295))
     return ex.select(pk.alias("bigram"))
 
 
-def build_bigram_model(
-    df: DataFrame,
-    model_size: int = 1 << 20,
-    tok_col: str = "tokens",
-) -> DataFrame:
+def build_bigram_model(df: DataFrame, model_size: int = 1 << 20) -> DataFrame:
     """Capped adjacent-bigram language model over the corpus:
     -> (bigram bigint, freq bigint), the ``model_size`` most frequent
     adjacent token pairs, packed as t1 * 2^32 + (t2 & 0xFFFFFFFF) —
@@ -550,7 +516,7 @@ def build_bigram_model(
     full sort at scale).
     """
     return (
-        _exploded_bigrams(df, tok_col)
+        _exploded_bigrams(df)
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("freq"))
         .orderBy(F.desc("freq"), F.asc("bigram"))
@@ -558,12 +524,7 @@ def build_bigram_model(
     )
 
 
-def score_bigram_novelty(
-    df: DataFrame,
-    model: DataFrame,
-    id_col: str = "doc_id",
-    tok_col: str = "tokens",
-) -> DataFrame:
+def score_bigram_novelty(df: DataFrame, model: DataFrame) -> DataFrame:
     """Score each document against a built bigram model:
     -> (id, n_bigrams int, n_unseen int, hit_freq_sum bigint).
 
@@ -608,7 +569,7 @@ def score_bigram_novelty(
             n = len(pdf)
             if not n:
                 continue
-            arrs = [np.asarray(t, np.int64) for t in pdf[tok_col]]
+            arrs = [np.asarray(t, np.int64) for t in pdf["tokens"]]
             lens = np.fromiter((a.size for a in arrs), np.int64, n)
             nbi = np.maximum(lens - 1, 0)
             nu = np.zeros(n, np.int64)
@@ -633,26 +594,21 @@ def score_bigram_novelty(
                 nu = nbi.copy()  # empty model: every bigram is unseen
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "n_bigrams": nbi.astype(np.int32),
                     "n_unseen": nu.astype(np.int32),
                     "hit_freq_sum": hs,
                 }
             )
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(F.col(id_col), F.col(tok_col)).mapInPandas(
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return df.select(F.col("doc_id"), F.col("tokens")).mapInPandas(
         fn,
-        f"{id_col} {id_type}, n_bigrams int, n_unseen int, hit_freq_sum long",
+        f"doc_id {id_type}, n_bigrams int, n_unseen int, hit_freq_sum long",
     )
 
 
-def ngram_counts(
-    df: DataFrame,
-    n: int = 3,
-    top: int = 1 << 20,
-    tok_col: str = "tokens",
-) -> DataFrame:
+def ngram_counts(df: DataFrame, n: int = 3, top: int = 1 << 20) -> DataFrame:
     """Capped corpus n-gram counts: -> (gram string, freq bigint), the
     ``top`` most frequent length-``n`` token windows, ranked
     (freq DESC, gram ASC). The general-``n`` sibling of
@@ -683,7 +639,7 @@ def ngram_counts(
     if n < 1:
         raise ValueError("ngram_counts: n must be >= 1")
     base = df.select(
-        F.col(tok_col).alias("_t"), F.size(tok_col).alias("_n")
+        F.col("tokens").alias("_t"), F.size("tokens").alias("_n")
     ).where(F.col("_n") >= n)  # short docs have no length-n window
     m = F.col("_n") - (n - 1)
     z = F.arrays_zip(*[F.slice(F.col("_t"), j + 1, m) for j in range(n)])
@@ -708,11 +664,7 @@ def ngram_counts(
 
 
 def chunk_documents(
-    df: DataFrame,
-    max_len: int = 512,
-    stride: int = 448,
-    id_col: str = "doc_id",
-    tok_col: str = "tokens",
+    df: DataFrame, max_len: int = 512, stride: int = 448
 ) -> DataFrame:
     """Sliding-window context chunking: each document becomes overlapping
     chunks, chunk k covering tokens [k*stride, k*stride + max_len), for
@@ -728,37 +680,30 @@ def chunk_documents(
     """
     if stride < 1 or max_len < 1:
         raise ValueError("stride and max_len must be >= 1")
-    t, n = F.col(tok_col), F.size(tok_col)
+    t, n = F.col("tokens"), F.size("tokens")
     last = F.floor(
         (F.greatest(n - max_len, F.lit(0)) + F.lit(stride - 1)) / stride
     )
     ks = F.when(n > 0, F.sequence(F.lit(0).cast("long"), last)).otherwise(
         F.array().cast("array<bigint>")
     )
-    ex = df.select(
-        F.col(id_col), t.alias("_t"), F.explode(ks).alias("_k")
-    )
+    ex = df.select(F.col("doc_id"), t.alias("_t"), F.explode(ks).alias("_k"))
     chunk = F.slice(
         F.col("_t"), (F.col("_k") * stride + 1).cast("int"), max_len
     )
     return ex.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("_k").cast("int").alias("chunk_id"),
-        chunk.alias(tok_col),
+        chunk.alias("tokens"),
         F.size(chunk).cast("int").alias("n_tok"),
     )
 
 
 def stratified_sample(
-    df: DataFrame,
-    quota: int,
-    by: str = "source",
-    id_col: str = "doc_id",
-    seed: str = "strat",
-    salt_buckets: int = 64,
+    df: DataFrame, quota: int, salt_buckets: int = 64
 ) -> DataFrame:
-    """Exactly min(``quota``, group size) rows per ``by`` group: the
-    ``quota`` smallest md5(id||seed) survive — deterministic uniform
+    """Exactly min(``quota``, group size) rows per ``source`` group:
+    the ``quota`` smallest md5(doc_id|'strat') survive — deterministic uniform
     selection, identical across engines/partitionings (md5-hex ranking).
     The per-group counterpart of mixture_sample's per-group RATES, for
     eval-set carving and per-domain caps where the quota is absolute.
@@ -775,14 +720,14 @@ def stratified_sample(
     from pyspark.sql import Window
 
     ordv = F.md5(
-        F.concat_ws("|", F.col(id_col).cast("string"), F.lit(seed))
+        F.concat_ws("|", F.col("doc_id").cast("string"), F.lit("strat"))
     )
-    w1 = Window.partitionBy(by, "_salt").orderBy(ordv, F.col(id_col))
+    w1 = Window.partitionBy("source", "_salt").orderBy(ordv, F.col("doc_id"))
     lvl1 = df.withColumn(
         "_salt",
-        F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(salt_buckets)),
+        F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(salt_buckets)),
     ).withColumn("_r1", F.row_number().over(w1))
-    w2 = Window.partitionBy(by).orderBy(ordv, F.col(id_col))
+    w2 = Window.partitionBy("source").orderBy(ordv, F.col("doc_id"))
     return (
         lvl1.filter(F.col("_r1") <= quota)
         .withColumn("_r2", F.row_number().over(w2))
@@ -796,7 +741,6 @@ def pmi_collocations(
     top_k: int = 10,
     min_count: int = 5,
     model_size: int = 1 << 20,
-    tok_col: str = "tokens",
 ) -> DataFrame:
     """Top-``top_k`` right-hand collocates per token, ranked by the exact
     PMI-proportional ratio score = c(a,b) * N / (c(a) * c(b)) with N the
@@ -816,12 +760,12 @@ def pmi_collocations(
     """
     from pyspark.sql import Window
 
-    bm = build_bigram_model(df, model_size=model_size, tok_col=tok_col)
-    uni = vocab_histogram(df, tok_col=tok_col).select(
+    bm = build_bigram_model(df, model_size=model_size)
+    uni = vocab_histogram(df).select(
         F.col("token").alias("_t"), F.col("freq").alias("_uf")
     )
     n_total = df.select(
-        F.sum(F.greatest(F.size(tok_col) - 1, F.lit(0))).alias("n")
+        F.sum(F.greatest(F.size("tokens") - 1, F.lit(0))).alias("n")
     ).collect()[0]["n"] or 0
     # decode of the t1*2^32 + (t2 & 0xFFFFFFFF) packing (see
     # build_bigram_model for why that form): pmod yields the unsigned low
@@ -869,11 +813,7 @@ def pmi_collocations(
     )
 
 
-def corpus_report(
-    docs: DataFrame,
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def corpus_report(docs: DataFrame, source_col: str = "source") -> DataFrame:
     """Per-source corpus health rollup — the one-page answer to "what is
     in this crawl": -> (source, n_docs, n_dup_docs, total_words,
     mean_words, p50_words, max_words). ``n_dup_docs`` counts documents
@@ -892,8 +832,8 @@ def corpus_report(
 
     per = docs.select(
         F.col(source_col).alias("source"),
-        F.md5(F.col(text_col)).alias("_d"),
-        token_count_ws(F.col(text_col)).cast("int").alias("_w"),
+        F.md5(F.col("text")).alias("_d"),
+        token_count_ws(F.col("text")).cast("int").alias("_w"),
     )
     return (
         per.groupBy("source")
@@ -936,8 +876,6 @@ def rates_for_budget(
     report: DataFrame,
     budget_tokens: int,
     weights: dict[str, float] | None = None,
-    source_col: str = "source",
-    tokens_col: str = "total_words",
 ) -> dict[str, float]:
     """Driver-side mixture solver: per-source keep RATES (for
     mixture_sample) whose expected kept tokens hit ``budget_tokens``,
@@ -954,8 +892,8 @@ def rates_for_budget(
     undershoots — by exactly the mass that does not exist.
     """
     totals = {
-        r[source_col]: int(r[tokens_col])
-        for r in report.select(source_col, tokens_col).collect()
+        r["source"]: int(r["total_words"])
+        for r in report.select("source", "total_words").collect()
     }
     if weights is None:
         weights = {s: 1.0 for s in totals}
@@ -988,7 +926,6 @@ def rates_for_budget(
 def vocab_coverage(
     df: DataFrame,
     cutoffs: tuple = (256, 512, 1024, 2048, 4096, 8192, 16384, 32768),
-    tok_col: str = "tokens",
 ) -> DataFrame:
     """Vocabulary coverage curve: for each candidate vocabulary size in
     ``cutoffs``, the exact fraction of all corpus token OCCURRENCES
@@ -1021,7 +958,7 @@ def vocab_coverage(
     from pyspark.sql import Window
 
     freqs = (
-        df.select(F.explode(tok_col).alias("_t"))
+        df.select(F.explode("tokens").alias("_t"))
         .groupBy("_t")
         .agg(F.count(F.lit(1)).alias("_f"))
     )
@@ -1065,18 +1002,12 @@ def vocab_coverage(
     )
 
 
-def vocab_drift(
-    a: DataFrame,
-    b: DataFrame,
-    top: int = 1000,
-    scale_bits: int = 20,
-    tok_col: str = "tokens",
-) -> DataFrame:
+def vocab_drift(a: DataFrame, b: DataFrame, top: int = 1000) -> DataFrame:
     """Token-distribution drift between two corpus versions (crawl N vs
     crawl N+1 — the monitoring question behind every mixture re-tune):
     -> (token, freq_a, freq_b, rate_a_fp, rate_b_fp, drift_fp), the
     ``top`` tokens by |drift|, where ``rate_*_fp`` is the token's
-    occurrence rate in fixed point (``freq * 2^scale_bits div total``)
+    occurrence rate in fixed point (``freq * 2^20 div total``)
     and ``drift_fp = rate_a_fp - rate_b_fp``. Exact integers end to end
     (the repo's no-transcendentals contract: a KL term needs a log; the
     per-token rate deltas are the quantities a drift alert actually
@@ -1089,9 +1020,9 @@ def vocab_drift(
     bounded tables; the cut is a TakeOrdered by
     (|drift| DESC, token ASC). Totals ride DECIMAL(38,0), exact past
     int64 at trillion-token corpora."""
-    s = 1 << scale_bits
-    ha = vocab_histogram(a, tok_col=tok_col)
-    hb = vocab_histogram(b, tok_col=tok_col)
+    s = 1 << 20
+    ha = vocab_histogram(a)
+    hb = vocab_histogram(b)
     ta = ha.agg(F.sum("freq")).first()[0] or 0
     tb = hb.agg(F.sum("freq")).first()[0] or 0
     if ta == 0 or tb == 0:

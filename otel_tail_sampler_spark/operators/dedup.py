@@ -32,25 +32,28 @@ from pyspark.sql import functions as F
 # --- exact dedup -------------------------------------------------------------
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Keep the min-id representative of each identical text.
 
     Returns the surviving rows. The text column never shuffles: the groupBy
     runs on (md5 digest, id) and winners are recovered with a semi-join.
     """
     digests = docs.select(
-        F.col(id_col), F.md5(F.col(text_col)).alias("_digest")
+        F.col("doc_id"), F.md5(F.col("text")).alias("_digest")
     )
-    winners = digests.groupBy("_digest").agg(F.min(id_col).alias(id_col))
-    return docs.join(winners.select(id_col), id_col, "semi")
+    winners = digests.groupBy("_digest").agg(F.min("doc_id").alias("doc_id"))
+    return docs.join(winners.select("doc_id"), "doc_id", "semi")
 
 
-def exact_dup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dup_groups(docs: DataFrame) -> DataFrame:
     """(digest, dup_count, min_id) for groups with >1 member."""
     return (
-        docs.select(F.md5(F.col(text_col)).alias("digest"), F.col(id_col))
+        docs.select(F.md5(F.col("text")).alias("digest"), F.col("doc_id"))
         .groupBy("digest")
-        .agg(F.count(F.lit(1)).alias("dup_count"), F.min(id_col).alias("keeper_id"))
+        .agg(
+            F.count(F.lit(1)).alias("dup_count"),
+            F.min("doc_id").alias("keeper_id"),
+        )
         .filter(F.col("dup_count") > 1)
     )
 
@@ -139,12 +142,7 @@ def minhash_signatures_agg(
 
 
 def minhash_lsh_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    num_hashes: int = 12,
-    bands: int = 4,
+    docs: DataFrame, num_hashes: int = 12, bands: int = 4
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) via banded MinHash.
 
@@ -153,9 +151,9 @@ def minhash_lsh_pairs(
     """
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    sig = minhash_signatures_agg(docs, text_col, id_col, shingle_n, num_hashes)
+    sig = minhash_signatures_agg(docs, num_hashes=num_hashes)
     band_rows = sig.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.array(
                 *[
@@ -169,13 +167,13 @@ def minhash_lsh_pairs(
                 ]
             )
         ).alias("bk"),
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
     a = band_rows.select(
-        F.col("band"), F.col("key"), F.col(id_col).alias("id_a")
+        F.col("band"), F.col("key"), F.col("doc_id").alias("id_a")
     )
     b = band_rows.select(
-        F.col("band"), F.col("key"), F.col(id_col).alias("id_b")
+        F.col("band"), F.col("key"), F.col("doc_id").alias("id_b")
     )
     return (
         a.join(b, ["band", "key"])
@@ -186,7 +184,7 @@ def minhash_lsh_pairs(
 
 
 def dedup_components(pairs: DataFrame, all_ids: DataFrame | None = None,
-                     id_col: str = "doc_id", max_iters: int = 20) -> DataFrame:
+                     id_col: str = "doc_id") -> DataFrame:
     """Connected components over near-dup pairs -> (id, component_id).
 
     component_id = min id reachable through the pair graph; the canonical
@@ -215,7 +213,7 @@ def dedup_components(pairs: DataFrame, all_ids: DataFrame | None = None,
     # Catalyst analysis time) grows quadratically
     edges = edges.localCheckpoint(eager=True)
     labels = labels.localCheckpoint(eager=True)
-    for _ in range(max_iters):
+    for _ in range(20):
         # propagate: my new label = min(my label, labels of my neighbors)
         neighbor_labels = (
             edges.join(labels.withColumnRenamed("id", "dst"), "dst")
@@ -305,8 +303,6 @@ def simhash_dup_pairs(docs: DataFrame, **kw) -> DataFrame:
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_n: int = 3,
     threshold: float = 0.8,
     candidates: DataFrame | None = None,
@@ -321,10 +317,10 @@ def ngram_jaccard_pairs(
 
     docs = spread_small_input(docs)  # shingling runs pre-exchange
     sh = docs.select(
-        F.col(id_col),
-        F.explode(word_shingles(F.col(text_col), shingle_n)).alias("sh"),
+        F.col("doc_id"),
+        F.explode(word_shingles(F.col("text"), shingle_n)).alias("sh"),
     )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
 
     if candidates is not None:
         # candidates-FIRST: drive the intersection from the pair list, never
@@ -335,8 +331,8 @@ def ngram_jaccard_pairs(
         # O(|candidates| · avg_shingles), and the small pair list is
         # broadcast-able by AQE.
         cand = candidates.select("id_a", "id_b")
-        sh_a = sh.select(F.col(id_col).alias("id_a"), "sh")
-        sh_b = sh.select(F.col(id_col).alias("id_b"), "sh")
+        sh_a = sh.select(F.col("doc_id").alias("id_a"), "sh")
+        sh_b = sh.select(F.col("doc_id").alias("id_b"), "sh")
         inter = (
             cand.join(sh_a, "id_a")
             .join(sh_b, ["id_b", "sh"])
@@ -344,16 +340,16 @@ def ngram_jaccard_pairs(
             .agg(F.count(F.lit(1)).alias("inter"))
         )
     else:
-        a = sh.select(F.col("sh"), F.col(id_col).alias("id_a"))
-        b = sh.select(F.col("sh"), F.col(id_col).alias("id_b"))
+        a = sh.select(F.col("sh"), F.col("doc_id").alias("id_a"))
+        b = sh.select(F.col("sh"), F.col("doc_id").alias("id_b"))
         inter = (
             a.join(b, "sh")
             .filter(F.col("id_a") < F.col("id_b"))
             .groupBy("id_a", "id_b")
             .agg(F.count(F.lit(1)).alias("inter"))
         )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
     return (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
@@ -380,12 +376,7 @@ DEFAULT_MAX_GRAM_DF = 100
 
 
 def _containment_pairs(
-    train: DataFrame,
-    evals: DataFrame,
-    shingle_n: int,
-    id_col: str,
-    text_col: str,
-    max_gram_df: int | None,
+    train: DataFrame, evals: DataFrame, shingle_n: int, max_gram_df: int | None
 ) -> tuple[DataFrame, DataFrame]:
     """Shared pair-containment stage for :func:`contamination` (the report)
     and :func:`decontaminate_corpus` (the apply): word-shingle both sides,
@@ -407,12 +398,12 @@ def _containment_pairs(
     train = spread_small_input(train)  # shingling runs pre-exchange
     evals = spread_small_input(evals)
     she = evals.select(
-        F.col(id_col).alias("eval_id"),
-        F.explode(word_shingles(F.col(text_col), shingle_n)).alias("sh"),
+        F.col("doc_id").alias("eval_id"),
+        F.explode(word_shingles(F.col("text"), shingle_n)).alias("sh"),
     )
     sht = train.select(
-        F.col(id_col).alias("train_id"),
-        F.explode(word_shingles(F.col(text_col), shingle_n)).alias("sh"),
+        F.col("doc_id").alias("train_id"),
+        F.explode(word_shingles(F.col("text"), shingle_n)).alias("sh"),
     )
     if max_gram_df is not None:
         # shingles are distinct per doc, so count(*) == document frequency
@@ -439,8 +430,6 @@ def contamination(
     train: DataFrame,
     evals: DataFrame,
     shingle_n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
     max_gram_df: int | None = DEFAULT_MAX_GRAM_DF,
 ) -> DataFrame:
@@ -482,7 +471,7 @@ def contamination(
     from pyspark.sql import Window
 
     inter, sizes, capped = _containment_pairs(
-        train, evals, shingle_n, id_col, text_col, max_gram_df
+        train, evals, shingle_n, max_gram_df
     )
     w = Window.partitionBy("eval_id").orderBy(
         F.desc("_i"), F.asc("train_id")
@@ -493,7 +482,7 @@ def contamination(
         .select("eval_id", "train_id", "_i")
     )
     out = (
-        evals.select(F.col(id_col).alias("eval_id"))
+        evals.select(F.col("doc_id").alias("eval_id"))
         .join(sizes, "eval_id", "left")
         .join(best, "eval_id", "left")
         .select(
@@ -516,8 +505,6 @@ def decontaminate_corpus(
     train: DataFrame,
     evals: DataFrame,
     shingle_n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
     max_gram_df: int | None = DEFAULT_MAX_GRAM_DF,
 ) -> DataFrame:
@@ -540,30 +527,24 @@ def decontaminate_corpus(
     Run :func:`contamination` (whose report carries ``n_capped_grams``)
     to see whether the cap actually pruned anything for a given corpus.
     """
-    inter, sizes, _ = _containment_pairs(
-        train, evals, shingle_n, id_col, text_col, max_gram_df
-    )
+    inter, sizes, _ = _containment_pairs(train, evals, shingle_n, max_gram_df)
     flagged = (
         inter.join(sizes, "eval_id")
         .filter(
             F.col("_i") / F.greatest(F.col("_sz"), F.lit(1))
             >= F.lit(threshold)
         )
-        .select(F.col("train_id").alias(id_col))
+        .select(F.col("train_id").alias("doc_id"))
         .distinct()
     )
-    return train.join(flagged, id_col, "anti")
+    return train.join(flagged, "doc_id", "anti")
 
 
 # --- token-window (substring) dedup ------------------------------------------
 
 
 def _window_hashes(
-    tokenized: DataFrame,
-    window: int,
-    stride: int,
-    id_col: str,
-    tok_col: str,
+    tokenized: DataFrame, window: int, stride: int
 ) -> DataFrame:
     """(id, win_start, _h) for every ``window``-token span at ``stride``
     offsets — THE span identity shared by detection (dup_token_spans) and
@@ -574,17 +555,17 @@ def _window_hashes(
     from otel_tail_sampler_spark.functions.spread import spread_small_input
 
     tokenized = spread_small_input(tokenized)  # window md5s run pre-exchange
-    t = F.col(tok_col)
+    t = F.col("tokens")
     starts = F.when(
         F.size(t) >= window,
         F.sequence(F.lit(0), F.size(t) - window, F.lit(stride)),
     ).otherwise(F.array().cast("array<int>"))
     return tokenized.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(starts).alias("win_start"),
         t.alias("_t"),
     ).select(
-        id_col,
+        "doc_id",
         "win_start",
         F.md5(
             F.concat_ws(
@@ -603,8 +584,6 @@ def dup_token_spans(
     window: int = 32,
     stride: int = 16,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    tok_col: str = "tokens",
 ) -> DataFrame:
     """Duplicated token-WINDOW detection — the token-level substring-dedup
     signal (Lee et al. 2022, "Deduplicating Training Data Makes Language
@@ -626,13 +605,13 @@ def dup_token_spans(
     engine-parity family (shared with trim_dup_spans via _window_hashes),
     so the operator is DuckDB-hash-checkable.
     """
-    ex = _window_hashes(tokenized, window, stride, id_col, tok_col)
+    ex = _window_hashes(tokenized, window, stride)
     counts = (
         ex.groupBy("_h")
         .agg(F.count(F.lit(1)).alias("dup_count"))
         .filter(F.col("dup_count") >= min_count)
     )
-    return ex.join(counts, "_h").select(id_col, "win_start", "dup_count")
+    return ex.join(counts, "_h").select("doc_id", "win_start", "dup_count")
 
 
 def trim_dup_spans(
@@ -640,8 +619,6 @@ def trim_dup_spans(
     window: int = 32,
     stride: int = 16,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    tok_col: str = "tokens",
 ) -> DataFrame:
     """REMOVE duplicated token windows, keeping each span's FIRST occurrence
     — the trimming step the dup_token_spans signal exists for (Lee et al.
@@ -671,11 +648,11 @@ def trim_dup_spans(
     JVM filter expression over the token array (position-covered test per
     element — no posexplode, no Python).
     """
-    ex = _window_hashes(tokenized, window, stride, id_col, tok_col)
+    ex = _window_hashes(tokenized, window, stride)
     groups = (
         ex.groupBy("_h")
         .agg(
-            F.min(F.struct(F.col(id_col), F.col("win_start"))).alias("_first"),
+            F.min(F.struct(F.col("doc_id"), F.col("win_start"))).alias("_first"),
             F.count(F.lit(1)).alias("_cnt"),
         )
         .filter(F.col("_cnt") >= min_count)
@@ -685,18 +662,18 @@ def trim_dup_spans(
         ex.join(groups, "_h")
         .filter(
             ~(
-                (F.col(f"_first.{id_col}") == F.col(id_col))
+                (F.col("_first.doc_id") == F.col("doc_id"))
                 & (F.col("_first.win_start") == F.col("win_start"))
             )
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("win_start")).alias("_mask"))
     )
-    out = tokenized.join(masked, id_col, "left").withColumn(
+    out = tokenized.join(masked, "doc_id", "left").withColumn(
         "_mask", F.coalesce(F.col("_mask"), F.array().cast("array<int>"))
     )
     kept = F.filter(
-        F.col(tok_col),
+        F.col("tokens"),
         lambda x, i: ~F.exists(
             F.col("_mask"), lambda s: (s <= i) & (i < s + window)
         ),
@@ -704,22 +681,20 @@ def trim_dup_spans(
     # materialize `kept` in its own projection so the per-element coverage
     # test is not inlined twice (once for the output, once for n_removed)
     return (
-        out.select(F.col(id_col), F.size(F.col(tok_col)).alias("_n0"), kept.alias("_kept"))
+        out.select(
+            F.col("doc_id"),
+            F.size(F.col("tokens")).alias("_n0"),
+            kept.alias("_kept"),
+        )
         .select(
-            id_col,
-            F.col("_kept").alias(tok_col),
+            "doc_id",
+            F.col("_kept").alias("tokens"),
             (F.col("_n0") - F.size("_kept")).cast("int").alias("n_removed"),
         )
     )
 
 
-def dedup_lines(
-    docs: DataFrame,
-    min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
-) -> DataFrame:
+def dedup_lines(docs: DataFrame, min_count: int = 2) -> DataFrame:
     """Global LINE-level dedup (the C4/CCNet boilerplate rule): any line
     whose exact text occurs >= ``min_count`` times corpus-wide keeps only
     its FIRST occurrence (lexicographic (doc_id, line position)); every
@@ -728,9 +703,8 @@ def dedup_lines(
     repeated paragraphs — this is that family at line granularity, the
     natural unit for license headers / navigation chrome / footers.
 
-    ``sep`` is used as a REGEX for splitting and a LITERAL for re-joining
-    (they coincide for the "\\n" default). -> original columns with
-    ``text_col`` rebuilt, plus ``n_lines_removed``. A document whose every
+    Lines split and re-join on "\\n". -> original columns with ``text``
+    rebuilt, plus ``n_lines_removed``. A document whose every
     line is a later duplicate rebuilds to the empty string.
 
     Scale shape: mirrors trim_dup_spans — only the slim (id, pos, 32-hex)
@@ -745,15 +719,15 @@ def dedup_lines(
     occ = (
         spread_small_input(docs)
         .select(
-            F.col(id_col),
-            F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "_line"),
+            F.col("doc_id"),
+            F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "_line"),
         )
-        .select(id_col, "pos", F.md5(F.col("_line")).alias("_h"))
+        .select("doc_id", "pos", F.md5(F.col("_line")).alias("_h"))
     )
     groups = (
         occ.groupBy("_h")
         .agg(
-            F.min(F.struct(F.col(id_col), F.col("pos"))).alias("_first"),
+            F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("_first"),
             F.count(F.lit(1)).alias("_cnt"),
         )
         .filter(F.col("_cnt") >= min_count)
@@ -763,24 +737,24 @@ def dedup_lines(
         occ.join(groups, "_h")
         .filter(
             ~(
-                (F.col(f"_first.{id_col}") == F.col(id_col))
+                (F.col("_first.doc_id") == F.col("doc_id"))
                 & (F.col("_first.pos") == F.col("pos"))
             )
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("pos")).alias("_drop"))
     )
-    out = docs.join(masked, id_col, "left").withColumn(
+    out = docs.join(masked, "doc_id", "left").withColumn(
         "_drop", F.coalesce(F.col("_drop"), F.array().cast("array<int>"))
     )
     kept = F.filter(
-        F.split(F.col(text_col), sep),
+        F.split(F.col("text"), "\n"),
         lambda x, i: ~F.array_contains(F.col("_drop"), i),
     )
-    others = [c for c in docs.columns if c != text_col]
+    others = [c for c in docs.columns if c != "text"]
     return out.select(
         *others,
-        F.concat_ws(sep, kept).alias(text_col),
+        F.concat_ws("\n", kept).alias("text"),
         F.size("_drop").cast("int").alias("n_lines_removed"),
     )
 
@@ -810,20 +784,15 @@ def cosine_sim(a: Column, b: Column) -> Column:
     return dot / (na * nb)
 
 
-def embedding_dup_pairs(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-) -> DataFrame:
+def embedding_dup_pairs(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Brute-force cosine pair filter (id_a < id_b, sim >= threshold).
 
     Quadratic — the small-input / verify path. The scale path buckets by
     hyperplane LSH first (operators.similarity.hyperplane_buckets) and runs
     this within buckets.
     """
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
+    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
+    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("cosine", cosine_sim(F.col("_va"), F.col("_vb")))
@@ -835,8 +804,6 @@ def embedding_dup_pairs(
 def embedding_dup_pairs_lsh(
     emb: DataFrame,
     dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     threshold: float = 0.95,
     n_bands: int = 4,
     band_bits: int = 8,
@@ -870,7 +837,7 @@ def embedding_dup_pairs_lsh(
 
     planes = hyperplanes(dim, n_bands * band_bits, seed)
     emb = spread_small_input(emb)  # band projections run pre-exchange
-    base = emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+    base = emb.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
     band_keys = F.array(
         *[
             F.struct(
@@ -896,8 +863,8 @@ def embedding_dup_pairs_lsh(
         .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
         .distinct()
     )
-    va = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    vb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
+    va = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
+    vb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
@@ -908,11 +875,7 @@ def embedding_dup_pairs_lsh(
 
 
 def pick_dedup_representatives(
-    components: DataFrame,
-    metrics: DataFrame,
-    id_col: str = "doc_id",
-    comp_col: str = "component_id",
-    metric_col: str = "n_words",
+    components: DataFrame, metrics: DataFrame, metric_col: str = "n_words"
 ) -> DataFrame:
     """Quality-aware duplicate-cluster election: per component, KEEP the
     member with the highest ``metric_col`` (ties -> min id) instead of
@@ -940,16 +903,16 @@ def pick_dedup_representatives(
     sentinel = F.lit(9223372036854775807)
     nm = F.coalesce(-F.col(metric_col).cast("long"), sentinel)
     j = components.join(
-        metrics.select(F.col(id_col), F.col(metric_col)), id_col
+        metrics.select(F.col("doc_id"), F.col(metric_col)), "doc_id"
     )
-    agg = j.groupBy(comp_col).agg(
+    agg = j.groupBy("component_id").agg(
         F.min(
-            F.struct(nm.alias("nm"), F.col(id_col).alias("id"))
+            F.struct(nm.alias("nm"), F.col("doc_id").alias("id"))
         ).alias("_m"),
         F.count(F.lit(1)).alias("n_members"),
     )
     return agg.select(
-        comp_col,
+        "component_id",
         F.col("_m.id").alias("keep_doc_id"),
         F.when(F.col("_m.nm") == sentinel, F.lit(None)).otherwise(
             -F.col("_m.nm")
@@ -959,10 +922,7 @@ def pick_dedup_representatives(
 
 
 def apply_dedup(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    metric_col: str | None = None,
+    docs: DataFrame, pairs: DataFrame, metric_col: str | None = None
 ) -> DataFrame:
     """APPLY near-dup dedup: given candidate/verified duplicate ``pairs``
     (id_a, id_b), return the surviving rows of ``docs`` — exactly one
@@ -984,69 +944,56 @@ def apply_dedup(
     ``docs`` anti-join is against a small id list the optimizer can
     broadcast. NULL metrics rank last, per the election's contract.
     """
-    comps = dedup_components(pairs, id_col=id_col)
+    comps = dedup_components(pairs)
     if metric_col is None:
-        drop = comps.filter(F.col(id_col) != F.col("component_id")).select(
-            id_col
+        drop = comps.filter(F.col("doc_id") != F.col("component_id")).select(
+            "doc_id"
         )
     else:
         reps = pick_dedup_representatives(
             comps,
-            docs.select(F.col(id_col), F.col(metric_col)),
-            id_col=id_col,
+            docs.select(F.col("doc_id"), F.col(metric_col)),
             metric_col=metric_col,
         )
-        drop = comps.select(id_col).join(
-            reps.select(F.col("keep_doc_id").alias(id_col)), id_col, "anti"
+        drop = comps.select("doc_id").join(
+            reps.select(F.col("keep_doc_id").alias("doc_id")), "doc_id", "anti"
         )
-    return docs.join(drop, id_col, "anti")
+    return docs.join(drop, "doc_id", "anti")
 
 
-def source_overlap(
-    pairs: DataFrame,
-    meta: DataFrame,
-    id_col: str = "doc_id",
-    group_col: str = "source",
-) -> DataFrame:
+def source_overlap(pairs: DataFrame, meta: DataFrame) -> DataFrame:
     """Cross-source duplication matrix: for each unordered pair of
-    ``group_col`` labels, how many duplicate pairs connect them — the
+    ``source`` labels, how many duplicate pairs connect them — the
     "which sources duplicate each other" audit that drives decisions
     like SlimPajama's cross-source dedup (dedup within+across sources)
     vs per-source-only. Works over ANY pair stream (exact, MinHash-LSH,
     SimHash, embedding near-dup).
 
-    -> (<group>_a, <group>_b, pair_count), labels canonicalized so
+    -> (source_a, source_b, pair_count), labels canonicalized so
     a <= b; the diagonal rows (a == b) are within-source duplication.
 
-    Scale shape: ``meta`` is projected to the slim (id, group) pair
+    Scale shape: ``meta`` is projected to the slim (doc_id, source) pair
     before joining, and the pair graph is orders of magnitude smaller
     than the corpus, so AQE broadcasts the pair side; the final count
     groups on a tiny |groups|^2 key space (map-combinable).
     """
-    m = meta.select(F.col(id_col), F.col(group_col))
-    a = m.select(
-        F.col(id_col).alias("id_a"), F.col(group_col).alias("_ga")
-    )
-    b = m.select(
-        F.col(id_col).alias("id_b"), F.col(group_col).alias("_gb")
-    )
+    m = meta.select(F.col("doc_id"), F.col("source"))
+    a = m.select(F.col("doc_id").alias("id_a"), F.col("source").alias("_ga"))
+    b = m.select(F.col("doc_id").alias("id_b"), F.col("source").alias("_gb"))
     return (
         pairs.select("id_a", "id_b")
         .join(a, "id_a")
         .join(b, "id_b")
         .select(
-            F.least("_ga", "_gb").alias(f"{group_col}_a"),
-            F.greatest("_ga", "_gb").alias(f"{group_col}_b"),
+            F.least("_ga", "_gb").alias("source_a"),
+            F.greatest("_ga", "_gb").alias("source_b"),
         )
-        .groupBy(f"{group_col}_a", f"{group_col}_b")
+        .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).alias("pair_count"))
     )
 
 
-def dedup_cluster_stats(
-    components: DataFrame,
-    comp_col: str = "component_id",
-) -> DataFrame:
+def dedup_cluster_stats(components: DataFrame) -> DataFrame:
     """Near-dup cluster size histogram -> (cluster_size, n_clusters):
     the one-line answer to "how duplicated is this corpus" (size 1 =
     unique docs; the tail is the boilerplate). Two map-combinable
@@ -1054,7 +1001,7 @@ def dedup_cluster_stats(
     million-member boilerplate cluster costs its row count, never a
     single-task window.
     """
-    sizes = components.groupBy(comp_col).agg(
+    sizes = components.groupBy("component_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
     return (
@@ -1191,20 +1138,13 @@ def reference_dup_pairs(
 
 
 def dedup_against_corpus(
-    new: DataFrame,
-    ref: DataFrame,
-    method: str = "minhash",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    **kw,
+    new: DataFrame, ref: DataFrame, method: str = "minhash", **kw
 ) -> DataFrame:
     """The APPLY side of :func:`reference_dup_pairs`: the surviving rows
     of ``new`` (all original columns) after dropping every document with
     a match in ``ref``. The anti-join runs against the DISTINCT matched
     new-ids — bounded by the duplicate count, broadcastable when dups
     are rare (the common incremental case)."""
-    pairs = reference_dup_pairs(
-        new, ref, method=method, text_col=text_col, id_col=id_col, **kw
-    )
-    dropped = pairs.select(F.col("id_new").alias(id_col)).distinct()
-    return new.join(dropped, id_col, "anti")
+    pairs = reference_dup_pairs(new, ref, method=method, **kw)
+    dropped = pairs.select(F.col("id_new").alias("doc_id")).distinct()
+    return new.join(dropped, "doc_id", "anti")

@@ -36,11 +36,10 @@ def service_dimension(spark: SparkSession) -> DataFrame:
     )
 
 
-def enrich_with_dimension(
-    facts: DataFrame, dim: DataFrame, key: str = "service_name", how: str = "left"
-) -> DataFrame:
-    """facts ⋈ broadcast(dim) on ``key`` — never shuffles the fact side."""
-    return facts.join(F.broadcast(dim), key, how)
+def enrich_with_dimension(facts: DataFrame, dim: DataFrame) -> DataFrame:
+    """facts ⟕ broadcast(dim) on ``service_name`` (left join) — never
+    shuffles the fact side."""
+    return facts.join(F.broadcast(dim), "service_name", "left")
 
 
 def dedup_against_exported(

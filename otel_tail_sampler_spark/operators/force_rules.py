@@ -15,8 +15,10 @@ table' case where folding the table into the plan beats any physical join
 (SURVEY.md §2.3).
 
 Span-level matchers need per-trace existence flags: ONE extra aggregation
-computes max(matches) per (trace, rule) — piggybacking on the same
-trace_id shuffle key as assembly, so AQE reuses the exchange.
+computes max(matches) per (trace, rule), grouped on the hex ``trace_id``
+and left-joined back onto the traces on it. Assembly groups on the int64
+pair ``(trace_k1, trace_k2)`` instead, so this is a separate exchange
+(plus the join's), not a reuse of assembly's.
 
 Rule dict shape (FIXTURES.md §4):
     {"id": "r1", "priority": 100, "enabled": true,

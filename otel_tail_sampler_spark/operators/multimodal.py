@@ -505,7 +505,7 @@ def _phash_scalar(arr: np.ndarray) -> tuple[int, int]:
     return _signed64(d), _signed64(a)
 
 
-def phash_images(media: DataFrame, id_col: str = "media_id") -> DataFrame:
+def phash_images(media: DataFrame) -> DataFrame:
     """REAL kernel: decode PPM images, emit both perceptual hashes ->
     (media_id, phash_d long, phash_a long). Non-image rows drop (hash a
     video by composing ``sample_frames`` -> per-frame PPM upstream).
@@ -519,7 +519,7 @@ def phash_images(media: DataFrame, id_col: str = "media_id") -> DataFrame:
             hashes = [_phash_np(decode_ppm(bytes(p))) for p in img["payload"]]
             yield pd.DataFrame(
                 {
-                    "media_id": img[id_col],
+                    "media_id": img["media_id"],
                     "phash_d": [d for d, _ in hashes],
                     "phash_a": [a for _, a in hashes],
                 }
@@ -600,11 +600,7 @@ def phash_pairs(
 
 
 def media_phash_neardup(
-    media: DataFrame,
-    tau: int = 3,
-    n_bands: int = 4,
-    hash_col: str = "phash_d",
-    id_col: str = "media_id",
+    media: DataFrame, tau: int = 3, n_bands: int = 4
 ) -> DataFrame:
     """Id-level near-duplicate components over the perceptual hash:
     -> (media_id, component_id) where ``component_id`` is the smallest
@@ -625,20 +621,20 @@ def media_phash_neardup(
     # payload exactly once instead of re-running the kernel per subtree
     # (the phash_pairs docstring's persist lever, applied here because
     # this composition owns the lineage)
-    hashes = phash_images(media, id_col=id_col).localCheckpoint(eager=True)
-    rep = hashes.groupBy(hash_col).agg(F.min(id_col).alias("_rep"))
-    within = hashes.join(rep, hash_col).select(
-        F.col(id_col).alias("id_a"), F.col("_rep").alias("id_b")
+    hashes = phash_images(media).localCheckpoint(eager=True)
+    rep = hashes.groupBy("phash_d").agg(F.min("media_id").alias("_rep"))
+    within = hashes.join(rep, "phash_d").select(
+        F.col("media_id").alias("id_a"), F.col("_rep").alias("id_b")
     )
-    hp = phash_pairs(hashes, tau=tau, n_bands=n_bands, hash_col=hash_col)
+    hp = phash_pairs(hashes, tau=tau, n_bands=n_bands)
     ra = rep.select(
-        F.col(hash_col).alias("hash_a"), F.col("_rep").alias("id_a")
+        F.col("phash_d").alias("hash_a"), F.col("_rep").alias("id_a")
     )
     rb = rep.select(
-        F.col(hash_col).alias("hash_b"), F.col("_rep").alias("id_b")
+        F.col("phash_d").alias("hash_b"), F.col("_rep").alias("id_b")
     )
     cross = hp.join(ra, "hash_a").join(rb, "hash_b").select("id_a", "id_b")
-    return dedup_components(within.unionByName(cross), id_col=id_col)
+    return dedup_components(within.unionByName(cross), id_col="media_id")
 
 
 def _gen_neardup_arrays(n_base: int, seed: int) -> list:
@@ -758,7 +754,7 @@ def _audio_fp_scalar(samples) -> int:
     return _signed64(v)
 
 
-def fingerprint_audio(media: DataFrame, id_col: str = "media_id") -> DataFrame:
+def fingerprint_audio(media: DataFrame) -> DataFrame:
     """REAL kernel: decode WAV, emit the 64-bit temporal energy
     fingerprint -> (media_id, afp long). Non-audio rows drop. Near-dup
     audio = ``phash_pairs(fps, hash_col='afp')`` — the banded Hamming
@@ -771,7 +767,7 @@ def fingerprint_audio(media: DataFrame, id_col: str = "media_id") -> DataFrame:
                 continue
             yield pd.DataFrame(
                 {
-                    "media_id": aud[id_col],
+                    "media_id": aud["media_id"],
                     "afp": [
                         _audio_fp_np(decode_wav(bytes(p))[0])
                         for p in aud["payload"]
@@ -782,11 +778,9 @@ def fingerprint_audio(media: DataFrame, id_col: str = "media_id") -> DataFrame:
     return media.mapInPandas(fn, AUDIO_FP_DDL)
 
 
-def phash_video_frames(
-    media: DataFrame, every_n: int = 1, id_col: str = "media_id"
-) -> DataFrame:
+def phash_video_frames(media: DataFrame) -> DataFrame:
     """REAL kernel: decode the VID0 container, perceptual-hash every
-    ``every_n``-th frame -> (media_id, frame_idx, phash_d, phash_a).
+    frame -> (media_id, frame_idx, phash_d, phash_a).
     Near-dup videos are frame-hash joins (any-frame or all-frame match,
     caller's policy) through the same ``phash_pairs`` index; payloads
     fan out to per-frame hashes inside the task and never shuffle."""
@@ -795,9 +789,9 @@ def phash_video_frames(
         for pdf in batches:
             vid = pdf[pdf["kind"] == "video"]
             ids, idxs, ds, as_ = [], [], [], []
-            for mid, payload in zip(vid[id_col], vid["payload"]):
+            for mid, payload in zip(vid["media_id"], vid["payload"]):
                 frames = decode_video(bytes(payload))
-                for fi in range(0, len(frames), every_n):
+                for fi in range(len(frames)):
                     d, a = _phash_np(frames[fi])
                     ids.append(mid)
                     idxs.append(fi)

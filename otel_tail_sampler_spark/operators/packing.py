@@ -96,8 +96,6 @@ def pack_sequences(
     df: DataFrame,
     max_len: int = 512,
     id_col: str = "doc_id",
-    tok_col: str = "tokens",
-    n_buckets: int | None = None,
     n_rows: int | None = None,
     emit_spans: bool = False,
 ) -> DataFrame:
@@ -135,13 +133,12 @@ def pack_sequences(
     resident copy of the corpus — untenable at 10^12 tokens."""
     from pyspark.sql import Window
 
-    spark = df.sparkSession
-    if n_buckets is None:
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    # one range bucket per shuffle partition of the session
+    n_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     bounds = _pack_bucket_bounds(df.select(id_col), id_col, n_buckets, n_rows)
     base = df.select(
         F.col(id_col).alias("_id"),
-        F.col(tok_col).alias("_t"),
+        F.col("tokens").alias("_t"),
         _bucket_of(F.col(id_col), bounds).alias("_pid"),
     )
     # pass 1: one tiny row per bucket -> driver prefix sum -> map literal.
@@ -256,10 +253,7 @@ def pack_sequences(
 
 
 def assign_shards(
-    examples: DataFrame,
-    n_shards: int,
-    id_col: str = "example_id",
-    seed: str = "shards",
+    examples: DataFrame, n_shards: int, id_col: str = "example_id"
 ) -> DataFrame:
     """Deterministic shard assignment + shuffled within-shard order for
     training examples: adds ``shard`` (md5(id)%n_shards) and ``shard_pos``
@@ -281,7 +275,7 @@ def assign_shards(
     """
     from pyspark.sql import Window
 
-    h = F.md5(F.concat_ws("|", F.col(id_col).cast("string"), F.lit(seed)))
+    h = F.md5(F.concat_ws("|", F.col(id_col).cast("string"), F.lit("shards")))
     out = examples.withColumn("_h", h).withColumn(
         "shard",
         F.pmod(
@@ -296,13 +290,7 @@ def assign_shards(
 
 
 def write_shards(
-    examples: DataFrame,
-    path: str,
-    n_shards: int,
-    id_col: str = "example_id",
-    seed: str = "shards",
-    manifest: bool = False,
-    tok_col: str = "tokens",
+    examples: DataFrame, path: str, n_shards: int, manifest: bool = False
 ) -> None:
     """Materialize the training shards: assign_shards' deterministic
     (shard, shard_pos) layout written as one parquet file per shard
@@ -322,11 +310,11 @@ def write_shards(
     bytes (the quantity a loader will verify), costs one scan of the
     output instead of a second full prep-chain pass, and cannot drift
     from the files the way an unpersisted-lineage recomputation could
-    (the pack_sequences two-job caveat). ``tok_col`` names the token
-    column the digest covers.
+    (the pack_sequences two-job caveat). The digest covers the
+    ``tokens`` column.
     """
     (
-        assign_shards(examples, n_shards, id_col=id_col, seed=seed)
+        assign_shards(examples, n_shards)
         .repartition(n_shards, "shard")
         .sortWithinPartitions("shard", "shard_pos")
         .write.mode("overwrite")
@@ -335,16 +323,13 @@ def write_shards(
     )
     if manifest:
         written = examples.sparkSession.read.parquet(path)
-        _manifest_agg(written, tok_col).coalesce(1).write.mode(
+        _manifest_agg(written).coalesce(1).write.mode(
             "overwrite"
         ).parquet(f"{path}_manifest")
 
 
 def add_special_tokens(
-    df: DataFrame,
-    bos_id: int | None = None,
-    eos_id: int = -100,
-    tok_col: str = "tokens",
+    df: DataFrame, bos_id: int | None = None, eos_id: int = -100
 ) -> DataFrame:
     """Wrap each sequence with BOS/EOS sentinel ids (``bos_id`` optional)
     so document boundaries survive `pack_sequences`' concatenation —
@@ -356,17 +341,13 @@ def add_special_tokens(
     parts = []
     if bos_id is not None:
         parts.append(F.array(F.lit(int(bos_id))))
-    parts.append(F.col(tok_col))
+    parts.append(F.col("tokens"))
     parts.append(F.array(F.lit(int(eos_id))))
-    return df.withColumn(tok_col, F.concat(*parts).cast("array<int>"))
+    return df.withColumn("tokens", F.concat(*parts).cast("array<int>"))
 
 
 def pack_documents_greedy(
-    df: DataFrame,
-    max_len: int = 512,
-    id_col: str = "doc_id",
-    tok_col: str = "tokens",
-    n_buckets: int | None = None,
+    df: DataFrame, max_len: int = 512, n_buckets: int | None = None
 ) -> DataFrame:
     """Doc-boundary-preserving packing: the OTHER standard layout next to
     pack_sequences' concatenate-and-cut — examples contain only WHOLE
@@ -401,12 +382,12 @@ def pack_documents_greedy(
     if n_buckets is None:
         n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     bucket = F.pmod(
-        portable_hash64(F.col(id_col).cast("string"), "packdoc"),
+        portable_hash64(F.col("doc_id").cast("string"), "packdoc"),
         F.lit(int(n_buckets)),
     )
     base = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(tok_col).alias("_t"),
+        F.col("doc_id").alias("_id"),
+        F.col("tokens").alias("_t"),
         bucket.alias("_pid"),
     )
 
@@ -458,6 +439,11 @@ def pack_documents_greedy(
     return base.groupBy("_pid").applyInPandas(
         pack, "example_id long, tokens array<int>, n_tok int, n_docs int"
     )
+
+
+# hex-prefix length that splits each group's md5 rank range into
+# 16^SUB_PREFIX_LEN subranges in _subrange_rank's library callers
+SUB_PREFIX_LEN = 2
 
 
 def _subrange_rank(
@@ -583,10 +569,6 @@ def form_batches(
     df: DataFrame,
     batch_size: int = 32,
     bucket_edges: tuple = (64, 128, 256, 512),
-    id_col: str = "doc_id",
-    len_col: str = "n_tok",
-    seed: str = "batch",
-    sub_prefix_len: int = 2,
 ) -> DataFrame:
     """Length-bucketed batch formation: group sequences of similar length
     into fixed-size training batches so per-batch padding (to the batch
@@ -596,7 +578,7 @@ def form_batches(
     capacity >= the sequence length (one overflow bucket past the last
     edge), ``batch_seq`` = 0-based batch ordinal within the bucket,
     ``pos_in_batch`` = position inside the batch. Within a bucket the
-    order is the md5(id|seed) rank — deterministically "shuffled", so
+    order is the md5(doc_id|'batch') rank — deterministically "shuffled", so
     consecutive batches are decorrelated from document order exactly
     like ``assign_shards``' within-shard order; the final (possibly
     short) batch per bucket holds the rank tail.
@@ -617,14 +599,14 @@ def form_batches(
     # column shape the analyzer mishandles across join deduplication
     bexpr = F.lit(0)
     for e in edges:
-        bexpr = bexpr + F.when(F.col(len_col) > e, 1).otherwise(0)
+        bexpr = bexpr + F.when(F.col("n_tok") > e, 1).otherwise(0)
     base = df.withColumn("bucket", bexpr.cast("int"))
     ranked, _, _gt = _subrange_rank(
         base,
         "bucket",
-        id_col,
-        seed,
-        sub_prefix_len,
+        "doc_id",
+        "batch",
+        SUB_PREFIX_LEN,
         group_sort_key=lambda g: g,
         reset_per_group=True,
     )
@@ -640,7 +622,7 @@ def form_batches(
     )
 
 
-def batch_stats(batched: DataFrame, len_col: str = "n_tok") -> DataFrame:
+def batch_stats(batched: DataFrame) -> DataFrame:
     """Per-batch padding report over ``form_batches`` output:
     -> (bucket, batch_seq, n_docs int, max_len int, sum_len bigint,
     pad_tokens bigint) where ``pad_tokens = n_docs * max_len - sum_len``
@@ -651,8 +633,8 @@ def batch_stats(batched: DataFrame, len_col: str = "n_tok") -> DataFrame:
         batched.groupBy("bucket", "batch_seq")
         .agg(
             F.count(F.lit(1)).cast("int").alias("n_docs"),
-            F.max(len_col).cast("int").alias("max_len"),
-            F.sum(len_col).cast("long").alias("sum_len"),
+            F.max("n_tok").cast("int").alias("max_len"),
+            F.sum("n_tok").cast("long").alias("sum_len"),
         )
         .withColumn(
             "pad_tokens",
@@ -665,18 +647,12 @@ def batch_stats(batched: DataFrame, len_col: str = "n_tok") -> DataFrame:
 
 
 def curriculum_order(
-    df: DataFrame,
-    metric_col: str,
-    n_phases: int = 4,
-    id_col: str = "doc_id",
-    seed: str = "curriculum",
-    sub_prefix_len: int = 2,
-    descending: bool = False,
+    df: DataFrame, metric_col: str, n_phases: int = 4, descending: bool = False
 ) -> DataFrame:
     """Curriculum ordering: exact global rank + phase assignment by a
     difficulty metric (short-to-long length curricula, easy-to-hard
     rarity/novelty curricula). Adds ``rank`` (0-based global position in
-    (metric, md5(id|seed), id) order — ``descending=True`` for
+    (metric, md5(doc_id|'curriculum'), doc_id) order — ``descending=True`` for
     hardest-first) and ``phase`` (``rank * n_phases div total``: equal-
     population phases, earlier phases = lower metric). Ties on the
     metric break by the md5 hash, so same-difficulty docs land in a
@@ -686,7 +662,7 @@ def curriculum_order(
     cardinality, NULL-free (token lengths, fixed-point scores, count
     signals — the module family's exact-integer metrics all qualify):
     the offsets pass collects one row per (metric value, md5 prefix) to
-    the driver, i.e. distinct-metrics x 16^``sub_prefix_len``. Quantize
+    the driver, i.e. distinct-metrics x 16^``SUB_PREFIX_LEN``. Quantize
     a high-cardinality metric upstream (integer shift/div) before
     ranking on it.
 
@@ -700,9 +676,9 @@ def curriculum_order(
     ranked, total, _gt = _subrange_rank(
         df,
         metric_col,
-        id_col,
-        seed,
-        sub_prefix_len,
+        "doc_id",
+        "curriculum",
+        SUB_PREFIX_LEN,
         group_sort_key=(lambda g: -g) if descending else (lambda g: g),
         reset_per_group=False,
     )
@@ -721,11 +697,7 @@ def curriculum_order(
 
 
 def shard_manifest(
-    examples: DataFrame,
-    n_shards: int,
-    id_col: str = "example_id",
-    tok_col: str = "tokens",
-    seed: str = "shards",
+    examples: DataFrame, n_shards: int, id_col: str = "example_id"
 ) -> DataFrame:
     """Shard finalization metadata over ``assign_shards``' layout:
     -> (shard int, n_examples bigint, n_tokens bigint, content_md5
@@ -744,13 +716,10 @@ def shard_manifest(
     ``write_shards(manifest=True)`` writes the same aggregation over
     the files it just wrote (read-back — the bytes a loader sees).
     """
-    return _manifest_agg(
-        assign_shards(examples, n_shards, id_col=id_col, seed=seed),
-        tok_col,
-    )
+    return _manifest_agg(assign_shards(examples, n_shards, id_col=id_col))
 
 
-def _manifest_agg(assigned: DataFrame, tok_col: str) -> DataFrame:
+def _manifest_agg(assigned: DataFrame) -> DataFrame:
     """The manifest aggregation over any (shard, shard_pos, tokens)
     frame — shared by ``shard_manifest`` (over a fresh assignment) and
     ``write_shards``'s read-back sidecar, so the digest recipe cannot
@@ -758,10 +727,10 @@ def _manifest_agg(assigned: DataFrame, tok_col: str) -> DataFrame:
     slim = assigned.select(
         "shard",
         "shard_pos",
-        F.size(F.col(tok_col)).cast("long").alias("_nt"),
+        F.size(F.col("tokens")).cast("long").alias("_nt"),
         F.md5(
             F.concat_ws(
-                ",", F.transform(F.col(tok_col), lambda x: x.cast("string"))
+                ",", F.transform(F.col("tokens"), lambda x: x.cast("string"))
             )
         ).alias("_d"),
     )
@@ -786,18 +755,10 @@ def _manifest_agg(assigned: DataFrame, tok_col: str) -> DataFrame:
     )
 
 
-def enforce_token_budget(
-    df: DataFrame,
-    budget,
-    by: str = "source",
-    len_col: str = "n_tok",
-    id_col: str = "doc_id",
-    seed: str = "budget",
-    sub_prefix_len: int = 2,
-) -> DataFrame:
+def enforce_token_budget(df: DataFrame, budget) -> DataFrame:
     """Exact per-group token-budget enforcement — the APPLY side of the
     ``rates_for_budget`` water-filling solver: keep each group's
-    documents in deterministic md5(id|seed) order until the cumulative
+    documents in deterministic md5(doc_id|'budget') order until the cumulative
     token count would exceed the group's budget. -> the surviving rows
     plus ``cum_tokens`` (the group's running total INCLUDING the row).
     ``budget`` is an int (every group) or a dict group->int (a group
@@ -822,24 +783,24 @@ def enforce_token_budget(
     spark = df.sparkSession
     ranked, _, _gt = _subrange_rank(
         df,
-        by,
-        id_col,
-        seed,
-        sub_prefix_len,
+        "source",
+        "doc_id",
+        "budget",
+        SUB_PREFIX_LEN,
         group_sort_key=lambda g: g,
         reset_per_group=True,
-        value_col=len_col,
+        value_col="n_tok",
     )
-    gtype = df.schema[by].dataType.simpleString()
+    gtype = df.schema["source"].dataType.simpleString()
     if isinstance(budget, dict):
         brows = [(g, int(b)) for g, b in budget.items()]
-        bschema = f"{by} {gtype}, _budget long"
+        bschema = f"source {gtype}, _budget long"
         bdf = (
             spark.createDataFrame(brows, bschema)
             if brows
             else spark.createDataFrame([], bschema)
         )
-        withb = ranked.join(F.broadcast(bdf), by, "left").withColumn(
+        withb = ranked.join(F.broadcast(bdf), "source", "left").withColumn(
             "_budget", F.coalesce("_budget", F.lit(0))
         )
     else:
@@ -858,8 +819,6 @@ def assign_shards_stratified(
     n_shards: int,
     by: str = "source",
     id_col: str = "example_id",
-    seed: str = "shards",
-    sub_prefix_len: int = 2,
 ) -> DataFrame:
     """Stratified shard assignment: every ``by`` group is spread across
     shards EXACTLY round-robin in its own md5 rank order, so each shard
@@ -882,8 +841,8 @@ def assign_shards_stratified(
         examples,
         by,
         id_col,
-        seed,
-        sub_prefix_len,
+        "shards",
+        SUB_PREFIX_LEN,
         group_sort_key=lambda g: g,
         reset_per_group=True,
     )
@@ -899,14 +858,7 @@ def assign_shards_stratified(
     )
 
 
-def interleave_key(
-    df: DataFrame,
-    weights: dict,
-    by: str = "source",
-    id_col: str = "doc_id",
-    seed: str = "interleave",
-    sub_prefix_len: int = 2,
-) -> DataFrame:
+def interleave_key(df: DataFrame, weights: dict) -> DataFrame:
     """Mixture-stable stream ordering by STRIDE SCHEDULING (weighted
     round-robin): adds ``interleave_key`` (a fixed-width sortable
     string) such that reading — or packing — the corpus in key order
@@ -940,10 +892,10 @@ def interleave_key(
     lcm = _lcm(*ws.values())
     ranked, _, _gt = _subrange_rank(
         df,
-        by,
-        id_col,
-        seed,
-        sub_prefix_len,
+        "source",
+        "doc_id",
+        "interleave",
+        SUB_PREFIX_LEN,
         group_sort_key=lambda g: g,
         reset_per_group=True,
     )
@@ -969,17 +921,17 @@ def interleave_key(
                 "lcm(weights) * (rows-per-group + 1) fits in int64."
             )
     spark = df.sparkSession
-    gtype = df.schema[by].dataType.simpleString()
+    gtype = df.schema["source"].dataType.simpleString()
     strides = F.broadcast(
-        spark.createDataFrame(stride_pairs, f"{by} {gtype}, _stride long")
+        spark.createDataFrame(stride_pairs, f"source {gtype}, _stride long")
     )
-    joined = ranked.join(strides, by, "left")
+    joined = ranked.join(strides, "source", "left")
     missing = F.when(
         F.col("_stride").isNull(),
         F.raise_error(
             F.concat(
                 F.lit("interleave_key: no weight for group "),
-                F.col(by).cast("string"),
+                F.col("source").cast("string"),
             )
         ).cast("long"),
     ).otherwise(F.col("_stride"))
@@ -992,8 +944,8 @@ def interleave_key(
     key = F.concat_ws(
         "|",
         F.lpad(((F.col("_pos") + 1) * missing).cast("string"), 19, "0"),
-        F.lpad(F.length(F.col(by).cast("string")).cast("string"), 4, "0"),
-        F.col(by).cast("string"),
-        F.col(id_col).cast("string"),
+        F.lpad(F.length(F.col("source").cast("string")).cast("string"), 4, "0"),
+        F.col("source").cast("string"),
+        F.col("doc_id").cast("string"),
     )
     return joined.withColumn("interleave_key", key).drop("_pos", "_stride")

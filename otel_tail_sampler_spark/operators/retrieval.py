@@ -10,7 +10,7 @@ training pipeline needs for benchmark decontamination by retrieval and
 duplicate-question mining.
 
 Scoring (k1 = 6/5, b = 3/4 — the standard BM25 defaults as exact
-rationals; S = 2^scale_bits fixed-point scale; N docs, T total tokens,
+rationals; S = 2^SCALE_BITS fixed-point scale; N docs, T total tokens,
 dl = |doc|, tf = term count in doc, df = docs containing term):
 
     idf_fp(t)    = (S * (2N - 2df + 1)) div (2df + 1)
@@ -24,7 +24,8 @@ multiplied through by 20*T, and (2N-2df+1)/(2df+1) is the argument of
 the classic idf log (a strictly decreasing function of df, so rare terms
 still dominate; the log is omitted because no cross-engine-exact log
 exists). Intermediates ride DECIMAL(38,0) — exact to N ~ 1e9 docs /
-T ~ 1e12 tokens at the default scale; shrink scale_bits beyond that.
+T ~ 1e12 tokens at this scale (``bm25_matches(scale_bits=)`` can
+shrink it beyond that).
 
 Two tiers (mirroring ivf_build/ivf_search):
 
@@ -52,11 +53,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+SCALE_BITS = 20
 
-def _corpus_stats(corpus: DataFrame, tokens_col: str) -> tuple[int, int]:
+
+def _corpus_stats(corpus: DataFrame) -> tuple[int, int]:
     stats = corpus.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.size(F.col(tokens_col))).alias("t"),
+        F.sum(F.size(F.col("tokens"))).alias("t"),
     ).first()
     n_docs, n_tokens = int(stats["n"]), int(stats["t"] or 0)
     if n_docs == 0 or n_tokens == 0:
@@ -64,13 +67,13 @@ def _corpus_stats(corpus: DataFrame, tokens_col: str) -> tuple[int, int]:
     return n_docs, n_tokens
 
 
-def _postings(corpus: DataFrame, id_col: str, tokens_col: str) -> DataFrame:
+def _postings(corpus: DataFrame) -> DataFrame:
     """(term, doc_id, tf, dl) — one row per distinct (doc, term)."""
     return (
         corpus.select(
-            F.col(id_col).alias("doc_id"),
-            F.size(F.col(tokens_col)).alias("dl"),
-            F.explode(F.col(tokens_col)).alias("term"),
+            F.col("doc_id"),
+            F.size(F.col("tokens")).alias("dl"),
+            F.explode(F.col("tokens")).alias("term"),
         )
         .groupBy("doc_id", "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -195,8 +198,6 @@ _BM25_PACK = 1 << 21
 def _bm25_topk_arrow(
     corpus: DataFrame,
     qterms: DataFrame,
-    n_docs: int | None,
-    n_tokens: int | None,
     k: int,
     s: int,
     id_col: str,
@@ -209,18 +210,17 @@ def _bm25_topk_arrow(
     no window at all — the per-batch cut becomes the final filter,
     which is exact because scores complete within one batch).
 
-    ``n_docs=None`` FUSES the corpus stats into pass A (r7): the kernel
-    already walks every document's length, so per-partition (doc count,
-    token total) ride the same partial output as two SENTINEL tkeys
-    (-1, -2 — a real triple pack is always >= 0) and the separate
-    _corpus_stats corpus scan never runs."""
+    The corpus stats are FUSED into pass A (r7): the kernel already
+    walks every document's length, so per-partition (doc count, token
+    total) ride the same partial output as two SENTINEL tkeys (-1, -2 —
+    a real triple pack is always >= 0) and no separate corpus-stats scan
+    runs."""
     import numpy as np
     import pandas as pd
 
     from typing import Iterator
 
     spark = corpus.sparkSession
-    fuse_stats = n_docs is None
     qt_rows = qterms.collect()  # broadcast regime: queries are small
     q_ids = sorted({r["query_id"] for r in qt_rows})
     terms = sorted({r["term"] for r in qt_rows})
@@ -231,7 +231,7 @@ def _bm25_topk_arrow(
     )
     empty = spark.createDataFrame([], out_schema + ", rank int")
     if not terms or not q_ids:
-        if fuse_stats and corpus.isEmpty():
+        if corpus.isEmpty():
             raise ValueError("bm25: empty corpus")
         return empty
     qs = np.asarray(terms, np.int64)
@@ -264,7 +264,7 @@ def _bm25_topk_arrow(
             uk, uc = np.unique(key, return_counts=True)
             for ky, c in zip(uk.tolist(), uc.tolist()):
                 acc[ky] = acc.get(ky, 0) + c
-        if fuse_stats and nd:
+        if nd:
             acc[-1] = nd
             acc[-2] = tok_total
         if acc:
@@ -283,12 +283,11 @@ def _bm25_topk_arrow(
         .agg(F.sum("n").alias("n"))
         .collect()
     )
-    if fuse_stats:
-        n_docs = sum(int(r["n"]) for r in triples if r["tkey"] == -1)
-        n_tokens = sum(int(r["n"]) for r in triples if r["tkey"] == -2)
-        if n_docs == 0 or n_tokens == 0:
-            raise ValueError("bm25: empty corpus")
-        triples = [r for r in triples if r["tkey"] >= 0]
+    n_docs = sum(int(r["n"]) for r in triples if r["tkey"] == -1)
+    n_tokens = sum(int(r["n"]) for r in triples if r["tkey"] == -2)
+    if n_docs == 0 or n_tokens == 0:
+        raise ValueError("bm25: empty corpus")
+    triples = [r for r in triples if r["tkey"] >= 0]
     if not triples:
         return empty
 
@@ -377,16 +376,7 @@ def _coltype(df: DataFrame, col: str) -> str:
     return df.schema[col].dataType.simpleString()
 
 
-def bm25_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    scale_bits: int = 20,
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
-    query_id: str = "query_id",
-    query_tokens: str = "tokens",
-) -> DataFrame:
+def bm25_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """One-shot top-k corpus docs per query doc by fixed-point BM25.
 
     -> (query_id, doc_id, score_fp bigint, rank int), rank by
@@ -412,18 +402,16 @@ def bm25_topk(
     raises. Use bm25_index/bm25_search for such a corpus and for a
     standing index.
     """
-    s = 1 << scale_bits
+    s = 1 << SCALE_BITS
     # stats fused into pass A; the dedup exchange is skipped because
     # the kernel's collect set-ifies terms anyway
     return _bm25_topk_arrow(
         corpus,
-        _query_terms(queries, query_id, query_tokens, distinct=False),
-        None,
-        None,
+        _query_terms(queries, "query_id", "tokens", distinct=False),
         k,
         s,
-        id_col,
-        tokens_col,
+        "doc_id",
+        "tokens",
     )
 
 
@@ -431,7 +419,7 @@ def bm25_matches(
     corpus: DataFrame,
     queries: DataFrame,
     min_score_fp: int,
-    scale_bits: int = 20,
+    scale_bits: int = SCALE_BITS,
     id_col: str = "doc_id",
     tokens_col: str = "tokens",
     query_id: str = "query_id",
@@ -449,8 +437,6 @@ def bm25_matches(
     return _bm25_topk_arrow(
         corpus,
         _query_terms(queries, query_id, query_tokens, distinct=False),
-        None,
-        None,
         0,
         s,
         id_col,
@@ -460,11 +446,7 @@ def bm25_matches(
 
 
 def decontaminate_by_retrieval(
-    corpus: DataFrame,
-    benchmarks: DataFrame,
-    min_score_fp: int,
-    id_col: str = "doc_id",
-    **kw,
+    corpus: DataFrame, benchmarks: DataFrame, min_score_fp: int, **kw
 ) -> DataFrame:
     """The APPLY side of :func:`bm25_matches` — the retrieval flavor of
     benchmark decontamination (complements the n-gram-containment
@@ -473,17 +455,13 @@ def decontaminate_by_retrieval(
     after dropping every document some benchmark query retrieves at
     ``min_score_fp`` or above. The anti-join runs against the DISTINCT
     flagged ids — bounded by contamination incidence."""
-    matches = bm25_matches(
-        corpus, benchmarks, min_score_fp, id_col=id_col, **kw
-    )
-    flagged = matches.select(F.col("doc_id").alias(id_col)).distinct()
-    return corpus.join(flagged, id_col, "anti")
+    matches = bm25_matches(corpus, benchmarks, min_score_fp, **kw)
+    flagged = matches.select("doc_id").distinct()
+    return corpus.join(flagged, "doc_id", "anti")
 
 
 def bm25_index(
     corpus: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
     out_dir: str | None = None,
     index_partitions: int | None = None,
 ) -> tuple[DataFrame, DataFrame, tuple[int, int]]:
@@ -497,8 +475,8 @@ def bm25_index(
     each action re-derives them (fine for tests, not for a standing
     index).
     """
-    n_docs, n_tokens = _corpus_stats(corpus, tokens_col)
-    post = _postings(corpus, id_col, tokens_col)
+    n_docs, n_tokens = _corpus_stats(corpus)
+    post = _postings(corpus)
     if out_dir is not None:
         path = out_dir.rstrip("/") + "/postings"
         shaped = (
@@ -520,17 +498,14 @@ def bm25_search(
     stats: tuple[int, int],
     queries: DataFrame,
     k: int = 10,
-    scale_bits: int = 20,
-    query_id: str = "query_id",
-    query_tokens: str = "tokens",
 ) -> DataFrame:
     """Rank against a prebuilt bm25_index — equal to bm25_topk on the
     same corpus (asserted in tests), but the corpus is never rescanned:
     both index sides are broadcast-semi-filtered to query terms before
     anything else touches them."""
     n_docs, n_tokens = int(stats[0]), int(stats[1])
-    s = 1 << scale_bits
-    qterms = _query_terms(queries, query_id, query_tokens)
+    s = 1 << SCALE_BITS
+    qterms = _query_terms(queries, "query_id", "tokens")
     terms_only = qterms.select("term").distinct()
     matched = postings.join(F.broadcast(terms_only), "term", "left_semi")
     dfreq = _with_idf(

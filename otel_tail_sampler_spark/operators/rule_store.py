@@ -37,7 +37,7 @@ RULE_TABLE_SCHEMA = (
 )
 
 
-def _to_row(rule: dict, version: int, deleted: bool = False) -> tuple:
+def _to_row(rule: dict, version: int) -> tuple:
     payload = json.dumps(
         {
             "resource_matchers": rule.get("resource_matchers", []),
@@ -48,7 +48,7 @@ def _to_row(rule: dict, version: int, deleted: bool = False) -> tuple:
     return (
         rule["id"],
         version,
-        deleted,
+        False,  # deleted: delete_rule writes its own tombstone row
         int(rule.get("priority", 0)),
         bool(rule.get("enabled", True)),
         rule.get("expires_at_ms"),

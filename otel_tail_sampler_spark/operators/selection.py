@@ -59,11 +59,9 @@ from pyspark.sql import functions as F
 _DEFAULT_BUCKETS = 1 << 16
 
 
-def _bucket_counts_arrow(
-    flagged: DataFrame, n_buckets: int, tok_col: str
-) -> DataFrame:
+def _bucket_counts_arrow(flagged: DataFrame, n_buckets: int) -> DataFrame:
     """Shared Arrow model-build kernel: input is (``_is_t`` boolean,
-    ``tok_col``); output (bucket int, t_freq bigint, r_freq bigint) with
+    ``tokens``); output (bucket int, t_freq bigint, r_freq bigint) with
     ``r_freq`` counting EVERY row's bigrams and ``t_freq`` only the
     flagged rows'. Per Arrow batch: one flat packed-pair stream
     (``_batch_bigram_pairs``), a modulo, and two ``np.bincount`` calls —
@@ -92,7 +90,7 @@ def _bucket_counts_arrow(
             n = len(pdf)
             if not n:
                 continue
-            arrs = [np.asarray(t, np.int64) for t in pdf[tok_col]]
+            arrs = [np.asarray(t, np.int64) for t in pdf["tokens"]]
             lens = np.fromiter((a.size for a in arrs), np.int64, n)
             if int(lens.sum()) < 2:
                 continue
@@ -125,7 +123,7 @@ def _bucket_counts_arrow(
         F.coalesce(F.col("_is_t").cast("boolean"), F.lit(False)).alias(
             "_is_t"
         ),
-        F.col(tok_col),
+        F.col("tokens"),
     ).mapInPandas(fn, "bucket int, t_freq long, r_freq long")
     return partials.groupBy("bucket").agg(
         F.sum("t_freq").cast("long").alias("t_freq"),
@@ -134,10 +132,7 @@ def _bucket_counts_arrow(
 
 
 def build_dsir_model(
-    target: DataFrame,
-    raw: DataFrame,
-    n_buckets: int = _DEFAULT_BUCKETS,
-    tok_col: str = "tokens",
+    target: DataFrame, raw: DataFrame, n_buckets: int = _DEFAULT_BUCKETS
 ) -> DataFrame:
     """Hashed-bigram bucket counts for both corpora:
     -> (bucket int, t_freq bigint, r_freq bigint), one row per bucket
@@ -151,11 +146,11 @@ def build_dsir_model(
     the build stays ONE pass; a target document also present in
     ``raw`` is counted on both sides."""
     flagged = target.select(
-        F.lit(True).alias("_is_t"), F.col(tok_col)
+        F.lit(True).alias("_is_t"), F.col("tokens")
     ).unionByName(
-        raw.select(F.lit(False).alias("_is_t"), F.col(tok_col))
+        raw.select(F.lit(False).alias("_is_t"), F.col("tokens"))
     )
-    counts = _bucket_counts_arrow(flagged, n_buckets, tok_col)
+    counts = _bucket_counts_arrow(flagged, n_buckets)
     # the union double-counts nothing: t_freq comes from flagged
     # rows only, r_freq needs the raw-side rows only
     return counts.select(
@@ -182,8 +177,6 @@ def dsir_score(
     model: DataFrame,
     n_buckets: int = _DEFAULT_BUCKETS,
     scale_bits: int = 20,
-    id_col: str = "doc_id",
-    tok_col: str = "tokens",
     keep_cols: tuple = (),
 ) -> DataFrame:
     """Score each document against a built DSIR model:
@@ -232,7 +225,7 @@ def dsir_score(
             n = len(pdf)
             if not n:
                 continue
-            arrs = [np.asarray(t, np.int64) for t in pdf[tok_col]]
+            arrs = [np.asarray(t, np.int64) for t in pdf["tokens"]]
             lens = np.fromiter((a.size for a in arrs), np.int64, n)
             nfe = np.maximum(lens - 1, 0)
             tm = np.zeros(n, np.int64)
@@ -244,7 +237,7 @@ def dsir_score(
                 bk = pairs % nb  # numpy %: sign of divisor, == pmod
                 tm = _segment_sums(vtf[bk] + 1, cross, starts, nfe, nz)
                 rm = _segment_sums(vrf[bk] + 1, cross, starts, nfe, nz)
-            out = {id_col: pdf[id_col]}
+            out = {"doc_id": pdf["doc_id"]}
             for c in keep_cols:
                 out[c] = pdf[c]
             out["n_feat"] = nfe.astype(np.int32)
@@ -254,12 +247,12 @@ def dsir_score(
 
     typ = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     keep_ddl = "".join(f", {c} {typ[c]}" for c in keep_cols)
-    in_cols = [id_col, *keep_cols]
-    if tok_col not in in_cols:  # tok_col may already ride keep_cols
-        in_cols.append(tok_col)
+    in_cols = ["doc_id", *keep_cols]
+    if "tokens" not in in_cols:  # tokens may already ride keep_cols
+        in_cols.append("tokens")
     stats = df.select(*[F.col(c) for c in in_cols]).mapInPandas(
         fn,
-        f"{id_col} {typ[id_col]}{keep_ddl}, n_feat int,"
+        f"doc_id {typ['doc_id']}{keep_ddl}, n_feat int,"
         " target_mass long, raw_mass long",
     )
 
@@ -272,7 +265,7 @@ def dsir_score(
         f"      * {t_total + n_buckets})"
     )
     return stats.select(
-        id_col,
+        "doc_id",
         *keep_cols,
         "n_feat",
         "target_mass",
@@ -284,13 +277,7 @@ def dsir_score(
 
 
 def dsir_select(
-    df: DataFrame,
-    model: DataFrame,
-    k: int,
-    n_buckets: int = _DEFAULT_BUCKETS,
-    scale_bits: int = 20,
-    id_col: str = "doc_id",
-    tok_col: str = "tokens",
+    df: DataFrame, model: DataFrame, k: int, n_buckets: int = _DEFAULT_BUCKETS
 ) -> DataFrame:
     """Deterministic importance selection: the ``k`` most target-like
     documents by ``ratio_fp`` (ties to the smaller id):
@@ -299,16 +286,9 @@ def dsir_select(
     The sort-limit compiles to TakeOrderedAndProject (per-partition
     top-k, then one bounded merge — nothing corpus-sized sorts); the
     rank window runs over the k survivors only."""
-    scored = dsir_score(
-        df,
-        model,
-        n_buckets=n_buckets,
-        scale_bits=scale_bits,
-        id_col=id_col,
-        tok_col=tok_col,
-    )
-    top = scored.orderBy(F.desc("ratio_fp"), F.asc(id_col)).limit(int(k))
-    w = Window.orderBy(F.desc("ratio_fp"), F.asc(id_col))
+    scored = dsir_score(df, model, n_buckets=n_buckets)
+    top = scored.orderBy(F.desc("ratio_fp"), F.asc("doc_id")).limit(int(k))
+    w = Window.orderBy(F.desc("ratio_fp"), F.asc("doc_id"))
     return top.withColumn("rank", F.row_number().over(w).cast("int"))
 
 
@@ -318,9 +298,6 @@ def dsir_sample(
     rate: float,
     n_buckets: int = _DEFAULT_BUCKETS,
     scale_bits: int = 20,
-    id_col: str = "doc_id",
-    tok_col: str = "tokens",
-    seed: str = "dsir",
     keep_cols: tuple = (),
 ) -> DataFrame:
     """DSIR's importance RESAMPLING as a deterministic weighted Bernoulli
@@ -336,7 +313,7 @@ def dsir_sample(
 
     Exact-integer acceptance: keep iff
     ``hash32 * S * 2^20 < ratio_fp * round(rate * 2^20) * 2^32``
-    with ``hash32 = int(md5(id|seed)[:8], 16)``. The min(1, .) clamp is
+    with ``hash32 = int(md5(doc_id|'dsir')[:8], 16)``. The min(1, .) clamp is
     made EXPLICIT as a short-circuit disjunct — ``ratio_fp >=
     ceil(S * 2^20 / r_fp)`` keeps the row outright — because it also
     bounds the product comparison: the right side only evaluates below
@@ -360,14 +337,12 @@ def dsir_sample(
         model,
         n_buckets=n_buckets,
         scale_bits=scale_bits,
-        id_col=id_col,
-        tok_col=tok_col,
         keep_cols=keep_cols,
     )
     h32 = F.conv(
         F.substring(
             F.md5(
-                F.concat_ws("|", F.col(id_col).cast("string"), F.lit(seed))
+                F.concat_ws("|", F.col("doc_id").cast("string"), F.lit("dsir"))
             ),
             1,
             8,
@@ -395,10 +370,7 @@ def dsir_sample(
 
 
 def build_dsir_model_partitioned(
-    raw: DataFrame,
-    target_pred: Column,
-    n_buckets: int = _DEFAULT_BUCKETS,
-    tok_col: str = "tokens",
+    raw: DataFrame, target_pred: Column, n_buckets: int = _DEFAULT_BUCKETS
 ) -> DataFrame:
     """Single-pass ``build_dsir_model`` for the common case where the
     target corpus IS a slice of the raw corpus (a source/domain/label
@@ -412,7 +384,6 @@ def build_dsir_model_partitioned(
     Runs the bincount partial-aggregate kernel of
     ``_bucket_counts_arrow``."""
     return _bucket_counts_arrow(
-        raw.select(target_pred.alias("_is_t"), F.col(tok_col)),
+        raw.select(target_pred.alias("_is_t"), F.col("tokens")),
         n_buckets,
-        tok_col,
     )

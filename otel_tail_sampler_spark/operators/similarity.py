@@ -26,21 +26,17 @@ from otel_tail_sampler_spark.operators.dedup import cosine_sim
 
 
 def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
+    corpus: DataFrame, queries: DataFrame, k: int = 10
 ) -> DataFrame:
     """Exact top-k neighbors per query. Queries are broadcast; ties broken by
     corpus id for determinism."""
     from otel_tail_sampler_spark.functions.spread import spread_small_input
 
     corpus = spread_small_input(corpus)  # dot products run pre-exchange
-    c = corpus.select(F.col(corpus_id).alias("corpus_id"), F.col(corpus_vec).alias("_cv"))
-    q = queries.select(F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qv"))
+    c = corpus.select(
+        F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("_cv")
+    )
+    q = queries.select(F.col("query_id"), F.col("query_vec").alias("_qv"))
     scored = c.join(F.broadcast(q)).withColumn(
         "cosine", cosine_sim(F.col("_cv"), F.col("_qv"))
     )
@@ -78,26 +74,25 @@ def _sign_bits(vec: Column, planes: list[list[float]]) -> Column:
     return F.concat(*bits)
 
 
-def with_bucket(df: DataFrame, vec_col: str, planes: list[list[float]],
-                out_col: str = "bucket") -> DataFrame:
+def with_bucket(df: DataFrame, vec_col: str, planes: list[list[float]]) -> DataFrame:
     from otel_tail_sampler_spark.functions.spread import spread_small_input
 
     # the per-vector plane dot products run pre-exchange: widen small inputs
     return spread_small_input(df).withColumn(
-        out_col, _sign_bits(F.col(vec_col), planes)
+        "bucket", _sign_bits(F.col(vec_col), planes)
     )
 
 
 def ivf_centroids(
-    emb_sample: "np.ndarray", n_clusters: int = 16, iters: int = 5, seed: int = 42
+    emb_sample: "np.ndarray", n_clusters: int = 16
 ) -> list[list[float]]:
     """Deterministic mini k-means on a driver-side SAMPLE (the IVF training
     pass — at 100 TB you train on a few hundred thousand sampled vectors,
     never the corpus). Returns L2-normalized centroids."""
-    rng = np.random.Generator(np.random.PCG64(seed))
+    rng = np.random.Generator(np.random.PCG64(42))
     x = emb_sample / np.maximum(np.linalg.norm(emb_sample, axis=1, keepdims=True), 1e-9)
     c = x[rng.choice(len(x), size=n_clusters, replace=False)]
-    for _ in range(iters):
+    for _ in range(5):
         sims = x @ c.T
         assign = sims.argmax(axis=1)
         for k in range(n_clusters):
@@ -131,14 +126,12 @@ def _nearest_clusters(vec: Column, centroids: list[list[float]], n: int) -> Colu
     return F.transform(top, lambda s: s.getField("cid"))
 
 
+# ivf_build trains its centroids on at most this many sampled vectors
+IVF_TRAIN_SAMPLE = 4096
+
+
 def ivf_build(
-    corpus: DataFrame,
-    n_clusters: int = 16,
-    seed: int = 42,
-    train_sample: int = 4096,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    n_corpus: int | None = None,
+    corpus: DataFrame, n_clusters: int = 16
 ) -> tuple[list[list[float]], DataFrame]:
     """Build the IVF index ONCE: train centroids on a deterministic sample
     and assign every corpus vector to its inverted list.
@@ -148,21 +141,19 @@ def ivf_build(
     (write ``assigned`` partitioned by cluster; persist the centroid list
     alongside) so every query batch after pays only the probe join —
     retraining per search, as the one-shot ivf_topk does, re-reads the
-    corpus every call. Pass ``n_corpus`` (if already known) to skip the
-    sizing count() action."""
+    corpus every call. Sizing the sample costs one count() action."""
     # seeded RANDOM sample (limit() would take the first partitions only —
     # on a clustered/sorted corpus the centroids would learn one shard's
     # distribution). Oversample the fraction so the post-sample limit is a
     # trim, not a truncation of one partition.
-    if n_corpus is None:
-        n_corpus = corpus.count()
-    fraction = min(1.0, (train_sample * 1.3) / max(n_corpus, 1))
+    n_corpus = corpus.count()
+    fraction = min(1.0, (IVF_TRAIN_SAMPLE * 1.3) / max(n_corpus, 1))
     sample = np.array(
         [
             r[0]
-            for r in corpus.select(corpus_vec)
-            .sample(fraction=fraction, seed=seed)
-            .limit(train_sample)
+            for r in corpus.select("embedding")
+            .sample(fraction=fraction, seed=42)
+            .limit(IVF_TRAIN_SAMPLE)
             .collect()
         ],
         dtype=np.float64,
@@ -172,19 +163,20 @@ def ivf_build(
         # corpus is just small): deterministic fallback rather than handing
         # k-means an empty/short (or mis-shaped empty) array
         sample = np.array(
-            [r[0] for r in corpus.select(corpus_vec).limit(train_sample).collect()],
+            [
+                r[0]
+                for r in corpus.select("embedding").limit(IVF_TRAIN_SAMPLE).collect()
+            ],
             dtype=np.float64,
         )
     if len(sample) == 0:
         raise ValueError("ivf_build: corpus is empty — nothing to train on")
-    cents = ivf_centroids(
-        sample, n_clusters=min(n_clusters, len(sample)), seed=seed
-    )
+    cents = ivf_centroids(sample, n_clusters=min(n_clusters, len(sample)))
 
     from otel_tail_sampler_spark.functions.spread import spread_small_input
 
     assigned = spread_small_input(corpus).select(
-        F.col(corpus_id).alias("corpus_id"), F.col(corpus_vec).alias("_cv")
+        F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("_cv")
     ).withColumn("cluster", _nearest_clusters(F.col("_cv"), cents, 1)[0])
     return cents, assigned
 
@@ -195,15 +187,13 @@ def ivf_search(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 2,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
 ) -> DataFrame:
     """Search a built IVF index: probe the ``nprobe`` nearest inverted
     lists per query, exact re-rank within them. ``assigned`` may be the
     live DataFrame from ivf_build or a re-read of its materialized form
     (a scan partitioned by ``cluster`` prunes to the probed lists)."""
     q = queries.select(
-        F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qv")
+        F.col("query_id"), F.col("query_vec").alias("_qv")
     ).withColumn(
         "cluster", F.explode(_nearest_clusters(F.col("_qv"), centroids, nprobe))
     )
@@ -224,13 +214,6 @@ def ivf_topk(
     k: int = 10,
     n_clusters: int = 16,
     nprobe: int = 2,
-    seed: int = 42,
-    train_sample: int = 4096,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    n_corpus: int | None = None,
 ) -> DataFrame:
     """One-shot IVF approximate top-k: ivf_build + ivf_search in one call.
     For repeated query batches over the same corpus, call ivf_build once
@@ -241,24 +224,8 @@ def ivf_topk(
     (centroids are literals — broadcast-free), the probe join is on the
     cluster id (shuffle bounded by candidate volume ~ nprobe/n_clusters of the
     corpus), and recall grows with nprobe. Train sample is collected once."""
-    cents, assigned = ivf_build(
-        corpus,
-        n_clusters=n_clusters,
-        seed=seed,
-        train_sample=train_sample,
-        corpus_id=corpus_id,
-        corpus_vec=corpus_vec,
-        n_corpus=n_corpus,
-    )
-    return ivf_search(
-        cents,
-        assigned,
-        queries,
-        k=k,
-        nprobe=nprobe,
-        query_id=query_id,
-        query_vec=query_vec,
-    )
+    cents, assigned = ivf_build(corpus, n_clusters=n_clusters)
+    return ivf_search(cents, assigned, queries, k=k, nprobe=nprobe)
 
 
 def lsh_topk(
@@ -267,25 +234,22 @@ def lsh_topk(
     k: int = 10,
     n_planes: int = 8,
     dim: int = 64,
-    seed: int = 42,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
 ) -> DataFrame:
     """Approximate top-k: exact re-rank within hyperplane buckets.
 
     Recall < 1.0 by construction (single probe); raise recall with fewer
     planes (bigger buckets) or multiple plane sets unioned. The join is on
     the bucket key — corpus never self-joins, queries broadcast."""
-    planes = hyperplanes(dim, n_planes, seed)
+    planes = hyperplanes(dim, n_planes)
     c = with_bucket(
-        corpus.select(F.col(corpus_id).alias("corpus_id"), F.col(corpus_vec).alias("_cv")),
+        corpus.select(
+            F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("_cv")
+        ),
         "_cv",
         planes,
     )
     q = with_bucket(
-        queries.select(F.col(query_id).alias("query_id"), F.col(query_vec).alias("_qv")),
+        queries.select(F.col("query_id"), F.col("query_vec").alias("_qv")),
         "_qv",
         planes,
     )
@@ -300,11 +264,7 @@ def lsh_topk(
     )
 
 
-def quantize_embeddings(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def quantize_embeddings(df: DataFrame) -> DataFrame:
     """Per-vector symmetric int8 quantization (the standard linear
     scheme, cf. Jacob et al. 2018):
     -> (id, qvec array<int> in [-127, 127], scale double) with
@@ -324,7 +284,7 @@ def quantize_embeddings(
     O(d^2)=4k flops per row — irrelevant next to the scan. (See the HOF
     re-evaluation trap in functions/spread.py's module notes.)
     """
-    v = F.col(vec_col)
+    v = F.col("embedding")
     amax = F.array_max(F.transform(v, lambda x: F.abs(x)))
     scale = amax.cast("double") / F.lit(127.0)
     q = F.when(
@@ -334,7 +294,7 @@ def quantize_embeddings(
         ),
     ).otherwise(F.transform(v, lambda x: F.lit(0)))
     return df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         q.alias("qvec"),
         F.when(amax > 0, scale).otherwise(F.lit(0.0)).alias("scale"),
     )
@@ -355,9 +315,7 @@ def quantized_topk(
     corpus_q: DataFrame,
     queries_q: DataFrame,
     k: int = 10,
-    corpus_id: str = "vec_id",
     query_id: str = "query_id",
-    qvec_col: str = "qvec",
 ) -> DataFrame:
     """Exact top-k over int8-quantized vectors (quantize_embeddings
     output on both sides): qcos = int_dot(qc, qq) / (sqrt(|qc|^2) *
@@ -378,14 +336,14 @@ def quantized_topk(
     from otel_tail_sampler_spark.functions.spread import spread_small_input
 
     c = spread_small_input(corpus_q).select(
-        F.col(corpus_id).alias("corpus_id"),
-        F.col(qvec_col).alias("_cq"),
-        _int_dot(F.col(qvec_col), F.col(qvec_col)).alias("_cc"),
+        F.col("vec_id").alias("corpus_id"),
+        F.col("qvec").alias("_cq"),
+        _int_dot(F.col("qvec"), F.col("qvec")).alias("_cc"),
     )
     q = queries_q.select(
         F.col(query_id).alias("query_id"),
-        F.col(qvec_col).alias("_qq"),
-        _int_dot(F.col(qvec_col), F.col(qvec_col)).alias("_q2"),
+        F.col("qvec").alias("_qq"),
+        _int_dot(F.col("qvec"), F.col("qvec")).alias("_q2"),
     )
     dot = _int_dot(F.col("_cq"), F.col("_qq"))
     scored = c.join(F.broadcast(q)).withColumn(

@@ -55,10 +55,10 @@ def lang_id(text: Column) -> Column:
     return out
 
 
-def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(docs: DataFrame) -> DataFrame:
     """Per-doc quality signals: length, word stats, punct/digit/stopword
     ratios — the standard pre-training corpus filters."""
-    t = F.col(text_col)
+    t = F.col("text")
     w = words(t)
     n_chars = F.length(t)
     n_words = token_count_ws(t)
@@ -85,10 +85,10 @@ def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Composite [0,1] score: reasonable length + low punct/digit noise +
     natural-language stopword presence (Gopher/C4-style heuristics)."""
-    feats = quality_features(docs, text_col)
+    feats = quality_features(docs)
     length_ok = (
         F.when(F.col("n_words") < 5, 0.0)
         .when(F.col("n_words") > 5000, 0.3)
@@ -107,9 +107,7 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def repetition_signals(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_signals(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition filters (Rae et al. 2021, public):
 
     - ``dup_word_frac``   — fraction of word occurrences that are repeats
@@ -126,11 +124,11 @@ def repetition_signals(
 
     Docs with <2 words have no bigrams; their ``top_bigram_frac`` is 0.0.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     w = words(t)
-    wc = docs.select(F.col(id_col), F.explode(w).alias("_w"))
-    per_w = wc.groupBy(id_col, "_w").agg(F.count(F.lit(1)).alias("_c"))
-    wagg = per_w.groupBy(id_col).agg(
+    wc = docs.select(F.col("doc_id"), F.explode(w).alias("_w"))
+    per_w = wc.groupBy("doc_id", "_w").agg(F.count(F.lit(1)).alias("_c"))
+    wagg = per_w.groupBy("doc_id").agg(
         F.sum("_c").alias("n_words"),
         F.count(F.lit(1)).alias("_n_distinct"),
         F.max("_c").alias("_top_w"),
@@ -141,19 +139,19 @@ def repetition_signals(
         lambda a, b: F.concat_ws(" ", a, b),
     )
     bc = docs.filter(F.size(w) >= 2).select(
-        F.col(id_col), F.explode(bigrams).alias("_b")
+        F.col("doc_id"), F.explode(bigrams).alias("_b")
     )
-    per_b = bc.groupBy(id_col, "_b").agg(F.count(F.lit(1)).alias("_c"))
-    bagg = per_b.groupBy(id_col).agg(
+    per_b = bc.groupBy("doc_id", "_b").agg(F.count(F.lit(1)).alias("_c"))
+    bagg = per_b.groupBy("doc_id").agg(
         F.sum("_c").alias("_n_bigrams"), F.max("_c").alias("_top_b")
     )
     denom_w = F.greatest(F.col("n_words"), F.lit(1))
     return (
-        docs.select(id_col)
-        .join(wagg, id_col, "left")
-        .join(bagg, id_col, "left")
+        docs.select("doc_id")
+        .join(wagg, "doc_id", "left")
+        .join(bagg, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_words", F.lit(0)).alias("n_words"),
             F.round(
                 F.coalesce(
@@ -185,7 +183,7 @@ PII_PATTERNS = {
 PII_ORDER = ["email", "phone", "ipv4"]  # phone before ipv4: disjoint separators
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """Scrub emails / US-style phone numbers / IPv4 literals, replacing each
     with ``<EMAIL>`` / ``<PHONE>`` / ``<IPV4>``; adds per-category match
     counts and the redacted text.
@@ -195,7 +193,7 @@ def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Categories apply in ``PII_ORDER`` so the output is well-defined when
     patterns could otherwise overlap.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     out = docs
     red = t
     for name in PII_ORDER:
@@ -207,11 +205,11 @@ def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("redacted", red)
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Document fingerprints: content md5 (exact identity) + a rolling-hash
     analog (min/max over word-window md5s — order-sensitive, local-change
     tolerant)."""
-    t = F.col(text_col)
+    t = F.col("text")
     norm = F.lower(F.trim(F.regexp_replace(t, r"\s+", " ")))
     w = F.split(norm, " ")
     win = F.when(
@@ -231,11 +229,7 @@ def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def winnow_fingerprints(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 4,
-    window: int = 5,
+    docs: DataFrame, k: int = 4, window: int = 5
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03
     — the MOSS algorithm): md5 over every k-word gram, then the minimum of
@@ -279,7 +273,7 @@ def winnow_fingerprints(
         for pdf in batches:
             ids: list = []
             fps: list = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
                 norm = ws.sub(" ", str(text)).strip(" ").lower()
                 w = norm.split(" ")
                 if len(w) >= k:
@@ -299,18 +293,14 @@ def winnow_fingerprints(
     # explicit projection: mapInPandas is opaque to Catalyst column pruning
     from otel_tail_sampler_spark.functions.spread import spread_small_input
 
-    id_type = docs.schema[id_col].dataType.simpleString()
+    id_type = docs.schema["doc_id"].dataType.simpleString()
     return spread_small_input(
-        docs.select(F.col(id_col), F.col(text_col))
+        docs.select(F.col("doc_id"), F.col("text"))
     ).mapInPandas(fn, f"doc_id {id_type}, fp string")
 
 
 def hash_tokenize(
-    docs: DataFrame,
-    vocab_size: int = 65536,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    keep_cols: tuple[str, ...] = (),
+    docs: DataFrame, vocab_size: int = 65536, keep_cols: tuple[str, ...] = ()
 ) -> DataFrame:
     """Deterministic hash tokenizer: words -> int32 ids via md5(word) mod
     ``vocab_size`` (the "hashing trick"). Bridges the documents table to the
@@ -336,7 +326,7 @@ def hash_tokenize(
     text — a bare ``length(norm) == 0`` predicate would evaluate NULL and
     fall through to the otherwise branch, emitting NULL tokens.
     """
-    norm = F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
+    norm = F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))
     w = F.split(norm, " ")
     empty = F.coalesce(F.length(norm) == 0, F.lit(True))
     toks = F.when(
@@ -356,7 +346,7 @@ def hash_tokenize(
     # re-inlines shared subexpressions across chained projections)
     n_tok = F.when(empty, F.lit(0)).otherwise(F.size(w)).cast("int")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         toks.alias("tokens"),
         n_tok.alias("n_tok"),
@@ -364,17 +354,13 @@ def hash_tokenize(
 
 
 def _capped_fp_base_and_pairs(
-    fps: DataFrame,
-    id_col: str,
-    fp_col: str,
-    max_fp_df: int | None,
-    min_shared: int,
+    fps: DataFrame, max_fp_df: int | None, min_shared: int
 ) -> tuple[DataFrame, DataFrame]:
     """Shared core of winnow_candidate_pairs / winnow_similarity_report:
     the hot-fp-capped (_id, _fp) base and the (id_a, id_b, n_shared) pair
     list over it. One definition so the pair list and the report can never
     diverge on cap semantics."""
-    base = fps.select(F.col(id_col).alias("_id"), F.col(fp_col).alias("_fp"))
+    base = fps.select(F.col("doc_id").alias("_id"), F.col("fp").alias("_fp"))
     if max_fp_df is not None:
         keep = (
             base.groupBy("_fp")
@@ -396,11 +382,7 @@ def _capped_fp_base_and_pairs(
 
 
 def winnow_candidate_pairs(
-    fps: DataFrame,
-    id_col: str = "doc_id",
-    fp_col: str = "fp",
-    max_fp_df: int | None = 16,
-    min_shared: int = 1,
+    fps: DataFrame, max_fp_df: int | None = 16, min_shared: int = 1
 ) -> DataFrame:
     """Candidate duplicate pairs from SHARED winnowing fingerprints — the
     MOSS composition: winnow_fingerprints(_poly) -> shared-fp pairs -> the
@@ -418,18 +400,12 @@ def winnow_candidate_pairs(
     D² pair rows). With the cap, per-fp fanout is bounded by
     max_fp_df², and only (fp, id) rows ever shuffle.
     """
-    _, pairs = _capped_fp_base_and_pairs(
-        fps, id_col, fp_col, max_fp_df, min_shared
-    )
+    _, pairs = _capped_fp_base_and_pairs(fps, max_fp_df, min_shared)
     return pairs
 
 
 def winnow_similarity_report(
-    fps: DataFrame,
-    id_col: str = "doc_id",
-    fp_col: str = "fp",
-    max_fp_df: int | None = 16,
-    min_shared: int = 1,
+    fps: DataFrame, max_fp_df: int | None = 16, min_shared: int = 1
 ) -> DataFrame:
     """The full MOSS report over winnowing fingerprints: candidate pairs
     plus BOTH containment fractions — n_shared/|fps(a)| and
@@ -445,9 +421,7 @@ def winnow_similarity_report(
 
     -> (id_a, id_b, n_shared, frac_a, frac_b), rounded to 6 places.
     """
-    base, pairs = _capped_fp_base_and_pairs(
-        fps, id_col, fp_col, max_fp_df, min_shared
-    )
+    base, pairs = _capped_fp_base_and_pairs(fps, max_fp_df, min_shared)
     sizes = base.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz"))
     sa = sizes.select(F.col("_id").alias("id_a"), F.col("_sz").alias("_sa"))
     sb = sizes.select(F.col("_id").alias("id_b"), F.col("_sz").alias("_sb"))
@@ -464,6 +438,11 @@ def winnow_similarity_report(
     )
 
 
+# winnow_fingerprints_poly's Karp-Rabin hash: base and modulus
+POLY_BASE = 257
+POLY_MOD = 1_048_573
+
+
 def _poly_powers(k: int, base: int, mod: int) -> list[int]:
     """base^(k-1-j) % mod for j in 0..k-1 — shared by the numpy kernel and
     the DuckDB oracle so both hash with literally the same coefficients."""
@@ -471,13 +450,7 @@ def _poly_powers(k: int, base: int, mod: int) -> list[int]:
 
 
 def winnow_fingerprints_poly(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-    window: int = 8,
-    base: int = 257,
-    mod: int = 1_048_573,
+    docs: DataFrame, k: int = 16, window: int = 8
 ) -> DataFrame:
     """Winnowing over CHARACTER k-grams with a Karp-Rabin polynomial hash —
     the vectorized scale path next to the md5 word-gram variant above.
@@ -485,11 +458,11 @@ def winnow_fingerprints_poly(
     winnow_fingerprints pays one hashlib call per gram (Python-rate: fine
     for the oracle shape, the bottleneck at 10^12 docs). Here every per-doc
     step is a numpy primitive: code points -> sliding_window_view(k) ->
-    row-dot with the power vector -> %% mod -> sliding window-min ->
+    row-dot with the power vector -> %% POLY_MOD -> sliding window-min ->
     unique. Same shuffle-free mapInPandas plan.
 
     The constants are chosen so every intermediate is integer-exact BOTH in
-    int64 and in IEEE754 doubles (code point < 128, power < mod < 2^20 =>
+    int64 and in IEEE754 doubles (code point < 128, power < POLY_MOD < 2^20 =>
     product < 2^27, 16-term sum < 2^31), which is what lets the DuckDB
     oracle — list_dot_product over the same power literals, computed in
     doubles — match bit-for-bit. ASCII contract as the rest of the corpus
@@ -506,22 +479,22 @@ def winnow_fingerprints_poly(
     # Unicode-aware and would normalize NBSP/\u2028 where the oracle
     # does not (same class as the bpe._py_words review finding)
     ws = re.compile(r"[ \t\n\f\r]+")
-    pw = np.array(_poly_powers(k, base, mod), np.int64)
+    pw = np.array(_poly_powers(k, POLY_BASE, POLY_MOD), np.int64)
 
     def fn(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         for pdf in batches:
             ids: list = []
             fps: list = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
                 norm = ws.sub(" ", str(text)).strip(" ").lower()
                 cp = np.frombuffer(
                     norm.encode("ascii", "replace"), np.uint8
                 ).astype(np.int64)
                 if len(cp) >= k:
                     wv = np.lib.stride_tricks.sliding_window_view(cp, k)
-                    hs = (wv * pw).sum(axis=1) % mod
+                    hs = (wv * pw).sum(axis=1) % POLY_MOD
                 else:  # short doc: one whole-text hash (aligned power tail)
-                    hs = np.array([(cp * pw[k - len(cp) :]).sum() % mod])
+                    hs = np.array([(cp * pw[k - len(cp) :]).sum() % POLY_MOD])
                 if len(hs) <= window:
                     uniq = [int(hs.min())]
                 else:
@@ -533,18 +506,14 @@ def winnow_fingerprints_poly(
 
     from otel_tail_sampler_spark.functions.spread import spread_small_input
 
-    id_type = docs.schema[id_col].dataType.simpleString()
+    id_type = docs.schema["doc_id"].dataType.simpleString()
     return spread_small_input(
-        docs.select(F.col(id_col), F.col(text_col))
+        docs.select(F.col("doc_id"), F.col("text"))
     ).mapInPandas(fn, f"doc_id {id_type}, fp long")
 
 
-def tokenizer_fertility(
-    docs: DataFrame,
-    by: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """Tokenizer fertility report per ``by`` group: how many characters
+def tokenizer_fertility(docs: DataFrame) -> DataFrame:
+    """Tokenizer fertility report per ``source`` group: how many characters
     each tokenization scheme spends per token ->
     (group, n_docs bigint, sum_chars bigint, sum_ws bigint,
     sum_bpe bigint, chars_per_ws_fp bigint, chars_per_bpe_fp bigint).
@@ -563,10 +532,10 @@ def tokenizer_fertility(
     s = 1 << 20
     agg = (
         docs.select(
-            F.col(by).alias("grp"),
-            F.length(F.col(text_col)).cast("long").alias("_nc"),
-            token_count_ws(F.col(text_col)).cast("long").alias("_ws"),
-            token_count_bpe_ish(F.col(text_col)).cast("long").alias("_bp"),
+            F.col("source").alias("grp"),
+            F.length(F.col("text")).cast("long").alias("_nc"),
+            token_count_ws(F.col("text")).cast("long").alias("_ws"),
+            token_count_bpe_ish(F.col("text")).cast("long").alias("_bp"),
         )
         .groupBy("grp")
         .agg(
@@ -577,7 +546,7 @@ def tokenizer_fertility(
         )
     )
     return agg.select(
-        F.col("grp").alias(by),
+        F.col("grp").alias("source"),
         "n_docs",
         "sum_chars",
         "sum_ws",

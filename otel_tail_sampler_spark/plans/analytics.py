@@ -68,9 +68,11 @@ def service_stats_approx(spans: DataFrame, rsd: float = 0.05) -> DataFrame:
     )
 
 
-def service_latency_percentiles(
-    spans: DataFrame, ps: tuple[float, ...] = (0.5, 0.95, 0.99)
-) -> DataFrame:
+# the SLO percentiles both latency reports compute, as p50/p95/p99 columns
+LATENCY_PERCENTILES = (0.5, 0.95, 0.99)
+
+
+def service_latency_percentiles(spans: DataFrame) -> DataFrame:
     """Per-service latency percentiles of span duration — the SLO numbers
     the reference's README/deployment docs state as targets (p99 < 10ms,
     README.md:446) computed over the lake instead of asserted. EXACT
@@ -85,7 +87,7 @@ def service_latency_percentiles(
         F.round(F.expr(f"percentile(duration_ms, {p})"), 4).alias(
             f"p{round(p * 100)}"
         )
-        for p in ps
+        for p in LATENCY_PERCENTILES
     ]
     return (
         spans.groupBy("service_name")
@@ -95,9 +97,7 @@ def service_latency_percentiles(
 
 
 def service_latency_percentiles_approx(
-    spans: DataFrame,
-    ps: tuple[float, ...] = (0.5, 0.95, 0.99),
-    accuracy: int = 10_000,
+    spans: DataFrame, accuracy: int = 10_000
 ) -> DataFrame:
     """The 100 TB variant: percentile_approx (Greenwald-Khanna sketch,
     bounded memory, partial-aggregable map-side) — rank error <=
@@ -105,7 +105,7 @@ def service_latency_percentiles_approx(
     the exact twin above is the correctness reference."""
     aggs = [
         F.percentile_approx("duration_ms", p, accuracy).alias(f"p{round(p * 100)}")
-        for p in ps
+        for p in LATENCY_PERCENTILES
     ]
     return (
         spans.groupBy("service_name")

@@ -101,28 +101,18 @@ def run_resumable(
     # Dynamic partition overwrite is the correctness contract here: with
     # Spark's default static mode, mode('overwrite') would delete previously
     # committed bucket partitions on resume while the manifest still marks
-    # them done. Pin it for this write regardless of the caller's session.
-    ow_key = "spark.sql.sources.partitionOverwriteMode"
-    try:
-        prev_ow = spark.conf.get(ow_key)
-    except Exception:
-        prev_ow = None
-    spark.conf.set(ow_key, "dynamic")
+    # them done. The write option pins it for this write only; the
+    # caller's session conf is never touched.
     try:
         (
             res.routed.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket", "decision")
             .parquet(routed_dir)
         )
         n_traces = res.decisions.count()  # persisted slim: no recompute
     finally:
         res.decisions.unpersist()
-        if prev_ow is not None:
-            spark.conf.set(ow_key, prev_ow)
-        else:
-            # conf was unset before: restore that, don't leak 'dynamic'
-            # into unrelated later writes in the caller's session
-            spark.conf.unset(ow_key)
 
     # lineage counts from the WRITTEN data (partition-pruned read-back of
     # this run's buckets) — no second pass over the input

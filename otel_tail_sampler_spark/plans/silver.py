@@ -56,16 +56,14 @@ def materialize_parsed(
     return spark.table(table)
 
 
-def assemble_from_silver(
-    spark: SparkSession, table: str, salt_buckets: int | str | None = None
-) -> DataFrame:
+def assemble_from_silver(spark: SparkSession, table: str) -> DataFrame:
     """Trace assembly over the bucketed silver table. With the group keys
     equal to the bucket spec, Catalyst plans scan -> HashAggregate with no
-    Exchange (asserted in tests/test_silver.py). Salting is pointless here
-    — a bucketed scan already fixed the distribution — so it defaults off;
-    pass it only if the silver table was written unbucketed."""
+    Exchange (asserted in tests/test_silver.py). It always runs the plain
+    aggregation: salting is pointless here, because a bucketed scan already
+    fixed the distribution."""
     good = spark.table(table).filter("parse_ok")
-    return assemble_traces(good, salt_buckets=salt_buckets)
+    return assemble_traces(good)
 
 
 def redecide_from_silver(

@@ -16,10 +16,9 @@ columns ride the emitted row only. Cross-batch duplicate counts are NOT
 maintained: append mode only emits on first arrival, so an accumulated
 counter would be write-only dead state updated on every duplicate
 forever — the emitted ``dup_count`` covers same-batch duplicates only.
-``ttl_minutes`` arms a processing-time timeout that expires idle
-digests — the SETEX analog — bounding state exactly as the reference
-bounds Redis memory (an expired digest re-admits the next duplicate,
-the documented TTL trade-off).
+Digests never expire (there is no SETEX analog): state grows with the
+stream's distinct digests, minus any the ``ref_digests`` anti join
+drops before the state machine.
 
 Within one micro-batch, ties break to the MIN id (same representative
 the batch operator elects); across batches, arrival order decides — that
@@ -35,9 +34,7 @@ from pyspark.sql import functions as F
 
 def dedup_stream(
     docs: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
-    ttl_minutes: int | None = None,
     digest_col: str | None = None,
     payload_cols: tuple[str, ...] = (),
     ref_digests: DataFrame | None = None,
@@ -53,7 +50,7 @@ def dedup_stream(
     before "2" and silently diverge from exact_dedup's representative.
 
     ``digest_col`` names a PRECOMPUTED digest column to key on instead of
-    md5(text_col) — for inputs whose raw text was already projected away
+    md5(text) — for inputs whose raw text was already projected away
     (the streaming prep leg keys on the digest it took before
     tokenizing). ``payload_cols`` ride the ELECTED row through to the
     output (state still holds only first_id — payload never enters the
@@ -62,7 +59,7 @@ def dedup_stream(
     stream-static anti join BEFORE the state machine — the streaming
     face of ``reference_dup_pairs``: known texts neither emit nor cost
     a state row, so state is bounded by the stream's novelty, not the
-    corpus. There is exactly ONE copy of this first-wins/TTL state
+    corpus. There is exactly ONE copy of this first-wins state
     machine; wrappers parameterize it rather than re-implement it.
 
     STATE LAYOUT (round 7): digests hash into ``2 x shuffle-partitions``
@@ -72,15 +69,15 @@ def dedup_stream(
     formulation paid the applyInPandasWithState per-group protocol cost
     (~10 ms: state decode, pandas slice, fn call, state encode) once per
     DISTINCT DIGEST per micro-batch, which at sf0.1 was most of the
-    bounded run's wall time. Per-digest first-wins/TTL semantics are
-    unchanged: each digest's expiry deadline is stored in the bucket row
-    and the bucket's processing-time timer fires at the MIN deadline —
-    the same digests forgotten, the same rows emitted.
+    bounded run's wall time. Per-digest first-wins semantics are
+    unchanged: the same rows are emitted.
 
     CHECKPOINT COMPATIBILITY: the bucketed state schema replaces the
     round-4 ``(first_id,)`` per-digest rows; resuming a checkpoint
     written by any earlier version requires a FRESH checkpointLocation
-    (and accepts that already-seen digests re-emit once)."""
+    (and accepts that already-seen digests re-emit once). The
+    ``deadlines`` array is always zeros; it keeps the state schema that
+    checkpoints written by the TTL-capable version carry."""
     import pandas as pd
 
     id_type = docs.schema[id_col].dataType.simpleString()
@@ -99,9 +96,7 @@ def dedup_stream(
     spark = docs.sparkSession
     n_buckets = 2 * int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    digest = (
-        F.col(digest_col) if digest_col else F.md5(F.col(text_col))
-    )
+    digest = F.col(digest_col) if digest_col else F.md5(F.col("text"))
     keyed = docs.select(
         digest.alias("_digest"),
         F.col(id_col).alias("_id"),
@@ -126,86 +121,38 @@ def dedup_stream(
         F.pmod(F.xxhash64(F.col("_digest")), F.lit(n_buckets)).cast("int"),
     )
 
-    ttl_ms = ttl_minutes * 60 * 1000 if ttl_minutes is not None else None
-
     def fn(key, pdfs, state):
         known: dict = {}
         if state.exists:
-            dgs, fids, dls = state.get
-            for i in range(len(dgs)):
-                known[dgs[i]] = [fids[i], dls[i]]
-        dirty = False
-
-        if state.hasTimedOut:
-            # TTL: forget expired digests (SETEX expiry analog); Spark's
-            # own processing-time timer condition is timestamp < clock
-            now = state.getCurrentProcessingTimeMs()
-            known = {d: v for d, v in known.items() if not v[1] < now}
-            dirty = True
-            new: dict = {}
-        else:
-            now = (
-                state.getCurrentProcessingTimeMs()
-                if ttl_ms is not None
-                else 0
-            )
-            new = {}  # digest -> [min_id_row_vals, dup_count]
-            for pdf in pdfs:
-                cols = [pdf["_id"].to_numpy()] + [
-                    pdf[c].to_numpy(object) for c in payload_cols
-                ]
-                for vals in zip(pdf["_digest"], *cols):
-                    d = vals[0]
-                    if d in known:
-                        if ttl_ms is not None:  # duplicate re-arms its TTL
-                            known[d][1] = now + ttl_ms
-                            dirty = True
-                        continue
-                    cur = new.get(d)
-                    if cur is None:
-                        new[d] = [vals[1:], 0]
-                    else:
-                        cur[1] += 1
-                        # same-batch ties -> min id in the column's
-                        # NATIVE ordering (numeric ids compare
-                        # numerically, exactly like batch F.min)
-                        if vals[1] < cur[0][0]:
-                            cur[0] = vals[1:]
-            if ttl_ms is not None:
-                # sweep digests whose TTL the clock passed and that saw
-                # no data this batch — their per-digest timers would have
-                # fired in exactly this batch (touched digests were
-                # re-armed above and survive, as Spark's data-before-
-                # timeout processing order dictates)
-                stale = [d for d, v in known.items() if v[1] < now]
-                for d in stale:
-                    del known[d]
-                    dirty = True
-            for d, (vals, _dups) in new.items():
-                fid = vals[0]
-                if hasattr(fid, "item"):  # numpy scalar -> python
-                    fid = fid.item()
-                known[d] = [fid, (now + ttl_ms) if ttl_ms is not None else 0]
-                dirty = True
-
-        if not known:
-            if state.exists:
-                state.remove()
-        else:
-            if dirty:
-                ks = list(known)
-                state.update((
-                    ks,
-                    [known[d][0] for d in ks],
-                    [known[d][1] for d in ks],
-                ))
-            if ttl_ms is not None:
-                nxt = min(v[1] for v in known.values())
-                state.setTimeoutDuration(
-                    max(nxt - state.getCurrentProcessingTimeMs(), 1)
-                )
-
+            dgs, fids, _deadlines = state.get
+            known = dict(zip(dgs, fids))
+        new: dict = {}  # digest -> [min_id_row_vals, dup_count]
+        for pdf in pdfs:
+            cols = [pdf["_id"].to_numpy()] + [
+                pdf[c].to_numpy(object) for c in payload_cols
+            ]
+            for vals in zip(pdf["_digest"], *cols):
+                d = vals[0]
+                if d in known:
+                    continue
+                cur = new.get(d)
+                if cur is None:
+                    new[d] = [vals[1:], 0]
+                else:
+                    cur[1] += 1
+                    # same-batch ties -> min id in the column's NATIVE
+                    # ordering (numeric ids compare numerically, exactly
+                    # like batch F.min)
+                    if vals[1] < cur[0][0]:
+                        cur[0] = vals[1:]
+        for d, (vals, _dups) in new.items():
+            fid = vals[0]
+            if hasattr(fid, "item"):  # numpy scalar -> python
+                fid = fid.item()
+            known[d] = fid
         if new:
+            ks = list(known)
+            state.update((ks, [known[d] for d in ks], [0] * len(ks)))
             ds = list(new)
             out = {
                 "digest": [str(d) for d in ds],
@@ -225,17 +172,11 @@ def dedup_stream(
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="append",
-        timeoutConf=(
-            "ProcessingTimeTimeout" if ttl_minutes is not None else "NoTimeout"
-        ),
+        timeoutConf="NoTimeout",
     )
 
 
-def media_dedup_stream(
-    media: DataFrame,
-    ttl_minutes: int | None = None,
-    id_col: str = "media_id",
-) -> DataFrame:
+def media_dedup_stream(media: DataFrame) -> DataFrame:
     """First-wins streaming PERCEPTUAL dedup of image payloads: each
     micro-batch's images decode through the stateless ``phash_images``
     kernel (mapInPandas is streaming-legal), and the one first-wins/TTL
@@ -253,7 +194,7 @@ def media_dedup_stream(
     """
     from otel_tail_sampler_spark.operators.multimodal import phash_images
 
-    hashed = phash_images(media, id_col=id_col)
+    hashed = phash_images(media)
     keyed = hashed.select(
         F.col("phash_d").cast("string").alias("_pd"),
         F.col("media_id"),
@@ -264,6 +205,5 @@ def media_dedup_stream(
         keyed,
         id_col="media_id",
         digest_col="_pd",
-        ttl_minutes=ttl_minutes,
         payload_cols=("phash_d", "phash_a"),
     ).withColumnRenamed("doc_id", "media_id")

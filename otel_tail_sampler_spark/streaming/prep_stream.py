@@ -38,17 +38,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _quality_gate(
-    docs: DataFrame,
-    min_words: int,
-    max_words: int,
-    max_dup_word_frac: float,
-    text_col: str = "text",
-) -> DataFrame:
+def _quality_gate(docs: DataFrame, min_words: int) -> DataFrame:
     """Stateless per-row quality gate (streaming-legal: no aggregation).
     Same signals as the batch prepare_corpus chain — word-count bounds and
     the duplicated-word fraction — as pure expressions."""
-    norm = F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
+    norm = F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))
     w = F.when(F.length(norm) == 0, F.array().cast("array<string>")).otherwise(
         F.split(norm, " ")
     )
@@ -66,17 +60,14 @@ def _quality_gate(
     )
     return docs.filter(
         (n_words >= int(min_words))
-        & (n_words <= int(max_words))
-        & (dup_frac <= float(max_dup_word_frac))
+        & (n_words <= 5000)
+        & (dup_frac <= 0.6)
     )
 
 
 def tokenize_dedup_stream(
     docs: DataFrame,
     vocab_size: int = 65536,
-    ttl_minutes: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     select_fn=None,
     extra_payload_cols: tuple = (),
     ref_digests: DataFrame | None = None,
@@ -101,20 +92,16 @@ def tokenize_dedup_stream(
     from otel_tail_sampler_spark.operators.text import hash_tokenize
     from otel_tail_sampler_spark.streaming.dedup_stream import dedup_stream
 
-    with_digest = docs.withColumn("_digest", F.md5(F.col(text_col)))
+    with_digest = docs.withColumn("_digest", F.md5(F.col("text")))
     toks = hash_tokenize(
         with_digest,
         vocab_size=vocab_size,
-        text_col=text_col,
-        id_col=id_col,
         keep_cols=("source", "_digest"),
     )
     if select_fn is not None:
         toks = select_fn(toks)
     return dedup_stream(
         toks,
-        id_col=id_col,
-        ttl_minutes=ttl_minutes,
         digest_col="_digest",
         payload_cols=("source", "tokens", "n_tok", *extra_payload_cols),
         ref_digests=ref_digests,
@@ -127,9 +114,6 @@ def run_prep_stream(
     out_dir: str,
     vocab_size: int = 65536,
     min_words: int = 5,
-    max_words: int = 5000,
-    max_dup_word_frac: float = 0.6,
-    ttl_minutes: int | None = None,
     available_now: bool = True,
     schema=None,
     dsir_model=None,
@@ -169,10 +153,7 @@ def run_prep_stream(
     if schema is None:
         schema = spark.read.parquet(documents_dir).schema
     docs = spark.readStream.schema(schema).parquet(documents_dir)
-    gated = _quality_gate(
-        docs, min_words=min_words, max_words=max_words,
-        max_dup_word_frac=max_dup_word_frac,
-    )
+    gated = _quality_gate(docs, min_words=min_words)
     select_fn = None
     if dsir_model is not None:
         from otel_tail_sampler_spark.operators.selection import dsir_sample
@@ -189,7 +170,6 @@ def run_prep_stream(
     deduped = tokenize_dedup_stream(
         gated,
         vocab_size=vocab_size,
-        ttl_minutes=ttl_minutes,
         select_fn=select_fn,
         extra_payload_cols=("ratio_fp",) if dsir_model is not None else (),
         ref_digests=ref_digests,

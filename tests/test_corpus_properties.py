@@ -273,7 +273,7 @@ DSIR_CORPUS = st.lists(
 
 @given(DSIR_CORPUS, st.integers(min_value=2, max_value=64))
 @settings(max_examples=8, deadline=None)
-def test_dsir_kernels_agree_on_arbitrary_corpora(spark, rows, n_buckets):
+def test_dsir_matches_reference_on_arbitrary_corpora(spark, rows, n_buckets):
     """Property: the DSIR model builder and scoring kernel (numpy flat
     stream) match a scalar reference on arbitrary corpora including
     full int32-range tokens."""

@@ -162,7 +162,7 @@ def test_bm25_corpus_side_never_sort_merge_joins(spark, corpus, queries):
     assert "MapInPandas" in plan and "HashAggregate" not in plan
 
 
-def test_bm25_kernels_equal(spark, corpus, queries):
+def test_bm25_topk_matches_scalar_reference(spark, corpus, queries):
     # the matched-tf bincount kernel vs the scalar reference at k=5 —
     # full (score, rank) equality over every matching doc of the shared
     # corpus (no-match doc, duplicated tokens)
@@ -173,14 +173,14 @@ def test_bm25_kernels_equal(spark, corpus, queries):
     assert got == _ref(DOCS, QUERIES, k=5) and got
 
 
-def test_bm25_arrow_kernel_no_query_terms(spark, corpus):
+def test_bm25_topk_no_query_terms(spark, corpus):
     qs = spark.createDataFrame(
         [("qe", [])], "query_id string, tokens array<int>"
     )
     assert bm25_topk(corpus, qs, k=3).count() == 0
 
 
-def test_bm25_k_zero_is_empty_both_kernels(spark, corpus, queries):
+def test_bm25_k_zero_is_empty(spark, corpus, queries):
     assert bm25_topk(corpus, queries, k=0).count() == 0
 
 

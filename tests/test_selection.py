@@ -109,7 +109,7 @@ def test_model_counts_planted(spark):
     assert model[b21] == (0, 1)  # (2,1) raw-only
 
 
-def test_kernels_equal_on_edge_shapes(spark):
+def test_dsir_score_matches_reference_on_edge_shapes(spark):
     # the scoring kernel vs the scalar reference over the edge corpus
     df = _df(spark, VECS)
     target = df.filter(df.doc_id.isin(*TARGET_IDS))
@@ -231,7 +231,7 @@ def test_sample_saturation_survives_decimal_range(spark):
 
 
 @pytest.mark.parametrize("build", ["two", "partitioned"])
-def test_model_builder_kernels_equal_on_edge_shapes(spark, build):
+def test_model_builder_matches_reference_on_edge_shapes(spark, build):
     # the bincount builders vs the scalar bucket counts over the edge
     # corpus (empty docs, single-token docs, negative ids, INT32_MIN
     # boundary packs)

@@ -1106,7 +1106,7 @@ def test_score_bigram_novelty_arrow_kernel_is_shuffle_free(spark):
     assert "MapInPandas" in plan
 
 
-def test_score_bigram_novelty_jvm_kernel_plan_and_edges(spark):
+def test_score_bigram_novelty_edges(spark):
     """The scoring kernel matches the scalar reference on edge docs
     (empty, single-token, INT32_MIN-adjacent tokens) and on an empty
     model (every bigram unseen)."""
