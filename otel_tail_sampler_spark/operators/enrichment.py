@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.functions.tables import local_table
+
 
 def service_dimension(spark: SparkSession) -> DataFrame:
     """Deterministic tiny service dim (tier + owner + cost-center)."""
@@ -31,8 +33,10 @@ def service_dimension(spark: SparkSession) -> DataFrame:
         )
         for i, s in enumerate(SPAN_SERVICES)
     ]
-    return spark.createDataFrame(
-        rows, "service_name string, service_tier string, owner string, cost_center int"
+    return local_table(
+        spark,
+        rows,
+        "service_name string, service_tier string, owner string, cost_center int",
     )
 
 

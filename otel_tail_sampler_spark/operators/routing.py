@@ -9,9 +9,11 @@ shuffle join + a single-pass partitioned write:
 
 The join is the 'metadata-first' pattern (docs/ARCHITECTURE_V2_ICEBERG.md:27-33):
 the decision table carries ~50 bytes/trace; the wide token payload stays in the
-span table and is only moved once. At scale the join shuffles both sides by
-the trace key — the SAME key the assembly aggregation shuffled on, so with AQE the
-exchange is reused; heavy-hitter traces are split by AQE skew-join.
+span table and is only moved once. At scale the join shuffles the span side
+by the trace key in an exchange of its own: the assembly aggregation
+shuffled on the same key, but Catalyst prunes the two scans to different
+columns (tokens alone vs. the full row), so the exchanges differ and none
+is reused. Heavy-hitter traces are split by AQE skew-join.
 
 Metrics (A9, src/observability/metrics.rs:20-58): per-(policy, decision) trace
 counts as a DataFrame; per-sink routed-row counts are observed on the sink
@@ -50,9 +52,11 @@ def route_spans(spans: DataFrame, decided: DataFrame) -> DataFrame:
     # Escape hatch at extreme scale: there is deliberately NO F.broadcast()
     # hint here. Spark sizes the build side itself, so when the kept set
     # exceeds spark.sql.autoBroadcastJoinThreshold (e.g. 10^12 traces at a
-    # high keep rate) the plan degrades gracefully to a shuffle join on the
-    # SAME trace-key the assembly aggregation shuffled on (exchange reuse,
-    # AQE skew splitting) instead of OOMing the driver on a forced broadcast.
+    # high keep rate) the plan degrades gracefully to a sort-merge join on
+    # the trace key (AQE skew splitting) instead of OOMing the driver on a
+    # forced broadcast. That join shuffles the span rows, payload included,
+    # in their own exchange: the assembly exchange is keyed the same way but
+    # over a differently pruned scan, so it is not reused.
     # Operators can pin either behavior via that threshold; tests/test_plans.py
     # asserts the broadcast shape at sampled-keep sizes.
     #

@@ -31,6 +31,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.functions.tables import local_table
+
 RULE_TABLE_SCHEMA = (
     "rule_id string, version long, deleted boolean, priority int, "
     "enabled boolean, expires_at_ms long, action string, payload string"
@@ -69,7 +71,7 @@ def save_rule(spark: SparkSession, path: str, rule: dict) -> int:
     """Upsert (create or update): append the rule at a new version.
     Returns the version written. (force_sampling.rs:486-517 save_rule)"""
     v = _next_version(spark, path)
-    spark.createDataFrame([_to_row(rule, v)], RULE_TABLE_SCHEMA).coalesce(
+    local_table(spark, [_to_row(rule, v)], RULE_TABLE_SCHEMA).coalesce(
         1
     ).write.mode("append").parquet(path)
     return v
@@ -79,7 +81,7 @@ def delete_rule(spark: SparkSession, path: str, rule_id: str) -> int:
     """Tombstone a rule (force_sampling.rs:560-577 delete_rule)."""
     v = _next_version(spark, path)
     row = (rule_id, v, True, 0, False, None, None, "{}")
-    spark.createDataFrame([row], RULE_TABLE_SCHEMA).coalesce(1).write.mode(
+    local_table(spark, [row], RULE_TABLE_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(path)
     return v

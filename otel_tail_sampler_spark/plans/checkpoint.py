@@ -35,6 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.functions.tables import local_table
 from otel_tail_sampler_spark.operators.parser import trace_key_exprs
 from otel_tail_sampler_spark.operators.policies import SamplerConfig
 from otel_tail_sampler_spark.plans.pipeline import read_tokenized, run_pipeline
@@ -138,7 +139,7 @@ def run_resumable(
     manifest_rows = [
         (int(b), "done", int(per_bucket.get(b, 0)), now_ms) for b in remaining
     ]
-    spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
+    local_table(spark, manifest_rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(ckpt_dir)
 

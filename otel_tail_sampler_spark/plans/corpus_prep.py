@@ -29,6 +29,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.functions.tables import local_table
+
 
 def _hadoop_path(spark: SparkSession, path_str: str):
     jvm = spark._jvm
@@ -205,7 +207,8 @@ def run_corpus_prep(
         "n_shards": int(n_shards),
         "max_len": int(max_len),
     }
-    spark.createDataFrame(
+    local_table(
+        spark,
         [tuple(metrics.values())],
         ", ".join(f"{k} long" for k in metrics),
     ).coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/metrics_run")

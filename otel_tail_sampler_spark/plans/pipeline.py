@@ -23,6 +23,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.functions.tables import local_table
 from otel_tail_sampler_spark.operators.assembly import assemble_traces
 from otel_tail_sampler_spark.operators.parser import (
     TRACE_KEY,
@@ -136,7 +137,13 @@ def run_and_write(
     and wall time — the observability surface (metrics.rs:20-58 counters).
 
     Per-sink row counts come from an Observation attached to the sink write
-    itself (one pass over the data; no second scan of the routed plan)."""
+    itself (one pass over the data; no second scan of the routed plan). The
+    per-(policy, decision) aggregate is collected once from the cached
+    decisions (a handful of rows); ``traces`` is the sum of its counts.
+    Every metric table is written from driver-held rows as a JVM
+    ``LocalTableScan`` (functions.tables.local_table), so the job starts no
+    Python task. The three returned frames are those tables: reading them
+    never re-scans the input."""
     import time
 
     from pyspark.sql import Observation
@@ -156,9 +163,12 @@ def run_and_write(
         write_routed(routed_obs, os.path.join(out_dir, "routed"), day_partition=day_partition)
         counts = obs.get  # available after the write action
 
-        dm = decision_metrics(res.decisions)
+        agg = decision_metrics(res.decisions)
+        dm_rows = agg.collect()
+        dm = local_table(spark, dm_rows, agg.schema)
         dm.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "metrics_decisions"))
-        rm = spark.createDataFrame(
+        rm = local_table(
+            spark,
             [(s, int(counts[f"{s}_rows"] or 0)) for s in SINK_NAMES
              if (counts[f"{s}_rows"] or 0) > 0],
             "sink string, row_count long",
@@ -174,16 +184,15 @@ def run_and_write(
         )
         run_rows = [
             ("input_rows", int(counts["routed_rows"] or 0)),
-            ("traces", int(res.decisions.count())),  # persisted slim: no recompute
+            ("traces", sum(r["trace_count"] for r in dm_rows)),
             *[(f"routed_{s}", int(counts[f"{s}_rows"] or 0)) for s in SINK_NAMES],
             ("wall_ms", int((time.time() - t0) * 1000)),
             ("finished_at_ms", int(time.time() * 1000)),
         ]
     finally:
-        # the slim decisions are only reused inside this call; returned
-        # frames stay valid (they recompute lazily if read again)
+        # the slim decisions are only reused inside this call
         res.decisions.unpersist()
-    run_metrics = spark.createDataFrame(run_rows, "metric string, value long")
+    run_metrics = local_table(spark, run_rows, "metric string, value long")
     run_metrics.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "metrics_run")
     )

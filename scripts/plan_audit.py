@@ -57,6 +57,24 @@ def main() -> None:
         res.routed,
     )
 
+    import tempfile
+
+    from otel_tail_sampler_spark.plans.pipeline import run_and_write
+
+    with tempfile.TemporaryDirectory() as out:
+        tail = run_and_write(spark, paths["tokenized"], out, E.ENTRY_CFG)
+        section(
+            "Metric tail: run_and_write's returned decision metrics",
+            "What to check: ONE LocalTableScan and nothing else — the\n"
+            "per-(policy, decision) aggregate is collected once from the\n"
+            "cached decisions and every metric table (metrics_decisions,\n"
+            "metrics_rows, metrics_run) is written from driver-held rows\n"
+            "that the JVM owns. No `Scan ExistingRDD` (a PythonRDD whose\n"
+            "every action starts Python worker tasks) and no file scan:\n"
+            "reading a returned table never re-runs the pipeline.",
+            tail["decision_metrics"],
+        )
+
     from otel_tail_sampler_spark.operators.policies import apply_rate_limit
 
     d = res.decisions.withColumn

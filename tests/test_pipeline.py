@@ -315,3 +315,54 @@ def test_run_and_write_releases_cached_decisions(spark, small_dataset, tmp_path)
     spark.catalog.clearCache()
     run_and_write(spark, small_dataset["tokenized"], str(tmp_path / "out"), CFG)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_run_and_write_returns_driver_built_tables(spark, small_dataset, tmp_path):
+    """The three returned metric frames are the written tables themselves:
+    reading them after run_and_write (which released its cached decisions)
+    must not re-scan, re-parse and re-assemble the input."""
+    from otel_tail_sampler_spark.plans.pipeline import run_and_write
+    from tests.test_checkpoint import _executed_plans
+
+    m = run_and_write(spark, small_dataset["tokenized"], str(tmp_path / "out"), CFG)
+    got = {}
+    plans = _executed_plans(
+        spark, lambda: got.update({k: df.collect() for k, df in m.items()})
+    )
+    assert sorted(got) == ["decision_metrics", "row_metrics", "run_metrics"]
+    assert all(got.values())
+    assert plans
+    for desc in plans:
+        assert "Scan parquet" not in desc and "FileScan" not in desc, desc
+
+
+def test_metric_table_schemas(spark, small_dataset, tmp_path):
+    """The written metric tables keep their column names, types and
+    nullability (readers such as the perfbench oracle and DuckDB checks
+    depend on them; a NOT NULL flip shows up in the parquet footer)."""
+    import pyarrow.parquet as pq
+
+    from otel_tail_sampler_spark.plans.pipeline import run_and_write
+
+    out = tmp_path / "out"
+    run_and_write(spark, small_dataset["tokenized"], str(out), CFG)
+
+    def schema(table):
+        return [
+            (f.name, str(f.type), f.nullable)
+            for f in pq.read_table(str(out / table)).schema
+        ]
+
+    assert schema("metrics_rows") == [
+        ("sink", "string", True),
+        ("row_count", "int64", True),
+    ]
+    assert schema("metrics_run") == [
+        ("metric", "string", True),
+        ("value", "int64", True),
+    ]
+    assert schema("metrics_decisions") == [
+        ("decision_policy", "string", True),
+        ("sink", "string", False),
+        ("trace_count", "int64", False),
+    ]

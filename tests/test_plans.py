@@ -35,14 +35,42 @@ def test_route_join_is_broadcast(plans):
     assert "Exchange hashpartitioning" not in before_join
 
 
-def test_pipeline_is_pure_jvm(plans):
+PYTHON_NODES = ("ExistingRDD", "MapInArrow", "MapInPandas", "EvalPython")
+
+
+def test_pipeline_is_pure_jvm(plans, spark, small_dataset, tmp_path):
     """The flagship DAG has ZERO Python stages (round 4: the expression
     parser replaced the Arrow kernel — the corpus crossing the JVM<->Python
     socket was ~60% of the skewed headline; tests/test_parser.py keeps the
-    two parsers equal field by field)."""
+    two parsers equal field by field). The same holds for every SQL
+    execution of a whole run_and_write and run_resumable call, metric
+    tables and manifest included: a driver-built table planned as
+    ``Scan ExistingRDD`` starts Python worker tasks on every write."""
+    from otel_tail_sampler_spark.plans.checkpoint import run_resumable
+    from otel_tail_sampler_spark.plans.pipeline import run_and_write
+    from tests.test_checkpoint import _executed_plans
+
+    src = small_dataset["tokenized"]
+    executed = {
+        "run_and_write": _executed_plans(
+            spark,
+            lambda: run_and_write(spark, src, str(tmp_path / "flagship"), E.ENTRY_CFG),
+        ),
+        "run_resumable": _executed_plans(
+            spark,
+            lambda: run_resumable(
+                spark, src, str(tmp_path / "resumable"), E.ENTRY_CFG, n_buckets=4
+            ),
+        ),
+    }
+    assert all(executed.values())
     for key in ("routed", "decided"):
-        for node in ("MapInArrow", "MapInPandas", "EvalPython"):
+        for node in PYTHON_NODES:
             assert node not in plans[key], (key, node)
+    for key, descs in executed.items():
+        for i, desc in enumerate(descs):
+            for node in PYTHON_NODES:
+                assert node not in desc, (key, i, node)
 
 
 def test_assembly_is_partial_final(plans):
