@@ -4,17 +4,22 @@ A from-scratch re-expression of the capabilities of kikokikok/otel-tail-sampler
 (reference at /root/reference, Rust) as a bounded, resumable Spark DataFrame job:
 
     read tokenized spans (Iceberg/parquet)
-      -> vectorized Arrow parse (operators.parser)
-      -> salted two-phase trace assembly (operators.assembly)
+      -> JVM expression parse (operators.parser.parse_spans_jvm)
+      -> two-phase trace assembly on the int64 trace key, salted on request
+         (operators.assembly)
       -> policy decisions as column expressions (operators.policies, force_rules)
-      -> route to keep/drop/overflow sinks + per-stage metrics (operators.routing)
+      -> route to keep/drop/overflow/malformed sinks + metric tables
+         (operators.routing, plans.pipeline)
 
 plus the analytics queries (plans.analytics), span compression
 (operators.compression), and a training-data operator suite (dedup, similarity,
-text analysis, multimodal plumbing).
+text analysis, multimodal kernels).
 
-Everything is public-API PySpark: DataFrame/Catalyst first, Arrow-vectorized
-UDFs only at the token-parse boundary.
+Everything is public-API PySpark, DataFrame/Catalyst first: the batch
+sampling job runs no Python stage. Arrow/pandas kernels run only where
+expressions cannot do the work: the reference Arrow parser
+(operators.parser.parse_spans), the streaming per-trace state, and
+training-data operators.
 """
 
 __version__ = "0.1.0"

@@ -27,6 +27,10 @@ from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.functions.hashing import hash_frac
 
+# the md5 salt of mask_tokens' per-position coin: another value is a fresh
+# mask epoch over the same corpus
+MASK_SEED = "mlm"
+
 
 def fim_transform(
     df: DataFrame,
@@ -187,17 +191,14 @@ def span_corruption(
     )
 
 
-def mask_tokens(
-    df: DataFrame, mask_id: int, rate: float = 0.15, seed: str = "mlm"
-) -> DataFrame:
+def mask_tokens(df: DataFrame, mask_id: int, rate: float = 0.15) -> DataFrame:
     """Deterministic MLM-style corruption: position i of a document is
-    replaced with ``mask_id`` iff md5-frac(doc_id:i|seed) < ``rate`` —
+    replaced with ``mask_id`` iff md5-frac(doc_id:i|MASK_SEED) < ``rate`` —
     the masked-language-model counterpart of fim_transform's causal
     infilling. -> input columns with ``tokens`` rewritten + ``n_masked``.
 
     Per-POSITION hash (not per-document): masking density concentrates
-    like independent coin flips, reruns and engines agree exactly, and a
-    different ``seed`` gives a fresh mask epoch over the same corpus.
+    like independent coin flips, and reruns and engines agree exactly.
 
     Scale shape: scan-time projection, no shuffle. The mask-bool array is
     computed ONCE per row into its own projection and reused by both the
@@ -210,7 +211,7 @@ def mask_tokens(
         key = F.concat(
             F.col("doc_id").cast("string"), F.lit(":"), i.cast("string")
         )
-        return hash_frac(key, seed)
+        return hash_frac(key, MASK_SEED)
 
     mb = F.transform(F.col("tokens"), lambda x, i: frac(i) < float(rate))
     step = df.withColumn("_mb", mb)

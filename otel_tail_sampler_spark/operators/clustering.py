@@ -34,7 +34,7 @@ vector. k*dim ints reach the driver, independent of corpus size.
 
 semantic_dedup's pairwise stage joins on the cluster id only — the
 published SemDeDup recipe sizes k ~ N/target cluster size precisely so
-per-cluster candidate sets stay bounded; ``max_cluster_anchors`` caps the
+per-cluster candidate sets stay bounded; ``MAX_CLUSTER_ANCHORS`` caps the
 fanout of a degenerate hot cluster (the exact failure shape
 ``dedup.contamination`` bounds with ``max_gram_df``): anchors are the
 cap-many smallest ids per cluster, so clusters at or under the cap are
@@ -50,6 +50,12 @@ from __future__ import annotations
 from typing import Iterator
 
 from pyspark.sql import DataFrame, functions as F
+
+# kmeans_fit runs Lloyd's on the driver when the input has at most this
+# many vectors (bounds driver memory: 2^16 vectors ~ tens of MB at ANN dims)
+DRIVER_FIT_THRESHOLD = 1 << 16
+# semantic_dedup's per-cluster anchor cap (see its docstring)
+MAX_CLUSTER_ANCHORS = 256
 
 
 def _tdiv(s: int, n: int) -> int:
@@ -173,12 +179,7 @@ def _partial_sums(df_q: DataFrame, centroids) -> DataFrame:
     )
 
 
-def kmeans_fit(
-    df_q: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    driver_fit_threshold: int = 1 << 16,
-) -> list[list[int]]:
+def kmeans_fit(df_q: DataFrame, k: int = 8, iters: int = 2) -> list[list[int]]:
     """Fit k-means centroids over int8-quantized vectors.
 
     Deterministic init: the quantized vectors of the ``k`` smallest ids,
@@ -201,15 +202,15 @@ def kmeans_fit(
     k*dim ints — independent of corpus size.
 
     Small inputs fit on the DRIVER in one pass: a ``limit``-probed
-    collect fetches up to ``driver_fit_threshold`` (id, qvec) rows in a
+    collect fetches up to ``DRIVER_FIT_THRESHOLD`` (id, qvec) rows in a
     single job; when the whole input fits, Lloyd's loop runs as the
     SAME exact-int64 numpy kernel locally (same argmin-ties-to-lowest,
     same truncated division — bit-identical centroids, pinned by a
     planted equality test) and the per-iteration Spark jobs never
     launch. Above the threshold nothing is assumed: the probe saw an
     overflow row, the partial collect is discarded, and the distributed
-    partial-sum path runs unchanged. The threshold bounds driver memory
-    (default 2^16 vectors ~ tens of MB at ANN dims), not correctness.
+    partial-sum path runs unchanged. The threshold bounds driver memory,
+    not correctness.
     """
     import numpy as np
 
@@ -217,12 +218,12 @@ def kmeans_fit(
 
     probe = (
         df_q.select(F.col("vec_id").alias("_id"), F.col("qvec").alias("_q"))
-        .limit(int(driver_fit_threshold) + 1)
+        .limit(DRIVER_FIT_THRESHOLD + 1)
         .collect()
     )
     if not probe:
         raise ValueError("kmeans_fit: empty input")
-    if len(probe) <= driver_fit_threshold:
+    if len(probe) <= DRIVER_FIT_THRESHOLD:
         # the probe IS the full input: exact local Lloyd's
         probe.sort(key=lambda r: r["_id"])
         V = np.asarray([[int(x) for x in r["_q"]] for r in probe], np.int64)
@@ -290,7 +291,6 @@ def semantic_dedup(
     k: int = 8,
     iters: int = 2,
     tau: tuple[int, int] = (19, 20),
-    max_cluster_anchors: int | None = 256,
 ) -> DataFrame:
     """SemDeDup: survivors after within-cluster cosine near-dup removal.
 
@@ -305,19 +305,16 @@ def semantic_dedup(
     predicate — no cartesian, no all-pairs. Its fan-out is |C|^2 on the
     join key, so a degenerate hot cluster (near-identical vectors — the
     exact population dedup targets) needs a bound the caller's choice of
-    k cannot give: ``max_cluster_anchors`` restricts the smaller-id
+    k cannot give: ``MAX_CLUSTER_ANCHORS`` restricts the smaller-id
     ("anchor") side of each pair to the cap-many smallest ids per cluster
     (a rank<=cap window — Spark's InferWindowGroupLimit two-phases it, so
     no hot-key single task). Clusters at or under the cap are EXACT —
     every pair's smaller id is inside the anchor set by construction; an
     oversized cluster costs |C|*cap pairs and may under-drop members
     similar only to non-anchors (the same lower-bound contract as
-    ``contamination``'s max_gram_df). The cap DEFAULTS to 256: at corpus
+    ``contamination``'s max_gram_df). The cap is always on: at corpus
     scale the degenerate hot cluster (boilerplate, near-identical docs)
-    is the expected case, not the edge, so the bounded behavior must be
-    what a default-config run gets — mirroring max_gram_df's bounded
-    default. Pass ``max_cluster_anchors=None`` to opt in to the exact
-    unbounded all-pairs-within-cluster semantics.
+    is the expected case, not the edge.
     """
     from otel_tail_sampler_spark.functions.spread import spread_small_input
 
@@ -334,16 +331,14 @@ def semantic_dedup(
     # references it three times (anchors, right side, survivor base).
     m = _assign_frame(df_q, centroids, keep_vec=True).drop("dist2").persist()
     a = m.select("vec_id", "cluster")
-    anchors = m
-    if max_cluster_anchors is not None:
-        from pyspark.sql import Window
+    from pyspark.sql import Window
 
-        w = Window.partitionBy("cluster").orderBy("vec_id")
-        anchors = (
-            m.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= int(max_cluster_anchors))
-            .drop("_rn")
-        )
+    w = Window.partitionBy("cluster").orderBy("vec_id")
+    anchors = (
+        m.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= MAX_CLUSTER_ANCHORS)
+        .drop("_rn")
+    )
     left = anchors.select(
         F.col("cluster"),
         F.col("vec_id").alias("_ida"),

@@ -18,9 +18,16 @@ from otel_tail_sampler_spark.functions.hashing import hash_frac
 # hash_frac salt shared by mixture_sample and mixture_upsample, so a doc's
 # keep draw is the same fraction in both
 MIXTURE_SEED = "mixture"
+# the id remap_rare_tokens and encode_with_vocab write for a dropped token
+UNK_ID = -1
+# split_corpus: train < SPLIT_TRAIN <= val < SPLIT_TRAIN + SPLIT_VAL <= test
+SPLIT_TRAIN = 0.8
+SPLIT_VAL = 0.1
+# temperature_weights' exponent: 1.0 keeps natural proportions, 0 is uniform
+TEMPERATURE_ALPHA = 0.3
 
 
-def vocab_histogram(df: DataFrame, top_k: int | None = None) -> DataFrame:
+def vocab_histogram(df: DataFrame) -> DataFrame:
     """(token, freq) unigram histogram of the token-array column.
 
     explode -> two-phase count: the partial aggregation combines map-side,
@@ -28,14 +35,11 @@ def vocab_histogram(df: DataFrame, top_k: int | None = None) -> DataFrame:
     token per input split — vocabulary-sized, not corpus-sized. This is
     the op behind vocab pruning / OOV-rate checks before training.
     """
-    out = (
+    return (
         df.select(F.explode(F.col("tokens")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    if top_k is not None:
-        out = out.orderBy(F.desc("freq"), F.asc("token")).limit(top_k)
-    return out
 
 
 def mixture_sample(docs: DataFrame, rates: dict[str, float]) -> DataFrame:
@@ -56,11 +60,9 @@ def mixture_sample(docs: DataFrame, rates: dict[str, float]) -> DataFrame:
     return docs.filter(hash_frac(key, MIXTURE_SEED) < rate)
 
 
-def remap_rare_tokens(
-    df: DataFrame, min_freq: int = 2, unk_id: int = -1
-) -> DataFrame:
+def remap_rare_tokens(df: DataFrame, min_freq: int = 2) -> DataFrame:
     """Replace tokens whose CORPUS-WIDE frequency is below ``min_freq``
-    with ``unk_id`` (OOV/UNK collapse before vocabulary finalization).
+    with ``UNK_ID`` (OOV/UNK collapse before vocabulary finalization).
     -> (id, tokens remapped in place, n_unk replaced per row).
 
     Scale shape — the corpus itself NEVER shuffles. Global frequencies
@@ -91,7 +93,7 @@ def remap_rare_tokens(
     )
     rare = np.sort(rare_pdf["token"].to_numpy(np.int64))
     rare_b = df.sparkSession.sparkContext.broadcast(rare)
-    unk = int(unk_id)
+    unk = UNK_ID
 
     def fn(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         # batch-vectorized (the bigram scorer's flat-stream shape): ONE
@@ -164,11 +166,9 @@ def build_vocab(df: DataFrame, vocab_size: int) -> DataFrame:
     )
 
 
-def encode_with_vocab(
-    df: DataFrame, vocab: DataFrame, unk_id: int = -1
-) -> DataFrame:
+def encode_with_vocab(df: DataFrame, vocab: DataFrame) -> DataFrame:
     """Remap token arrays onto a built vocabulary's dense rank ids
-    (tokens absent from the vocab -> ``unk_id``).
+    (tokens absent from the vocab -> ``UNK_ID``).
     -> (id, tokens remapped, n_unk).
 
     Scale shape: identical to remap_rare_tokens — the vocab table
@@ -189,7 +189,7 @@ def encode_with_vocab(
     vtok = toks[order]
     vid = vpdf["rank_id"].to_numpy(np.int32)[order]
     b = df.sparkSession.sparkContext.broadcast((vtok, vid))
-    unk = int(unk_id)
+    unk = UNK_ID
 
     def fn(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         # batch-vectorized flat-stream probe (see remap_rare_tokens): one
@@ -401,23 +401,22 @@ def prepare_corpus(
     return mixture_sample(gated, rates)
 
 
-def split_corpus(
-    docs: DataFrame, train: float = 0.8, val: float = 0.1
-) -> DataFrame:
+def split_corpus(docs: DataFrame) -> DataFrame:
     """Deterministic train/val/test assignment: split by the md5 fraction
-    of the doc id (train < ``train`` <= val < ``train+val`` <= test).
+    of the doc id (train < ``SPLIT_TRAIN`` <= val < ``SPLIT_TRAIN +
+    SPLIT_VAL`` <= test).
 
     Same consistent-hash family as mixture/policy sampling: assignment is
     a pure scan-time projection (no shuffle), stable across re-runs and
-    engines, and growing ``train`` only MOVES docs val->train (never
+    engines, and growing ``SPLIT_TRAIN`` only MOVES docs val->train (never
     reshuffles the rest) — the property that keeps eval sets frozen while
     the train fraction is tuned.
     """
     f = hash_frac(F.col("doc_id").cast("string"), "split")
     return docs.withColumn(
         "split",
-        F.when(f < train, "train")
-        .when(f < train + val, "val")
+        F.when(f < SPLIT_TRAIN, "train")
+        .when(f < SPLIT_TRAIN + SPLIT_VAL, "val")
         .otherwise("test"),
     )
 
@@ -813,7 +812,7 @@ def pmi_collocations(
     )
 
 
-def corpus_report(docs: DataFrame, source_col: str = "source") -> DataFrame:
+def corpus_report(docs: DataFrame) -> DataFrame:
     """Per-source corpus health rollup — the one-page answer to "what is
     in this crawl": -> (source, n_docs, n_dup_docs, total_words,
     mean_words, p50_words, max_words). ``n_dup_docs`` counts documents
@@ -831,7 +830,7 @@ def corpus_report(docs: DataFrame, source_col: str = "source") -> DataFrame:
     from otel_tail_sampler_spark.operators.text import token_count_ws
 
     per = docs.select(
-        F.col(source_col).alias("source"),
+        F.col("source"),
         F.md5(F.col("text")).alias("_d"),
         token_count_ws(F.col("text")).cast("int").alias("_w"),
     )
@@ -849,25 +848,21 @@ def corpus_report(docs: DataFrame, source_col: str = "source") -> DataFrame:
     )
 
 
-def temperature_weights(
-    counts: dict[str, int], alpha: float = 0.3
-) -> dict[str, float]:
+def temperature_weights(counts: dict[str, int]) -> dict[str, float]:
     """Alpha/temperature source balancing (the standard multilingual
     mixing recipe, cf. XLM-R, Conneau et al. 2020): target mixture
-    probability q_s ∝ (c_s / total)^alpha — alpha 1.0 keeps natural
-    proportions, alpha -> 0 flattens toward uniform, upweighting small
-    sources. Returns the q_s dict (sums to 1), which plugs straight into
+    probability q_s ∝ (c_s / total)^TEMPERATURE_ALPHA — alpha 1.0 keeps
+    natural proportions, alpha -> 0 flattens toward uniform, upweighting
+    small sources. Returns the q_s dict (sums to 1), which plugs straight into
     :func:`rates_for_budget`'s ``weights`` so the water-filling solver
     turns the target mixture + a token budget into per-source keep rates
     for mixture_sample. Pure driver arithmetic; deterministic (9-dp
     rounding like the solver).
     """
-    if alpha < 0:
-        raise ValueError("temperature_weights: alpha must be >= 0")
     total = sum(int(c) for c in counts.values())
     if total <= 0:
         raise ValueError("temperature_weights: empty corpus counts")
-    raw = {s: (int(c) / total) ** float(alpha) for s, c in counts.items()}
+    raw = {s: (int(c) / total) ** TEMPERATURE_ALPHA for s, c in counts.items()}
     z = sum(raw.values())
     return {s: round(v / z, 9) for s, v in raw.items()}
 

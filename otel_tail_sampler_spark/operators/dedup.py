@@ -109,13 +109,7 @@ def minhash_signature(shingles: Column, num_hashes: int) -> Column:
     )
 
 
-def minhash_signatures_agg(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    num_hashes: int = 12,
-) -> DataFrame:
+def minhash_signatures_agg(docs: DataFrame, num_hashes: int = 12) -> DataFrame:
     """(id, h0..h{n-1}) minhash columns via explode + min-aggregate.
 
     The expression form (minhash_signature) re-evaluates the shingle array
@@ -131,14 +125,14 @@ def minhash_signatures_agg(
 
     docs = spread_small_input(docs)
     sh = docs.select(
-        F.col(id_col),
-        F.explode(word_shingles(F.col(text_col), shingle_n)).alias("_sh"),
+        F.col("doc_id"),
+        F.explode(word_shingles(F.col("text"), 3)).alias("_sh"),
     )
     aggs = [
         F.min(F.md5(F.concat(F.col("_sh"), F.lit(f"|{i}")))).alias(f"h{i}")
         for i in range(num_hashes)
     ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy("doc_id").agg(*aggs)
 
 
 def minhash_lsh_pairs(
@@ -1018,12 +1012,8 @@ def reference_dup_pairs(
     new: DataFrame,
     ref: DataFrame,
     method: str = "minhash",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
     num_hashes: int = 12,
     bands: int = 4,
-    min_agree: int | None = None,
 ) -> DataFrame:
     """Duplicates of a NEW batch against an EXISTING reference corpus —
     the incremental-ingestion question ("which of this crawl's documents
@@ -1042,8 +1032,8 @@ def reference_dup_pairs(
       signatures vs new signatures — never new x new or ref x ref
       pairs). Evidence: ``n_bands_shared`` plus ``n_agree``, the count
       of equal signature components (an unbiased Jaccard estimate in
-      [0, num_hashes]); pass ``min_agree`` to verify candidates at a
-      similarity bar. Re-ingesting a standing corpus's signatures each
+      [0, num_hashes]), the column to filter on to verify candidates at
+      a similarity bar. Re-ingesting a standing corpus's signatures each
       batch is wasteful at scale — materialize
       :func:`minhash_signatures_agg` over the reference once and join
       new batches against it (this function recomputes both sides, the
@@ -1051,16 +1041,16 @@ def reference_dup_pairs(
     """
     if method == "exact":
         rd = (
-            ref.select(F.md5(F.col(text_col)).alias("_digest"), F.col(id_col))
+            ref.select(F.md5(F.col("text")).alias("_digest"), F.col("doc_id"))
             .groupBy("_digest")
             .agg(
-                F.min(id_col).alias("id_ref"),
+                F.min("doc_id").alias("id_ref"),
                 F.count(F.lit(1)).cast("long").alias("n_ref_copies"),
             )
         )
         nd = new.select(
-            F.col(id_col).alias("id_new"),
-            F.md5(F.col(text_col)).alias("_digest"),
+            F.col("doc_id").alias("id_new"),
+            F.md5(F.col("text")).alias("_digest"),
         )
         return nd.join(rd, "_digest").select(
             "id_new", "id_ref", "n_ref_copies"
@@ -1077,11 +1067,9 @@ def reference_dup_pairs(
         # of num_hashes separate columns (slimmer shuffle rows); the
         # component-wise compare happens post-aggregation over the small
         # candidate set, where an interpreted HOF costs nothing
-        sig = minhash_signatures_agg(
-            docs, text_col, id_col, shingle_n, num_hashes
-        )
+        sig = minhash_signatures_agg(docs, num_hashes)
         return sig.select(
-            F.col(id_col).alias(f"id_{tag}"),
+            F.col("doc_id").alias(f"id_{tag}"),
             F.concat_ws(
                 ",", *[F.col(f"h{i}") for i in range(num_hashes)]
             ).alias(f"sig_{tag}"),
@@ -1131,20 +1119,16 @@ def reference_dup_pairs(
         F.lit(0),
         lambda acc, x: acc + x,
     ).cast("int")
-    out = cand.withColumn("n_agree", agree).drop("_sn", "_sr")
-    if min_agree is not None:
-        out = out.filter(F.col("n_agree") >= int(min_agree))
-    return out
+    return cand.withColumn("n_agree", agree).drop("_sn", "_sr")
 
 
-def dedup_against_corpus(
-    new: DataFrame, ref: DataFrame, method: str = "minhash", **kw
-) -> DataFrame:
-    """The APPLY side of :func:`reference_dup_pairs`: the surviving rows
+def dedup_against_corpus(new: DataFrame, ref: DataFrame) -> DataFrame:
+    """The APPLY side of :func:`reference_dup_pairs` (banded MinHash at
+    its defaults, which also pairs every exact copy): the surviving rows
     of ``new`` (all original columns) after dropping every document with
-    a match in ``ref``. The anti-join runs against the DISTINCT matched
-    new-ids — bounded by the duplicate count, broadcastable when dups
-    are rare (the common incremental case)."""
-    pairs = reference_dup_pairs(new, ref, method=method, **kw)
+    a candidate match in ``ref``. The anti-join runs against the DISTINCT
+    matched new-ids — bounded by the duplicate count, broadcastable when
+    dups are rare (the common incremental case)."""
+    pairs = reference_dup_pairs(new, ref)
     dropped = pairs.select(F.col("id_new").alias("doc_id")).distinct()
     return new.join(dropped, "doc_id", "anti")

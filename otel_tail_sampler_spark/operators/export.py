@@ -18,6 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# rows per export_batches batch
+EXPORT_BATCH_SIZE = 200
+
 
 def span_export_projection(spans: DataFrame, env: str = "production") -> DataFrame:
     """S9: BufferedSpan -> DatadogSpan-shaped record (client.rs:192-234).
@@ -43,10 +46,11 @@ def span_export_projection(spans: DataFrame, env: str = "production") -> DataFra
     )
 
 
-def export_batches(records: DataFrame, batch_size: int = 200) -> DataFrame:
+def export_batches(records: DataFrame) -> DataFrame:
     """Chunking analog of evaluator.rs:443-450: assign a deterministic batch
     number per trace so a downstream sink can group rows into POST-sized
-    batches. Batch id = rank of trace within its shuffle partition / size."""
+    batches. Batch id = rank of trace within its shuffle partition /
+    EXPORT_BATCH_SIZE."""
     from pyspark.sql import Window
 
     # materialize the partition id BEFORE the window (the window's shuffle
@@ -56,7 +60,7 @@ def export_batches(records: DataFrame, batch_size: int = 200) -> DataFrame:
     w = Window.partitionBy("_pid").orderBy("trace_id", "span_id")
     return with_pid.withColumn(
         "export_batch",
-        ((F.row_number().over(w) - 1) / F.lit(batch_size)).cast("int"),
+        ((F.row_number().over(w) - 1) / F.lit(EXPORT_BATCH_SIZE)).cast("int"),
     ).withColumnRenamed("_pid", "export_partition")
 
 

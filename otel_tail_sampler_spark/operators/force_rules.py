@@ -15,10 +15,9 @@ table' case where folding the table into the plan beats any physical join
 (SURVEY.md §2.3).
 
 Span-level matchers need per-trace existence flags: ONE extra aggregation
-computes max(matches) per (trace, rule), grouped on the hex ``trace_id``
-and left-joined back onto the traces on it. Assembly groups on the int64
-pair ``(trace_k1, trace_k2)`` instead, so this is a separate exchange
-(plus the join's), not a reuse of assembly's.
+computes max(matches) per (trace, rule), grouped on the trace key
+``(trace_k1, trace_k2)`` that assembly groups on, and left-joined back
+onto the traces on it.
 
 Rule dict shape (FIXTURES.md §4):
     {"id": "r1", "priority": 100, "enabled": true,
@@ -39,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.functions.matchers import compile_all
+from otel_tail_sampler_spark.operators.parser import TRACE_KEY
 
 SPAN_FIELD_KEYS = {
     "operation_name",
@@ -115,8 +115,8 @@ def apply_force_rules(
                 _value_cols(r["span_matchers"], SPAN_FIELD_KEYS, spans),
             )
             aggs.append(F.max(cond.cast("int")).alias(f"_fr_span_{i}"))
-        flags = spans.groupBy("trace_id").agg(*aggs)
-        traces = traces.join(flags, "trace_id", "left")
+        flags = spans.groupBy(*TRACE_KEY).agg(*aggs)
+        traces = traces.join(flags, TRACE_KEY, "left")
 
     # priority-ordered first-match-wins when-chain
     action_expr = None

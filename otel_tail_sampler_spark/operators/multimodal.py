@@ -4,18 +4,13 @@ Image/audio/video payloads are opaque ``binary`` columns with a typed
 metadata struct; decode / feature-extract / resize / frame-sample run as
 Arrow-batched pandas stages over ``mapInPandas``.
 
-Two kernel tiers:
-
-* REAL (default for the uncompressed formats below): pure-numpy codecs that
-  need no external libs — PPM P6 images (netpbm spec), RIFF/WAVE PCM16 mono
-  audio, and a minimal length-prefixed video container of PPM frames
-  (``VID0`` magic + u32 frame count + per-frame u32 length + PPM bytes).
-  Decode inverts encode bit-exactly, so features are checkable against a
-  ground-truth table computed BEFORE encoding (the property oracle: the
-  decode stage must invert the encode stage).
-* FAKE (``codec='fake-*'`` payloads or ``real=False`` paths): deterministic
-  sha256-seeded pseudo-features standing in for libjpeg/ffmpeg codecs that
-  are not installed here. Honestly labeled; plumbing identical.
+The kernels are pure-numpy codecs that need no external libs — PPM P6
+images (netpbm spec), RIFF/WAVE PCM16 mono audio, and a minimal
+length-prefixed video container of PPM frames (``VID0`` magic + u32 frame
+count + per-frame u32 length + PPM bytes). Decode inverts encode
+bit-exactly, so features are checkable against a ground-truth table
+computed BEFORE encoding (the property oracle: the decode stage must
+invert the encode stage).
 
 Scale notes: payload columns are wide, so every transform here keeps the
 binary column OUT of shuffles (mapInPandas is narrow); metadata-only plans
@@ -27,7 +22,6 @@ numpy over those batches, never per-row Python UDF calls.
 
 from __future__ import annotations
 
-import hashlib
 import struct
 import zlib
 from typing import Iterator
@@ -53,6 +47,11 @@ RESIZE_DDL = (
 )
 
 FRAME_SAMPLE_DDL = "media_id string, frame_idx int, frame_crc long"
+
+# extract_features' vector length
+FEATURE_DIM = 16
+# sample_frames keeps every FRAME_STRIDE-th frame
+FRAME_STRIDE = 2
 
 # flat, integer-exact stats of the DECODED payload (oracle-checkable against
 # the pre-encode ground truth; every value fits exactly in its type)
@@ -219,29 +218,9 @@ def _gen_one(i: int, seed: int) -> tuple:
     return (mid, kind, bytearray(payload), meta), truth, raw
 
 
-def synthetic_media(
-    spark: SparkSession, n: int = 64, seed: int = 42, real: bool = True
-) -> DataFrame:
-    """Deterministic media table. ``real=True`` (default) emits valid
-    PPM/WAV/VID0 payloads the real kernels decode; ``real=False`` keeps the
-    round-1 opaque random payloads for plumbing tests of the fake path."""
-    if real:
-        rows = [_gen_one(i, seed)[0] for i in range(n)]
-        return spark.createDataFrame(rows, MEDIA_SCHEMA)
-    rng = np.random.Generator(np.random.PCG64(seed))
-    rows = []
-    kinds = ["image", "audio", "video"]
-    for i in range(n):
-        kind = kinds[i % 3]
-        payload = rng.integers(0, 256, size=256 + (i % 7) * 64, dtype=np.uint8).tobytes()
-        meta = {
-            "width": 64 + 16 * (i % 4) if kind != "audio" else None,
-            "height": 48 + 16 * (i % 3) if kind != "audio" else None,
-            "n_frames": 1 if kind == "image" else 24 + i % 10,
-            "sample_rate": 16000 if kind == "audio" else None,
-            "codec": {"image": "fake-jpeg", "audio": "fake-pcm", "video": "fake-h264"}[kind],
-        }
-        rows.append((f"m-{i:04d}", kind, bytearray(payload), meta))
+def synthetic_media(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFrame:
+    """Deterministic media table of valid PPM/WAV/VID0 payloads."""
+    rows = [_gen_one(i, seed)[0] for i in range(n)]
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
@@ -292,14 +271,6 @@ def media_stats(media: DataFrame) -> DataFrame:
     return media.mapInPandas(fn, STATS_DDL)
 
 
-def _fake_decode(payload: bytes, dim: int) -> np.ndarray:
-    """Deterministic fake 'decode+embed': sha256-seeded pseudo-features.
-    Stands in for learned-embedding codecs (NOT available here)."""
-    seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "big")
-    rng = np.random.Generator(np.random.PCG64(seed))
-    return rng.standard_normal(dim).astype(np.float32)
-
-
 def _real_features(kind: str, payload: bytes, dim: int) -> np.ndarray:
     """Real decode -> fixed-dim feature vector: normalized 8-bin histogram of
     the decoded signal plus [mean/255, (max-min)/255], tiled/truncated to
@@ -324,26 +295,23 @@ def _real_features(kind: str, payload: bytes, dim: int) -> np.ndarray:
     return np.tile(base, reps)[:dim].astype(np.float32)
 
 
-def extract_features(media: DataFrame, dim: int = 16, real: bool = True) -> DataFrame:
-    """payload -> feature vector via Arrow-batched mapInPandas (batch shape:
-    pandas DataFrames of full rows; payload stays in-task, never shuffled).
-    ``real=True`` decodes PPM/WAV/VID0 payloads with the pure-numpy codecs;
-    ``real=False`` uses the sha256 fake (for opaque fake-codec payloads)."""
+def extract_features(media: DataFrame) -> DataFrame:
+    """payload -> FEATURE_DIM-long feature vector via Arrow-batched
+    mapInPandas (batch shape: pandas DataFrames of full rows; payload stays
+    in-task, never shuffled), decoding PPM/WAV/VID0 payloads with the
+    pure-numpy codecs."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if real:
-                feats = [
-                    _real_features(k, bytes(p), dim)
-                    for k, p in zip(pdf["kind"], pdf["payload"])
-                ]
-            else:
-                feats = [_fake_decode(bytes(p), dim) for p in pdf["payload"]]
+            feats = [
+                _real_features(k, bytes(p), FEATURE_DIM)
+                for k, p in zip(pdf["kind"], pdf["payload"])
+            ]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
                     "kind": pdf["kind"],
-                    "feat_dim": dim,
+                    "feat_dim": FEATURE_DIM,
                     "features": [f.tolist() for f in feats],
                     "payload_bytes": pdf["payload"].map(len),
                     "payload_crc": pdf["payload"].map(
@@ -364,26 +332,20 @@ def _resize_nearest(arr: np.ndarray, width: int, height: int) -> np.ndarray:
     return arr[yi][:, xi]
 
 
-def resize_images(
-    media: DataFrame, width: int, height: int, real: bool = True
-) -> DataFrame:
+def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     """REAL kernel: decode PPM, nearest-neighbor resize, re-encode; the crc is
-    of the RESIZED payload (so the oracle can re-derive it). ``real=False``
-    keeps the round-1 passthrough-crc stub for opaque payloads."""
+    of the RESIZED payload (so the oracle can re-derive it)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             img = pdf[pdf["kind"] == "image"]
             if len(img) == 0:
                 continue
-            if real:
-                crcs = [
-                    zlib.crc32(encode_ppm(_resize_nearest(decode_ppm(bytes(p)), width, height)))
-                    & 0xFFFFFFFF
-                    for p in img["payload"]
-                ]
-            else:
-                crcs = [zlib.crc32(bytes(p)) & 0xFFFFFFFF for p in img["payload"]]
+            crcs = [
+                zlib.crc32(encode_ppm(_resize_nearest(decode_ppm(bytes(p)), width, height)))
+                & 0xFFFFFFFF
+                for p in img["payload"]
+            ]
             yield pd.DataFrame(
                 {
                     "media_id": img["media_id"],
@@ -397,35 +359,23 @@ def resize_images(
     return media.mapInPandas(fn, RESIZE_DDL)
 
 
-def sample_frames(media: DataFrame, every_n: int = 2, real: bool = True) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """REAL kernel: decode the VID0 container, emit one row per sampled frame
-    with the crc of that frame's PPM bytes (UDTF-ish fan-out via mapInPandas).
-    ``real=False`` keeps the synthetic-index stub for opaque payloads."""
+    (every FRAME_STRIDE-th) with the crc of that frame's PPM bytes
+    (UDTF-ish fan-out via mapInPandas)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             vid = pdf[pdf["kind"] == "video"]
             out_ids, out_idx, out_crc = [], [], []
-            for mid, payload, meta in zip(
-                vid["media_id"], vid["payload"], vid["meta"]
-            ):
-                if real:
-                    frames = decode_video(bytes(payload))
-                    for fi in range(0, len(frames), every_n):
-                        out_ids.append(mid)
-                        out_idx.append(fi)
-                        out_crc.append(
-                            zlib.crc32(encode_ppm(frames[fi])) & 0xFFFFFFFF
-                        )
-                else:
-                    n = (meta["n_frames"] if meta is not None else 0) or 0
-                    for fi in range(0, n, every_n):
-                        out_ids.append(mid)
-                        out_idx.append(fi)
-                        out_crc.append(
-                            zlib.crc32(bytes(payload) + fi.to_bytes(4, "big"))
-                            & 0xFFFFFFFF
-                        )
+            for mid, payload in zip(vid["media_id"], vid["payload"]):
+                frames = decode_video(bytes(payload))
+                for fi in range(0, len(frames), FRAME_STRIDE):
+                    out_ids.append(mid)
+                    out_idx.append(fi)
+                    out_crc.append(
+                        zlib.crc32(encode_ppm(frames[fi])) & 0xFFFFFFFF
+                    )
             if out_ids:
                 yield pd.DataFrame(
                     {"media_id": out_ids, "frame_idx": out_idx, "frame_crc": out_crc}
@@ -528,13 +478,8 @@ def phash_images(media: DataFrame) -> DataFrame:
     return media.mapInPandas(fn, PHASH_DDL)
 
 
-def phash_pairs(
-    hashes: DataFrame,
-    tau: int = 3,
-    n_bands: int = 4,
-    hash_col: str = "phash_d",
-) -> DataFrame:
-    """Near-duplicate pairs of DISTINCT hash values within Hamming
+def phash_pairs(hashes: DataFrame, tau: int = 3, n_bands: int = 4) -> DataFrame:
+    """Near-duplicate pairs of DISTINCT ``phash_d`` values within Hamming
     distance ``tau``: -> (hash_a, hash_b, hamming int), hash_a < hash_b.
 
     EXACT (recall 1) because ``tau < n_bands`` is enforced: a pair
@@ -563,7 +508,7 @@ def phash_pairs(
         )
     width = 64 // n_bands
     mask = (1 << width) - 1
-    hv = hashes.select(F.col(hash_col).alias("_h")).distinct()
+    hv = hashes.select(F.col("phash_d").alias("_h")).distinct()
     bands = F.explode(
         F.array(
             *[
@@ -757,8 +702,8 @@ def _audio_fp_scalar(samples) -> int:
 def fingerprint_audio(media: DataFrame) -> DataFrame:
     """REAL kernel: decode WAV, emit the 64-bit temporal energy
     fingerprint -> (media_id, afp long). Non-audio rows drop. Near-dup
-    audio = ``phash_pairs(fps, hash_col='afp')`` — the banded Hamming
-    index is fingerprint-agnostic."""
+    audio = ``phash_pairs`` over ``afp`` renamed to ``phash_d`` — the
+    banded Hamming index is fingerprint-agnostic."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

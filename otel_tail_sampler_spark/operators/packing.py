@@ -452,7 +452,6 @@ def _subrange_rank(
     id_col: str,
     seed: str,
     sub_prefix_len: int,
-    group_sort_key,
     reset_per_group: bool,
     value_col: str | None = None,
 ):
@@ -516,9 +515,8 @@ def _subrange_rank(
             f"_subrange_rank: NULL values in {group_col!r} — rank them "
             "explicitly (filter or sentinel) before ranking"
         )
-    key = lambda r: (group_sort_key(r[group_col]), r["_sub"])  # noqa: E731
     rows, acc, per_group = [], 0, {}
-    for r in sorted(counts, key=key):
+    for r in sorted(counts, key=lambda r: (r[group_col], r["_sub"])):
         g = r[group_col]
         off = per_group.get(g, 0) if reset_per_group else acc
         rows.append((g, r["_sub"], off))
@@ -607,7 +605,6 @@ def form_batches(
         "doc_id",
         "batch",
         SUB_PREFIX_LEN,
-        group_sort_key=lambda g: g,
         reset_per_group=True,
     )
     return (
@@ -647,13 +644,12 @@ def batch_stats(batched: DataFrame) -> DataFrame:
 
 
 def curriculum_order(
-    df: DataFrame, metric_col: str, n_phases: int = 4, descending: bool = False
+    df: DataFrame, metric_col: str, n_phases: int = 4
 ) -> DataFrame:
     """Curriculum ordering: exact global rank + phase assignment by a
     difficulty metric (short-to-long length curricula, easy-to-hard
     rarity/novelty curricula). Adds ``rank`` (0-based global position in
-    (metric, md5(doc_id|'curriculum'), doc_id) order — ``descending=True`` for
-    hardest-first) and ``phase`` (``rank * n_phases div total``: equal-
+    (metric, md5(doc_id|'curriculum'), doc_id) order) and ``phase`` (``rank * n_phases div total``: equal-
     population phases, earlier phases = lower metric). Ties on the
     metric break by the md5 hash, so same-difficulty docs land in a
     deterministic shuffled order rather than source order.
@@ -679,7 +675,6 @@ def curriculum_order(
         "doc_id",
         "curriculum",
         SUB_PREFIX_LEN,
-        group_sort_key=(lambda g: -g) if descending else (lambda g: g),
         reset_per_group=False,
     )
     return (
@@ -787,7 +782,6 @@ def enforce_token_budget(df: DataFrame, budget) -> DataFrame:
         "doc_id",
         "budget",
         SUB_PREFIX_LEN,
-        group_sort_key=lambda g: g,
         reset_per_group=True,
         value_col="n_tok",
     )
@@ -843,7 +837,6 @@ def assign_shards_stratified(
         id_col,
         "shards",
         SUB_PREFIX_LEN,
-        group_sort_key=lambda g: g,
         reset_per_group=True,
     )
     return (
@@ -896,7 +889,6 @@ def interleave_key(df: DataFrame, weights: dict) -> DataFrame:
         "doc_id",
         "interleave",
         SUB_PREFIX_LEN,
-        group_sort_key=lambda g: g,
         reset_per_group=True,
     )
     stride_pairs = []

@@ -7,9 +7,14 @@ input of FIXTURES.md §1.
 * ``parse_spans_jvm`` — pure whole-stage-codegen expressions (slot math,
   hex/lpad, char() payload decode). The only parser of the batch job
   (plans.pipeline.run_pipeline, which the resumable job also runs) and of
-  the streaming job; the batch DAG has ZERO Python stages. Measured ~5x
-  faster than the Arrow kernel on bench0.1 (1.26s vs 6.30s full decode of
-  3.08M spans) because the corpus never crosses the JVM<->Python socket.
+  the streaming job; the batch DAG has ZERO Python stages. Whether it
+  beats the Arrow kernel depends on the names: measured on a 4-core VM
+  (sf0.1, 600k spans, local[4]), it is faster when the service/operation
+  names are pruned or left undecoded, as the jobs do (decide-and-count
+  1.30 s vs 1.92 s wall, 3.2 vs 6.2 CPU-s), because the corpus never
+  crosses the JVM<->Python socket; and slower when every field is
+  decoded per span (full-field collect 6.81 s vs 5.74 s, 13.3 vs 9.8
+  CPU-s), because its per-character char() decode runs interpreted.
 * ``parse_spans`` — the Arrow-vectorized numpy kernel via
   ``DataFrame.mapInArrow``: every field extracted with gather/slice math
   on the flattened list buffer, no per-row Python. Kept as the
@@ -101,13 +106,10 @@ def _i64(vals: np.ndarray, off: np.ndarray, slot: int) -> np.ndarray:
 _DUMMY = np.zeros(HDR + 2, np.int32)
 
 
-def _parse_batch(tokens: pa.ListArray, fields: list[str] | None = None) -> dict[str, pa.Array]:
-    """Decode one Arrow batch; ``fields`` prunes computation to the listed
-    span columns (mapInArrow cannot see downstream column pruning, so the
-    caller pushes the projection into Python explicitly)."""
+def _parse_batch(tokens: pa.ListArray) -> dict[str, pa.Array]:
+    """Decode one Arrow batch into every SPAN_FIELDS column."""
     import pyarrow.compute as pc
 
-    want = set(fields) if fields is not None else {n for n, _ in SPAN_FIELDS}
     offs = tokens.offsets.to_numpy().astype(np.int64)
     vals = tokens.values.to_numpy(zero_copy_only=False).astype(np.int32, copy=False)
     off = offs[:-1]
@@ -152,49 +154,37 @@ def _parse_batch(tokens: pa.ListArray, fields: list[str] | None = None) -> dict[
     ok &= n_bad == 0
     off = np.where(ok, off, dummy_off)
 
-    out: dict[str, pa.Array] = {}
-    if "trace_k1" in want or "trace_k2" in want:
-        if "trace_k1" in want:
-            out["trace_k1"] = pa.array(_i64(vals, off, 0), pa.int64())
-        if "trace_k2" in want:
-            out["trace_k2"] = pa.array(_i64(vals, off, 2), pa.int64())
-    if "trace_id" in want:
-        out["trace_id"] = _hex_fixed(vals[off[:, None] + np.arange(4)], 32)
-    if "span_id" in want:
-        out["span_id"] = _hex_fixed(vals[off[:, None] + np.arange(4, 6)], 16)
+    out: dict[str, pa.Array] = {
+        "trace_k1": pa.array(_i64(vals, off, 0), pa.int64()),
+        "trace_k2": pa.array(_i64(vals, off, 2), pa.int64()),
+        "trace_id": _hex_fixed(vals[off[:, None] + np.arange(4)], 32),
+        "span_id": _hex_fixed(vals[off[:, None] + np.arange(4, 6)], 16),
+    }
 
-    if "parent_span_id" in want:
-        pwords = vals[off[:, None] + np.arange(6, 8)]
-        is_root = (pwords[:, 0] == 0) & (pwords[:, 1] == 0)  # (0,0) <=> NULL (decoder.rs:72-77)
-        parent_hex = _hex_fixed(pwords, 16)
-        if is_root.any():
-            mask = np.packbits(~is_root, bitorder="little")
-            parent_hex = pa.StringArray.from_buffers(
-                len(off),
-                parent_hex.buffers()[1],
-                parent_hex.buffers()[2],
-                pa.py_buffer(mask.tobytes()),
-                int(is_root.sum()),
-            )
-        out["parent_span_id"] = parent_hex
+    pwords = vals[off[:, None] + np.arange(6, 8)]
+    is_root = (pwords[:, 0] == 0) & (pwords[:, 1] == 0)  # (0,0) <=> NULL (decoder.rs:72-77)
+    parent_hex = _hex_fixed(pwords, 16)
+    if is_root.any():
+        mask = np.packbits(~is_root, bitorder="little")
+        parent_hex = pa.StringArray.from_buffers(
+            len(off),
+            parent_hex.buffers()[1],
+            parent_hex.buffers()[2],
+            pa.py_buffer(mask.tobytes()),
+            int(is_root.sum()),
+        )
+    out["parent_span_id"] = parent_hex
 
-    if "timestamp_ms" in want:
-        out["timestamp_ms"] = pa.array(_i64(vals, off, 8), pa.int64())
-    if "duration_ms" in want:
-        out["duration_ms"] = pa.array(_i64(vals, off, 10), pa.int64())
-    if "status_code" in want:
-        out["status_code"] = pa.array(vals[off + 12], pa.int32())
-    if "span_kind" in want:
-        out["span_kind"] = pa.array(vals[off + 13], pa.int32())
-    if "service_name" in want or "operation_name" in want:
-        svc_len = vals[off + HDR].astype(np.int64)
-        svc_start = off + HDR + 1
-        op_len_pos = svc_start + svc_len
-        if "service_name" in want:
-            out["service_name"] = _gather_strings(vals, svc_start, svc_len)
-        if "operation_name" in want:
-            op_len = vals[op_len_pos].astype(np.int64)
-            out["operation_name"] = _gather_strings(vals, op_len_pos + 1, op_len)
+    out["timestamp_ms"] = pa.array(_i64(vals, off, 8), pa.int64())
+    out["duration_ms"] = pa.array(_i64(vals, off, 10), pa.int64())
+    out["status_code"] = pa.array(vals[off + 12], pa.int32())
+    out["span_kind"] = pa.array(vals[off + 13], pa.int32())
+    svc_len = vals[off + HDR].astype(np.int64)
+    svc_start = off + HDR + 1
+    op_len_pos = svc_start + svc_len
+    out["service_name"] = _gather_strings(vals, svc_start, svc_len)
+    op_len = vals[op_len_pos].astype(np.int64)
+    out["operation_name"] = _gather_strings(vals, op_len_pos + 1, op_len)
     if not ok.all():
         ok_arr = pa.array(ok)
         out = {
@@ -205,25 +195,14 @@ def _parse_batch(tokens: pa.ListArray, fields: list[str] | None = None) -> dict[
     return out
 
 
-def parse_spans(
-    df: DataFrame,
-    keep_tokens: bool = True,
-    fields: list[str] | None = None,
-) -> DataFrame:
+def parse_spans(df: DataFrame, keep_tokens: bool = True) -> DataFrame:
     """tokenized (doc_id, tokens, n_tok, source) -> + parsed span columns.
 
     ``keep_tokens=False`` drops the wide array column INSIDE the Python stage
     (not after it) so it is never serialized back over Arrow — downstream
     aggregation then shuffles only narrow columns (the metadata-first pattern
     of docs/ARCHITECTURE_V2_ICEBERG.md:27-33).
-
-    ``fields`` prunes the decoded columns (e.g. ``["trace_id"]`` for the
-    routing side, which only needs the join key next to the raw tokens).
-    ``parse_ok`` is always emitted.
     """
-    out_fields = [
-        (n, t) for n, t in SPAN_FIELDS if fields is None or n in fields or n == "parse_ok"
-    ]
     in_fields = [
         (f.name, df.schema[f.name].dataType)
         for f in df.schema.fields
@@ -235,22 +214,21 @@ def parse_spans(
     )
     out_schema_ddl = ", ".join(
         [f"{n} {t.simpleString()}" for n, t in in_fields]
-        + [f"{n} {type_ddl[n]}" for n, _ in out_fields]
+        + [f"{n} {type_ddl[n]}" for n, _ in SPAN_FIELDS]
     )
-    parse_names = [n for n, _ in out_fields if n != "parse_ok"]
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             tokens = batch.column("tokens")
             if isinstance(tokens, pa.ChunkedArray):  # defensive; batches are flat
                 tokens = tokens.combine_chunks()
-            parsed = _parse_batch(tokens, parse_names)
+            parsed = _parse_batch(tokens)
             arrays, names = [], []
             for i, nm in enumerate(batch.schema.names):
                 if keep_tokens or nm != "tokens":
                     arrays.append(batch.column(i))
                     names.append(nm)
-            for nm, _ in out_fields:
+            for nm, _ in SPAN_FIELDS:
                 arrays.append(parsed[nm])
                 names.append(nm)
             yield pa.RecordBatch.from_arrays(arrays, names=names)
@@ -393,11 +371,11 @@ def parse_spans_jvm(
     Built from the same whole-stage-codegen expression family the routing
     side already uses (_i64_word/_hex_word/parse_ok_expr); the string
     payloads decode with char() over a token slice, which is the only
-    interpreted part (higher-order functions run outside codegen). Use
-    whichever side of that trade measures faster on the deployment: the
+    interpreted part (higher-order functions run outside codegen). The
     Arrow kernel pays the corpus crossing the JVM<->Python socket, this
-    variant pays interpreted per-character decode. Measured on this box
-    (bench0.1, 3.08M spans, min-of-3): see ROADMAP round-5 notes.
+    variant pays interpreted per-character decode: it wins when the names
+    are pruned and loses when every span's names are decoded (the module
+    docstring has the measured numbers).
     """
     t = F.col("tokens")
     ok = parse_ok_expr(t)

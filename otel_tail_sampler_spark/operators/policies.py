@@ -26,6 +26,9 @@ from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.functions.hashing import hash_frac
 
+# salt buckets of apply_rate_limit's first (salted) ranking level
+RATE_LIMIT_SALT_BUCKETS = 64
+
 KEEP, DROP = "keep", "drop"
 
 
@@ -277,9 +280,7 @@ def decide(traces: DataFrame, cfg: SamplerConfig) -> DataFrame:
     return out
 
 
-def apply_rate_limit(
-    decided: DataFrame, key: str, limit: int, salt_buckets: int = 64
-) -> DataFrame:
+def apply_rate_limit(decided: DataFrame, key: str, limit: int) -> DataFrame:
     """D8: among kept traces, keep at most ``limit`` per key; excess ->
     decision='overflow'. Deterministic uniform selection: the ``limit``
     smallest md5(trace_id||'rate_limit') per key survive (md5-hex ordering,
@@ -291,11 +292,12 @@ def apply_rate_limit(
     a hot service through one task forever — AQE skew handling applies to
     joins/aggregations, not windows):
 
-    1. salt level: rank within (key, salt=xxhash64(trace_id)%salt_buckets).
+    1. salt level: rank within
+       (key, salt=xxhash64(trace_id) % RATE_LIMIT_SALT_BUCKETS).
        A trace ranked > limit inside ANY salt bucket already has ``limit``
        same-key traces with smaller md5, so it is provably outside the global
        top-``limit`` — eliminated without ever co-locating the full key.
-    2. exact level: the survivors (<= limit * salt_buckets per key) get the
+    2. exact level: the survivors (<= limit * buckets per key) get the
        global per-key rank. Input to this window is bounded by the limit, not
        by the key's row count, so the single-task stage is O(limit * buckets).
 
@@ -311,7 +313,7 @@ def apply_rate_limit(
 
     w1 = Window.partitionBy(key, "_rl_salt").orderBy(ordv, F.col("trace_id"))
     lvl1 = kept.withColumn(
-        "_rl_salt", F.pmod(F.xxhash64("trace_id"), F.lit(salt_buckets))
+        "_rl_salt", F.pmod(F.xxhash64("trace_id"), F.lit(RATE_LIMIT_SALT_BUCKETS))
     ).withColumn("_r1", F.row_number().over(w1))
 
     w2 = Window.partitionBy(key).orderBy(ordv, F.col("trace_id"))

@@ -21,7 +21,7 @@ statistics and an exact fixed-point LINEAR likelihood ratio:
     raw_mass    = sum over doc bigrams of (r_f + 1)
     ratio_fp    = (S * target_mass * (R + B)) div (raw_mass * (T + B))
 
-with S = 2^scale_bits, B = n_buckets, T / R the target / raw corpus
+with S = 2^DSIR_SCALE_BITS, B = n_buckets, T / R the target / raw corpus
 bigram totals — i.e. the arithmetic-mean likelihood ratio
 ``(sum_f c_f p_t[f]) / (sum_f c_f p_r[f])`` in fixed point, a monotone
 domain-affinity signal computed entirely in integers (intermediates
@@ -57,6 +57,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _DEFAULT_BUCKETS = 1 << 16
+# fixed-point scale of the DSIR importance ratio: S = 2^DSIR_SCALE_BITS is 1.0
+DSIR_SCALE_BITS = 20
 
 
 def _bucket_counts_arrow(flagged: DataFrame, n_buckets: int) -> DataFrame:
@@ -176,7 +178,6 @@ def dsir_score(
     df: DataFrame,
     model: DataFrame,
     n_buckets: int = _DEFAULT_BUCKETS,
-    scale_bits: int = 20,
     keep_cols: tuple = (),
 ) -> DataFrame:
     """Score each document against a built DSIR model:
@@ -193,7 +194,7 @@ def dsir_score(
     Determinism precondition (shared with ``score_bigram_novelty``):
     the model is materialized once (collect/broadcast) and scoring runs
     in a later job; the model input must not mutate in between."""
-    s = 1 << scale_bits
+    s = 1 << DSIR_SCALE_BITS
 
     from typing import Iterator
 
@@ -297,7 +298,6 @@ def dsir_sample(
     model: DataFrame,
     rate: float,
     n_buckets: int = _DEFAULT_BUCKETS,
-    scale_bits: int = 20,
     keep_cols: tuple = (),
 ) -> DataFrame:
     """DSIR's importance RESAMPLING as a deterministic weighted Bernoulli
@@ -330,15 +330,9 @@ def dsir_sample(
     """
     if rate < 0:
         raise ValueError("rate must be >= 0")
-    s = 1 << scale_bits
+    s = 1 << DSIR_SCALE_BITS
     r_fp = int(round(rate * (1 << 20)))
-    scored = dsir_score(
-        df,
-        model,
-        n_buckets=n_buckets,
-        scale_bits=scale_bits,
-        keep_cols=keep_cols,
-    )
+    scored = dsir_score(df, model, n_buckets=n_buckets, keep_cols=keep_cols)
     h32 = F.conv(
         F.substring(
             F.md5(

@@ -7,8 +7,8 @@ TakeOrderedAndProject for orderBy+limit (no full sort at scale), and the
 aggregations are two-phase hash aggs.
 
 ``register_views`` + ``query_sql`` give the S6 'SQL-on-lake' surface
-(iceberg.rs:171-181): arbitrary ANSI SQL over the registered ``spans`` /
-``traces`` views via spark.sql.
+(iceberg.rs:171-181): arbitrary ANSI SQL over the registered ``spans``
+view via spark.sql.
 """
 
 from __future__ import annotations
@@ -57,11 +57,12 @@ def service_stats(spans: DataFrame) -> DataFrame:
     )
 
 
-def service_stats_approx(spans: DataFrame, rsd: float = 0.05) -> DataFrame:
-    """The 100 TB variant: HLL++ distinct counts, no exact-distinct shuffle."""
+def service_stats_approx(spans: DataFrame) -> DataFrame:
+    """The 100 TB variant: HLL++ distinct counts (5% relative standard
+    deviation), no exact-distinct shuffle."""
     return spans.groupBy("service_name").agg(
         F.count(F.lit(1)).alias("span_count"),
-        F.approx_count_distinct("trace_id", rsd).alias("trace_count"),
+        F.approx_count_distinct("trace_id", 0.05).alias("trace_count"),
         F.avg("duration_ms").alias("avg_duration_ms"),
         F.max("duration_ms").alias("max_duration_ms"),
         F.sum(F.when(F.col("status_code") == 2, 1).otherwise(0)).alias("error_count"),
@@ -96,15 +97,13 @@ def service_latency_percentiles(spans: DataFrame) -> DataFrame:
     )
 
 
-def service_latency_percentiles_approx(
-    spans: DataFrame, accuracy: int = 10_000
-) -> DataFrame:
+def service_latency_percentiles_approx(spans: DataFrame) -> DataFrame:
     """The 100 TB variant: percentile_approx (Greenwald-Khanna sketch,
     bounded memory, partial-aggregable map-side) — rank error <=
-    1/accuracy. Not oracle-checkable (sketch internals differ per engine);
+    1/10,000. Not oracle-checkable (sketch internals differ per engine);
     the exact twin above is the correctness reference."""
     aggs = [
-        F.percentile_approx("duration_ms", p, accuracy).alias(f"p{round(p * 100)}")
+        F.percentile_approx("duration_ms", p, 10_000).alias(f"p{round(p * 100)}")
         for p in LATENCY_PERCENTILES
     ]
     return (
@@ -114,11 +113,9 @@ def service_latency_percentiles_approx(
     )
 
 
-def register_views(spark: SparkSession, spans: DataFrame, traces: DataFrame | None = None) -> None:
-    """S6: expose the lake tables to ad-hoc spark.sql (iceberg.rs:133-150)."""
+def register_views(spark: SparkSession, spans: DataFrame) -> None:
+    """S6: expose the span table to ad-hoc spark.sql (iceberg.rs:133-150)."""
     spans.createOrReplaceTempView("spans")
-    if traces is not None:
-        traces.createOrReplaceTempView("traces")
 
 
 def query_sql(spark: SparkSession, sql: str) -> DataFrame:

@@ -17,6 +17,9 @@ idempotent primitives:
   bucket AFTER its sink data is committed; a resumed run reads the manifest
   and filters completed buckets out of the scan, BEFORE the parse, so their
   parse/assembly/join cost is never paid again;
+* each manifest row records the bucket count it was hashed with: a bucket
+  id names a different set of traces under another count, so a resume at
+  another ``n_buckets`` raises instead of skipping spans it never wrote;
 * the buckets still to do run through the flagship DAG itself
   (plans.pipeline.run_pipeline over the bucket-filtered scan): the
   resumable job and the benchmarked job are one program.
@@ -40,7 +43,9 @@ from otel_tail_sampler_spark.operators.parser import trace_key_exprs
 from otel_tail_sampler_spark.operators.policies import SamplerConfig
 from otel_tail_sampler_spark.plans.pipeline import read_tokenized, run_pipeline
 
-MANIFEST_SCHEMA = "bucket int, status string, rows long, committed_at_ms long"
+MANIFEST_SCHEMA = (
+    "bucket int, status string, rows long, committed_at_ms long, n_buckets int"
+)
 
 
 def bucket_col(n_buckets: int):
@@ -58,11 +63,22 @@ def bucket_col(n_buckets: int):
     ).cast("int")
 
 
-def read_manifest(spark: SparkSession, ckpt_dir: str) -> set[int]:
+def read_manifest(spark: SparkSession, ckpt_dir: str, n_buckets: int) -> set[int]:
+    """Bucket ids the manifest marks done. Raises ValueError when the
+    manifest was written at another bucket count (rows from before the
+    count was recorded read it as null and are not checked)."""
     try:
         rows = spark.read.schema(MANIFEST_SCHEMA).parquet(ckpt_dir).collect()
     except Exception:
         return set()
+    recorded = {r["n_buckets"] for r in rows} - {None, n_buckets}
+    if recorded:
+        raise ValueError(
+            f"checkpoint {ckpt_dir} was written with n_buckets="
+            f"{sorted(recorded)}, not {n_buckets}: resume with the same "
+            "bucket count, or delete the checkpoint and the routed output "
+            "to start over"
+        )
     return {r["bucket"] for r in rows if r["status"] == "done"}
 
 
@@ -86,7 +102,7 @@ def run_resumable(
     completes exactly the remaining buckets."""
     ckpt_dir = os.path.join(out_dir, "_checkpoint")
     routed_dir = os.path.join(out_dir, "routed")
-    done = read_manifest(spark, ckpt_dir)
+    done = read_manifest(spark, ckpt_dir, n_buckets)
     remaining = [b for b in range(n_buckets) if b not in done]
     if not remaining:
         return ResumableResult([], sorted(done), {})
@@ -137,7 +153,8 @@ def run_resumable(
     # manifest append AFTER data commit
     now_ms = int(time.time() * 1000)
     manifest_rows = [
-        (int(b), "done", int(per_bucket.get(b, 0)), now_ms) for b in remaining
+        (int(b), "done", int(per_bucket.get(b, 0)), now_ms, n_buckets)
+        for b in remaining
     ]
     local_table(spark, manifest_rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
         "append"

@@ -1,8 +1,9 @@
 """Silver-table pattern: parse once, bucket by the standing join key,
 re-decide shuffle-free.
 
-The expensive STAGE of the pipeline is the Arrow parse; the expensive
-EXCHANGE is the assembly groupBy on (trace_k1, trace_k2). Materializing the
+The expensive STAGE of the pipeline is the parse (parse_spans_jvm, whose
+per-character name decode runs interpreted); the expensive EXCHANGE is the
+assembly groupBy on (trace_k1, trace_k2). Materializing the
 parsed spans once as a Spark bucketed table on exactly that key makes every
 later pass over them — re-assembly under a new policy config (the common
 operation: rule updates arrive through operators.rule_store), force-rule
@@ -38,7 +39,7 @@ def materialize_parsed(
     path: str | None = None,
 ) -> DataFrame:
     """Parse the tokenized spans and persist them as a bucketed+sorted
-    parquet table on the trace key. One Arrow pass, ever; the token column
+    parquet table on the trace key. One parse pass, ever; the token column
     is NOT carried (it stays in the bronze table — routing re-derives keys
     JVM-side from there, parser.with_routing_key)."""
     if isinstance(tokenized, str):
@@ -70,6 +71,6 @@ def redecide_from_silver(
     spark: SparkSession, table: str, cfg: SamplerConfig
 ) -> DataFrame:
     """The rule-update fast path: evaluate a NEW policy config against the
-    already-parsed corpus. No Arrow stage, no assembly exchange — this is
-    why the silver table exists."""
+    already-parsed corpus. No parse, no assembly exchange — this is why
+    the silver table exists."""
     return decide(assemble_from_silver(spark, table), cfg)

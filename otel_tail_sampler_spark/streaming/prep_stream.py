@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _quality_gate(docs: DataFrame, min_words: int) -> DataFrame:
+def _quality_gate(docs: DataFrame) -> DataFrame:
     """Stateless per-row quality gate (streaming-legal: no aggregation).
     Same signals as the batch prepare_corpus chain — word-count bounds and
     the duplicated-word fraction — as pure expressions."""
@@ -59,7 +59,7 @@ def _quality_gate(docs: DataFrame, min_words: int) -> DataFrame:
         6,
     )
     return docs.filter(
-        (n_words >= int(min_words))
+        (n_words >= 5)
         & (n_words <= 5000)
         & (dup_frac <= 0.6)
     )
@@ -113,12 +113,10 @@ def run_prep_stream(
     documents_dir: str,
     out_dir: str,
     vocab_size: int = 65536,
-    min_words: int = 5,
     available_now: bool = True,
     schema=None,
     dsir_model=None,
     dsir_rate: float = 1.0,
-    dsir_n_buckets: int = 1 << 16,
     ref_digests: DataFrame | None = None,
 ):
     """Wire the streaming prep leg end-to-end over a documents directory
@@ -138,7 +136,7 @@ def run_prep_stream(
     ``documents_dir`` and throws on an empty directory.
 
     ``dsir_model`` (optional): a BATCH (bucket, t_freq, r_freq) model
-    from build_dsir_model* — the offline-trained / online-applied
+    from build_dsir_model* at its default bucket count — the offline-trained / online-applied
     pattern: the model collects into the arrow scoring kernel at
     composition time and each micro-batch is importance-resampled at
     ``dsir_rate`` (exact md5 acceptance, dedup state never sees
@@ -153,7 +151,7 @@ def run_prep_stream(
     if schema is None:
         schema = spark.read.parquet(documents_dir).schema
     docs = spark.readStream.schema(schema).parquet(documents_dir)
-    gated = _quality_gate(docs, min_words=min_words)
+    gated = _quality_gate(docs)
     select_fn = None
     if dsir_model is not None:
         from otel_tail_sampler_spark.operators.selection import dsir_sample
@@ -163,7 +161,6 @@ def run_prep_stream(
                 toks,
                 dsir_model,
                 rate=dsir_rate,
-                n_buckets=dsir_n_buckets,
                 keep_cols=("source", "n_tok", "tokens", "_digest"),
             ).drop("n_feat", "target_mass", "raw_mass")
 

@@ -17,7 +17,11 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run_level(cores: int, dataset: str, repeats: int) -> dict:
+def run_level(job: str, cores: int, dataset: str, repeats: int) -> dict:
+    """Run ``scripts/<job>`` under spark-submit at local[cores] in its own
+    capped JVM; return the last JSON line it prints. The scaling protocols
+    (this one, prep_scaling.py, selection_scaling.py) all measure through
+    this."""
     cmd = [
         "spark-submit",
         "--master", f"local[{cores}]",
@@ -30,7 +34,7 @@ def run_level(cores: int, dataset: str, repeats: int) -> dict:
         f"-XX:ActiveProcessorCount={cores} "
         f"-XX:MaxDirectMemorySize={max(2, cores // 4)}g",
         "--driver-memory", "16g",
-        os.path.join(REPO, "scripts", "scaling_job.py"),
+        os.path.join(REPO, "scripts", job),
         str(cores), dataset, str(repeats),
     ]
     out = subprocess.run(
@@ -56,7 +60,7 @@ def main() -> None:
     runs = {}
     for c in levels:
         try:
-            runs[c] = run_level(c, dataset, repeats)
+            runs[c] = run_level("scaling_job.py", c, dataset, repeats)
             print(json.dumps(runs[c]))
         except Exception as ex:  # a failed level must not void the others
             print(f"LEVEL {c} FAILED: {str(ex)[:500]}")

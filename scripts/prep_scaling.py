@@ -11,32 +11,9 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def run_level(cores: int, dataset: str, repeats: int) -> dict:
-    cmd = [
-        "spark-submit",
-        "--master", f"local[{cores}]",
-        # same JVM capping rationale as bench_scaling.py: a faithful N-core
-        # executor analog sizes GC/JIT/direct memory for N, not for the box
-        "--driver-java-options",
-        f"-XX:ActiveProcessorCount={cores} "
-        f"-XX:MaxDirectMemorySize={max(2, cores // 4)}g",
-        "--driver-memory", "16g",
-        os.path.join(REPO, "scripts", "prep_scaling_job.py"),
-        str(cores), dataset, str(repeats),
-    ]
-    out = subprocess.run(
-        cmd, capture_output=True, text=True, cwd=REPO, timeout=1800
-    )
-    for line in reversed(out.stdout.strip().splitlines()):
-        if line.startswith("{"):
-            return json.loads(line)
-    raise RuntimeError(f"no JSON from local[{cores}]: {out.stderr[-2000:]}")
+from bench_scaling import REPO, run_level
 
 
 def main() -> None:
@@ -52,7 +29,7 @@ def main() -> None:
     runs = {}
     for c in levels:
         try:
-            runs[c] = run_level(c, dataset, repeats)
+            runs[c] = run_level("prep_scaling_job.py", c, dataset, repeats)
             print(json.dumps(runs[c]))
         except Exception as ex:
             print(f"LEVEL {c} FAILED: {str(ex)[:500]}")

@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.operators.assembly import assemble_traces
 from otel_tail_sampler_spark.operators.export import (
+    EXPORT_BATCH_SIZE,
     buffer_stats,
     export_batches,
     span_export_projection,
@@ -51,7 +52,7 @@ def test_service_stats_exact_vs_approx(spans):
     exact = {r["service_name"]: r["trace_count"] for r in service_stats(spans).collect()}
     approx = {
         r["service_name"]: r["trace_count"]
-        for r in service_stats_approx(spans, rsd=0.02).collect()
+        for r in service_stats_approx(spans).collect()
     }
     for svc, n in exact.items():
         assert abs(approx[svc] - n) <= max(3, 0.1 * n)
@@ -88,13 +89,13 @@ def test_service_percentiles_exact_and_approx(spans):
     )
     approx = {
         r["service_name"]: r
-        for r in service_latency_percentiles_approx(spans, accuracy=1000).collect()
+        for r in service_latency_percentiles_approx(spans).collect()
     }
-    # the sketch's contract is RANK error <= 1/accuracy — duration is
-    # heavy-tailed, so a VALUE bound would be meaningless at p99; assert
+    # the sketch's contract is RANK error <= 1/accuracy (10,000) — duration
+    # is heavy-tailed, so a VALUE bound would be meaningless at p99; assert
     # the approx value sits within the exact order statistics at ranks
     # (p +/- 1/accuracy) per service
-    eps = 1.0 / 1000
+    eps = 1.0 / 10_000
     by_svc = {
         s: np.sort(
             np.array(
@@ -120,7 +121,7 @@ def test_service_percentiles_exact_and_approx(spans):
 
 
 def test_sql_facade(spark, spans, traces):
-    register_views(spark, spans, traces)
+    register_views(spark, spans)
     out = query_sql(
         spark,
         "SELECT service_name, COUNT(*) AS c, SUM(CASE WHEN status_code = 2 "
@@ -128,7 +129,8 @@ def test_sql_facade(spark, spans, traces):
     ).collect()
     assert sum(r["c"] for r in out) == spans.count()
     slow = query_sql(
-        spark, "SELECT trace_id FROM traces ORDER BY max_duration_ms DESC LIMIT 1"
+        spark,
+        "SELECT trace_id FROM spans ORDER BY duration_ms DESC, trace_id LIMIT 1",
     ).collect()[0]["trace_id"]
     assert slow == slowest_traces(traces, 1).collect()[0]["trace_id"]
 
@@ -147,10 +149,11 @@ def test_span_export_projection(spans):
 
 
 def test_export_batches(spans):
-    out = export_batches(span_export_projection(spans), batch_size=50)
+    out = export_batches(span_export_projection(spans))
     sizes = out.groupBy("export_partition", "export_batch").count()
-    assert sizes.filter(F.col("count") > 50).count() == 0
-    assert sizes.count() > 1
+    assert sizes.filter(F.col("count") > EXPORT_BATCH_SIZE).count() == 0
+    # some partition holds more than one batch, so the chunking ran
+    assert sizes.filter(F.col("export_batch") > 0).count() > 0
 
 
 def test_buffer_stats(spans):

@@ -39,14 +39,16 @@ def test_partial_resume_completes_remaining(spark, small_dataset, tmp_path):
     want = _routed_counts(ref_out)
 
     out = str(tmp_path / "resumed")
-    fake_done = [(b, "done", 0, 0) for b in range(4)]
+    fake_done = [(b, "done", 0, 0, N_BUCKETS) for b in range(4)]
     spark.createDataFrame(fake_done, MANIFEST_SCHEMA).write.mode("append").parquet(
         f"{out}/_checkpoint"
     )
     r = run_resumable(spark, small_dataset["tokenized"], out, n_buckets=N_BUCKETS)
     assert r.processed_buckets == [4, 5, 6, 7]
     assert r.skipped_buckets == [0, 1, 2, 3]
-    assert read_manifest(spark, f"{out}/_checkpoint") == set(range(N_BUCKETS))
+    assert read_manifest(spark, f"{out}/_checkpoint", N_BUCKETS) == set(
+        range(N_BUCKETS)
+    )
 
     # buckets 0-3 were never really written: only 4-7 exist on disk
     got_buckets = set(
@@ -64,6 +66,27 @@ def test_partial_resume_completes_remaining(spark, small_dataset, tmp_path):
     r3 = run_resumable(spark, small_dataset["tokenized"], out, n_buckets=N_BUCKETS)
     assert r3.processed_buckets == list(range(N_BUCKETS))
     assert _routed_counts(out) == want
+
+
+def test_resume_with_another_bucket_count_raises(spark, small_dataset, tmp_path):
+    """Bucket ids mean different trace sets under another bucket count: a
+    resume at 16 over buckets committed at 8 would filter the scan with the
+    wrong hash and skip spans it never wrote. It must raise and write
+    nothing."""
+    out = str(tmp_path / "out")
+    r = run_resumable(spark, small_dataset["tokenized"], out, n_buckets=N_BUCKETS)
+    assert r.processed_buckets == list(range(N_BUCKETS))
+    manifest = sorted(
+        tuple(row) for row in spark.read.parquet(f"{out}/_checkpoint").collect()
+    )
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_resumable(spark, small_dataset["tokenized"], out, n_buckets=16)
+    assert sorted(
+        tuple(row) for row in spark.read.parquet(f"{out}/_checkpoint").collect()
+    ) == manifest
+    # the recorded count still resumes (nothing left to do)
+    again = run_resumable(spark, small_dataset["tokenized"], out, n_buckets=N_BUCKETS)
+    assert again.processed_buckets == []
 
 
 def test_bucket_is_trace_aligned(spark, small_dataset):
@@ -100,7 +123,7 @@ def test_resume_preserves_prior_buckets_under_static_overwrite(
 
     # forge a crash: manifest says only 0-3 done, but ALL bucket data exists
     shutil.rmtree(f"{out}/_checkpoint")
-    fake_done = [(b, "done", 0, 0) for b in range(4)]
+    fake_done = [(b, "done", 0, 0, N_BUCKETS) for b in range(4)]
     spark.createDataFrame(fake_done, MANIFEST_SCHEMA).write.mode("append").parquet(
         f"{out}/_checkpoint"
     )

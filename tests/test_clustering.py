@@ -10,6 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.operators import clustering
 from otel_tail_sampler_spark.operators.clustering import (
     _tdiv,
     kmeans_assign,
@@ -157,15 +158,14 @@ def test_kmeans_rejects_ragged_vectors(spark):
         kmeans_assign(df, [[0, 0]]).collect()
 
 
-def test_semantic_dedup_anchor_cap_bounds_hot_cluster(spark):
+def test_semantic_dedup_anchor_cap_bounds_hot_cluster(spark, monkeypatch):
     # degenerate cluster: 200 near-identical vectors all land in one
     # cluster — uncapped fanout is |C|^2; the anchor cap keeps the exact
     # answer here (every member is a near-dup of anchor id 0)
+    monkeypatch.setattr(clustering, "MAX_CLUSTER_ANCHORS", 8)
     vecs = [[100, 1]] * 200
     df = _qdf(spark, vecs)
-    out = semantic_dedup(
-        df, k=1, iters=1, tau=(19, 20), max_cluster_anchors=8
-    )
+    out = semantic_dedup(df, k=1, iters=1, tau=(19, 20))
     assert sorted(r["vec_id"] for r in out.collect()) == [0]
 
 
@@ -180,16 +180,9 @@ def test_semantic_dedup_default_path_is_capped(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("WindowGroupLimit") >= 2  # rank<=256 two-phased
     assert sorted(r["vec_id"] for r in out.collect()) == [0]
-    # explicit None opt-out restores the uncapped exact plan
-    exact = semantic_dedup(
-        df, k=1, iters=1, tau=(19, 20), max_cluster_anchors=None
-    )
-    assert "WindowGroupLimit" not in (
-        exact._jdf.queryExecution().executedPlan().toString()
-    )
 
 
-def test_semantic_dedup_cap_is_exact_at_or_under_cap(spark):
+def test_semantic_dedup_cap_is_exact_at_or_under_cap(spark, monkeypatch):
     # cluster sizes <= cap: capped result must equal the exact all-pairs
     # result (every pair's smaller id is inside the anchor set)
     vecs = [[100, 0], [0, 100], [100, 0], [99, 5], [0, 0]]
@@ -198,21 +191,21 @@ def test_semantic_dedup_cap_is_exact_at_or_under_cap(spark):
         r["vec_id"]
         for r in semantic_dedup(df, k=2, iters=1, tau=(19, 20)).collect()
     )
+    monkeypatch.setattr(clustering, "MAX_CLUSTER_ANCHORS", 5)
     capped = sorted(
         r["vec_id"]
-        for r in semantic_dedup(
-            df, k=2, iters=1, tau=(19, 20), max_cluster_anchors=5
-        ).collect()
+        for r in semantic_dedup(df, k=2, iters=1, tau=(19, 20)).collect()
     )
     assert capped == exact == [0, 1, 4]
 
 
-def test_semantic_dedup_cap_plan_two_phase_window(spark):
+def test_semantic_dedup_cap_plan_two_phase_window(spark, monkeypatch):
     # the anchor rank<=cap window must two-phase via InferWindowGroupLimit
     # (partial group limit below the exchange — no hot-key single task)
+    monkeypatch.setattr(clustering, "MAX_CLUSTER_ANCHORS", 4)
     df = _qdf(spark, [[i, i + 1] for i in range(8)])
     plan = (
-        semantic_dedup(df, k=2, iters=1, max_cluster_anchors=4)
+        semantic_dedup(df, k=2, iters=1)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -232,7 +225,7 @@ def test_semantic_dedup_plan_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_kmeans_driver_and_distributed_fit_agree(spark):
+def test_kmeans_driver_and_distributed_fit_agree(spark, monkeypatch):
     # the small-input driver-side Lloyd's (round-7 fast path) must be
     # bit-identical to the distributed partial-sum path on the same input
     vecs = [
@@ -240,21 +233,20 @@ def test_kmeans_driver_and_distributed_fit_agree(spark):
         for i in range(80)
     ]
     df = _qdf(spark, vecs)
-    driver_c = kmeans_fit(df, k=5, iters=3)  # 80 <= default threshold
-    dist_c = kmeans_fit(df, k=5, iters=3, driver_fit_threshold=0)
+    driver_c = kmeans_fit(df, k=5, iters=3)  # 80 <= DRIVER_FIT_THRESHOLD
+    monkeypatch.setattr(clustering, "DRIVER_FIT_THRESHOLD", 0)
+    dist_c = kmeans_fit(df, k=5, iters=3)
     assert driver_c == dist_c == _ref_kmeans(vecs, k=5, iters=3)
 
 
-def test_kmeans_distributed_fit_edge_cases(spark):
+def test_kmeans_distributed_fit_edge_cases(spark, monkeypatch):
     # the distributed path must keep the planted edge semantics too
     # (tie -> lowest cluster, empty cluster keeps its init centroid)
+    monkeypatch.setattr(clustering, "DRIVER_FIT_THRESHOLD", 0)
     df = _qdf(spark, [[3, 3]] * 5)
-    assert kmeans_fit(df, k=2, iters=2, driver_fit_threshold=0) == [
-        [3, 3],
-        [3, 3],
-    ]
+    assert kmeans_fit(df, k=2, iters=2) == [[3, 3], [3, 3]]
     with pytest.raises(ValueError):
-        kmeans_fit(_qdf(spark, []), k=2, driver_fit_threshold=0)
+        kmeans_fit(_qdf(spark, []), k=2)
 
 
 def _ref_semantic_dedup(vecs, clusters, tau):

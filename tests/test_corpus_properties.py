@@ -43,7 +43,7 @@ def test_remap_matches_reference(spark, corpus, min_freq):
     )
     got = {
         r["doc_id"]: (list(r["tokens"]), r["n_unk"])
-        for r in remap_rare_tokens(df, min_freq=min_freq, unk_id=-1).collect()
+        for r in remap_rare_tokens(df, min_freq=min_freq).collect()
     }
     want = _ref_remap(corpus, min_freq, -1)
     assert got == {i: w for i, w in enumerate(want)}
@@ -116,7 +116,7 @@ def test_build_vocab_encode_matches_reference(spark, corpus, vocab_size):
     vocab = build_vocab(df, vocab_size=vocab_size)
     got = {
         r["doc_id"]: (list(r["tokens"]), r["n_unk"])
-        for r in encode_with_vocab(df, vocab, unk_id=-1).collect()
+        for r in encode_with_vocab(df, vocab).collect()
     }
     want = _ref_encode(corpus, vocab_size, -1)
     assert got == {i: w for i, w in enumerate(want)}
@@ -226,7 +226,6 @@ def test_subrange_rank_matches_scalar_order(spark, rows, reset, use_value):
         "doc_id",
         "proptest",
         1,
-        group_sort_key=lambda g: g,
         reset_per_group=reset,
         value_col="val" if use_value else None,
     )

@@ -16,9 +16,12 @@ from pyspark.sql.types import (
 from otel_tail_sampler_spark.functions.matchers import compile_matcher
 from otel_tail_sampler_spark.operators.force_rules import apply_force_rules
 
+# traces are keyed on (trace_k1, trace_k2), the pipeline's one trace key;
+# trace Tn is (0, n), and trace_id is only the traces' readable label
 SPAN_SCHEMA = StructType(
     [
-        StructField("trace_id", StringType()),
+        StructField("trace_k1", LongType()),
+        StructField("trace_k2", LongType()),
         StructField("span_id", StringType()),
         StructField("service_name", StringType()),
         StructField("operation_name", StringType()),
@@ -31,6 +34,8 @@ SPAN_SCHEMA = StructType(
 TRACE_SCHEMA = StructType(
     [
         StructField("trace_id", StringType()),
+        StructField("trace_k1", LongType()),
+        StructField("trace_k2", LongType()),
         StructField("service_name", StringType()),
         StructField("span_count", LongType()),
         StructField("has_error", BooleanType()),
@@ -42,13 +47,13 @@ TRACE_SCHEMA = StructType(
 @pytest.fixture(scope="module")
 def attr_spans(spark):
     rows = [
-        ("T1", "s1", "payment-service", "http.request", 100, 0,
+        (0, 1, "s1", "payment-service", "http.request", 100, 0,
          {"tenant.id": "acme", "http.url": "https://x/api/v2/pay", "http.status_code": "502"}),
-        ("T2", "s2", "user-service", "http.request", 50, 0,
+        (0, 2, "s2", "user-service", "http.request", 50, 0,
          {"tenant.id": "other", "http.route": "/users/123"}),
-        ("T3", "s3", "user-service", "grpc", 50, 0,
+        (0, 3, "s3", "user-service", "grpc", 50, 0,
          {"rpc.method": "GetUser"}),
-        ("T4", "s4", "search-service", "http.request", 10, 0, {}),
+        (0, 4, "s4", "search-service", "http.request", 10, 0, {}),
     ]
     return spark.createDataFrame(rows, SPAN_SCHEMA)
 
@@ -69,18 +74,18 @@ def attr_spans(spark):
 )
 def test_matcher_ops(attr_spans, matcher, expected):
     got = {
-        r["trace_id"]
-        for r in attr_spans.filter(compile_matcher(matcher)).select("trace_id").collect()
+        f"T{r['trace_k2']}"
+        for r in attr_spans.filter(compile_matcher(matcher)).select("trace_k2").collect()
     }
     assert got == expected
 
 
 def _traces(spark):
     rows = [
-        ("T1", "payment-service", 3, False, 100),
-        ("T2", "user-service", 3, False, 50),
-        ("T3", "user-service", 3, True, 50),
-        ("T4", "search-service", 1, False, 10),
+        ("T1", 0, 1, "payment-service", 3, False, 100),
+        ("T2", 0, 2, "user-service", 3, False, 50),
+        ("T3", 0, 3, "user-service", 3, True, 50),
+        ("T4", 0, 4, "search-service", 1, False, 10),
     ]
     return spark.createDataFrame(rows, TRACE_SCHEMA)
 
@@ -179,8 +184,8 @@ def test_rule_store_crud_and_reload(spark, attr_spans, tmp_path):
     path = str(tmp_path / "rules")
     traces = spark.createDataFrame(
         [
-            ("T1", "payment-service", 3, False, 100),
-            ("T2", "user-service", 3, False, 100),
+            ("T1", 0, 1, "payment-service", 3, False, 100),
+            ("T2", 0, 2, "user-service", 3, False, 100),
         ],
         TRACE_SCHEMA,
     )

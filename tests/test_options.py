@@ -1,12 +1,13 @@
 """No option that no caller sets (ROADMAP aim 2).
 
 Every library parameter with a default must be set by at least one call
-somewhere in the repository, or sit on ``ALLOWED`` with the reason it
-exists without one. The audit parses source only; it starts no Spark
-session.
+outside ``tests/``, or sit on ``ALLOWED`` with the reason it exists
+without one. A test is not a caller: an option only a test sets is a
+constant the test can monkeypatch. The audit parses source only; it
+starts no Spark session.
 
-A parameter with a default is *passed* when some call of its function sets
-it: by keyword, by a positional argument at or past its index, or through
+A parameter with a default is *passed* when some non-test call of its
+function sets it: by keyword, by a positional argument at or past its index, or through
 ``*args``/``**kw`` (which counts as setting every parameter).
 ``functools.partial(f, ...)`` counts as a call of ``f``. Calls are matched
 to functions by name only, so functions that share a name across modules
@@ -21,10 +22,13 @@ import warnings
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "otel_tail_sampler_spark"
-CALLER_DIRS = (PACKAGE, "tests", "scripts", "perfbench")
+CALLER_DIRS = (PACKAGE, "scripts", "perfbench")
 CALLER_FILES = ("bench.py", "bench_extra.py", "__spark_entry__.py")
+TESTS = "tests/"
 
-# (module, function, parameter) -> why the option has no caller here
+# (module, function, parameter) -> why the option has no non-test caller.
+# Each reason is a deployment setting, a clock injection, a job input or a
+# safety record.
 ALLOWED = {
     ("otel_tail_sampler_spark/operators/routing.py", "write_routed", "fmt"):
         "deployment setting: the sink format (parquet here, a lake table "
@@ -51,7 +55,39 @@ ALLOWED = {
         "clock injection: lets a caller evaluate rule expiry at a fixed time",
     ("otel_tail_sampler_spark/plans/checkpoint.py", "run_resumable",
      "force_rules"):
-        "the resumable job's rule-set input, matching run_and_write's",
+        "job input: the resumable job's rule set, matching run_and_write's",
+    ("otel_tail_sampler_spark/plans/checkpoint.py", "run_resumable", "cfg"):
+        "job input: the resumable job's sampler config, matching "
+        "run_and_write's",
+    ("otel_tail_sampler_spark/plans/checkpoint.py", "run_resumable",
+     "n_buckets"):
+        "deployment setting: the resume granularity, sized to the input "
+        "(the checkpoint manifest records it)",
+    ("otel_tail_sampler_spark/plans/corpus_prep.py", "run_corpus_prep",
+     "rates"):
+        "job input: the per-source mixture rates of the prep run",
+    ("otel_tail_sampler_spark/streaming/prep_stream.py", "run_prep_stream",
+     "ref_digests"):
+        "job input: digests of the standing corpus the stream dedups against",
+    ("otel_tail_sampler_spark/streaming/prep_stream.py", "run_prep_stream",
+     "schema"):
+        "deployment setting: the stream schema, pinned when the stream "
+        "starts before producers write the first file",
+    ("otel_tail_sampler_spark/streaming/stream_job.py",
+     "run_streaming_pipeline", "route_spans_from"):
+        "deployment setting: path of the bronze table kept spans are "
+        "exported from",
+    ("otel_tail_sampler_spark/operators/corpus.py", "rates_for_budget",
+     "weights"):
+        "job input: the target source mixture the budget is split by "
+        "(temperature_weights' output)",
+    ("otel_tail_sampler_spark/operators/enrichment.py", "mark_exported",
+     "exported_at_ms"):
+        "clock injection: the export time stamped on the manifest rows",
+    ("otel_tail_sampler_spark/operators/packing.py", "write_shards",
+     "manifest"):
+        "safety record: the per-shard integrity manifest a loader verifies "
+        "the written shards against",
 }
 
 
@@ -134,10 +170,12 @@ class _Collector(ast.NodeVisitor):
 
 def never_passed(sources: dict[str, str]) -> set[tuple[str, str, str]]:
     """(module, function, parameter) for every library parameter with a
-    default that no call in ``sources`` sets."""
+    default that no non-test call in ``sources`` sets."""
     defs: dict = {}
     calls: dict = {}
     for path, src in sources.items():
+        if path.startswith(TESTS):
+            continue
         with warnings.catch_warnings():
             # invalid escapes in scanned files' string literals are theirs
             warnings.simplefilter("ignore", DeprecationWarning)
@@ -184,17 +222,21 @@ def test_audit_rules_on_planted_sources():
             "    def __init__(self, n=1):\n        pass\n"
             "    def m(self, y=0, z=0):\n        pass\n"
         ),
-        "tests/test_planted.py": (
+        "scripts/planted.py": (
             "from functools import partial\n"
             "op(df, 10, c=30)\n"
             "partial(op, d=40)\n"
             "K().m(1)\n"
         ),
+        # a test is not a caller: lone(x=) and K(n=) stay unset
+        "tests/test_planted.py": "lone(x=1)\nK(n=2)\n",
     }
     got = {(f, p) for _m, f, p in never_passed(src)}
     # a: positional; c: keyword; d: through partial; y: bound-method
     # positional; fwd's **kw is a call with **, setting all of op's
     assert got == {("lone", "x"), ("__init__", "n"), ("m", "z")}
+    src["scripts/planted.py"] += "lone(x=1)\n"
+    assert ("lone", "x") not in {(f, p) for _m, f, p in never_passed(src)}
     src[lib] = src[lib].replace("return op(df, **kw)", "return None")
     got = {(f, p) for _m, f, p in never_passed(src)}
     assert {("op", "b"), ("op", "e")} <= got

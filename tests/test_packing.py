@@ -192,17 +192,20 @@ def test_prepare_corpus_chain(spark):
     assert out[0]["n_words"] == 30 and out[0]["dup_word_frac"] == 0.0
 
 
-def test_split_corpus_deterministic_and_nested(spark):
+def test_split_corpus_deterministic_and_nested(spark, monkeypatch):
+    from otel_tail_sampler_spark.operators import corpus
     from otel_tail_sampler_spark.operators.corpus import split_corpus
 
     docs = spark.range(2000).withColumnRenamed("id", "doc_id")
-    a = split_corpus(docs, train=0.8, val=0.1).toPandas()
+    a = split_corpus(docs).toPandas()
     counts = a["split"].value_counts()
     # roughly 80/10/10 (hash-uniform)
     assert 1500 < counts["train"] < 1700
     assert 120 < counts["val"] < 280 and 120 < counts["test"] < 280
     # growing train only promotes: no doc ever LEAVES train
-    b = split_corpus(docs, train=0.9, val=0.05).toPandas()
+    monkeypatch.setattr(corpus, "SPLIT_TRAIN", 0.9)
+    monkeypatch.setattr(corpus, "SPLIT_VAL", 0.05)
+    b = split_corpus(docs).toPandas()
     tr_a = set(a[a["split"] == "train"]["doc_id"])
     tr_b = set(b[b["split"] == "train"]["doc_id"])
     assert tr_a <= tr_b
@@ -411,20 +414,13 @@ def test_form_batches_edges_and_empty(spark):
 # ---------------------------------------------------------------------------
 
 
-def _curr_ref(rows, n_phases, seed="curriculum", descending=False):
+def _curr_ref(rows, n_phases, seed="curriculum"):
     import hashlib
 
     def h(did):
         return hashlib.md5(f"{did}|{seed}".encode()).hexdigest()
 
-    order = sorted(
-        rows,
-        key=lambda r: (
-            -r[1] if descending else r[1],
-            h(r[0]),
-            r[0],
-        ),
-    )
+    order = sorted(rows, key=lambda r: (r[1], h(r[0]), r[0]))
     total = len(rows)
     return {
         did: (rank, rank * n_phases // total)
@@ -437,14 +433,11 @@ def test_curriculum_order_matches_scalar_reference(spark):
 
     rows = [(f"d{i:03d}", (i * 13) % 40 + 5) for i in range(300)]
     df = spark.createDataFrame(rows, "doc_id string, n_tok int")
-    for desc in (False, True):
-        got = {
-            r["doc_id"]: (r["rank"], r["phase"])
-            for r in curriculum_order(
-                df, "n_tok", n_phases=4, descending=desc
-            ).collect()
-        }
-        assert got == _curr_ref(rows, 4, descending=desc)
+    got = {
+        r["doc_id"]: (r["rank"], r["phase"])
+        for r in curriculum_order(df, "n_tok", n_phases=4).collect()
+    }
+    assert got == _curr_ref(rows, 4)
 
 
 def test_curriculum_order_degenerate_metric_spreads(spark):

@@ -163,7 +163,7 @@ def test_jvm_routing_key_equals_python_parse(spark, small_dataset):
         ).alias("tid"),
         "parse_ok",
     )
-    b = parse_spans(df, False, ["trace_id"]).select(
+    b = parse_spans(df, False).select(
         "doc_id", F.col("trace_id").alias("t2"), F.col("parse_ok").alias("p2")
     )
     assert (

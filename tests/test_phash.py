@@ -184,7 +184,7 @@ def test_av_fingerprints_match_preencode_truth(spark):
 
 def test_audio_neardup_composes_with_phash_pairs(spark):
     # a clip and a copy with ONE window's energy boosted: the banded
-    # index (hash_col='afp') must pair them at small hamming
+    # index (over afp as phash_d) must pair them at small hamming
     from otel_tail_sampler_spark.operators.multimodal import (
         encode_wav,
         fingerprint_audio,
@@ -204,7 +204,8 @@ def test_audio_neardup_composes_with_phash_pairs(spark):
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     fps = fingerprint_audio(media)
-    pairs = phash_pairs(fps, tau=3, n_bands=4, hash_col="afp").collect()
+    fps = fps.withColumnRenamed("afp", "phash_d")
+    pairs = phash_pairs(fps, tau=3, n_bands=4).collect()
     assert len(pairs) == 1 and pairs[0]["hamming"] <= 3
 
 

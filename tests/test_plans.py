@@ -81,6 +81,36 @@ def test_assembly_is_partial_final(plans):
     assert "Exchange" in d
 
 
+def test_force_rule_flags_group_on_trace_key(spark, small_dataset):
+    """A span-matcher force rule's per-trace flag aggregate groups on the
+    one trace key (trace_k1, trace_k2) that assembly groups on and joins
+    back on it — not on the hex trace_id."""
+    import re
+
+    rule = {
+        "id": "slow-span",
+        "priority": 10,
+        "resource_matchers": [],
+        "span_matchers": [{"key": "duration_ms", "op": "gte", "value": "500"}],
+        "action": "force_keep",
+    }
+    res = run_pipeline(
+        spark, small_dataset["tokenized"], E.ENTRY_CFG, force_rules=[rule]
+    )
+    plan = res.traces._jdf.queryExecution().optimizedPlan().toString()
+    flag_aggs = [
+        ln for ln in plan.splitlines()
+        if "Aggregate [" in ln and "AS _fr_span_0" in ln
+    ]
+    assert len(flag_aggs) == 1, plan
+    keys = re.search(r"Aggregate \[([^\]]*)\]", flag_aggs[0]).group(1)
+    assert [re.sub(r"#\d+L?$", "", k.strip()) for k in keys.split(",")] == [
+        "trace_k1",
+        "trace_k2",
+    ]
+    res.decisions.unpersist()
+
+
 def test_decision_prunes_aggregates(spark, small_dataset):
     """The slim decision projection must NOT materialize collect_set or the
     struct-min elections — Catalyst prunes to the 3 decision aggregates."""

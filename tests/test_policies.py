@@ -201,13 +201,14 @@ def test_rate_limit_per_key(spark):
     assert a == b
 
 
-def test_rate_limit_two_level_exact_and_plan_shape(spark):
+def test_rate_limit_two_level_exact_and_plan_shape(spark, monkeypatch):
     """The two-level limit must (1) select exactly the global per-key
-    top-``limit`` by md5 order regardless of salt_buckets, and (2) never run
+    top-``limit`` by md5 order regardless of the salt bucket count, and (2) never run
     an unsalted window over the raw kept set: the only window partitioned by
     the bare key sits above the _r1 <= limit filter (bounded input)."""
     import re
 
+    from otel_tail_sampler_spark.operators import policies
     from otel_tail_sampler_spark.operators.policies import apply_rate_limit
 
     rows = [_row(f"T{i:03d}", err=True, errs=1) for i in range(60)]
@@ -220,7 +221,8 @@ def test_rate_limit_two_level_exact_and_plan_shape(spark):
     # brute-force expected winners: 7 smallest md5(trace_id||'rate_limit')
     got_sets = []
     for buckets in (1, 4, 64):
-        out = apply_rate_limit(df, "service_name", 7, salt_buckets=buckets)
+        monkeypatch.setattr(policies, "RATE_LIMIT_SALT_BUCKETS", buckets)
+        out = apply_rate_limit(df, "service_name", 7)
         got_sets.append(
             frozenset(
                 r["trace_id"]

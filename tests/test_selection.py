@@ -212,20 +212,20 @@ def test_partitioned_model_equals_two_corpus_build(spark):
     )
 
 
-def test_sample_saturation_survives_decimal_range(spark):
+def test_sample_saturation_survives_decimal_range(spark, monkeypatch):
     # The overflow regression: at a saturating rate with a large scale,
     # the unguarded product ratio_fp * r_fp * 2^32 exceeds DECIMAL(38,0)
     # and NULLed the filter — silently dropping the HIGHEST-ratio docs.
     # The threshold disjunct must keep every doc here.
+    from otel_tail_sampler_spark.operators import selection
     from otel_tail_sampler_spark.operators.selection import dsir_sample
 
+    monkeypatch.setattr(selection, "DSIR_SCALE_BITS", 55)
     df = _df(spark, [("a", [5]), ("b", []), ("c", [1, 2, 3])])
     model = build_dsir_model(df, df, n_buckets=16)
     got = {
         r["doc_id"]
-        for r in dsir_sample(
-            df, model, rate=1e6, n_buckets=16, scale_bits=55
-        ).collect()
+        for r in dsir_sample(df, model, rate=1e6, n_buckets=16).collect()
     }
     assert got == {"a", "b", "c"}
 

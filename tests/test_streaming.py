@@ -324,9 +324,7 @@ def test_prep_stream_end_to_end_with_restart(spark, tmp_path_factory):
     wave1.append((100, "tiny", "en", "src0"))  # gated: < min_words
     write_wave("w1", wave1)
 
-    q = run_prep_stream(
-        spark, str(src), str(out), vocab_size=512, min_words=5
-    )
+    q = run_prep_stream(spark, str(src), str(out), vocab_size=512)
     q.awaitTermination(120)
     got1 = spark.read.parquet(f"{out}/tokenized").toPandas()
     assert sorted(got1["doc_id"]) == list(range(10))  # tiny doc gated
@@ -336,9 +334,7 @@ def test_prep_stream_end_to_end_with_restart(spark, tmp_path_factory):
     wave2 += [(300 + i, f"{base} new {i}", "en", "src1") for i in range(3)]
     write_wave("w2", wave2)
 
-    q2 = run_prep_stream(
-        spark, str(src), str(out), vocab_size=512, min_words=5
-    )
+    q2 = run_prep_stream(spark, str(src), str(out), vocab_size=512)
     q2.awaitTermination(120)
     time.sleep(1)
     got2 = spark.read.parquet(f"{out}/tokenized").toPandas()
@@ -426,14 +422,12 @@ def test_prep_stream_dsir_gate_matches_batch_sample(spark, tmp_path_factory):
         spark.read.parquet(str(src)), vocab_size=256,
         keep_cols=("source",),
     )
-    model = build_dsir_model_partitioned(
-        batch_toks, F.col("source") == "tgt", n_buckets=128
-    )
+    model = build_dsir_model_partitioned(batch_toks, F.col("source") == "tgt")
     model = spark.createDataFrame(model.collect(), model.schema)  # pin
 
     q = run_prep_stream(
-        spark, str(src), str(out), vocab_size=256, min_words=2,
-        dsir_model=model, dsir_rate=0.7, dsir_n_buckets=128,
+        spark, str(src), str(out), vocab_size=256,
+        dsir_model=model, dsir_rate=0.7,
     )
     q.awaitTermination(120)
     got = spark.read.parquet(f"{out}/tokenized").toPandas()
@@ -442,9 +436,7 @@ def test_prep_stream_dsir_gate_matches_batch_sample(spark, tmp_path_factory):
     # dedup (all texts distinct here, so dedup is identity)
     want = {
         r["doc_id"]: r["ratio_fp"]
-        for r in dsir_sample(
-            batch_toks, model, rate=0.7, n_buckets=128
-        ).collect()
+        for r in dsir_sample(batch_toks, model, rate=0.7).collect()
     }
     assert {int(d): int(r) for d, r in zip(got["doc_id"], got["ratio_fp"])} \
         == want
