@@ -1,4 +1,4 @@
-"""Config-file surface: dict/JSON -> SamplerConfig + rules + compression.
+"""Config-file surface: dict/JSON -> SamplerConfig + force rules.
 
 Mirrors the reference's YAML config shape (/root/reference/src/config.rs,
 config/default.yaml, config/production.yaml) so an operator of the reference
@@ -18,10 +18,7 @@ can express the same knobs here:
            "conditions": [{"type": "service", "match": "prefix", "value": "payment"}]}
         ]
       },
-      "force_rules": [...],          # operators.force_rules dict shape
-      "compression": {"min_compression_count": 3, "window_seconds": 60,
-                       "max_span_duration_ms": 60000,
-                       "sql_patterns": [["FROM USERS", "user-queries"]]}
+      "force_rules": [...]           # operators.force_rules dict shape
     }
 """
 
@@ -29,7 +26,6 @@ from __future__ import annotations
 
 import json
 
-from otel_tail_sampler_spark.operators.compression import CompressionConfig
 from otel_tail_sampler_spark.operators.policies import (
     CardinalityPolicy,
     ConfigurablePolicy,
@@ -68,17 +64,6 @@ def sampler_config_from_dict(d: dict) -> SamplerConfig:
         always_sample_errors=s.get("always_sample_errors", False),
         rate_limit_key=rl.get("key", "service_name"),
         rate_limit_per_key=rl.get("per_key"),
-    )
-
-
-def compression_config_from_dict(d: dict) -> CompressionConfig:
-    c = d.get("compression", d)
-    return CompressionConfig(
-        min_compression_count=c.get("min_compression_count", 3),
-        window_seconds=c.get("window_seconds", 60),
-        max_span_duration_ms=c.get("max_span_duration_ms", 60_000),
-        sql_patterns=tuple(tuple(p) for p in c.get("sql_patterns", [])),
-        per_trace=c.get("per_trace", True),
     )
 
 

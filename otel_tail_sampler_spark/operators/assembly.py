@@ -38,19 +38,6 @@ from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.operators.parser import TRACE_KEY, hex_from_keys
 
-TRACE_SUMMARY_COLS = [
-    "trace_id",
-    "service_name",
-    "span_count",
-    "has_error",
-    "error_count",
-    "max_duration_ms",
-    "min_timestamp_ms",
-    "max_timestamp_ms",
-    "operations",
-    "root_span_id",
-]
-
 
 def _err() -> Column:
     return (F.col("status_code") == 2).cast("int")

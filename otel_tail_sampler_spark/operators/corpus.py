@@ -23,8 +23,6 @@ UNK_ID = -1
 # split_corpus: train < SPLIT_TRAIN <= val < SPLIT_TRAIN + SPLIT_VAL <= test
 SPLIT_TRAIN = 0.8
 SPLIT_VAL = 0.1
-# temperature_weights' exponent: 1.0 keeps natural proportions, 0 is uniform
-TEMPERATURE_ALPHA = 0.3
 
 
 def vocab_histogram(df: DataFrame) -> DataFrame:
@@ -846,76 +844,6 @@ def corpus_report(docs: DataFrame) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-def temperature_weights(counts: dict[str, int]) -> dict[str, float]:
-    """Alpha/temperature source balancing (the standard multilingual
-    mixing recipe, cf. XLM-R, Conneau et al. 2020): target mixture
-    probability q_s ∝ (c_s / total)^TEMPERATURE_ALPHA — alpha 1.0 keeps
-    natural proportions, alpha -> 0 flattens toward uniform, upweighting
-    small sources. Returns the q_s dict (sums to 1), which plugs straight into
-    :func:`rates_for_budget`'s ``weights`` so the water-filling solver
-    turns the target mixture + a token budget into per-source keep rates
-    for mixture_sample. Pure driver arithmetic; deterministic (9-dp
-    rounding like the solver).
-    """
-    total = sum(int(c) for c in counts.values())
-    if total <= 0:
-        raise ValueError("temperature_weights: empty corpus counts")
-    raw = {s: (int(c) / total) ** TEMPERATURE_ALPHA for s, c in counts.items()}
-    z = sum(raw.values())
-    return {s: round(v / z, 9) for s, v in raw.items()}
-
-
-def rates_for_budget(
-    report: DataFrame,
-    budget_tokens: int,
-    weights: dict[str, float] | None = None,
-) -> dict[str, float]:
-    """Driver-side mixture solver: per-source keep RATES (for
-    mixture_sample) whose expected kept tokens hit ``budget_tokens``,
-    splitting the budget by relative ``weights`` (None = every source
-    weight 1) with deterministic WATER-FILLING — when a small source
-    saturates at rate 1.0, its unused share re-flows to the unsaturated
-    sources, iterating until stable. The natural input is
-    corpus_report's (source, total_words) output.
-
-    Pure driver arithmetic over the per-source totals (one tiny dict in,
-    one tiny dict out — never a Spark job), so the expensive part stays
-    the single corpus_report aggregation. If the budget exceeds the
-    weighted corpus, saturated sources cap at 1.0 and the result
-    undershoots — by exactly the mass that does not exist.
-    """
-    totals = {
-        r["source"]: int(r["total_words"])
-        for r in report.select("source", "total_words").collect()
-    }
-    if weights is None:
-        weights = {s: 1.0 for s in totals}
-    active = {s for s in totals if weights.get(s, 0.0) > 0 and totals[s] > 0}
-    rates = {s: 0.0 for s in totals}
-    remaining = float(budget_tokens)
-    # each pass either saturates >=1 source or allocates everything
-    for _ in range(len(totals) + 1):
-        if remaining <= 0 or not active:
-            break
-        wsum = sum(weights[s] for s in active)
-        saturated = []
-        for s in sorted(active):
-            share = remaining * weights[s] / wsum
-            if share >= totals[s] * (1.0 - rates[s]):
-                saturated.append(s)
-        if not saturated:
-            for s in active:
-                rates[s] += (remaining * weights[s] / wsum) / totals[s]
-            remaining = 0.0
-            break
-        for s in saturated:
-            remaining -= totals[s] * (1.0 - rates[s])
-            rates[s] = 1.0
-            active.remove(s)
-    return {s: min(1.0, round(r, 9)) for s, r in rates.items()}
-
 
 
 def vocab_coverage(

@@ -11,9 +11,9 @@ Scale design notes (100 TB posture):
 * MinHash+LSH: the only all-pairs-free near-dup path. Shingle -> H minhashes
   -> B band keys -> self-join per band. Work is O(docs x H) map-side plus a
   join whose fan-out is controlled by band selectivity, not O(n^2).
-* SimHash: one 16/32/64-bit fingerprint per doc via an explode+groupBy(bit
-  majority); near-dups = equal fingerprints (or small hamming distance via
-  banding the bits).
+* SimHash: one 16-bit fingerprint per doc via an explode+groupBy(bit
+  majority); near-dups are equal fingerprints (or, for a small hamming
+  distance, equal bands of the bits).
 * n-gram Jaccard: exact pairwise similarity — quadratic in cluster size, so
   it is the VERIFY stage after LSH candidate generation, never the scan stage.
 * embedding cosine: brute-force pair filter for small dims; the ANN path for
@@ -89,32 +89,13 @@ def word_shingles(text: Column, n: int = 3) -> Column:
 # --- MinHash + LSH -----------------------------------------------------------
 
 
-def minhash_signature(shingles: Column, num_hashes: int) -> Column:
-    """array of ``num_hashes`` min-md5 hex digests (portable minhash).
-
-    min over lexicographic md5 hex == a valid minwise hash family member per
-    seed; identical in DuckDB: list_min([md5(s || '|i') for s in shingles]).
-    """
-    # NB: the lambda must be single-arg — F.transform passes (element, index)
-    # to two-arg lambdas, which would silently turn the seed into the index
-    def _hasher(seed: int):
-        tag = F.lit(f"|{seed}")
-        return lambda s: F.md5(F.concat(s, tag))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, _hasher(i)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def minhash_signatures_agg(docs: DataFrame, num_hashes: int = 12) -> DataFrame:
     """(id, h0..h{n-1}) minhash columns via explode + min-aggregate.
 
-    The expression form (minhash_signature) re-evaluates the shingle array
-    once PER HASH because CollapseProject inlines the shared subexpression —
-    O(num_hashes x shingling) per row. This form shingles once, then runs
+    A per-row expression form (one array_min per hash over the shingle
+    array) re-evaluates the shingle array once PER HASH because
+    CollapseProject inlines the shared subexpression — O(num_hashes x
+    shingling) per row. This form shingles once, then runs
     num_hashes min-aggregates in one map-side-combinable groupBy — the shape
     that scales (shuffle carries one partial row per doc per split).
 
@@ -250,20 +231,19 @@ def dedup_components(pairs: DataFrame, all_ids: DataFrame | None = None,
 # --- SimHash -----------------------------------------------------------------
 
 
-def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-            bits: int = 16) -> DataFrame:
-    """(id, simhash fingerprint as long) via per-bit word-hash majority vote.
+def simhash(docs: DataFrame) -> DataFrame:
+    """(doc_id, simhash fingerprint as long) via per-bit word-hash majority
+    vote.
 
     Word hash = first 4 md5 hex chars -> 16-bit int (portable). For each bit
     k: sum(+1/-1 over words) > 0 => bit set. One explode + one groupBy; both
     map-side combinable, so linear at scale.
     """
-    assert bits <= 16
     from otel_tail_sampler_spark.functions.spread import spread_small_input
 
     docs = spread_small_input(docs)  # per-word md5 runs pre-exchange
     exploded = docs.select(
-        F.col(id_col), F.explode(words(F.col(text_col))).alias("_w")
+        F.col("doc_id"), F.explode(words(F.col("text"))).alias("_w")
     ).withColumn(
         "_h", F.conv(F.substring(F.md5(F.col("_w")), 1, 4), 16, 10).cast("long")
     )
@@ -271,25 +251,14 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         F.sum(
             F.when(F.shiftright(F.col("_h"), k).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"_b{k}")
-        for k in range(bits)
+        for k in range(16)
     ]
-    per_doc = exploded.groupBy(id_col).agg(*aggs)
+    per_doc = exploded.groupBy("doc_id").agg(*aggs)
     fp = None
-    for k in range(bits):
+    for k in range(16):
         term = F.when(F.col(f"_b{k}") > 0, F.lit(2 ** k)).otherwise(F.lit(0))
         fp = term if fp is None else fp + term
-    return per_doc.select(F.col(id_col), fp.cast("long").alias("simhash"))
-
-
-def simhash_dup_pairs(docs: DataFrame, **kw) -> DataFrame:
-    """Pairs with IDENTICAL simhash (hamming 0). For hamming<=d, band the
-    fingerprint bits and join per band (same trick as LSH)."""
-    fp = simhash(docs, **kw)
-    a = fp.select(F.col("simhash"), F.col("doc_id").alias("id_a"))
-    b = fp.select(F.col("simhash"), F.col("doc_id").alias("id_b"))
-    return a.join(b, "simhash").filter(F.col("id_a") < F.col("id_b")).select(
-        "id_a", "id_b", "simhash"
-    )
+    return per_doc.select(F.col("doc_id"), fp.cast("long").alias("simhash"))
 
 
 # --- exact n-gram Jaccard (the verify stage) ----------------------------------
@@ -1120,15 +1089,3 @@ def reference_dup_pairs(
         lambda acc, x: acc + x,
     ).cast("int")
     return cand.withColumn("n_agree", agree).drop("_sn", "_sr")
-
-
-def dedup_against_corpus(new: DataFrame, ref: DataFrame) -> DataFrame:
-    """The APPLY side of :func:`reference_dup_pairs` (banded MinHash at
-    its defaults, which also pairs every exact copy): the surviving rows
-    of ``new`` (all original columns) after dropping every document with
-    a candidate match in ``ref``. The anti-join runs against the DISTINCT
-    matched new-ids — bounded by the duplicate count, broadcastable when
-    dups are rare (the common incremental case)."""
-    pairs = reference_dup_pairs(new, ref)
-    dropped = pairs.select(F.col("id_new").alias("doc_id")).distinct()
-    return new.join(dropped, "doc_id", "anti")

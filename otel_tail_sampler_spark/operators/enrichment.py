@@ -74,10 +74,11 @@ def dedup_against_exported(
     return decided.join(m.select("trace_id"), "trace_id", "left_anti")
 
 
-def mark_exported(decided: DataFrame, exported_at_ms: int | None = None) -> DataFrame:
-    """Manifest rows to append after a successful keep-sink commit.
-    ``exported_at_ms`` stamps the batch (explicit for determinism); rows
-    with a null stamp never expire under a TTL filter."""
+def mark_exported(decided: DataFrame, exported_at_ms: int) -> DataFrame:
+    """Manifest rows ``(trace_id, exported_at_ms)`` to write after a
+    successful keep-sink commit. ``exported_at_ms`` stamps the batch
+    (explicit for determinism) so ``dedup_against_exported(ttl_ms=...)``
+    can expire it."""
     return decided.filter(F.col("decision") == "keep").select(
         "trace_id", F.lit(exported_at_ms).cast("long").alias("exported_at_ms")
     )

@@ -2,7 +2,9 @@
 
 The reference POSTs DatadogSpan JSON batches (/root/reference/src/datadog/
 client.rs:48-113); the Spark build replaces the HTTP sink with table sinks,
-so what remains of the export path is the row-shape projection:
+so what remains of the export path is the row-shape projection (the
+reference's POST-sized chunking, evaluator.rs:443-450, is the table
+writer's file sizing):
 
 * S9  span -> export record (client.rs:192-234): ms -> ns timestamps, error
   flag from status_code==2, resource/meta maps.
@@ -17,9 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# rows per export_batches batch
-EXPORT_BATCH_SIZE = 200
 
 
 def span_export_projection(spans: DataFrame, env: str = "production") -> DataFrame:
@@ -44,24 +43,6 @@ def span_export_projection(spans: DataFrame, env: str = "production") -> DataFra
             F.lit("status.code"), F.col("status_code").cast("string"),
         ).alias("meta"),
     )
-
-
-def export_batches(records: DataFrame) -> DataFrame:
-    """Chunking analog of evaluator.rs:443-450: assign a deterministic batch
-    number per trace so a downstream sink can group rows into POST-sized
-    batches. Batch id = rank of trace within its shuffle partition /
-    EXPORT_BATCH_SIZE."""
-    from pyspark.sql import Window
-
-    # materialize the partition id BEFORE the window (the window's shuffle
-    # changes spark_partition_id, so the raw expression would disagree with
-    # the grouping downstream consumers see)
-    with_pid = records.withColumn("_pid", F.spark_partition_id())
-    w = Window.partitionBy("_pid").orderBy("trace_id", "span_id")
-    return with_pid.withColumn(
-        "export_batch",
-        ((F.row_number().over(w) - 1) / F.lit(EXPORT_BATCH_SIZE)).cast("int"),
-    ).withColumnRenamed("_pid", "export_partition")
 
 
 def buffer_stats(spans: DataFrame) -> DataFrame:

@@ -1,14 +1,14 @@
 """Multimodal columns: opaque binary payloads + typed metadata + REAL kernels.
 
 Image/audio/video payloads are opaque ``binary`` columns with a typed
-metadata struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched pandas stages over ``mapInPandas``.
+metadata struct; decode, perceptual hashing and audio/video fingerprints
+run as Arrow-batched pandas stages over ``mapInPandas``.
 
 The kernels are pure-numpy codecs that need no external libs — PPM P6
 images (netpbm spec), RIFF/WAVE PCM16 mono audio, and a minimal
 length-prefixed video container of PPM frames (``VID0`` magic + u32 frame
 count + per-frame u32 length + PPM bytes). Decode inverts encode
-bit-exactly, so features are checkable against a ground-truth table
+bit-exactly, so decoded stats are checkable against a ground-truth table
 computed BEFORE encoding (the property oracle: the decode stage must
 invert the encode stage).
 
@@ -23,7 +23,6 @@ numpy over those batches, never per-row Python UDF calls.
 from __future__ import annotations
 
 import struct
-import zlib
 from typing import Iterator
 
 import numpy as np
@@ -36,22 +35,6 @@ MEDIA_SCHEMA = (
     "media_id string, kind string, payload binary, "
     "meta struct<width:int, height:int, n_frames:int, sample_rate:int, codec:string>"
 )
-
-FEATURE_DDL = (
-    "media_id string, kind string, feat_dim int, features array<float>, "
-    "payload_bytes int, payload_crc long"
-)
-
-RESIZE_DDL = (
-    "media_id string, kind string, out_width int, out_height int, payload_crc long"
-)
-
-FRAME_SAMPLE_DDL = "media_id string, frame_idx int, frame_crc long"
-
-# extract_features' vector length
-FEATURE_DIM = 16
-# sample_frames keeps every FRAME_STRIDE-th frame
-FRAME_STRIDE = 2
 
 # flat, integer-exact stats of the DECODED payload (oracle-checkable against
 # the pre-encode ground truth; every value fits exactly in its type)
@@ -271,58 +254,6 @@ def media_stats(media: DataFrame) -> DataFrame:
     return media.mapInPandas(fn, STATS_DDL)
 
 
-def _real_features(kind: str, payload: bytes, dim: int) -> np.ndarray:
-    """Real decode -> fixed-dim feature vector: normalized 8-bin histogram of
-    the decoded signal plus [mean/255, (max-min)/255], tiled/truncated to
-    ``dim``. Deterministic, scale-free, no external libs."""
-    if kind == "image":
-        sig = decode_ppm(payload).ravel().astype(np.float64)
-        lo, hi = 0.0, 255.0
-    elif kind == "audio":
-        sig = decode_wav(payload)[0].astype(np.float64)
-        lo, hi = -32768.0, 32767.0
-    else:
-        sig = np.stack(decode_video(payload)).ravel().astype(np.float64)
-        lo, hi = 0.0, 255.0
-    hist, _ = np.histogram(sig, bins=8, range=(lo, hi))
-    base = np.concatenate(
-        [
-            hist / max(sig.size, 1),
-            [sig.mean() / hi if hi else 0.0, (sig.max() - sig.min()) / (hi - lo)],
-        ]
-    )
-    reps = int(np.ceil(dim / base.size))
-    return np.tile(base, reps)[:dim].astype(np.float32)
-
-
-def extract_features(media: DataFrame) -> DataFrame:
-    """payload -> FEATURE_DIM-long feature vector via Arrow-batched
-    mapInPandas (batch shape: pandas DataFrames of full rows; payload stays
-    in-task, never shuffled), decoding PPM/WAV/VID0 payloads with the
-    pure-numpy codecs."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                _real_features(k, bytes(p), FEATURE_DIM)
-                for k, p in zip(pdf["kind"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "feat_dim": FEATURE_DIM,
-                    "features": [f.tolist() for f in feats],
-                    "payload_bytes": pdf["payload"].map(len),
-                    "payload_crc": pdf["payload"].map(
-                        lambda b: zlib.crc32(bytes(b)) & 0xFFFFFFFF
-                    ),
-                }
-            )
-
-    return media.mapInPandas(fn, FEATURE_DDL)
-
-
 def _resize_nearest(arr: np.ndarray, width: int, height: int) -> np.ndarray:
     """Nearest-neighbor resample (pure numpy, matches the standard
     floor((i+0.5)*src/dst) pixel-center mapping)."""
@@ -330,58 +261,6 @@ def _resize_nearest(arr: np.ndarray, width: int, height: int) -> np.ndarray:
     yi = np.minimum(((np.arange(height) + 0.5) * h / height).astype(int), h - 1)
     xi = np.minimum(((np.arange(width) + 0.5) * w / width).astype(int), w - 1)
     return arr[yi][:, xi]
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL kernel: decode PPM, nearest-neighbor resize, re-encode; the crc is
-    of the RESIZED payload (so the oracle can re-derive it)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            img = pdf[pdf["kind"] == "image"]
-            if len(img) == 0:
-                continue
-            crcs = [
-                zlib.crc32(encode_ppm(_resize_nearest(decode_ppm(bytes(p)), width, height)))
-                & 0xFFFFFFFF
-                for p in img["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": img["media_id"],
-                    "kind": img["kind"],
-                    "out_width": width,
-                    "out_height": height,
-                    "payload_crc": crcs,
-                }
-            )
-
-    return media.mapInPandas(fn, RESIZE_DDL)
-
-
-def sample_frames(media: DataFrame) -> DataFrame:
-    """REAL kernel: decode the VID0 container, emit one row per sampled frame
-    (every FRAME_STRIDE-th) with the crc of that frame's PPM bytes
-    (UDTF-ish fan-out via mapInPandas)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vid = pdf[pdf["kind"] == "video"]
-            out_ids, out_idx, out_crc = [], [], []
-            for mid, payload in zip(vid["media_id"], vid["payload"]):
-                frames = decode_video(bytes(payload))
-                for fi in range(0, len(frames), FRAME_STRIDE):
-                    out_ids.append(mid)
-                    out_idx.append(fi)
-                    out_crc.append(
-                        zlib.crc32(encode_ppm(frames[fi])) & 0xFFFFFFFF
-                    )
-            if out_ids:
-                yield pd.DataFrame(
-                    {"media_id": out_ids, "frame_idx": out_idx, "frame_crc": out_crc}
-                )
-
-    return media.mapInPandas(fn, FRAME_SAMPLE_DDL)
 
 
 # --- perceptual-hash near-dup (the image counterpart of MinHash) -------------
@@ -457,8 +336,8 @@ def _phash_scalar(arr: np.ndarray) -> tuple[int, int]:
 
 def phash_images(media: DataFrame) -> DataFrame:
     """REAL kernel: decode PPM images, emit both perceptual hashes ->
-    (media_id, phash_d long, phash_a long). Non-image rows drop (hash a
-    video by composing ``sample_frames`` -> per-frame PPM upstream).
+    (media_id, phash_d long, phash_a long). Non-image rows drop (video
+    frames are hashed by ``phash_video_frames``).
     Arrow-batched; payloads never shuffle (narrow stage)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

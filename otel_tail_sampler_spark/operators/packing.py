@@ -751,8 +751,7 @@ def _manifest_agg(assigned: DataFrame) -> DataFrame:
 
 
 def enforce_token_budget(df: DataFrame, budget) -> DataFrame:
-    """Exact per-group token-budget enforcement — the APPLY side of the
-    ``rates_for_budget`` water-filling solver: keep each group's
+    """Exact per-group token-budget enforcement: keep each group's
     documents in deterministic md5(doc_id|'budget') order until the cumulative
     token count would exceed the group's budget. -> the surviving rows
     plus ``cum_tokens`` (the group's running total INCLUDING the row).

@@ -24,8 +24,8 @@ multiplied through by 20*T, and (2N-2df+1)/(2df+1) is the argument of
 the classic idf log (a strictly decreasing function of df, so rare terms
 still dominate; the log is omitted because no cross-engine-exact log
 exists). Intermediates ride DECIMAL(38,0) — exact to N ~ 1e9 docs /
-T ~ 1e12 tokens at this scale (``bm25_matches(scale_bits=)`` can
-shrink it beyond that).
+T ~ 1e12 tokens at this scale (a smaller ``SCALE_BITS`` shrinks it
+beyond that).
 
 Two tiers (mirroring ivf_build/ivf_search):
 
@@ -416,14 +416,7 @@ def bm25_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
 
 
 def bm25_matches(
-    corpus: DataFrame,
-    queries: DataFrame,
-    min_score_fp: int,
-    scale_bits: int = SCALE_BITS,
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
-    query_id: str = "query_id",
-    query_tokens: str = "tokens",
+    corpus: DataFrame, queries: DataFrame, min_score_fp: int
 ) -> DataFrame:
     """THRESHOLD retrieval: every (query, doc) pair whose fixed-point
     BM25 score reaches ``min_score_fp`` -> (query_id, doc_id,
@@ -433,31 +426,16 @@ def bm25_matches(
     ``bm25_topk``; in threshold mode it needs NO window at all (per-doc
     scores complete inside one batch, so the per-batch filter IS the
     final answer)."""
-    s = 1 << scale_bits
+    s = 1 << SCALE_BITS
     return _bm25_topk_arrow(
         corpus,
-        _query_terms(queries, query_id, query_tokens, distinct=False),
+        _query_terms(queries, "query_id", "tokens", distinct=False),
         0,
         s,
-        id_col,
-        tokens_col,
+        "doc_id",
+        "tokens",
         min_score=int(min_score_fp),
     )
-
-
-def decontaminate_by_retrieval(
-    corpus: DataFrame, benchmarks: DataFrame, min_score_fp: int, **kw
-) -> DataFrame:
-    """The APPLY side of :func:`bm25_matches` — the retrieval flavor of
-    benchmark decontamination (complements the n-gram-containment
-    ``contamination``/``decontaminate_corpus`` pair, as real pipelines
-    run both): the surviving rows of ``corpus`` (all original columns)
-    after dropping every document some benchmark query retrieves at
-    ``min_score_fp`` or above. The anti-join runs against the DISTINCT
-    flagged ids — bounded by contamination incidence."""
-    matches = bm25_matches(corpus, benchmarks, min_score_fp, **kw)
-    flagged = matches.select("doc_id").distinct()
-    return corpus.join(flagged, "doc_id", "anti")
 
 
 def bm25_index(

@@ -1,8 +1,9 @@
 """Text-analysis operators for training-data pipelines over ``documents``.
 
-Language-ID (stopword-ratio heuristic), quality scoring, token counting
-(whitespace + BPE-ish regex), and document fingerprinting. All pure column
-expressions — JVM-side, codegen-friendly, linear at any scale, and
+Language-ID (stopword-ratio heuristic), quality features, token counting
+(whitespace + BPE-ish regex), and winnowing fingerprints. All but
+the winnowing fingerprints (Arrow-batched mapInPandas stages) are pure
+column expressions — JVM-side, codegen-friendly, linear at any scale, and
 DuckDB-oracle-expressible.
 """
 
@@ -82,28 +83,6 @@ def quality_features(docs: DataFrame) -> DataFrame:
             ).cast("double"),
             "stopword_ratio_en": stopword_ratio(t, "en").cast("double"),
         }
-    )
-
-
-def quality_score(docs: DataFrame) -> DataFrame:
-    """Composite [0,1] score: reasonable length + low punct/digit noise +
-    natural-language stopword presence (Gopher/C4-style heuristics)."""
-    feats = quality_features(docs)
-    length_ok = (
-        F.when(F.col("n_words") < 5, 0.0)
-        .when(F.col("n_words") > 5000, 0.3)
-        .otherwise(1.0)
-    )
-    word_len_ok = F.when(
-        (F.col("mean_word_len") >= 2) & (F.col("mean_word_len") <= 12), 1.0
-    ).otherwise(0.0)
-    noise_ok = 1.0 - F.least(
-        F.lit(1.0), (F.col("punct_ratio") + F.col("digit_ratio")) * 4
-    )
-    stop_ok = F.least(F.lit(1.0), F.col("stopword_ratio_en") * 5)
-    return feats.withColumn(
-        "quality_score",
-        ((length_ok + word_len_ok + noise_ok + stop_ok) / 4).cast("double"),
     )
 
 
@@ -203,29 +182,6 @@ def redact_pii(docs: DataFrame) -> DataFrame:
         )
         red = F.regexp_replace(red, pat, f"<{name.upper()}>")
     return out.withColumn("redacted", red)
-
-
-def fingerprint(docs: DataFrame) -> DataFrame:
-    """Document fingerprints: content md5 (exact identity) + a rolling-hash
-    analog (min/max over word-window md5s — order-sensitive, local-change
-    tolerant)."""
-    t = F.col("text")
-    norm = F.lower(F.trim(F.regexp_replace(t, r"\s+", " ")))
-    w = F.split(norm, " ")
-    win = F.when(
-        F.size(w) >= 4,
-        F.transform(
-            F.sequence(F.lit(0), F.size(w) - 4),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(w, i + 1, 4))),
-        ),
-    ).otherwise(F.array(F.md5(norm)))
-    return docs.withColumns(
-        {
-            "fp_md5": F.md5(norm),
-            "fp_window_min": F.array_min(win),
-            "fp_window_max": F.array_max(win),
-        }
-    )
 
 
 def winnow_fingerprints(

@@ -6,14 +6,13 @@ as DataFrame plans. All are top-k or small-group aggregations: Spark plans
 TakeOrderedAndProject for orderBy+limit (no full sort at scale), and the
 aggregations are two-phase hash aggs.
 
-``register_views`` + ``query_sql`` give the S6 'SQL-on-lake' surface
-(iceberg.rs:171-181): arbitrary ANSI SQL over the registered ``spans``
-view via spark.sql.
+The S6 'SQL-on-lake' surface (iceberg.rs:171-181) needs no wrapper here:
+a caller registers a span frame as a temp view and runs ``spark.sql``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -39,9 +38,9 @@ def recent_error_traces(traces: DataFrame, n: int = 10) -> DataFrame:
 
 def service_stats(spans: DataFrame) -> DataFrame:
     """A6-A8: per-service span/trace counts, durations, errors
-    (iceberg.rs:207-218). countDistinct at 10^12 scale should become
-    approx_count_distinct — kept exact here for oracle parity; the approx
-    variant is service_stats_approx."""
+    (iceberg.rs:207-218). Exact countDistinct, for oracle parity; at
+    10^12 spans ``approx_count_distinct`` is the sketch that avoids the
+    exact-distinct shuffle."""
     return (
         spans.groupBy("service_name")
         .agg(
@@ -57,19 +56,7 @@ def service_stats(spans: DataFrame) -> DataFrame:
     )
 
 
-def service_stats_approx(spans: DataFrame) -> DataFrame:
-    """The 100 TB variant: HLL++ distinct counts (5% relative standard
-    deviation), no exact-distinct shuffle."""
-    return spans.groupBy("service_name").agg(
-        F.count(F.lit(1)).alias("span_count"),
-        F.approx_count_distinct("trace_id", 0.05).alias("trace_count"),
-        F.avg("duration_ms").alias("avg_duration_ms"),
-        F.max("duration_ms").alias("max_duration_ms"),
-        F.sum(F.when(F.col("status_code") == 2, 1).otherwise(0)).alias("error_count"),
-    )
-
-
-# the SLO percentiles both latency reports compute, as p50/p95/p99 columns
+# the SLO percentiles the latency report computes, as p50/p95/p99 columns
 LATENCY_PERCENTILES = (0.5, 0.95, 0.99)
 
 
@@ -79,10 +66,8 @@ def service_latency_percentiles(spans: DataFrame) -> DataFrame:
     README.md:446) computed over the lake instead of asserted. EXACT
     percentile (sort-based, linear interpolation — bit-identical to
     DuckDB's quantile_cont, so oracle-checkable). At 10^12 spans exact
-    per-group percentile buffers each group's values; the scale variant is
-    ``service_latency_percentiles_approx`` below (fixed-size sketch,
-    map-side combinable), same shape as the exact/approx split
-    service_stats already makes.
+    per-group percentile buffers each group's values; ``percentile_approx``
+    is the fixed-size, map-side combinable sketch for that scale.
     """
     aggs = [
         F.round(F.expr(f"percentile(duration_ms, {p})"), 4).alias(
@@ -95,29 +80,3 @@ def service_latency_percentiles(spans: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("span_count"), *aggs)
         .orderBy("service_name")
     )
-
-
-def service_latency_percentiles_approx(spans: DataFrame) -> DataFrame:
-    """The 100 TB variant: percentile_approx (Greenwald-Khanna sketch,
-    bounded memory, partial-aggregable map-side) — rank error <=
-    1/10,000. Not oracle-checkable (sketch internals differ per engine);
-    the exact twin above is the correctness reference."""
-    aggs = [
-        F.percentile_approx("duration_ms", p, 10_000).alias(f"p{round(p * 100)}")
-        for p in LATENCY_PERCENTILES
-    ]
-    return (
-        spans.groupBy("service_name")
-        .agg(F.count(F.lit(1)).alias("span_count"), *aggs)
-        .orderBy("service_name")
-    )
-
-
-def register_views(spark: SparkSession, spans: DataFrame) -> None:
-    """S6: expose the span table to ad-hoc spark.sql (iceberg.rs:133-150)."""
-    spans.createOrReplaceTempView("spans")
-
-
-def query_sql(spark: SparkSession, sql: str) -> DataFrame:
-    """Admin-API SQL endpoint analog (admin_api.rs:232-275)."""
-    return spark.sql(sql)

@@ -24,52 +24,11 @@ Nothing in the chain holds a resident copy of the corpus.
 
 from __future__ import annotations
 
-import json
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.functions.fs import delete_dir, read_marker, write_marker
 from otel_tail_sampler_spark.functions.tables import local_table
-
-
-def _hadoop_path(spark: SparkSession, path_str: str):
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm, fs, path
-
-
-def _read_marker(spark: SparkSession, path_str: str) -> dict | None:
-    """Stage marker (_SPEC.json next to the stage's parquet files) via the
-    Hadoop FS API — works on any filesystem the session can reach (local,
-    HDFS, object stores), not just the driver's local disk."""
-    jvm, fs, path = _hadoop_path(spark, path_str)
-    if not fs.exists(path):
-        return None
-    stream = fs.open(path)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    try:
-        return json.loads(text)
-    except ValueError:
-        return None  # truncated marker from an interrupted run -> recompute
-
-
-def _write_marker(spark: SparkSession, path_str: str, payload: dict) -> None:
-    _, fs, path = _hadoop_path(spark, path_str)
-    out = fs.create(path, True)
-    try:
-        out.write(bytearray(json.dumps(payload, sort_keys=True).encode()))
-    finally:
-        out.close()
-
-
-def _delete_dir(spark: SparkSession, path_str: str) -> None:
-    _, fs, path = _hadoop_path(spark, path_str)
-    if fs.exists(path):
-        fs.delete(path, True)
 
 
 def run_corpus_prep(
@@ -123,7 +82,7 @@ def run_corpus_prep(
     tok_marker = f"{tok_dir}/_SPEC.json"
     m1: dict | None = None
     if resume:
-        saved = _read_marker(spark, tok_marker)
+        saved = read_marker(spark, tok_marker)
         if saved and saved.get("spec") == tok_spec:
             m1 = saved["metrics"]
     if m1 is None:
@@ -153,7 +112,7 @@ def run_corpus_prep(
         # then read the cheap column-pruned parquet instead of re-executing
         # the DAG (previously ~5 full recomputations of the most expensive
         # stages). The tokenized table is also a useful artifact.
-        _delete_dir(spark, tok_dir)
+        delete_dir(spark, tok_dir)
         trimmed.write.mode("overwrite").parquet(tok_dir)
         acct = (
             spark.read.parquet(tok_dir)
@@ -170,7 +129,7 @@ def run_corpus_prep(
             "tokens_out": int(acct["tokens_out"] or 0),
             "tokens_trimmed": int(acct["tokens_trimmed"] or 0),
         }
-        _write_marker(spark, tok_marker, {"spec": tok_spec, "metrics": m1})
+        write_marker(spark, tok_marker, {"spec": tok_spec, "metrics": m1})
     trimmed = spark.read.parquet(tok_dir)
 
     shard_spec = {
@@ -182,7 +141,7 @@ def run_corpus_prep(
     shard_marker = f"{shards_dir}/_SPEC.json"
     m2: dict | None = None
     if resume:
-        saved = _read_marker(spark, shard_marker)
+        saved = read_marker(spark, shard_marker)
         if saved and saved.get("spec") == shard_spec:
             m2 = saved["metrics"]
     if m2 is None:
@@ -191,10 +150,10 @@ def run_corpus_prep(
         )
         # explicit delete: under dynamic partition overwrite a shrunk
         # n_shards would otherwise leave stale shard=k directories behind
-        _delete_dir(spark, shards_dir)
+        delete_dir(spark, shards_dir)
         write_shards(packed, shards_dir, n_shards=n_shards)
         m2 = {"examples": int(spark.read.parquet(shards_dir).count())}
-        _write_marker(
+        write_marker(
             spark, shard_marker, {"spec": shard_spec, "metrics": m2}
         )
 
@@ -213,12 +172,3 @@ def run_corpus_prep(
         ", ".join(f"{k} long" for k in metrics),
     ).coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/metrics_run")
     return metrics
-
-
-def read_shard_stream(spark: SparkSession, out_dir: str, shard: int) -> DataFrame:
-    """A training reader's view of one shard: rows in shard_pos order."""
-    return (
-        spark.read.parquet(f"{out_dir}/shards")
-        .filter(F.col("shard") == shard)
-        .orderBy("shard_pos")
-    )

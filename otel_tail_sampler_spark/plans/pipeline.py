@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.functions.tables import local_table
 from otel_tail_sampler_spark.operators.assembly import assemble_traces
+from otel_tail_sampler_spark.operators.enrichment import mark_exported
 from otel_tail_sampler_spark.operators.parser import (
     TRACE_KEY,
     parse_spans_jvm,
@@ -175,13 +176,11 @@ def run_and_write(
         )
         rm.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "metrics_rows"))
         # exported manifest (J2 dedup source on re-runs; replaces Redis
-        # exported:{trace_id} keys, evaluator.rs:358-401)
-        (
-            res.decisions.filter(F.col("decision") == "keep")
-            .select("trace_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "exported"))
-        )
+        # exported:{trace_id} keys, evaluator.rs:358-401), stamped after
+        # the keep sink committed so a TTL can expire it
+        mark_exported(res.decisions, int(time.time() * 1000)).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(out_dir, "exported"))
         run_rows = [
             ("input_rows", int(counts["routed_rows"] or 0)),
             ("traces", sum(r["trace_count"] for r in dm_rows)),

@@ -31,10 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-
 def dedup_stream(
     docs: DataFrame,
-    id_col: str = "doc_id",
     digest_col: str | None = None,
     payload_cols: tuple[str, ...] = (),
     ref_digests: DataFrame | None = None,
@@ -44,7 +42,7 @@ def dedup_stream(
     it first appears. dup_count counts same-batch duplicates folded into
     that emission.
 
-    The id keeps its ORIGINAL type end-to-end (schemas are derived from
+    ``doc_id`` keeps its ORIGINAL type end-to-end (schemas are derived from
     the input), so the same-batch min-id election orders exactly like the
     batch operator's F.min — stringifying ids first would elect "10"
     before "2" and silently diverge from exact_dedup's representative.
@@ -80,7 +78,7 @@ def dedup_stream(
     checkpoints written by the TTL-capable version carry."""
     import pandas as pd
 
-    id_type = docs.schema[id_col].dataType.simpleString()
+    id_type = docs.schema["doc_id"].dataType.simpleString()
     ptypes = {
         c: docs.schema[c].dataType.simpleString() for c in payload_cols
     }
@@ -99,7 +97,7 @@ def dedup_stream(
     digest = F.col(digest_col) if digest_col else F.md5(F.col("text"))
     keyed = docs.select(
         digest.alias("_digest"),
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         *[F.col(c) for c in payload_cols],
     )
     if ref_digests is not None:
@@ -174,36 +172,3 @@ def dedup_stream(
         outputMode="append",
         timeoutConf="NoTimeout",
     )
-
-
-def media_dedup_stream(media: DataFrame) -> DataFrame:
-    """First-wins streaming PERCEPTUAL dedup of image payloads: each
-    micro-batch's images decode through the stateless ``phash_images``
-    kernel (mapInPandas is streaming-legal), and the one first-wins/TTL
-    state machine above keys on the dHash — the streaming analog of
-    ``media_phash_neardup``'s identical-hash groups (tau = 0;
-    beyond-hamming-0 near-dup pairing stays a batch job over the
-    emitted representatives, exactly as the batch operator documents).
-    Byte-DIFFERENT re-encodes of the same picture share a dHash and
-    drop — the case a content-digest dedup stream cannot catch. State
-    holds one tiny row per DISTINCT perceptual hash; payload bytes
-    never enter the state store.
-
-    -> (digest = phash_d as string, media_id, phash_d, phash_a,
-    dup_count) — one row per NEW perceptual hash.
-    """
-    from otel_tail_sampler_spark.operators.multimodal import phash_images
-
-    hashed = phash_images(media)
-    keyed = hashed.select(
-        F.col("phash_d").cast("string").alias("_pd"),
-        F.col("media_id"),
-        F.col("phash_d"),
-        F.col("phash_a"),
-    )
-    return dedup_stream(
-        keyed,
-        id_col="media_id",
-        digest_col="_pd",
-        payload_cols=("phash_d", "phash_a"),
-    ).withColumnRenamed("doc_id", "media_id")

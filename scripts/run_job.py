@@ -8,8 +8,8 @@
         [--salt auto|N] [--day-partition]
 
 The config JSON is the reference-operator shape documented in
-otel_tail_sampler_spark/config.py (sampling policies + force rules +
-compression). Emits ONE JSON line of run metrics (per-sink routed rows,
+otel_tail_sampler_spark/config.py (sampling policies + force rules).
+Emits ONE JSON line of run metrics (per-sink routed rows,
 trace count, wall ms) on stdout so a scheduler can assert per-sink parity
 without reading the lake.
 """

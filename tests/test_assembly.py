@@ -3,10 +3,24 @@
 import pandas as pd
 import pytest
 
-from otel_tail_sampler_spark.operators.assembly import TRACE_SUMMARY_COLS, assemble_traces
+from otel_tail_sampler_spark.operators.assembly import assemble_traces
 from otel_tail_sampler_spark.operators.parser import parse_spans
 
 from tests.oracle_pandas import assemble as oracle_assemble
+
+# the TraceSummary columns both sides are compared on
+TRACE_SUMMARY_COLS = [
+    "trace_id",
+    "service_name",
+    "span_count",
+    "has_error",
+    "error_count",
+    "max_duration_ms",
+    "min_timestamp_ms",
+    "max_timestamp_ms",
+    "operations",
+    "root_span_id",
+]
 
 
 @pytest.fixture(scope="module")

@@ -4,7 +4,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.config import (
-    compression_config_from_dict,
     force_rules_from_dict,
     sampler_config_from_dict,
 )
@@ -33,11 +32,6 @@ CONFIG = {
         {"id": "r1", "priority": 9, "resource_matchers": [], "span_matchers": [],
          "action": "force_keep"}
     ],
-    "compression": {
-        "min_compression_count": 5,
-        "window_seconds": 120,
-        "sql_patterns": [["FROM USERS", "user-queries"]],
-    },
 }
 
 
@@ -47,9 +41,6 @@ def test_config_round_trip(spark):
     assert cfg.latency.threshold_ms == 5000
     assert cfg.always_sample_errors and cfg.rate_limit_per_key == 10
     assert cfg.extra_policies[0].name == "payments"
-    comp = compression_config_from_dict(CONFIG)
-    assert comp.min_compression_count == 5
-    assert comp.sql_patterns == (("FROM USERS", "user-queries"),)
     assert force_rules_from_dict(CONFIG)[0]["id"] == "r1"
 
     # config actually drives decisions

@@ -1,10 +1,19 @@
-"""No option that no caller sets (ROADMAP aim 2).
+"""No option and no function that no caller uses (ROADMAP aim 2).
 
 Every library parameter with a default must be set by at least one call
 outside ``tests/``, or sit on ``ALLOWED`` with the reason it exists
 without one. A test is not a caller: an option only a test sets is a
 constant the test can monkeypatch. The audit parses source only; it
 starts no Spark session.
+
+Every top-level def, class and assigned name of the library (dunder
+names exempt) must be reachable by name from a program: the caller files,
+the library's module-level code, and the ``ENTRY_POINTS`` that a
+deployment calls from outside the repository. Reachability runs through
+the code of reached names. A ``Name``, an ``Attribute`` or an identifier
+string constant is a reference; an import alone is not, and nothing under
+``tests/`` is. Names are matched across modules, which errs towards
+keeping a name.
 
 A parameter with a default is *passed* when some non-test call of its
 function sets it: by keyword, by a positional argument at or past its index, or through
@@ -17,6 +26,7 @@ are matched together; that errs towards keeping a parameter.
 from __future__ import annotations
 
 import ast
+import functools
 import os
 import warnings
 
@@ -77,17 +87,31 @@ ALLOWED = {
      "run_streaming_pipeline", "route_spans_from"):
         "deployment setting: path of the bronze table kept spans are "
         "exported from",
-    ("otel_tail_sampler_spark/operators/corpus.py", "rates_for_budget",
-     "weights"):
-        "job input: the target source mixture the budget is split by "
-        "(temperature_weights' output)",
-    ("otel_tail_sampler_spark/operators/enrichment.py", "mark_exported",
-     "exported_at_ms"):
-        "clock injection: the export time stamped on the manifest rows",
     ("otel_tail_sampler_spark/operators/packing.py", "write_shards",
      "manifest"):
         "safety record: the per-shard integrity manifest a loader verifies "
         "the written shards against",
+}
+
+# (module, name) -> why a deployment calls the name from outside the
+# repository. Each reason is a job entry, a deployment source or sink, or
+# an admin API.
+ENTRY_POINTS = {
+    ("otel_tail_sampler_spark/plans/checkpoint.py", "run_resumable"):
+        "job entry: the resumable run of the sampling job",
+    ("otel_tail_sampler_spark/streaming/stream_job.py", "read_kafka_stream"):
+        "deployment source: the Kafka span topic (gated by its jar)",
+    ("otel_tail_sampler_spark/sources/iceberg.py", "read_iceberg"):
+        "deployment source: the Iceberg span table (gated by its jar)",
+    ("otel_tail_sampler_spark/sources/iceberg.py", "write_routed_iceberg"):
+        "deployment sink: the Iceberg routed table (gated by its jar)",
+    ("otel_tail_sampler_spark/operators/rule_store.py", "save_rule"):
+        "admin API: create or update a force rule in the rule table",
+    ("otel_tail_sampler_spark/operators/rule_store.py", "delete_rule"):
+        "admin API: delete a force rule from the rule table",
+    ("otel_tail_sampler_spark/operators/rule_store.py",
+     "apply_rules_from_table"):
+        "admin API: apply the rule table's live rules to decided traces",
 }
 
 
@@ -168,11 +192,9 @@ class _Collector(ast.NodeVisitor):
         self.generic_visit(node)
 
 
-def never_passed(sources: dict[str, str]) -> set[tuple[str, str, str]]:
-    """(module, function, parameter) for every library parameter with a
-    default that no non-test call in ``sources`` sets."""
-    defs: dict = {}
-    calls: dict = {}
+def _parse(sources: dict[str, str]) -> dict[str, ast.Module]:
+    """The syntax trees of the files of ``sources`` outside ``tests/``."""
+    trees = {}
     for path, src in sources.items():
         if path.startswith(TESTS):
             continue
@@ -180,7 +202,22 @@ def never_passed(sources: dict[str, str]) -> set[tuple[str, str, str]]:
             # invalid escapes in scanned files' string literals are theirs
             warnings.simplefilter("ignore", DeprecationWarning)
             warnings.simplefilter("ignore", SyntaxWarning)
-            tree = ast.parse(src, path)
+            trees[path] = ast.parse(src, path)
+    return trees
+
+
+@functools.cache
+def _repo() -> dict[str, ast.Module]:
+    # one walk and one parse of the repository for both rules
+    return _parse(_sources())
+
+
+def never_passed(trees: dict[str, ast.Module]) -> set[tuple[str, str, str]]:
+    """(module, function, parameter) for every library parameter with a
+    default that no call in ``trees`` sets."""
+    defs: dict = {}
+    calls: dict = {}
+    for path, tree in trees.items():
         _Collector(path, defs, calls).visit(tree)
     out = set()
     for name, params in defs.items():
@@ -195,8 +232,97 @@ def never_passed(sources: dict[str, str]) -> set[tuple[str, str, str]]:
     return out
 
 
+def _refs(code: list[ast.AST]) -> set[str]:
+    """Names ``code`` references: a ``Name``, an ``Attribute`` or a string
+    constant that is an identifier (a dispatch by name)."""
+    out = set()
+    for node in code:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                if n.value.isidentifier():
+                    out.add(n.value)
+    return out
+
+
+def _owned(stmt: ast.stmt) -> tuple[list[str], ast.AST | None]:
+    """The top-level names ``stmt`` defines and the code they own."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name], stmt
+    if isinstance(stmt, (ast.Assign, ast.AnnAssign)) and stmt.value is not None:
+        targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+        names = []
+        for t in targets:
+            elts = t.elts if isinstance(t, ast.Tuple) else [t]
+            if not all(isinstance(e, ast.Name) for e in elts):
+                return [], None
+            names += [e.id for e in elts]
+        return names, stmt.value
+    return [], None
+
+
+def unreached(
+    trees: dict[str, ast.Module], entry_points=ENTRY_POINTS
+) -> set[tuple[str, str]]:
+    """(module, name) for every top-level def, class and assigned name of
+    the library that no code in ``trees`` reaches by name from a root.
+
+    The roots are the caller files, the library's module-level code that
+    defines no name, dunder names, and ``entry_points``. A reached name
+    reaches what its code references; imports are not references."""
+    owners: dict[str, list[tuple[str, ast.AST]]] = {}
+    roots: list[ast.AST] = []
+    for path, tree in trees.items():
+        if not path.startswith(PACKAGE):
+            roots.append(tree)
+            continue
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                continue
+            names, code = _owned(stmt)
+            if not names or all(n.startswith("__") for n in names):
+                roots.append(stmt)
+            for n in names:
+                if (path, n) in entry_points:
+                    roots.append(code)
+                if not n.startswith("__"):
+                    owners.setdefault(n, []).append((path, code))
+    reached: set[str] = set()
+    todo = _refs(roots)
+    while todo:
+        name = todo.pop()
+        if name in reached or name not in owners:
+            continue
+        reached.add(name)
+        todo |= _refs([code for _p, code in owners[name]])
+    return {
+        (path, name)
+        for name, defs in owners.items()
+        if name not in reached
+        for path, _code in defs
+    } - set(entry_points)
+
+
+def test_every_function_has_a_caller():
+    dead = sorted(unreached(_repo()))
+    assert not dead, (
+        "library names no program reaches — delete each, or add the "
+        "caller that needs it:\n" + "\n".join(f"  {m}: {n}" for m, n in dead)
+    )
+
+
+def test_entry_points_are_current():
+    # an entry point that a program reaches, or that was removed, leaves
+    # the list
+    stale = sorted(set(ENTRY_POINTS) - unreached(_repo(), entry_points={}))
+    assert not stale, f"ENTRY_POINTS entries that are reached or gone: {stale}"
+
+
 def test_every_option_has_a_caller():
-    unset = sorted(never_passed(_sources()) - set(ALLOWED))
+    unset = sorted(never_passed(_repo()) - set(ALLOWED))
     assert not unset, (
         "parameters no caller sets — make each the constant it defaults to, "
         "or add the caller that needs it:\n"
@@ -207,7 +333,7 @@ def test_every_option_has_a_caller():
 def test_allowlist_is_current():
     # an allowlisted option that gained a caller, or was removed, leaves
     # the list
-    stale = sorted(set(ALLOWED) - never_passed(_sources()))
+    stale = sorted(set(ALLOWED) - never_passed(_repo()))
     assert not stale, f"ALLOWED entries that now have a caller: {stale}"
 
 
@@ -217,26 +343,45 @@ def test_audit_rules_on_planted_sources():
         lib: (
             "def op(df, a=1, b=2, *, c=3, d=4, e=5):\n    pass\n"
             "def fwd(df, **kw):\n    return op(df, **kw)\n"
-            "def lone(x=0):\n    pass\n"
+            "def lone(x=0):\n    return helper()\n"
+            "def helper():\n    pass\n"
+            "def by_name():\n    pass\n"
+            "LIMIT = 3\n"
             "class K:\n"
             "    def __init__(self, n=1):\n        pass\n"
             "    def m(self, y=0, z=0):\n        pass\n"
         ),
         "scripts/planted.py": (
             "from functools import partial\n"
+            "from otel_tail_sampler_spark.operators.planted import fwd\n"
             "op(df, 10, c=30)\n"
             "partial(op, d=40)\n"
             "K().m(1)\n"
+            "getattr(planted, 'by_name')()\n"
         ),
-        # a test is not a caller: lone(x=) and K(n=) stay unset
-        "tests/test_planted.py": "lone(x=1)\nK(n=2)\n",
+        # a test is not a caller: lone(x=) and K(n=) stay unset, and
+        # lone and LIMIT stay unreached
+        "tests/test_planted.py": "lone(x=1)\nK(n=2)\nassert LIMIT\n",
     }
-    got = {(f, p) for _m, f, p in never_passed(src)}
+    got = {(f, p) for _m, f, p in never_passed(_parse(src))}
     # a: positional; c: keyword; d: through partial; y: bound-method
     # positional; fwd's **kw is a call with **, setting all of op's
     assert got == {("lone", "x"), ("__init__", "n"), ("m", "z")}
+    # the function rule: fwd is only imported, lone only called by a test,
+    # helper only reached through lone; op and K are called, by_name is
+    # dispatched by a string constant
+    dead = {(lib, n) for n in ("fwd", "lone", "helper", "LIMIT")}
+    assert unreached(_parse(src), entry_points={}) == dead
+    # an entry point is a root: it and its helpers are kept
+    entry = {(lib, "lone"): "job entry: planted"}
+    assert unreached(_parse(src), entry_points=entry) == dead - {
+        (lib, "lone"), (lib, "helper")
+    }
     src["scripts/planted.py"] += "lone(x=1)\n"
-    assert ("lone", "x") not in {(f, p) for _m, f, p in never_passed(src)}
+    assert ("lone", "x") not in {(f, p) for _m, f, p in never_passed(_parse(src))}
+    assert unreached(_parse(src), entry_points={}) == {
+        (lib, "fwd"), (lib, "LIMIT")
+    }
     src[lib] = src[lib].replace("return op(df, **kw)", "return None")
-    got = {(f, p) for _m, f, p in never_passed(src)}
+    got = {(f, p) for _m, f, p in never_passed(_parse(src))}
     assert {("op", "b"), ("op", "e")} <= got

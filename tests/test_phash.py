@@ -207,66 +207,3 @@ def test_audio_neardup_composes_with_phash_pairs(spark):
     fps = fps.withColumnRenamed("afp", "phash_d")
     pairs = phash_pairs(fps, tau=3, n_bands=4).collect()
     assert len(pairs) == 1 and pairs[0]["hamming"] <= 3
-
-
-def test_media_dedup_stream_perceptual_first_wins(spark, tmp_path_factory):
-    # Streaming perceptual dedup: a byte-DIFFERENT re-encode (pixel
-    # (1,1) changed — never sampled by either hash grid at h=32) shares
-    # the dHash and drops across micro-batches; same-batch byte-twins
-    # elect the min id. A digest-keyed dedup stream would pass all 5.
-    import glob
-    import shutil
-
-    import pandas as pd
-
-    from otel_tail_sampler_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_ppm,
-    )
-    from otel_tail_sampler_spark.streaming.dedup_stream import (
-        media_dedup_stream,
-    )
-
-    rng = np.random.Generator(np.random.PCG64(5))
-    img_a = rng.integers(0, 256, (32, 40, 3), np.uint8)
-    img_b = rng.integers(0, 256, (32, 40, 3), np.uint8)
-    img_c = rng.integers(0, 256, (32, 40, 3), np.uint8)
-    a_reenc = img_a.copy()
-    a_reenc[1, 1] = 255 - a_reenc[1, 1]  # byte-different, phash-equal
-
-    def row(mid, arr):
-        return (mid, "image", bytearray(encode_ppm(arr)),
-                (arr.shape[1], arr.shape[0], 1, None, "ppm"))
-
-    in_dir = tmp_path_factory.mktemp("md_in")
-    stream_in = str(tmp_path_factory.mktemp("md_stream"))
-    out_dir = str(tmp_path_factory.mktemp("md_out"))
-    b1 = [row("m-10", img_a), row("m-02", img_a), row("m-50", img_b)]
-    b2 = [row("m-60", a_reenc), row("m-70", img_c)]
-    for i, rows in enumerate((b1, b2), 1):
-        spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(in_dir / f"b{i}"))
-        shutil.copy(
-            glob.glob(f"{in_dir}/b{i}/*.parquet")[0],
-            f"{stream_in}/f{i}.parquet",
-        )
-    src = (
-        spark.readStream.schema(MEDIA_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_in)
-    )
-    q = (
-        media_dedup_stream(src)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", out_dir + "_ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = pd.read_parquet(out_dir)
-    assert sorted(out["media_id"]) == ["m-02", "m-50", "m-70"]
-    a = out[out["media_id"] == "m-02"].iloc[0]
-    assert a["dup_count"] == 1  # m-10, same batch; m-60 dropped silently

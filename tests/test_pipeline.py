@@ -366,3 +366,28 @@ def test_metric_table_schemas(spark, small_dataset, tmp_path):
         ("sink", "string", False),
         ("trace_count", "int64", False),
     ]
+
+
+def test_exported_manifest_expires_under_ttl(spark, small_dataset, tmp_path, result):
+    """run_and_write's exported manifest carries its export stamp, so the
+    J2 dedup's TTL (the reference's expiring exported:{trace_id} keys)
+    applies to it: a re-run inside the TTL suppresses every kept trace,
+    one past stamp + ttl lets them through again."""
+    import time
+
+    from otel_tail_sampler_spark.operators.enrichment import dedup_against_exported
+    from otel_tail_sampler_spark.plans.pipeline import run_and_write
+
+    out = str(tmp_path / "out")
+    before = int(time.time() * 1000)
+    run_and_write(spark, small_dataset["tokenized"], out, CFG)
+    after = int(time.time() * 1000)
+    exported = spark.read.parquet(f"{out}/exported")
+    keep = result.decided.filter(F.col("decision") == "keep")
+    n_keep = keep.count()
+    assert n_keep > 0 and exported.count() == n_keep
+    ttl = 60_000
+    fresh = dedup_against_exported(keep, exported, ttl_ms=ttl, now_ms=before)
+    assert fresh.count() == 0
+    aged = dedup_against_exported(keep, exported, ttl_ms=ttl, now_ms=after + ttl + 1)
+    assert aged.count() == n_keep

@@ -202,6 +202,50 @@ def test_streaming_routed_keep_export(spark, tmp_path_factory):
     )
 
 
+def test_state_resume_at_another_bucket_count_raises(spark, tmp_path_factory):
+    """The state strategy hashes traces into 2 x shuffle-partitions
+    buckets. A resume under another partition count would re-bucket the
+    state and emit traces split, so it must fail fast; a resume at the
+    recorded count goes on and emits each trace once."""
+    import glob
+    import shutil
+
+    data_dir = tmp_path_factory.mktemp("rebucket_in")
+    src = tmp_path_factory.mktemp("rebucket_src")
+    out_dir = str(tmp_path_factory.mktemp("rebucket_out"))
+    paths = generate_dataset(
+        GenSpec(n_traces=300, spans_per_trace=5, error_rate=0.2, seed=11),
+        str(data_dir),
+    )
+    files = sorted(glob.glob(f"{paths['tokenized']}/*.parquet"))
+    assert len(files) >= 2
+
+    def run():
+        run_streaming_pipeline(
+            spark, str(src), out_dir, CFG, gap_seconds=GAP_S,
+            watermark_delay=f"{DELAY_S} seconds", strategy="state",
+        )
+
+    conf = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "2")
+        for f in files[: len(files) // 2]:
+            shutil.copy(f, src)
+        run()
+        for f in files[len(files) // 2:]:
+            shutil.copy(f, src)
+        spark.conf.set(conf, "4")
+        with pytest.raises(ValueError, match="n_buckets"):
+            run()
+        spark.conf.set(conf, "2")
+        run()
+    finally:
+        spark.conf.set(conf, saved)
+    emitted = pd.read_parquet(os.path.join(out_dir, "decided"))
+    assert len(emitted) and emitted["trace_id"].is_unique
+
+
 def test_dedup_stream_first_wins_across_batches(spark, tmp_path_factory):
     """Streaming exact-dedup: first arrival of a digest passes, later
     arrivals (across micro-batches) drop; same-batch ties elect min id."""

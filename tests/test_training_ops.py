@@ -71,10 +71,12 @@ def test_simhash_identical_and_stability(spark, docs):
     assert fp1 == fp2
     assert all(0 <= v < 2**16 for v in fp1.values())
     dup = docs.limit(5).withColumn("doc_id", F.col("doc_id") + 9000)
-    pairs = D.simhash_dup_pairs(docs.limit(5).unionByName(dup)).toPandas()
-    assert {(a, b) for a, b in zip(pairs["id_a"], pairs["id_b"])} >= {
-        (i, i + 9000) for i in range(5)
+    fp = {
+        r["doc_id"]: r["simhash"]
+        for r in D.simhash(docs.limit(5).unionByName(dup)).collect()
     }
+    ids = [i for i in fp if i < 9000]
+    assert len(ids) == 5 and all(fp[i] == fp[i + 9000] for i in ids)
 
 
 def test_embedding_dup_pairs(spark, emb):
@@ -230,56 +232,7 @@ def test_lang_id(spark):
     assert got[1] == "en" and got[2] == "de" and got[3] == "fr" and got[4] == "und"
 
 
-def test_quality_score_bounds_and_ordering(spark, docs):
-    out = T.quality_score(docs).select("doc_id", "quality_score").toPandas()
-    assert out["quality_score"].between(0, 1).all()
-    junk = spark.createDataFrame(
-        [(1, "!!! ??? 123 456 789 ... ;;; @@@"), (2, "the cat is on the mat and it is a good day for a walk")],
-        "doc_id long, text string",
-    )
-    q = {r["doc_id"]: r["quality_score"] for r in T.quality_score(junk).collect()}
-    assert q[2] > q[1]
-
-
-def test_fingerprint_properties(spark):
-    rows = [
-        (1, "one two three four five six"),
-        (2, "one  two three four five six"),   # whitespace-normalized equal
-        (3, "one two three four five seven"),  # local change
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in T.fingerprint(df).collect()}
-    assert out[1]["fp_md5"] == out[2]["fp_md5"]
-    assert out[1]["fp_md5"] != out[3]["fp_md5"]
-    # rolling windows share the min OR max anchor despite the local change
-    assert (
-        out[1]["fp_window_min"] == out[3]["fp_window_min"]
-        or out[1]["fp_window_max"] == out[3]["fp_window_max"]
-    )
-
-
 # --- multimodal --------------------------------------------------------------
-
-
-def test_multimodal_plumbing(spark):
-    media = M.synthetic_media(spark, n=24)
-    feats = M.extract_features(media).toPandas()
-    assert len(feats) == 24
-    assert (feats["feat_dim"] == M.FEATURE_DIM).all()
-    assert (feats["features"].map(len) == M.FEATURE_DIM).all()
-    # deterministic across runs
-    feats2 = M.extract_features(media).toPandas()
-    a = feats.sort_values("media_id")[["payload_crc", "features"]]
-    b = feats2.sort_values("media_id")[["payload_crc", "features"]]
-    assert a["payload_crc"].tolist() == b["payload_crc"].tolist()
-    assert [list(x) for x in a["features"]] == [list(x) for x in b["features"]]
-
-    resized = M.resize_images(media, 32, 24).toPandas()
-    assert (resized["kind"] == "image").all() and len(resized) == 8
-
-    frames = M.sample_frames(media).toPandas()
-    assert (frames["frame_idx"] % M.FRAME_STRIDE == 0).all()
-    assert frames["media_id"].str.startswith("m-").all()
 
 
 def test_codecs_golden_and_roundtrip():
@@ -335,23 +288,6 @@ def test_media_stats_matches_preencode_truth(spark):
                 got[c].astype("float64").fillna(-1).tolist()
                 == truth[c].astype("float64").fillna(-1).tolist()
             ), c
-
-
-def test_sample_frames_real_crc(spark):
-    """Sampled-frame crc equals crc(encode_ppm(decoded frame))."""
-    import zlib
-
-    media = M.synthetic_media(spark, n=6, seed=3)
-    out = M.sample_frames(media).toPandas()
-    rows = {
-        r["media_id"]: bytes(r["payload"])
-        for r in media.filter("kind = 'video'").collect()
-    }
-    assert len(out) > 0
-    for _, r in out.iterrows():
-        frames = M.decode_video(rows[r["media_id"]])
-        want = zlib.crc32(M.encode_ppm(frames[r["frame_idx"]])) & 0xFFFFFFFF
-        assert r["frame_crc"] == want
 
 
 def test_ivf_topk_recall(spark, emb, queries):
@@ -1523,62 +1459,6 @@ def test_source_overlap_matrix(spark):
     assert got == {("book", "web"): 2, ("web", "web"): 2}
 
 
-def test_rates_for_budget_water_filling(spark):
-    from otel_tail_sampler_spark.operators.corpus import rates_for_budget
-
-    report = spark.createDataFrame(
-        [("a", 1000), ("b", 100), ("c", 400)],
-        "source string, total_words long",
-    )
-    # equal weights, budget 600: naive share 200 each, but b caps at 100;
-    # its unused 100 re-flows equally to a and c -> 250 each
-    r = rates_for_budget(report, 600)
-    assert r["b"] == 1.0
-    assert abs(r["a"] - 0.25) < 1e-9 and abs(r["c"] - 250 / 400) < 1e-9
-    kept = 1000 * r["a"] + 100 * r["b"] + 400 * r["c"]
-    assert abs(kept - 600) < 1e-6
-    # budget above the corpus: everything saturates
-    r_all = rates_for_budget(report, 10_000)
-    assert r_all == {"a": 1.0, "b": 1.0, "c": 1.0}
-    # weighted: c gets 3x a's share; b weight 0 -> dropped
-    rw = rates_for_budget(report, 700, weights={"a": 1, "b": 0, "c": 3})
-    assert rw["b"] == 0.0 and rw["c"] == 1.0  # c share 525 > 400: caps
-    assert abs(1000 * rw["a"] + 400 - 700) < 1e-6
-
-
-def test_temperature_weights_hand_computed(spark, monkeypatch):
-    from otel_tail_sampler_spark.operators import corpus
-    from otel_tail_sampler_spark.operators.corpus import (
-        rates_for_budget,
-        temperature_weights,
-    )
-
-    counts = {"big": 900, "small": 100}
-    # the default alpha 0.3: (0.9^.3, 0.1^.3) normalized
-    wh = temperature_weights(counts)
-    assert abs(wh["small"] - 0.1**0.3 / (0.9**0.3 + 0.1**0.3)) < 1e-9
-    assert abs(sum(wh.values()) - 1.0) < 1e-8
-    # alpha 1.0: natural proportions
-    monkeypatch.setattr(corpus, "TEMPERATURE_ALPHA", 1.0)
-    w1 = temperature_weights(counts)
-    assert abs(w1["big"] - 0.9) < 1e-9 and abs(w1["small"] - 0.1) < 1e-9
-    # alpha 0: uniform regardless of size
-    monkeypatch.setattr(corpus, "TEMPERATURE_ALPHA", 0.0)
-    w0 = temperature_weights(counts)
-    assert abs(w0["big"] - 0.5) < 1e-9 and abs(w0["small"] - 0.5) < 1e-9
-    assert w0["small"] > wh["small"] > w1["small"]
-    with pytest.raises(ValueError):
-        temperature_weights({})
-    # composes with the water-filling solver: alpha-flattened weights
-    # give the small source a larger-than-natural share of the budget
-    report = spark.createDataFrame(
-        [("big", 900), ("small", 100)], "source string, total_words long"
-    )
-    r = rates_for_budget(report, 200, weights=wh)
-    kept_small = 100 * r["small"]
-    assert kept_small > 200 * 0.1  # more than its natural share
-
-
 def test_dedup_cluster_stats_hand_computed(spark):
     from otel_tail_sampler_spark.operators.dedup import dedup_cluster_stats
 
@@ -1723,8 +1603,6 @@ def test_reference_dup_pairs_exact_and_apply(spark, docs):
         assert pairs[bid + 5000][0] == bid
     assert pairs[base_ids[0] + 5000][1] == 3  # the tripled text
     assert len(pairs) == 4  # fresh docs match nothing
-    kept = D.dedup_against_corpus(new, ref)
-    assert sorted(r["doc_id"] for r in kept.collect()) == [9001, 9002]
 
 
 def test_reference_dup_pairs_minhash_cross_only(spark, docs):
@@ -1757,8 +1635,6 @@ def test_reference_dup_pairs_minhash_cross_only(spark, docs):
     # verification bar: planted near-dups agree on most components, so
     # an n_agree threshold keeps them and drops accidental collisions
     assert planted <= {r["id_new"] for r in out if r["n_agree"] >= 8}
-    kept = D.dedup_against_corpus(new_df, ref_df)
-    assert planted.isdisjoint({r["doc_id"] for r in kept.collect()})
 
 
 def test_vocab_drift_scalar_reference(spark):
