@@ -1,8 +1,10 @@
 """Small files next to Spark output, through the Hadoop FS API.
 
 Markers are JSON files a job reads back on its next start to tell what an
-earlier run left behind. The Hadoop FS API reaches every filesystem the
-session can (local, HDFS, object stores), not just the driver's disk.
+earlier run left behind. ``path_exists`` lets a reader tell a table that
+was never written (read as empty) from one that fails to read (raise).
+The Hadoop FS API reaches every filesystem the session can (local, HDFS,
+object stores), not just the driver's disk.
 """
 
 from __future__ import annotations
@@ -45,7 +47,6 @@ def write_marker(spark: SparkSession, path_str: str, payload: dict) -> None:
         out.close()
 
 
-def delete_dir(spark: SparkSession, path_str: str) -> None:
+def path_exists(spark: SparkSession, path_str: str) -> bool:
     _, fs, path = _hadoop_path(spark, path_str)
-    if fs.exists(path):
-        fs.delete(path, True)
+    return bool(fs.exists(path))

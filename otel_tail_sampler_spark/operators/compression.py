@@ -29,7 +29,8 @@ reference also compresses only exported traces, evaluator.rs:403-459).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import ClassVar
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -41,7 +42,8 @@ class CompressionConfig:
 
     min_compression_count: int = 3
     window_seconds: int = 60
-    max_span_duration_ms: int = 60_000  # spans longer than this never compress
+    # spans longer than this never compress
+    max_span_duration_ms: ClassVar[int] = 60_000
     # (pattern, group_name): substring OR regex match -> named group (F6)
     sql_patterns: tuple = ()
     # True = reference semantics (compress within a trace,

@@ -20,6 +20,7 @@ DuckDB-oracle-checkable.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -39,7 +40,7 @@ KEEP, DROP = "keep", "drop"
 class ErrorPolicy:
     """Keep error traces at ``sample_rate`` (policies.rs:189-224)."""
 
-    name: str = "error_sampling"
+    name: ClassVar[str] = "error_sampling"
     sample_rate: float = 1.0
 
     def keep_expr(self) -> Column:
@@ -52,7 +53,7 @@ class ErrorPolicy:
 class LatencyPolicy:
     """Keep slow traces (max_duration_ms > threshold) at rate (policies.rs:227-268)."""
 
-    name: str = "latency_sampling"
+    name: ClassVar[str] = "latency_sampling"
     threshold_ms: int = 1000
     sample_rate: float = 1.0
 
@@ -66,7 +67,7 @@ class LatencyPolicy:
 class CardinalityPolicy:
     """Keep traces with span_count > max_span_count (policies.rs:271-318)."""
 
-    name: str = "cardinality_sampling"
+    name: ClassVar[str] = "cardinality_sampling"
     max_span_count: int = 100
 
     def keep_expr(self) -> Column:
@@ -77,7 +78,7 @@ class CardinalityPolicy:
 class ProbabilisticPolicy:
     """Baseline hash-sampling: keep ``sample_rate`` of ALL traces."""
 
-    name: str = "probabilistic_sampling"
+    name: ClassVar[str] = "probabilistic_sampling"
     sample_rate: float = 0.1
 
     def keep_expr(self) -> Column:

@@ -31,6 +31,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.functions.fs import path_exists
 from otel_tail_sampler_spark.functions.tables import local_table
 
 RULE_TABLE_SCHEMA = (
@@ -60,11 +61,10 @@ def _to_row(rule: dict, version: int) -> tuple:
 
 
 def _next_version(spark: SparkSession, path: str) -> int:
-    try:
-        row = spark.read.parquet(path).agg(F.max("version")).collect()[0]
-        return int(row[0] or 0) + 1
-    except Exception:  # first write: table does not exist yet
+    if not path_exists(spark, path):  # first write
         return 1
+    df = spark.read.schema(RULE_TABLE_SCHEMA).parquet(path)
+    return int(df.agg(F.max("version")).collect()[0][0] or 0) + 1
 
 
 def save_rule(spark: SparkSession, path: str, rule: dict) -> int:
@@ -102,11 +102,11 @@ def load_rules(
     the snapshot is still deterministic: ties break on the data file's
     path (lexicographically last wins), which is stable across reads.
     For true multi-writer CRUD, back this with a conditional-commit table
-    format (the Iceberg source, when its jar is present)."""
-    try:
-        df = spark.read.schema(RULE_TABLE_SCHEMA).parquet(path)
-    except Exception:
+    format (the Iceberg source, when its jar is present). Only a missing
+    table reads as empty; one that fails to read raises."""
+    if not path_exists(spark, path):
         return []
+    df = spark.read.schema(RULE_TABLE_SCHEMA).parquet(path)
     w_rows = (
         df.withColumn(
             "_rn",

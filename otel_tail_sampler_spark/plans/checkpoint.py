@@ -38,6 +38,7 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.functions.fs import path_exists
 from otel_tail_sampler_spark.functions.tables import local_table
 from otel_tail_sampler_spark.operators.parser import trace_key_exprs
 from otel_tail_sampler_spark.operators.policies import SamplerConfig
@@ -66,11 +67,11 @@ def bucket_col(n_buckets: int):
 def read_manifest(spark: SparkSession, ckpt_dir: str, n_buckets: int) -> set[int]:
     """Bucket ids the manifest marks done. Raises ValueError when the
     manifest was written at another bucket count (rows from before the
-    count was recorded read it as null and are not checked)."""
-    try:
-        rows = spark.read.schema(MANIFEST_SCHEMA).parquet(ckpt_dir).collect()
-    except Exception:
+    count was recorded read it as null and are not checked). Only a
+    missing manifest reads as empty; one that fails to read raises."""
+    if not path_exists(spark, ckpt_dir):
         return set()
+    rows = spark.read.schema(MANIFEST_SCHEMA).parquet(ckpt_dir).collect()
     recorded = {r["n_buckets"] for r in rows} - {None, n_buckets}
     if recorded:
         raise ValueError(
@@ -115,11 +116,9 @@ def run_resumable(
     res = run_pipeline(spark, tokenized, cfg, force_rules=force_rules)
 
     # idempotent sink commit FIRST — the single full pass over the data.
-    # Dynamic partition overwrite is the correctness contract here: with
-    # Spark's default static mode, mode('overwrite') would delete previously
-    # committed bucket partitions on resume while the manifest still marks
-    # them done. The write option pins it for this write only; the
-    # caller's session conf is never touched.
+    # Dynamic partition overwrite, pinned for this write only: Spark's
+    # default static mode would delete the bucket partitions committed
+    # before the resume while the manifest still marks them done.
     try:
         (
             res.routed.write.mode("overwrite")

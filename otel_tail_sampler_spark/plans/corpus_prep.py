@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from otel_tail_sampler_spark.functions.fs import delete_dir, read_marker, write_marker
+from otel_tail_sampler_spark.functions.fs import read_marker, write_marker
 from otel_tail_sampler_spark.functions.tables import local_table
 
 
@@ -55,9 +55,9 @@ def run_corpus_prep(
     metrics; a stage whose marker matches the current parameters is reused
     without touching its inputs (a resumed run whose tokenize stage is
     current never rescans the documents table at all), and a stage whose
-    parameters changed is recomputed — its directory is DELETED first, so
-    the session's dynamic partition-overwrite mode can never leave stale
-    shard partitions behind when ``n_shards`` shrinks. Markers are written
+    parameters changed is recomputed — its write replaces the whole
+    directory (static overwrite), so a shrunk ``n_shards`` leaves no stale
+    shard partitions behind. Markers are written
     only after the stage's data lands: an interrupted write leaves no
     marker and recomputes cleanly.
     """
@@ -112,7 +112,6 @@ def run_corpus_prep(
         # then read the cheap column-pruned parquet instead of re-executing
         # the DAG (previously ~5 full recomputations of the most expensive
         # stages). The tokenized table is also a useful artifact.
-        delete_dir(spark, tok_dir)
         trimmed.write.mode("overwrite").parquet(tok_dir)
         acct = (
             spark.read.parquet(tok_dir)
@@ -148,9 +147,6 @@ def run_corpus_prep(
         packed = pack_sequences(
             trimmed, max_len=max_len, n_rows=int(m1["docs_kept"])
         )
-        # explicit delete: under dynamic partition overwrite a shrunk
-        # n_shards would otherwise leave stale shard=k directories behind
-        delete_dir(spark, shards_dir)
         write_shards(packed, shards_dir, n_shards=n_shards)
         m2 = {"examples": int(spark.read.parquet(shards_dir).count())}
         write_marker(

@@ -18,7 +18,7 @@ plans.checkpoint.run_resumable runs it over the not-yet-committed buckets.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

@@ -1,9 +1,9 @@
-"""SparkSession factory tuned for the tail-sampling pipeline.
+"""SparkSession factory for the tail-sampling jobs.
 
-The defaults encode the scale posture from SURVEY.md §4/§7: AQE on (runtime
-coalesce + skew-join splitting), Arrow on (the parser is an Arrow-vectorized
-stage), partition sizing that survives a 100x scale-up by being configured,
-not hard-coded.
+It sets only what Spark does not default to and every job needs. A job
+that needs more pins it at its own write (``run_resumable`` pins dynamic
+partition overwrite). Master and shuffle partitions come from the
+launcher unless the caller passes them.
 """
 
 from __future__ import annotations
@@ -14,6 +14,7 @@ import re
 from pyspark.sql import SparkSession
 
 _LOCAL_MASTER = re.compile(r"local(?:\[(\d+|\*)(?:,\d+)?\])?")
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 def default_driver_memory(master: str) -> str:
@@ -41,53 +42,38 @@ def build_session(
 ) -> SparkSession:
     """Create (or reuse) a SparkSession with pipeline defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox; on a
-    real cluster callers pass ``None`` and let spark-submit decide.
+    ``master=None`` leaves the master to the launcher: spark-submit's
+    ``--master``, or ``local[*]`` when started from plain Python.
+    ``shuffle_partitions=None`` keeps a launcher-set value; otherwise a
+    local master gets one partition per core (``local[N]`` -> N) and a
+    cluster master Spark's default.
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-        shuffle_partitions = int(cpus_env) if cpus_env and cpus_env.isdigit() else 32
-
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        # AQE: runtime partition coalescing + skew-join splitting — the
-        # heavy-hitter trace shape (1% of traces w/ 20k spans) makes the
-        # routing join skewed; AQE splits oversized join partitions.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow everywhere Python touches data (parser, pandas UDF ops).
+        # Arrow for every driver-built table and pandas-UDF operator
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        # Input split sizing: 128 MiB splits keep per-task memory bounded at
-        # any table size (the lever that scales to 100 TB, not a row count).
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # Per-file open cost (guide §6): the 4 MiB default floors the split
-        # size at 4 MiB, which serializes scans of small-file tables (a
-        # 4 MB file can never split). 1 MiB keeps the tiny-file guard but
-        # lets totalBytes/minPartitionNum (defaulting to the session
-        # parallelism) actually spread a small table across the cores; at
-        # lake scale totalBytes dominates and this knob is inert.
-        .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
-        # Broadcast threshold: rule/dim tables are tiny; 64 MiB is safe.
+        # the route plan: a sampled decision table broadcasts into the
+        # span scan instead of shuffling every span's payload
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.parquet.enableVectorizedReader", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY")
-            or default_driver_memory(master),
+            or default_driver_memory(master or "local[*]"),
         )
         .config("spark.ui.enabled", "false")
-        # Dynamic partition overwrite -> idempotent per-partition sink commits
-        # (the checkpoint/resume contract in plans.checkpoint).
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
     )
-    for k, v in (extra_conf or {}).items():
+    if master is not None:
+        builder = builder.master(master)
+    conf = dict(extra_conf or {})
+    if shuffle_partitions is not None:
+        conf[_SHUFFLE_PARTITIONS] = str(shuffle_partitions)
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    sc = spark.sparkContext
+    launcher_set = sc.getConf().contains(_SHUFFLE_PARTITIONS)
+    if _SHUFFLE_PARTITIONS not in conf and not launcher_set and sc.master.startswith("local"):
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(sc.defaultParallelism))
+    return spark

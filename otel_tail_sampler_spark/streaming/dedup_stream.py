@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.streaming.buckets import state_buckets
+
 
 def dedup_stream(
     docs: DataFrame,
@@ -70,12 +72,13 @@ def dedup_stream(
     bounded run's wall time. Per-digest first-wins semantics are
     unchanged: the same rows are emitted.
 
-    CHECKPOINT COMPATIBILITY: the bucketed state schema replaces the
-    round-4 ``(first_id,)`` per-digest rows; resuming a checkpoint
-    written by any earlier version requires a FRESH checkpointLocation
-    (and accepts that already-seen digests re-emit once). The
-    ``deadlines`` array is always zeros; it keeps the state schema that
-    checkpoints written by the TTL-capable version carry."""
+    CHECKPOINT COMPATIBILITY: the state row ``(digests, first_ids)``
+    replaces the round-4 per-digest rows and the round-7 rows with an
+    always-zero ``deadlines`` array; a checkpoint written by any earlier
+    version needs a FRESH checkpointLocation (already-seen digests
+    re-emit once). The caller that owns the checkpoint pins the bucket
+    count (``streaming.buckets.pin_state_buckets``, as run_prep_stream
+    does)."""
     import pandas as pd
 
     id_type = docs.schema["doc_id"].dataType.simpleString()
@@ -87,12 +90,8 @@ def dedup_stream(
         + [f"{c} {ptypes[c]}" for c in payload_cols]
         + ["dup_count int"]
     )
-    state_schema = (
-        f"digests array<string>, first_ids array<{id_type}>, "
-        "deadlines array<long>"
-    )
-    spark = docs.sparkSession
-    n_buckets = 2 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    state_schema = f"digests array<string>, first_ids array<{id_type}>"
+    n_buckets = state_buckets(docs.sparkSession)
 
     digest = F.col(digest_col) if digest_col else F.md5(F.col("text"))
     keyed = docs.select(
@@ -122,7 +121,7 @@ def dedup_stream(
     def fn(key, pdfs, state):
         known: dict = {}
         if state.exists:
-            dgs, fids, _deadlines = state.get
+            dgs, fids = state.get
             known = dict(zip(dgs, fids))
         new: dict = {}  # digest -> [min_id_row_vals, dup_count]
         for pdf in pdfs:
@@ -150,7 +149,7 @@ def dedup_stream(
             known[d] = fid
         if new:
             ks = list(known)
-            state.update((ks, [known[d] for d in ks], [0] * len(ks)))
+            state.update((ks, [known[d] for d in ks]))
             ds = list(new)
             out = {
                 "digest": [str(d) for d in ds],

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.streaming.buckets import pin_state_buckets
+
 
 def _quality_gate(docs: DataFrame) -> DataFrame:
     """Stateless per-row quality gate (streaming-legal: no aggregation).
@@ -124,7 +126,8 @@ def run_prep_stream(
     ``out_dir``/tokenized (append-only parquet, exactly-once via the file
     sink manifest); the checkpoint under ``out_dir``/_checkpoint makes a
     restart continue from the last committed batch — new source files
-    only, no re-emission of already-committed digests.
+    only, no re-emission of already-committed digests; a restart at other
+    shuffle partitions raises (streaming.buckets).
 
     ``available_now=True`` drains everything currently in the directory
     and stops (the bounded test/run mode); ``False`` leaves the query
@@ -171,11 +174,13 @@ def run_prep_stream(
         extra_payload_cols=("ratio_fp",) if dsir_model is not None else (),
         ref_digests=ref_digests,
     )
+    ckpt = f"{out_dir}/_checkpoint"
+    pin_state_buckets(spark, ckpt)
     writer = (
         deduped.writeStream.outputMode("append")
         .format("parquet")
         .option("path", f"{out_dir}/tokenized")
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
+        .option("checkpointLocation", ckpt)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

@@ -29,10 +29,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from otel_tail_sampler_spark.functions.fs import read_marker, write_marker
 from otel_tail_sampler_spark.operators.assembly import summary_aggs, summary_columns
 from otel_tail_sampler_spark.operators.parser import parse_spans_jvm
-from otel_tail_sampler_spark.operators.policies import KEEP, SamplerConfig, decide
+from otel_tail_sampler_spark.operators.policies import SamplerConfig, decide
+from otel_tail_sampler_spark.streaming.buckets import pin_state_buckets, state_buckets
 
 
 def read_tokenized_stream(
@@ -241,12 +241,6 @@ def _merge_trace(old: list, new: list) -> None:
     old[11].update(new[11])
 
 
-def _state_buckets(spark: SparkSession) -> int:
-    """assemble_with_state's bucket count: 2x the shuffle partitions, the
-    knob that also sizes the state store."""
-    return 2 * int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-
 def assemble_with_state(
     spans: DataFrame,
     gap_seconds: int = 30,
@@ -290,7 +284,7 @@ def assemble_with_state(
     import pandas as pd
 
     gap_ms = gap_seconds * 1000
-    n_buckets = _state_buckets(spans.sparkSession)
+    n_buckets = state_buckets(spans.sparkSession)
 
     with_ts = spans.withColumn(
         "event_time", F.timestamp_millis(F.col("timestamp_ms"))
@@ -414,26 +408,6 @@ def assemble_with_state(
     )
 
 
-def _pin_state_buckets(spark: SparkSession, ckpt: str) -> None:
-    """Record the state bucket count in the checkpoint on its first start;
-    raise on a resume at another count. Spark restores its own state
-    partitioning from the checkpoint, but the bucket hash follows the live
-    session: at another count a trace's later spans would fold into
-    another bucket's state row and the trace would be emitted split."""
-    n_buckets = _state_buckets(spark)
-    marker = os.path.join(ckpt, "_n_buckets.json")
-    saved = read_marker(spark, marker)
-    if saved is None:
-        write_marker(spark, marker, {"n_buckets": n_buckets})
-    elif saved["n_buckets"] != n_buckets:
-        raise ValueError(
-            f"streaming checkpoint {ckpt} was started with n_buckets="
-            f"{saved['n_buckets']}, not {n_buckets} (2 x "
-            "spark.sql.shuffle.partitions): resume with the same shuffle "
-            "partitions, or delete the checkpoint and the output to start over"
-        )
-
-
 def run_streaming_pipeline(
     spark: SparkSession,
     input_path: str,
@@ -496,7 +470,7 @@ def run_streaming_pipeline(
     )
     ckpt = os.path.join(out_dir, "_stream_checkpoint")
     if strategy == "state":
-        _pin_state_buckets(spark, ckpt)
+        pin_state_buckets(spark, ckpt)
         sessions = assemble_with_state(spans, gap_seconds, watermark_delay)
     elif strategy == "session_window":
         sessions = assemble_sessions(spans, gap_seconds, watermark_delay)

@@ -214,7 +214,6 @@ def main() -> None:
         ),
     )
 
-    from otel_tail_sampler_spark.operators.augment import fim_transform
     from otel_tail_sampler_spark.operators.corpus import (
         build_bigram_model,
         chunk_documents,

@@ -89,6 +89,16 @@ def test_resume_with_another_bucket_count_raises(spark, small_dataset, tmp_path)
     assert again.processed_buckets == []
 
 
+def test_unreadable_manifest_raises(spark, small_dataset, tmp_path):
+    """Only a missing manifest reads as empty. One that fails to read
+    raises: read as empty, the resume would redo every bucket."""
+    out = tmp_path / "out"
+    run_resumable(spark, small_dataset["tokenized"], str(out), n_buckets=N_BUCKETS)
+    (out / "_checkpoint" / "junk.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="junk.parquet"):
+        read_manifest(spark, str(out / "_checkpoint"), N_BUCKETS)
+
+
 def test_bucket_is_trace_aligned(spark, small_dataset):
     """All spans of a trace must share a bucket (decisions are per-trace)."""
     from pyspark.sql import functions as F

@@ -230,3 +230,18 @@ def test_rule_store_crud_and_reload(spark, attr_spans, tmp_path):
 
     # empty/missing table -> no rules, no flags
     assert RS.load_rules(spark, str(tmp_path / "nope")) == []
+
+
+def test_unreadable_rule_table_raises(spark, tmp_path):
+    """Only a missing rule table reads as empty. A table that fails to
+    read raises: read as empty, the job would run with no force rules and
+    save_rule would append a second version 1."""
+    from otel_tail_sampler_spark.operators import rule_store as RS
+
+    path = tmp_path / "rules"
+    RS.save_rule(spark, str(path), {"id": "r1", "action": "force_keep"})
+    (path / "junk.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="junk.parquet"):
+        RS.load_rules(spark, str(path))
+    with pytest.raises(Exception, match="junk.parquet"):
+        RS.save_rule(spark, str(path), {"id": "r2", "action": "force_keep"})

@@ -18,9 +18,19 @@ keeping a name.
 A parameter with a default is *passed* when some non-test call of its
 function sets it: by keyword, by a positional argument at or past its index, or through
 ``*args``/``**kw`` (which counts as setting every parameter).
-``functools.partial(f, ...)`` counts as a call of ``f``. Calls are matched
-to functions by name only, so functions that share a name across modules
-are matched together; that errs towards keeping a parameter.
+``functools.partial(f, ...)`` counts as a call of ``f``. Each field with a
+default of a library dataclass counts as a parameter too. It is passed by
+a constructor keyword, a positional argument at its index, ``**`` or a
+``dataclasses.replace(x, field=)``; a ``ClassVar`` is not a field. Calls
+are matched to functions by name only, so functions that share a name
+across modules are matched together; that errs towards keeping a
+parameter.
+
+Every import in the library, ``scripts/`` and ``perfbench/`` must be
+used: its bound name is referenced in the module, named in ``__all__``,
+or used in a string annotation. ``__future__`` imports are exempt, and
+so are the benchmark files at the root (``CALLER_FILES``), which change
+only with their benchmark.
 """
 
 from __future__ import annotations
@@ -144,6 +154,24 @@ class _Collector(ast.NodeVisitor):
         self.classes: list[ast.ClassDef] = []
 
     def visit_ClassDef(self, node: ast.ClassDef) -> None:
+        if self.path.startswith(PACKAGE) and any(
+            _callee_name(d.func if isinstance(d, ast.Call) else d) == "dataclass"
+            for d in node.decorator_list
+        ):
+            fields = [
+                f for f in node.body
+                if isinstance(f, ast.AnnAssign) and isinstance(f.target, ast.Name)
+                and "ClassVar" not in ast.unparse(f.annotation)
+            ]
+            for i, f in enumerate(fields):
+                if f.value is None:
+                    continue
+                # set through the constructor, or by keyword through
+                # dataclasses.replace
+                for callee, idx in ((node.name, i), ("replace", None)):
+                    self.defs.setdefault(callee, []).append(
+                        (self.path, node.name, f.target.id, idx, False)
+                    )
         self.classes.append(node)
         self.generic_visit(node)
         self.classes.pop()
@@ -219,16 +247,53 @@ def never_passed(trees: dict[str, ast.Module]) -> set[tuple[str, str, str]]:
     calls: dict = {}
     for path, tree in trees.items():
         _Collector(path, defs, calls).visit(tree)
-    out = set()
+    unset, passed = set(), set()
     for name, params in defs.items():
         for path, fname, pname, idx, is_method in params:
             for npos, kws, star, bound in calls.get(name, ()):
                 # obj.method(a) fills the parameter after self
                 off = 1 if is_method and bound and fname != "__init__" else 0
                 if star or pname in kws or (idx is not None and npos + off > idx):
+                    passed.add((path, fname, pname))
                     break
             else:
-                out.add((path, fname, pname))
+                unset.add((path, fname, pname))
+    # a dataclass field is listed under its class and under replace: one
+    # setter is enough
+    return unset - passed
+
+
+def unused_imports(trees: dict[str, ast.Module]) -> set[tuple[str, str]]:
+    """(module, name) for every name an import binds in ``CALLER_DIRS``
+    that its module never uses."""
+    out = set()
+    for path, tree in trees.items():
+        if not path.startswith(CALLER_DIRS):
+            continue
+        used = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name):
+                used.add(n.id)
+            elif isinstance(n, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__" for t in n.targets
+            ):
+                used |= {
+                    c.value for c in ast.walk(n.value) if isinstance(c, ast.Constant)
+                }
+            annotation = getattr(n, "annotation", None) or getattr(n, "returns", None)
+            if isinstance(annotation, ast.Constant) and isinstance(annotation.value, str):
+                used |= {
+                    m.id for m in ast.walk(ast.parse(annotation.value, mode="eval"))
+                    if isinstance(m, ast.Name)
+                }
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Import):
+                bound = [a.asname or a.name.split(".")[0] for a in n.names]
+            elif isinstance(n, ast.ImportFrom) and n.module != "__future__":
+                bound = [a.asname or a.name for a in n.names if a.name != "*"]
+            else:
+                continue
+            out |= {(path, b) for b in bound if b not in used}
     return out
 
 
@@ -337,6 +402,13 @@ def test_allowlist_is_current():
     assert not stale, f"ALLOWED entries that now have a caller: {stale}"
 
 
+def test_every_import_is_used():
+    unused = sorted(unused_imports(_repo()))
+    assert not unused, "imports nothing uses — delete each:\n" + "\n".join(
+        f"  {m}: {n}" for m, n in unused
+    )
+
+
 def test_audit_rules_on_planted_sources():
     lib = f"{PACKAGE}/operators/planted.py"
     src = {
@@ -385,3 +457,42 @@ def test_audit_rules_on_planted_sources():
     src[lib] = src[lib].replace("return op(df, **kw)", "return None")
     got = {(f, p) for _m, f, p in never_passed(_parse(src))}
     assert {("op", "b"), ("op", "e")} <= got
+
+    # dataclass fields: a positional argument at the field's index, a
+    # keyword, dataclasses.replace and ** set a field; a ClassVar and a
+    # field without a default are no option. The import rule: json and
+    # sys are bound and never used; a string annotation, an attribute
+    # base and __all__ use a name, and __future__ is exempt.
+    dc = {
+        lib: (
+            "from dataclasses import dataclass\n"
+            "from typing import ClassVar, Iterator\n"
+            "import json\n"
+            "import os.path\n"
+            "from pkg import exported\n"
+            "__all__ = ['exported']\n"
+            "@dataclass(frozen=True)\n"
+            "class Cfg:\n"
+            "    req: int\n"
+            "    pos: int = 0\n"
+            "    kw: int = 0\n"
+            "    rep: int = 0\n"
+            "    unset: int = 0\n"
+            "    tag: ClassVar[str] = 'x'\n"
+            "@dataclass\n"
+            "class Spread:\n"
+            "    s: int = 0\n"
+            "def f(it: 'Iterator[int]'):\n    return os.path.sep\n"
+        ),
+        "scripts/planted.py": (
+            "from __future__ import annotations\n"
+            "import sys\n"
+            "Cfg(1, 2, kw=3)\n"
+            "dataclasses.replace(c, rep=4)\n"
+            "Spread(**opts)\n"
+        ),
+    }
+    assert {(f, p) for _m, f, p in never_passed(_parse(dc))} == {("Cfg", "unset")}
+    assert unused_imports(_parse(dc)) == {
+        (lib, "json"), ("scripts/planted.py", "sys")
+    }

@@ -128,7 +128,7 @@ def test_empty_input_pipeline(spark, tmp_path):
     m = run_and_write(spark, src, out, CFG)
     assert m["row_metrics"].count() == 0
     assert m["decision_metrics"].count() == 0
-    # a zero-row dynamic-partition write legitimately produces no files;
+    # a zero-row partitioned write legitimately produces no files;
     # reading such a dir back needs an explicit schema (Spark can't infer)
     import glob
 
@@ -230,6 +230,27 @@ def test_overflow_sink_end_to_end(spark, small_dataset, tmp_path):
     assert sum(per_sink.values()) == spark.read.parquet(
         small_dataset["tokenized"]
     ).count()
+
+
+def test_rerun_into_same_out_dir_replaces_every_sink(spark, small_dataset, tmp_path):
+    """A second run into one out_dir reads back exactly its own
+    metrics_rows: a sink the first run wrote and the second does not
+    (overflow here) is gone, not left stale next to the new sinks."""
+    from otel_tail_sampler_spark.plans.pipeline import run_and_write
+
+    out = str(tmp_path / "out")
+    limited = SamplerConfig(
+        error=CFG.error, latency=CFG.latency, cardinality=CFG.cardinality,
+        rate_limit_per_key=5,
+    )
+    first = run_and_write(spark, small_dataset["tokenized"], out, limited)
+    assert "overflow" in {r["sink"] for r in first["row_metrics"].collect()}
+    m = run_and_write(spark, small_dataset["tokenized"], out, CFG)
+    want = {r["sink"]: r["row_count"] for r in m["row_metrics"].collect()}
+    assert "overflow" not in want
+    disk = spark.read.parquet(f"{out}/routed")
+    got = {r["decision"]: r["count"] for r in disk.groupBy("decision").count().collect()}
+    assert got == want
 
 
 def test_run_job_cli(spark, small_dataset, tmp_path):

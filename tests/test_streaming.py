@@ -397,6 +397,54 @@ def test_prep_stream_end_to_end_with_restart(spark, tmp_path_factory):
         assert list(r["tokens"]) == want[r["doc_id"]], r["doc_id"]
 
 
+def test_prep_stream_resume_at_another_bucket_count_raises(
+    spark, tmp_path_factory
+):
+    """dedup_stream hashes digests into 2 x shuffle-partitions buckets.
+    A run_prep_stream resume under another partition count would look a
+    known digest up in another bucket's state row and emit it again, so
+    it must fail fast; a resume at the recorded count emits each digest
+    once."""
+    import shutil
+
+    from otel_tail_sampler_spark.streaming.prep_stream import run_prep_stream
+
+    root = tmp_path_factory.mktemp("prep_rebucket")
+    src = root / "docs_in"
+    out = root / "out"
+    src.mkdir()
+    base = "the quick brown fox jumps over the lazy dog number"
+
+    def write_wave(name, ids):
+        spark.createDataFrame(
+            [(i, f"{base} {i % 40}", "en", "src0") for i in ids],
+            "doc_id long, text string, lang string, source string",
+        ).coalesce(1).write.mode("overwrite").parquet(str(root / name))
+        for f in (root / name).glob("*.parquet"):
+            shutil.copyfile(f, src / f"{name}.parquet")
+
+    def run():
+        run_prep_stream(spark, str(src), str(out), vocab_size=512).awaitTermination(120)
+
+    conf = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "2")
+        write_wave("w1", range(40))
+        run()
+        write_wave("w2", range(40, 80))  # the same 40 texts, new ids
+        spark.conf.set(conf, "4")
+        with pytest.raises(ValueError, match="n_buckets"):
+            run()
+        spark.conf.set(conf, "2")
+        run()
+    finally:
+        spark.conf.set(conf, saved)
+    got = spark.read.parquet(f"{out}/tokenized").toPandas()
+    assert sorted(got["doc_id"]) == list(range(40))
+    assert got["digest"].is_unique
+
+
 def test_prep_stream_empty_source_with_explicit_schema(spark, tmp_path):
     """ADVICE r4: a streaming deployment can start BEFORE producers write
     the first file. With an explicit schema the empty source dir must
