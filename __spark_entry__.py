@@ -180,9 +180,7 @@ def q_sink_counts(spark, sf_dir):
     """A9: per-(policy, decision) span-row counts after routing (J1)."""
     from otel_tail_sampler_spark.operators.routing import route_spans
 
-    routed = route_spans(
-        _parsed(spark, sf_dir), _decided(spark, sf_dir)
-    )
+    routed = route_spans(_parsed(spark, sf_dir), ENTRY_CFG)
     return (
         routed.groupBy("decision_policy", "decision")
         .agg(F.count(F.lit(1)).alias("row_count"))
@@ -195,7 +193,7 @@ def q_routed_keep_rows(spark, sf_dir):
     equality itself is asserted in tests/test_pipeline.py)."""
     from otel_tail_sampler_spark.operators.routing import route_spans
 
-    routed = route_spans(_parsed(spark, sf_dir), _decided(spark, sf_dir))
+    routed = route_spans(_parsed(spark, sf_dir), ENTRY_CFG)
     return routed.filter(F.col("decision") == "keep").select(
         "doc_id", "trace_id", "n_tok"
     )
@@ -2244,7 +2242,7 @@ def q_bm25_threshold_matches(spark, sf_dir):
     """Retrieval-based decontamination report (r6): every (benchmark
     query, corpus doc) pair at fixed-point BM25 score >= 40M — the
     score-bar flavor a contaminated doc outside any top-k still trips;
-    decontaminate_by_retrieval anti-joins the flagged ids."""
+    a decontamination step anti-joins the flagged ids."""
     from otel_tail_sampler_spark.operators.retrieval import bm25_matches
 
     tok = spark.read.parquet(_dataset(sf_dir)["tokenized"])

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, WindowSpec
 from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.operators.parser import TRACE_KEY, hex_from_keys
@@ -53,30 +53,39 @@ def _root_key() -> Column:
     )
 
 
-def summary_aggs(svc: Column, op: Column) -> list[Column]:
+def summary_aggs(svc: Column, op: Column, over: WindowSpec | None = None) -> list[Column]:
     """The TraceSummary aggregates over a span frame, for any grouping that
     includes the trace key. ``svc``/``op`` are the service and operation
     name columns (the streaming job passes undecoded code-point CSVs).
+    ``over`` evaluates them as window aggregates instead, so every span row
+    carries its trace's summary (the one-pass route,
+    operators.routing.route_spans).
 
     service_name comes from the trace's first span (memory.rs:250-254):
     ``_first`` is the (ts, span_id)-min struct carrying it; ``_root`` is the
     root election. Both are resolved by :func:`summary_columns`."""
+
+    def agg(c: Column) -> Column:
+        return c if over is None else c.over(over)
+
     return [
-        F.min(
-            F.struct(
-                F.col("timestamp_ms").alias("ts"),
-                F.col("span_id").alias("sid"),
-                svc.alias("svc"),
+        agg(
+            F.min(
+                F.struct(
+                    F.col("timestamp_ms").alias("ts"),
+                    F.col("span_id").alias("sid"),
+                    svc.alias("svc"),
+                )
             )
         ).alias("_first"),
-        F.count(F.lit(1)).alias("span_count"),
-        F.max(_err()).cast("boolean").alias("has_error"),
-        F.sum(_err()).alias("error_count"),
-        F.max("duration_ms").alias("max_duration_ms"),
-        F.min("timestamp_ms").alias("min_timestamp_ms"),
-        F.max("timestamp_ms").alias("max_timestamp_ms"),
-        F.array_sort(F.collect_set(op)).alias("operations"),
-        F.min(_root_key()).alias("_root"),
+        agg(F.count(F.lit(1))).alias("span_count"),
+        agg(F.max(_err())).cast("boolean").alias("has_error"),
+        agg(F.sum(_err())).alias("error_count"),
+        agg(F.max("duration_ms")).alias("max_duration_ms"),
+        agg(F.min("timestamp_ms")).alias("min_timestamp_ms"),
+        agg(F.max("timestamp_ms")).alias("max_timestamp_ms"),
+        F.array_sort(agg(F.collect_set(op))).alias("operations"),
+        agg(F.min(_root_key())).alias("_root"),
     ]
 
 

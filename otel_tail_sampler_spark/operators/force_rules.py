@@ -14,10 +14,12 @@ folded into generated column expressions — the J3 'broadcast join vs tiny
 table' case where folding the table into the plan beats any physical join
 (SURVEY.md §2.3).
 
-Span-level matchers need per-trace existence flags: ONE extra aggregation
-computes max(matches) per (trace, rule), grouped on the trace key
-``(trace_k1, trace_k2)`` that assembly groups on, and left-joined back
-onto the traces on it.
+Span-level matchers need per-trace existence flags: max(matches) per
+(trace, rule). Over assembled traces (apply_force_rules) ONE extra
+aggregation computes them, grouped on the trace key ``(trace_k1,
+trace_k2)`` that assembly groups on, and left-joined back onto the traces
+on it; the one-pass route (operators.routing.route_spans) evaluates the
+same aggregates as windows over the trace key, next to the summary.
 
 Rule dict shape (FIXTURES.md §4):
     {"id": "r1", "priority": 100, "enabled": true,
@@ -34,7 +36,7 @@ column exists, else null (matches nothing, like an absent attribute).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, WindowSpec
 from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.functions.matchers import compile_all
@@ -87,38 +89,36 @@ def active_rules(rules: list[dict], now_ms: int | None = None) -> list[dict]:
     return sorted(out, key=lambda r: -r.get("priority", 0))
 
 
-def apply_force_rules(
-    traces: DataFrame,
-    spans: DataFrame,
-    rules: list[dict],
-    now_ms: int | None = None,
-) -> DataFrame:
-    """traces + (force_keep, force_drop, force_rule_id) columns."""
-    rules = active_rules(rules, now_ms)
-    if not rules:
-        return traces.withColumns(
-            {
-                "force_keep": F.lit(False),
-                "force_drop": F.lit(False),
-                "force_rule_id": F.lit(None).cast("string"),
-            }
-        )
-
-    # per-trace existence flags for rules with span matchers (one agg total)
-    span_rule_idx = [i for i, r in enumerate(rules) if r.get("span_matchers")]
-    if span_rule_idx:
-        aggs = []
-        for i in span_rule_idx:
-            r = rules[i]
+def span_flag_aggs(
+    rules: list[dict], spans: DataFrame, over: WindowSpec | None = None
+) -> list[Column]:
+    """Per-trace existence flags ``_fr_span_{i}`` (max over the trace's
+    spans of "this span matches ALL span matchers of rule i"), one per
+    active rule that has span matchers; aggregates for a group on the
+    trace key, or window aggregates ``over`` one."""
+    out = []
+    for i, r in enumerate(rules):
+        if r.get("span_matchers"):
             cond = compile_all(
                 r["span_matchers"],
                 _value_cols(r["span_matchers"], SPAN_FIELD_KEYS, spans),
             )
-            aggs.append(F.max(cond.cast("int")).alias(f"_fr_span_{i}"))
-        flags = spans.groupBy(*TRACE_KEY).agg(*aggs)
-        traces = traces.join(flags, TRACE_KEY, "left")
+            flag = F.max(cond.cast("int"))
+            flag = flag if over is None else flag.over(over)
+            out.append(flag.alias(f"_fr_span_{i}"))
+    return out
 
-    # priority-ordered first-match-wins when-chain
+
+def force_columns(rules: list[dict], traces: DataFrame) -> dict[str, Column]:
+    """(force_keep, force_drop, force_rule_id) of active ``rules`` over a
+    frame that carries the trace columns and span_flag_aggs' flags:
+    priority-ordered, first match wins."""
+    if not rules:
+        return {
+            "force_keep": F.lit(False),
+            "force_drop": F.lit(False),
+            "force_rule_id": F.lit(None).cast("string"),
+        }
     action_expr = None
     rule_id_expr = None
     for i, r in enumerate(rules):
@@ -138,12 +138,24 @@ def apply_force_rules(
             if rule_id_expr is None
             else rule_id_expr.when(cond, F.lit(r["id"]))
         )
+    return {
+        "force_keep": F.coalesce(action_expr == F.lit("force_keep"), F.lit(False)),
+        "force_drop": F.coalesce(action_expr == F.lit("force_drop"), F.lit(False)),
+        "force_rule_id": rule_id_expr,
+    }
 
-    out = traces.withColumns(
-        {
-            "force_keep": F.coalesce(action_expr == F.lit("force_keep"), F.lit(False)),
-            "force_drop": F.coalesce(action_expr == F.lit("force_drop"), F.lit(False)),
-            "force_rule_id": rule_id_expr,
-        }
-    )
-    return out.drop(*[f"_fr_span_{i}" for i in span_rule_idx])
+
+def apply_force_rules(
+    traces: DataFrame,
+    spans: DataFrame,
+    rules: list[dict],
+    now_ms: int | None = None,
+) -> DataFrame:
+    """traces + (force_keep, force_drop, force_rule_id) columns."""
+    rules = active_rules(rules, now_ms)
+    # per-trace existence flags for rules with span matchers (one agg total)
+    flags = span_flag_aggs(rules, spans)
+    if flags:
+        traces = traces.join(spans.groupBy(*TRACE_KEY).agg(*flags), TRACE_KEY, "left")
+    out = traces.withColumns(force_columns(rules, traces))
+    return out.drop(*[c for c in out.columns if c.startswith("_fr_span_")])

@@ -25,7 +25,7 @@ input of FIXTURES.md §1.
 Both are narrow (no shuffle): Spark pipelines scan -> parse inside one
 task, so they scale linearly with input splits at any table size. Both
 emit the trace key pair (trace_k1, trace_k2): the only trace key that
-assembly groups on and routing joins on.
+assembly groups on and the route's window partitions on.
 """
 
 from __future__ import annotations
@@ -301,9 +301,12 @@ def day_expr(tokens: Column) -> Column:
 
 def hex_from_keys(k1: Column, k2: Column) -> Column:
     """(trace_k1, trace_k2) -> canonical 32-char uppercase hex trace_id.
-    %016X of a signed long prints its two's-complement (= unsigned) value,
-    so this matches the parser's big-endian hex exactly."""
-    return F.format_string("%016X%016X", k1, k2)
+    hex() of a signed long prints its two's-complement (= unsigned) value
+    in uppercase without leading zeros, and lpad restores them, so this
+    matches the parser's big-endian hex exactly. Codegen'd string ops
+    rather than format_string's java.util.Formatter: the route formats the
+    id once per span row."""
+    return F.concat(F.lpad(F.hex(k1), 16, "0"), F.lpad(F.hex(k2), 16, "0"))
 
 
 def name_csv_exprs(tokens: Column) -> tuple[Column, Column]:
@@ -345,11 +348,12 @@ def with_routing_key(tokenized: DataFrame) -> DataFrame:
 
     The keys are extracted UNgated (pure int64 slot math; null only when the
     row is shorter than 4 slots). Junk keys on malformed rows are harmless —
-    route_spans overrides their decision to 'malformed' after the join — and
-    leaving them ungated means the validity predicate, whose payload scan is
-    the expensive part, is evaluated once per row instead of three times
-    (measured 1.75x on the routing stage; see trace_key_exprs for the gated
-    variant used where nulled keys matter)."""
+    route_spans windows over (key, parse_ok), so a malformed row never
+    shares a real trace's window, and decide() routes it to 'malformed' —
+    and leaving them ungated means the validity predicate, whose payload
+    scan is the expensive part, is evaluated once per row instead of three
+    times (measured 1.75x on the routing stage; see trace_key_exprs for the
+    gated variant used where nulled keys matter)."""
     return tokenized.withColumns(
         {
             "trace_k1": _i64_word(F.col("tokens"), 0),

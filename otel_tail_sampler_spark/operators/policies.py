@@ -30,7 +30,7 @@ from otel_tail_sampler_spark.functions.hashing import hash_frac
 # salt buckets of apply_rate_limit's first (salted) ranking level
 RATE_LIMIT_SALT_BUCKETS = 64
 
-KEEP, DROP = "keep", "drop"
+KEEP, DROP, OVERFLOW, MALFORMED = "keep", "drop", "overflow", "malformed"
 
 
 # --- policy configs ----------------------------------------------------------
@@ -238,9 +238,14 @@ def decide(traces: DataFrame, cfg: SamplerConfig) -> DataFrame:
     """TraceSummary -> + per-policy flags + (decision, decision_policy).
 
     Decision precedence (evaluator.rs:197-296, SURVEY.md §7.4.3):
-      force_drop > force_keep > always-sample-errors (D6) > combined policies.
-    Force columns are optional: absent => treated as false (operators.force_rules
-    adds them).
+      malformed > force_drop > force_keep > always-sample-errors (D6) >
+      combined policies.
+    Rows run per trace (assembled summaries) or per span (the one-pass
+    route, where every span row carries its trace's summary). Optional
+    columns: absent force columns are treated as false (operators.force_rules
+    adds them); absent ``parse_ok`` as true — a row with parse_ok=false
+    (a span the parser rejected) decides ('malformed', 'parse_error').
+    Every pair the result can hold is listed by :func:`decision_labels`.
     """
     policy_cols = [(p.name, p.keep_expr()) for p in cfg.policies()]
     out = traces
@@ -250,11 +255,13 @@ def decide(traces: DataFrame, cfg: SamplerConfig) -> DataFrame:
     keep, winner = combine(named, cfg.strategy, cfg.consensus_threshold)
 
     have = set(out.columns)
+    bad = ~F.col("parse_ok") if "parse_ok" in have else F.lit(False)
     force_drop = F.col("force_drop") if "force_drop" in have else F.lit(False)
     force_keep = F.col("force_keep") if "force_keep" in have else F.lit(False)
 
     decision = (
-        F.when(force_drop, F.lit(DROP))
+        F.when(bad, F.lit(MALFORMED))
+        .when(force_drop, F.lit(DROP))
         .when(force_keep, F.lit(KEEP))
         .when(
             F.lit(cfg.always_sample_errors) & F.col("has_error"), F.lit(KEEP)
@@ -263,7 +270,8 @@ def decide(traces: DataFrame, cfg: SamplerConfig) -> DataFrame:
         .otherwise(F.lit(DROP))
     )
     policy = (
-        F.when(force_drop, F.lit("force_drop"))
+        F.when(bad, F.lit("parse_error"))
+        .when(force_drop, F.lit("force_drop"))
         .when(force_keep, F.lit("force_keep"))
         .when(
             F.lit(cfg.always_sample_errors) & F.col("has_error"),
@@ -279,6 +287,23 @@ def decide(traces: DataFrame, cfg: SamplerConfig) -> DataFrame:
             out, cfg.rate_limit_key, cfg.rate_limit_per_key
         )
     return out
+
+
+def decision_labels(cfg: SamplerConfig) -> list[tuple[str, str]]:
+    """Every (decision_policy, decision) pair :func:`decide` can give a
+    parsed trace under ``cfg``, in a fixed order: the per-pair trace
+    counts of the sink write (plans.pipeline) are one counter per pair.
+    A keep that combine() attributes to no policy (a consensus threshold
+    of 0 or below) has no pair here, so the counts then fall short of
+    the trace count and the job raises."""
+    pairs = [("force_drop", DROP), ("force_keep", KEEP)]
+    if cfg.always_sample_errors:
+        pairs.append(("error_short_circuit", KEEP))
+    pairs += [(p.name, KEEP) for p in cfg.policies()]
+    pairs.append(("no_policy_matched", DROP))
+    if cfg.rate_limit_per_key is not None:
+        pairs.append(("rate_limit", OVERFLOW))
+    return list(dict.fromkeys(pairs))
 
 
 def apply_rate_limit(decided: DataFrame, key: str, limit: int) -> DataFrame:
@@ -305,6 +330,11 @@ def apply_rate_limit(decided: DataFrame, key: str, limit: int) -> DataFrame:
     The two stages share one exchange (the salted shuffle is reused across
     branches); the result is exactly the global top-``limit`` selection and
     is independent of partitioning.
+
+    Ranks are ``dense_rank`` over (md5, trace_id): every row of one trace
+    gets that trace's rank, so the limit applies unchanged to per-span
+    rows (the one-pass route) and, on one-row-per-trace frames, equals a
+    row number.
     """
     ordv = F.md5(F.concat_ws("|", F.col("trace_id"), F.lit("rate_limit")))
     aux = ["_rl_salt", "_r1", "_r2"]
@@ -315,11 +345,11 @@ def apply_rate_limit(decided: DataFrame, key: str, limit: int) -> DataFrame:
     w1 = Window.partitionBy(key, "_rl_salt").orderBy(ordv, F.col("trace_id"))
     lvl1 = kept.withColumn(
         "_rl_salt", F.pmod(F.xxhash64("trace_id"), F.lit(RATE_LIMIT_SALT_BUCKETS))
-    ).withColumn("_r1", F.row_number().over(w1))
+    ).withColumn("_r1", F.dense_rank().over(w1))
 
     w2 = Window.partitionBy(key).orderBy(ordv, F.col("trace_id"))
     ranked = lvl1.filter(F.col("_r1") <= limit).withColumn(
-        "_r2", F.row_number().over(w2)
+        "_r2", F.dense_rank().over(w2)
     )
 
     kept_final = ranked.filter(F.col("_r2") <= limit).drop(*aux)
@@ -329,7 +359,7 @@ def apply_rate_limit(decided: DataFrame, key: str, limit: int) -> DataFrame:
         .unionByName(ranked.filter(F.col("_r2") > limit).drop(*aux))
         .withColumns(
             {
-                "decision": F.lit("overflow"),
+                "decision": F.lit(OVERFLOW),
                 "decision_policy": F.lit("rate_limit"),
             }
         )

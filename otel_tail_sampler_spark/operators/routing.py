@@ -1,89 +1,107 @@
-"""Route decided traces' spans to keep/drop/overflow sinks + stage metrics.
+"""Route every span to its trace's sink + the decision metrics, in one pass.
 
 Re-expresses the evaluator's export flow (/root/reference/src/sampling/
-evaluator.rs:241-336 — fetch kept traces' spans, export, account) as one
-shuffle join + a single-pass partitioned write:
+evaluator.rs:241-336 — buffer a trace's spans, decide once, export the kept
+ones, account) as one window over the trace key and a single-pass
+partitioned write:
 
-    routed = spans JOIN decided(trace_k1, trace_k2, decision, decision_policy)
-    write routed partitioned by decision  (keep / drop / overflow in ONE pass)
+    routed = spans + summary OVER (trace key, parse_ok)  # one exchange, no join
+                   -> decide() per row                   # narrow
+    write routed partitioned by decision  (keep / drop / overflow / malformed)
 
-The join is the 'metadata-first' pattern (docs/ARCHITECTURE_V2_ICEBERG.md:27-33):
-the decision table carries ~50 bytes/trace; the wide token payload stays in the
-span table and is only moved once. At scale the join shuffles the span side
-by the trace key in an exchange of its own: the assembly aggregation
-shuffled on the same key, but Catalyst prunes the two scans to different
-columns (tokens alone vs. the full row), so the exchanges differ and none
-is reused. Heavy-hitter traces are split by AQE skew-join.
+The window is the reference's own model (BufferedSpan/TraceMetadata,
+SURVEY.md §1.1): each span row carries its trace's summary, so the
+decision lands on the spans where they are and the wide token payload is
+shuffled once, next to the decision inputs. There is no per-trace
+decision table to join back on the non-unique trace key, nothing to cache
+and no second scan. A window holds one trace in one task, and AQE does not
+split skewed windows: a trace past Spark's in-memory window buffer (4,096
+rows) spills to disk and is still routed whole.
 
-Metrics (A9, src/observability/metrics.rs:20-58): per-(policy, decision) trace
-counts as a DataFrame; per-sink routed-row counts are observed on the sink
-write itself (plans.pipeline.run_and_write) — together the per-sink
-aggregate-count parity artifact of the north rule.
+Metrics (A9, src/observability/metrics.rs:20-58): one parse-ok row per trace
+is marked (``REP``), so the sink write's Observation counts traces and
+per-(policy, decision) traces next to the per-sink rows
+(plans.pipeline.run_and_write) — the per-sink aggregate-count parity
+artifact of the north rule. :func:`decision_metrics` gives the same
+per-(policy, decision) trace counts over a one-row-per-trace frame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from otel_tail_sampler_spark.operators.parser import TRACE_KEY
+from otel_tail_sampler_spark.operators.assembly import summary_aggs, summary_columns
+from otel_tail_sampler_spark.operators.force_rules import (
+    active_rules,
+    force_columns,
+    span_flag_aggs,
+)
+from otel_tail_sampler_spark.operators.parser import SPAN_FIELDS, TRACE_KEY
+from otel_tail_sampler_spark.operators.policies import SamplerConfig, decide
 
-DECISION_COLS = ["trace_id", "decision", "decision_policy"]
 DROP_SINK = "drop"
 DROP_POLICY = "no_policy_matched"
+# true on one parse-ok row per trace (its smallest doc_id), false on its
+# other rows, null on malformed rows
+REP = "_rep"
 
 
-def route_spans(spans: DataFrame, decided: DataFrame) -> DataFrame:
-    """Attach (decision, decision_policy) to every span row of the input.
+def route_spans(
+    spans: DataFrame, cfg: SamplerConfig, force_rules: list[dict] | None = None
+) -> DataFrame:
+    """Attach its trace's (decision, decision_policy) to every span row.
 
-    ``spans`` must carry the trace key pair and ``parse_ok`` (parser output
-    or ``with_routing_key``, tokens preserved); ``decided`` carries the key
-    pair plus DECISION_COLS. A left join keeps malformed rows
-    (parse_ok=false) in the stream: they route to the ``malformed`` sink
-    instead of aborting or vanishing — one scan, one join, no separate
-    quarantine pass.
+    ``spans`` carries the trace key pair, ``parse_ok``, the parsed span
+    fields the decision reads (parser output, gated by parse_ok) and any
+    passthrough columns (``tokens`` and the other input columns). The
+    result is the passthrough columns with the key first, then
+    ``parse_ok``, trace_id, decision, decision_policy and ``REP``. ``trace_id`` is null on
+    default drops and malformed rows.
+
+    The summary aggregates run as windows over (trace key, parse_ok):
+    malformed rows (parse_ok=false) share no window with a real trace,
+    even when their junk key slots equal its key, so they never change
+    its summary; decide() routes them to the ``malformed`` sink instead
+    of aborting or vanishing. Catalyst drops every window aggregate that
+    no policy, force rule or rate-limit key reads.
     """
-    # Broadcast only the NON-DEFAULT decisions: 'drop'/'no_policy_matched' is
-    # the overwhelming majority at real sampling rates, so the join build side
-    # shrinks from |traces| to |kept + overflow + force-dropped| (~a few
-    # percent) — the metadata-first move that keeps the broadcast O(kept), not
-    # O(traces), at any scale. Unmatched spans default to drop.
-    #
-    # Escape hatch at extreme scale: there is deliberately NO F.broadcast()
-    # hint here. Spark sizes the build side itself, so when the kept set
-    # exceeds spark.sql.autoBroadcastJoinThreshold (e.g. 10^12 traces at a
-    # high keep rate) the plan degrades gracefully to a sort-merge join on
-    # the trace key (AQE skew splitting) instead of OOMing the driver on a
-    # forced broadcast. That join shuffles the span rows, payload included,
-    # in their own exchange: the assembly exchange is keyed the same way but
-    # over a differently pruned scan, so it is not reused.
-    # Operators can pin either behavior via that threshold; tests/test_plans.py
-    # asserts the broadcast shape at sampled-keep sizes.
-    #
-    # The join key is the int64 trace-key pair (16-byte fixed keys, no
-    # per-span string hashing); when the spans carry no hex trace_id it
-    # comes from the build side for matched (non-drop) rows only.
-    cols = TRACE_KEY + [c for c in DECISION_COLS if c not in spans.columns]
-    interesting = decided.select(*cols).filter(
-        (F.col("decision") != DROP_SINK)
-        | (F.col("decision_policy") != DROP_POLICY)
+    rules = active_rules(force_rules or [])
+    by_trace = Window.partitionBy(*TRACE_KEY, "parse_ok").orderBy("doc_id")
+    whole = by_trace.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    fields = {n for n, _ in SPAN_FIELDS} - {*TRACE_KEY, "parse_ok"}
+    passthrough = [c for c in spans.columns if c not in fields]
+
+    rest = [c for c in passthrough if c not in TRACE_KEY]
+    summary = spans.select(
+        *passthrough,
+        *summary_aggs(F.col("service_name"), F.col("operation_name"), over=whole),
+        *span_flag_aggs(rules, spans, over=whole),
+        # one comparison, not a conjunction: a filter on REP then stays
+        # above the window, so a plan that reads both the routed rows and
+        # their REP rows reuses one exchange instead of a second pass
+        (F.row_number().over(by_trace) == F.when(F.col("parse_ok"), 1)).alias(REP),
     )
-    bad = ~F.col("parse_ok")
-    return spans.join(interesting, TRACE_KEY, "left").withColumns(
-        {
-            "decision": F.when(bad, F.lit("malformed")).otherwise(
-                F.coalesce(F.col("decision"), F.lit(DROP_SINK))
-            ),
-            "decision_policy": F.when(bad, F.lit("parse_error")).otherwise(
-                F.coalesce(F.col("decision_policy"), F.lit(DROP_POLICY))
-            ),
-            # with_routing_key's keys are UNgated: a malformed row whose
-            # junk key slots collide with a real trace would otherwise
-            # surface that trace's hex id from the build side
-            "trace_id": F.when(bad, F.lit(None).cast("string")).otherwise(
-                F.col("trace_id")
-            ),
-        }
+    traces = summary.select(
+        *rest,
+        *summary_columns(),
+        *[c for c in summary.columns if c.startswith("_fr_span_")],
+        REP,
+    )
+    if rules:
+        traces = traces.withColumns(force_columns(rules, traces))
+
+    decided = decide(traces, cfg)
+    interesting = F.col("parse_ok") & (
+        (F.col("decision") != DROP_SINK) | (F.col("decision_policy") != DROP_POLICY)
+    )
+    return decided.select(
+        *TRACE_KEY,
+        *rest,
+        F.when(interesting, F.col("trace_id")).alias("trace_id"),
+        "decision",
+        "decision_policy",
+        REP,
     )
 
 
@@ -102,12 +120,13 @@ def write_routed(
     fmt: str = "parquet",
     day_partition: bool = False,
 ) -> None:
-    """Single-pass fan-out: one partitioned write, three sinks.
+    """Single-pass fan-out: one partitioned write, every sink.
 
     Writing ``partitionBy('decision')`` produces keep/ drop/ overflow/
-    directories in one job instead of three filtered writes (one scan, not
-    three). Iceberg deployments replace this with three ``writeTo(...)``
-    appends or a partitioned table on the decision column.
+    malformed/ directories in one job instead of one filtered write per
+    sink (one scan, not four). Iceberg deployments replace this with
+    per-sink ``writeTo(...)`` appends or a partitioned table on the
+    decision column.
 
     ``day_partition=True`` adds the reference's time dimension
     (``day(timestamp_ms)``, iceberg.rs:317-334): the day is derived

@@ -21,8 +21,9 @@ idempotent primitives:
   id names a different set of traces under another count, so a resume at
   another ``n_buckets`` raises instead of skipping spans it never wrote;
 * the buckets still to do run through the flagship DAG itself
-  (plans.pipeline.run_pipeline over the bucket-filtered scan): the
-  resumable job and the benchmarked job are one program.
+  (plans.pipeline.route over the bucket-filtered scan, counted on the
+  sink write like run_and_write's): the resumable job and the
+  benchmarked job are one program.
 
 Crash window: between sink commit and manifest append a bucket may be
 rewritten on resume — harmless by idempotence (exactly the Iceberg
@@ -42,7 +43,12 @@ from otel_tail_sampler_spark.functions.fs import path_exists
 from otel_tail_sampler_spark.functions.tables import local_table
 from otel_tail_sampler_spark.operators.parser import trace_key_exprs
 from otel_tail_sampler_spark.operators.policies import SamplerConfig
-from otel_tail_sampler_spark.plans.pipeline import read_tokenized, run_pipeline
+from otel_tail_sampler_spark.plans.pipeline import (
+    observe_sinks,
+    read_tokenized,
+    route,
+    trace_counts,
+)
 
 MANIFEST_SCHEMA = (
     "bucket int, status string, rows long, committed_at_ms long, n_buckets int"
@@ -113,22 +119,21 @@ def run_resumable(
     )
     if done:  # prune completed buckets BEFORE the parse and any shuffle
         tokenized = tokenized.filter(~F.col("bucket").isin(sorted(done)))
-    res = run_pipeline(spark, tokenized, cfg, force_rules=force_rules)
+    cfg = cfg or SamplerConfig()
+    routed, obs = observe_sinks(route(tokenized, cfg, force_rules), cfg)
 
-    # idempotent sink commit FIRST — the single full pass over the data.
+    # idempotent sink commit FIRST — the single full pass over the data,
+    # which also counts the traces (one marked row each) on its way.
     # Dynamic partition overwrite, pinned for this write only: Spark's
     # default static mode would delete the bucket partitions committed
     # before the resume while the manifest still marks them done.
-    try:
-        (
-            res.routed.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket", "decision")
-            .parquet(routed_dir)
-        )
-        n_traces = res.decisions.count()  # persisted slim: no recompute
-    finally:
-        res.decisions.unpersist()
+    (
+        routed.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket", "decision")
+        .parquet(routed_dir)
+    )
+    n_traces, _ = trace_counts(obs, cfg)
 
     # lineage counts from the WRITTEN data (partition-pruned read-back of
     # this run's buckets) — no second pass over the input

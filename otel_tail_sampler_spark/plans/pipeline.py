@@ -1,18 +1,20 @@
 """The end-to-end bounded tail-sampling job (the flagship DAG).
 
-Stage layout (SURVEY.md §3.2 re-expression):
+Stage layout (SURVEY.md §3.2 re-expression), one pass and one job:
 
-    spans   = read(tokenized).parse()                      # narrow, JVM only
-    traces  = assemble_traces(spans)                       # shuffle(trace key)
-    decided = decide(traces, cfg)  [+ force rules]         # narrow
-    routed  = spans  JOIN  decided  ON (trace_k1, trace_k2) # broadcast/shuffle
-    metrics = per-policy / per-sink counts                 # tiny agg
-    write keep/drop/overflow + metrics                     # partitioned write
+    spans   = read(tokenized).with_routing_key().parse()    # narrow, JVM only
+    routed  = summary OVER (trace key, parse_ok) -> decide() # one exchange
+    write keep/drop/overflow/malformed, observed:           # partitioned write
+        per-sink rows, traces, per-(policy, decision) traces
+    metric tables from the observed counts                  # driver rows
+    exported manifest = keep sink's trace ids, read back
 
 Replaces the reference's evaluator loop (/root/reference/src/sampling/
-evaluator.rs:150-336) with one deterministic DAG. ``run_pipeline`` is the
-only builder of that DAG: ``run_and_write`` writes it, and
-plans.checkpoint.run_resumable runs it over the not-yet-committed buckets.
+evaluator.rs:150-336) with one deterministic DAG, built by ``route``
+alone: ``run_and_write`` writes it,
+plans.checkpoint.run_resumable runs it over the not-yet-committed buckets,
+and ``run_pipeline`` exposes it as lazy frames next to the assembled
+TraceSummary.
 """
 
 from __future__ import annotations
@@ -20,32 +22,34 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.functions.tables import local_table
 from otel_tail_sampler_spark.operators.assembly import assemble_traces
 from otel_tail_sampler_spark.operators.enrichment import mark_exported
+from otel_tail_sampler_spark.operators.force_rules import apply_force_rules
 from otel_tail_sampler_spark.operators.parser import (
+    SPAN_FIELDS,
     TRACE_KEY,
+    hex_from_keys,
     parse_spans_jvm,
     with_routing_key,
 )
-from otel_tail_sampler_spark.operators.policies import SamplerConfig, decide
-from otel_tail_sampler_spark.operators.routing import (
-    DECISION_COLS,
-    decision_metrics,
-    route_spans,
-    write_routed,
+from otel_tail_sampler_spark.operators.policies import (
+    SamplerConfig,
+    decide,
+    decision_labels,
 )
+from otel_tail_sampler_spark.operators.routing import REP, route_spans, write_routed
 
 
 @dataclass
 class PipelineResult:
     spans: DataFrame
-    traces: DataFrame
-    decided: DataFrame  # full TraceSummary + policy flags (lazy, unpersisted)
-    decisions: DataFrame  # slim (trace key, decision, policy), persisted
+    traces: DataFrame  # assembled TraceSummary (lazy)
+    decided: DataFrame  # traces + policy flags + decision (lazy)
+    decisions: DataFrame  # one routed row per trace: key, decision, policy (lazy)
     routed: DataFrame
 
 
@@ -71,6 +75,26 @@ def read_tokenized(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.format("iceberg").load(path)
 
 
+# every parsed span field but the key (with_routing_key's, ungated) and the
+# per-span hex id (the trace's is derived from the key)
+DECISION_FIELDS = [
+    n for n, _ in SPAN_FIELDS if n not in (*TRACE_KEY, "trace_id", "parse_ok")
+]
+
+
+def route(
+    tokenized: DataFrame, cfg: SamplerConfig, force_rules: list[dict] | None = None
+) -> DataFrame:
+    """The flagship DAG: ``tokenized`` routed in one pass
+    (operators.routing.route_spans), sink columns plus the ``REP`` trace
+    marker. The parse is the whole-stage-codegen expression parser over
+    ``with_routing_key``'s ungated key, so the DAG has ZERO Python stages;
+    Catalyst prunes the parse to the fields the decision reads, and the
+    wide token column passes through untouched."""
+    spans = parse_spans_jvm(with_routing_key(tokenized), fields=DECISION_FIELDS)
+    return route_spans(spans, cfg, force_rules)
+
+
 def run_pipeline(
     spark: SparkSession,
     input_path: str | DataFrame,
@@ -78,51 +102,88 @@ def run_pipeline(
     force_rules: list[dict] | None = None,
     salt_buckets: int | str | None = None,
 ) -> PipelineResult:
-    """Build the flagship DAG over ``input_path`` (a path or a tokenized
-    DataFrame). The decode is the whole-stage-codegen expression parser,
-    so the DAG has ZERO Python stages. ``decisions`` is persisted: the
-    caller owns it and unpersists it once the sinks are written."""
+    """The flagship DAG over ``input_path`` as lazy frames. ``routed`` and
+    ``decisions`` (one row per trace) come from the one-pass route;
+    ``traces`` and ``decided`` are the assembled TraceSummary and its
+    decisions, for callers that read the summary (analytics, the traced
+    benchmark layers). Nothing is cached."""
     cfg = cfg or SamplerConfig()
     tokenized = (
         input_path
         if isinstance(input_path, DataFrame)
         else read_tokenized(spark, input_path)
     )
+    marked = route(tokenized, cfg, force_rules)
 
-    # Two parse projections of the same scan:
-    #  * assembly side: all span fields, the wide token column decoded
-    #    into nothing (dropped inside the parse projection)
-    #  * routing side: trace keys only, tokens pass through untouched
-    # This is the metadata-first split — the wide payload only ever moves
-    # through the route stage; Catalyst prunes each side's decode itself.
-    full = parse_spans_jvm(tokenized.select("tokens"), keep_tokens=False)
-    spans = with_routing_key(tokenized)  # pure JVM: no Arrow roundtrip
-
-    # malformed rows (parse_ok=false) never reach assembly; they route to the
-    # 'malformed' sink inside route_spans
-    good = full.filter(F.col("parse_ok"))
+    # assembly side: all span fields of the parse-ok rows, the wide token
+    # column decoded into nothing (dropped inside the parse projection)
+    good = parse_spans_jvm(tokenized.select("tokens"), keep_tokens=False).filter(
+        F.col("parse_ok")
+    )
     traces = assemble_traces(good, salt_buckets=salt_buckets)
-
     if force_rules:
-        from otel_tail_sampler_spark.operators.force_rules import apply_force_rules
-
         traces = apply_force_rules(traces, good, force_rules)
-
-    decided = decide(traces, cfg)
-    # Persist ONLY the slim projection: persisting the full summary would
-    # force the build side to materialize every aggregate (collect_set,
-    # struct-mins, string decode) that Catalyst otherwise prunes to the 3
-    # aggregates the decision needs. Slim = megabytes at any trace count,
-    # reused by the route join build side and the metrics action.
-    decisions = decided.select(*TRACE_KEY, *DECISION_COLS).persist()
-    routed = route_spans(spans, decisions)
     return PipelineResult(
-        spans=spans, traces=traces, decided=decided, decisions=decisions,
-        routed=routed,
+        spans=with_routing_key(tokenized),
+        traces=traces,
+        decided=decide(traces, cfg),
+        decisions=marked.filter(F.col(REP)).select(
+            *TRACE_KEY,
+            hex_from_keys(F.col("trace_k1"), F.col("trace_k2")).alias("trace_id"),
+            "decision",
+            "decision_policy",
+        ),
+        routed=marked.drop(REP),
     )
 
 
 SINK_NAMES = ("keep", "drop", "overflow", "malformed")
+
+
+def observe_sinks(marked: DataFrame, cfg: SamplerConfig) -> tuple[DataFrame, Observation]:
+    """``marked`` (route's output) as the sink frame, with an Observation
+    that the sink write fills: routed rows, rows per sink, ``traces`` and
+    one trace counter per :func:`decision_labels` pair, all counted on the
+    write's own pass. Read it with :func:`trace_counts`."""
+    rep = F.col(REP)
+    obs = Observation()
+    observed = marked.observe(
+        obs,
+        F.count(F.lit(1)).alias("routed_rows"),
+        *[
+            F.sum((F.col("decision") == s).cast("long")).alias(f"{s}_rows")
+            for s in SINK_NAMES
+        ],
+        F.sum(rep.cast("long")).alias("traces"),
+        *[
+            F.sum(
+                (rep & (F.col("decision_policy") == p) & (F.col("decision") == d))
+                .cast("long")
+            ).alias(f"pair_{i}")
+            for i, (p, d) in enumerate(decision_labels(cfg))
+        ],
+    )
+    return observed.drop(REP), obs
+
+
+def trace_counts(obs: Observation, cfg: SamplerConfig) -> tuple[int, list[tuple]]:
+    """(traces, [(decision_policy, sink, trace_count)] of the non-zero
+    pairs) from :func:`observe_sinks`' filled Observation. Raises when the
+    pair counts do not add up to ``traces``: a trace whose decision has no
+    label would otherwise be missing from the metrics silently."""
+    counts = obs.get
+    traces = int(counts["traces"] or 0)
+    pairs = [
+        (p, d, int(counts[f"pair_{i}"] or 0))
+        for i, (p, d) in enumerate(decision_labels(cfg))
+    ]
+    pairs = [r for r in pairs if r[2] > 0]
+    if sum(r[2] for r in pairs) != traces:
+        raise RuntimeError(
+            f"decision counts {pairs} do not add up to {traces} traces: a "
+            "decision outside policies.decision_labels"
+        )
+    return traces, pairs
 
 
 def run_and_write(
@@ -131,66 +192,70 @@ def run_and_write(
     out_dir: str,
     cfg: SamplerConfig | None = None,
     day_partition: bool = False,
-    **kw,
+    force_rules: list[dict] | None = None,
 ) -> dict[str, DataFrame]:
     """Run + write sinks, decision metrics, per-sink row metrics, the exported
     manifest, and a per-run metrics table (metrics_run) with stage row counts
     and wall time — the observability surface (metrics.rs:20-58 counters).
 
-    Per-sink row counts come from an Observation attached to the sink write
-    itself (one pass over the data; no second scan of the routed plan). The
-    per-(policy, decision) aggregate is collected once from the cached
-    decisions (a handful of rows); ``traces`` is the sum of its counts.
-    Every metric table is written from driver-held rows as a JVM
-    ``LocalTableScan`` (functions.tables.local_table), so the job starts no
-    Python task. The three returned frames are those tables: reading them
-    never re-scans the input."""
+    One job routes and writes every span: the route is one pass over the
+    input (see :func:`route`), and every count — per-sink rows, ``traces``
+    and the per-(policy, decision) trace counts — comes from an
+    Observation on that write (:func:`observe_sinks`), so nothing is cached
+    or collected for the metrics. The exported manifest is the keep sink's
+    distinct trace ids, read back from the written sink. Every metric
+    table is written from driver-held rows as a JVM ``LocalTableScan``
+    (functions.tables.local_table), so the job starts no Python task. The
+    three returned frames are those tables: reading them never re-scans
+    the input."""
     import time
 
-    from pyspark.sql import Observation
-
     t0 = time.time()
-    res = run_pipeline(spark, input_path, cfg, **kw)
-    try:
-        obs = Observation()
-        routed_obs = res.routed.observe(
-            obs,
-            F.count(F.lit(1)).alias("routed_rows"),
-            *[
-                F.sum((F.col("decision") == s).cast("long")).alias(f"{s}_rows")
-                for s in SINK_NAMES
-            ],
-        )
-        write_routed(routed_obs, os.path.join(out_dir, "routed"), day_partition=day_partition)
-        counts = obs.get  # available after the write action
+    cfg = cfg or SamplerConfig()
+    routed_dir = os.path.join(out_dir, "routed")
+    routed, obs = observe_sinks(
+        route(read_tokenized(spark, input_path), cfg, force_rules), cfg
+    )
+    write_routed(routed, routed_dir, day_partition=day_partition)
+    counts = obs.get  # available after the write action
+    traces, dm_rows = trace_counts(obs, cfg)
 
-        agg = decision_metrics(res.decisions)
-        dm_rows = agg.collect()
-        dm = local_table(spark, dm_rows, agg.schema)
-        dm.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "metrics_decisions"))
-        rm = local_table(
-            spark,
-            [(s, int(counts[f"{s}_rows"] or 0)) for s in SINK_NAMES
-             if (counts[f"{s}_rows"] or 0) > 0],
-            "sink string, row_count long",
+    dm = local_table(
+        spark, dm_rows,
+        "decision_policy string, sink string NOT NULL, trace_count bigint NOT NULL",
+    )
+    dm.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "metrics_decisions"))
+    rm = local_table(
+        spark,
+        [(s, int(counts[f"{s}_rows"] or 0)) for s in SINK_NAMES
+         if (counts[f"{s}_rows"] or 0) > 0],
+        "sink string, row_count long",
+    )
+    rm.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "metrics_rows"))
+    # exported manifest (J2 dedup source on re-runs; replaces Redis
+    # exported:{trace_id} keys, evaluator.rs:358-401): the committed keep
+    # sink's distinct traces, read back partition-pruned to the int64 key
+    # pair (the hex id is formatted once per trace), stamped after that
+    # commit so a TTL can expire it
+    kept = (
+        spark.read.schema("trace_k1 long, trace_k2 long, decision string")
+        .parquet(routed_dir)
+        .distinct()
+        .select(
+            hex_from_keys(F.col("trace_k1"), F.col("trace_k2")).alias("trace_id"),
+            "decision",
         )
-        rm.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "metrics_rows"))
-        # exported manifest (J2 dedup source on re-runs; replaces Redis
-        # exported:{trace_id} keys, evaluator.rs:358-401), stamped after
-        # the keep sink committed so a TTL can expire it
-        mark_exported(res.decisions, int(time.time() * 1000)).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, "exported"))
-        run_rows = [
-            ("input_rows", int(counts["routed_rows"] or 0)),
-            ("traces", sum(r["trace_count"] for r in dm_rows)),
-            *[(f"routed_{s}", int(counts[f"{s}_rows"] or 0)) for s in SINK_NAMES],
-            ("wall_ms", int((time.time() - t0) * 1000)),
-            ("finished_at_ms", int(time.time() * 1000)),
-        ]
-    finally:
-        # the slim decisions are only reused inside this call
-        res.decisions.unpersist()
+    )
+    mark_exported(kept, int(time.time() * 1000)).write.mode("overwrite").parquet(
+        os.path.join(out_dir, "exported")
+    )
+    run_rows = [
+        ("input_rows", int(counts["routed_rows"] or 0)),
+        ("traces", traces),
+        *[(f"routed_{s}", int(counts[f"{s}_rows"] or 0)) for s in SINK_NAMES],
+        ("wall_ms", int((time.time() - t0) * 1000)),
+        ("finished_at_ms", int(time.time() * 1000)),
+    ]
     run_metrics = local_table(spark, run_rows, "metric string, value long")
     run_metrics.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "metrics_run")

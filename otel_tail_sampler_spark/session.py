@@ -53,8 +53,9 @@ def build_session(
         # Arrow for every driver-built table and pandas-UDF operator
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        # the route plan: a sampled decision table broadcasts into the
-        # span scan instead of shuffling every span's payload
+        # a small kept-trace batch broadcasts into the streaming job's
+        # semi-join of its spans (stream_job.route_spans_from) instead of
+        # shuffling the span table
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config(

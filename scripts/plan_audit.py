@@ -48,13 +48,30 @@ def main() -> None:
     res = run_pipeline(spark, paths["tokenized"], E.ENTRY_CFG)
     section(
         "Flagship pipeline: routed output",
-        "What to check: ZERO Python stages anywhere (round 4: the decode\n"
-        "is whole-stage-codegen expressions, the only parser any job runs;\n"
-        "the Arrow kernel stays as the field-tested reference decode); the\n"
-        "decision build side is BroadcastHashJoin (only non-drop decisions\n"
-        "broadcast — O(kept)); assembly is a two-phase HashAggregate\n"
-        "(partial -> final) on the int64 key pair.",
+        "What to check: ONE pass — one parquet scan, one Exchange\n"
+        "hashpartitioning on (trace_k1, trace_k2, parse_ok) under one\n"
+        "Window, no join and no cached frame. The window computes only the\n"
+        "summary aggregates the policies read (count, max status, max\n"
+        "duration; Catalyst drops the rest) and decide() runs per row.\n"
+        "ZERO Python stages (the decode is whole-stage-codegen expressions).",
         res.routed,
+    )
+    rule = {
+        "id": "slow-span",
+        "priority": 10,
+        "resource_matchers": [
+            {"key": "service.name", "op": "eq", "value": "api-gateway"}
+        ],
+        "span_matchers": [{"key": "duration_ms", "op": "gte", "value": "500"}],
+        "action": "force_keep",
+    }
+    section(
+        "Flagship pipeline: routed output with a force rule",
+        "What to check: the rule's span-matcher flag is one more aggregate\n"
+        "in the same Window (max over the trace's spans) and its resource\n"
+        "matcher reads the window's first-span service — still one scan,\n"
+        "one exchange and no join.",
+        run_pipeline(spark, paths["tokenized"], E.ENTRY_CFG, force_rules=[rule]).routed,
     )
 
     import tempfile
@@ -66,18 +83,17 @@ def main() -> None:
         section(
             "Metric tail: run_and_write's returned decision metrics",
             "What to check: ONE LocalTableScan and nothing else — the\n"
-            "per-(policy, decision) aggregate is collected once from the\n"
-            "cached decisions and every metric table (metrics_decisions,\n"
-            "metrics_rows, metrics_run) is written from driver-held rows\n"
-            "that the JVM owns. No `Scan ExistingRDD` (a PythonRDD whose\n"
-            "every action starts Python worker tasks) and no file scan:\n"
-            "reading a returned table never re-runs the pipeline.",
+            "per-(policy, decision) trace counts come from the sink write's\n"
+            "Observation (one marked row per trace), and every metric table\n"
+            "(metrics_decisions, metrics_rows, metrics_run) is written from\n"
+            "driver-held rows that the JVM owns. No `Scan ExistingRDD` (a\n"
+            "PythonRDD whose every action starts Python worker tasks) and no\n"
+            "file scan: reading a returned table never re-runs the pipeline.",
             tail["decision_metrics"],
         )
 
     from otel_tail_sampler_spark.operators.policies import apply_rate_limit
 
-    d = res.decisions.withColumn
     section(
         "Two-level rate limit",
         "What to check: the window over the bare (skewable) key appears only\n"

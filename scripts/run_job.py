@@ -5,7 +5,7 @@
         --input  lake/bronze/tokenized \
         --out    lake/routed_run_001 \
         --config config.json \
-        [--salt auto|N] [--day-partition]
+        [--day-partition]
 
 The config JSON is the reference-operator shape documented in
 otel_tail_sampler_spark/config.py (sampling policies + force rules).
@@ -26,7 +26,6 @@ def main(argv: list[str] | None = None) -> dict:
     p.add_argument("--input", required=True, help="tokenized spans table/dir")
     p.add_argument("--out", required=True, help="output root (routed/ metrics_*/ exported/)")
     p.add_argument("--config", help="JSON config (config.py shape); default policies if omitted")
-    p.add_argument("--salt", default=None, help="'auto', an int bucket count, or omit")
     p.add_argument("--day-partition", action="store_true",
                    help="add the day(timestamp_ms) sink dimension")
     p.add_argument("--master", default=None, help="override master (else spark-submit decides)")
@@ -45,10 +44,6 @@ def main(argv: list[str] | None = None) -> dict:
         d = load_config(args.config)
         cfg = sampler_config_from_dict(d)
         rules = force_rules_from_dict(d)
-    salt: int | str | None = args.salt
-    if salt is not None and salt != "auto":
-        salt = int(salt)
-
     spark = build_session(app_name="otel-tail-sampler", master=args.master)
     m = run_and_write(
         spark,
@@ -56,7 +51,6 @@ def main(argv: list[str] | None = None) -> dict:
         args.out,
         cfg,
         day_partition=args.day_partition,
-        salt_buckets=salt,
         force_rules=rules or None,
     )
     out = {r["metric"]: r["value"] for r in m["run_metrics"].collect()}

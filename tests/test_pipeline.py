@@ -279,7 +279,6 @@ def test_run_job_cli(spark, small_dataset, tmp_path):
             "--input", small_dataset["tokenized"],
             "--out", str(tmp_path / "out"),
             "--config", cfg_path,
-            "--salt", "auto",
             "--day-partition",
         ]
     )
@@ -329,8 +328,9 @@ def test_orc_source_matches_parquet(spark, small_dataset, tmp_path):
 
 
 def test_run_and_write_releases_cached_decisions(spark, small_dataset, tmp_path):
-    """run_and_write persists the slim decisions for its own reuse only: it
-    must leave the session's cache as it found it (empty here)."""
+    """run_and_write routes in one pass and counts its metrics on the sink
+    write, so it caches nothing: it must leave the session's cache as it
+    found it (empty here)."""
     from otel_tail_sampler_spark.plans.pipeline import run_and_write
 
     spark.catalog.clearCache()
