@@ -14,9 +14,7 @@ is handled two ways, selectable:
   O(#splits), not O(#spans);
 * ``salt_buckets=N``: explicit two-phase salted aggregation
   (groupBy(key, salt) -> groupBy(key)) for the collect_set-bearing plan,
-  where partial state is not reduced map-side for high-cardinality sets;
-  ``salt_buckets='auto'`` picks N with the fixed-threshold sample probe
-  :func:`detect_salt_buckets` (or stays unsalted when no hot trace shows).
+  where partial state is not reduced map-side for high-cardinality sets.
 
 The group key is the 128-bit trace id as the int64 pair (trace_k1,
 trace_k2) both parsers emit: 16 fixed bytes, no string hashing in the
@@ -113,53 +111,12 @@ def summary_columns(
     ]
 
 
-# detect_salt_buckets' probe: sample this fraction of spans; salt when the
-# hottest sampled trace implies more than HOT_TRACE_SPANS spans, sizing the
-# bucket count so each reducer sees about that many (at most MAX_SALT_BUCKETS)
-SALT_SAMPLE_FRACTION = 0.01
-HOT_TRACE_SPANS = 5_000
-MAX_SALT_BUCKETS = 64
-
-
-def detect_salt_buckets(spans: DataFrame) -> int | None:
-    """Cheap key-skew probe: spans-per-trace on a seeded sample; if the
-    hottest sampled trace implies more than ``HOT_TRACE_SPANS`` spans,
-    return a bucket count sized so each reducer sees ~HOT_TRACE_SPANS of
-    them (capped at ``MAX_SALT_BUCKETS``).
-
-    Cost: ONE narrow aggregation over ``SALT_SAMPLE_FRACTION`` of the input
-    (key columns only — Parquet reads nothing else). The estimate is noisy
-    but only the order of magnitude matters for picking a bucket count; a
-    sampled hot key is by definition the kind that shows up in any sample.
-    """
-    import math
-
-    top = (
-        spans.sample(fraction=SALT_SAMPLE_FRACTION, seed=42)
-        .groupBy(*TRACE_KEY)
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.max("c"))
-        .collect()[0][0]
-    )
-    if top is None:
-        return None
-    implied = top / SALT_SAMPLE_FRACTION
-    if implied <= HOT_TRACE_SPANS:
-        return None
-    return min(MAX_SALT_BUCKETS, max(2, math.ceil(implied / HOT_TRACE_SPANS)))
-
-
-def assemble_traces(
-    spans: DataFrame, salt_buckets: int | str | None = None
-) -> DataFrame:
+def assemble_traces(spans: DataFrame, salt_buckets: int | None = None) -> DataFrame:
     """spans -> TraceSummary (one row per trace). A1 of SURVEY.md §2.4.
 
     ``salt_buckets``: None = single two-phase hash agg (map-side combine),
-    an int = explicit salted two-phase plan, 'auto' = probe the key skew
-    (detect_salt_buckets) and salt only when a heavy hitter is found.
+    an int = explicit salted two-phase plan.
     """
-    if salt_buckets == "auto":
-        salt_buckets = detect_salt_buckets(spans)
     if salt_buckets and salt_buckets > 1:
         return _assemble_salted(spans, salt_buckets)
     return (

@@ -302,10 +302,14 @@ def semantic_dedup(
     -> (vec_id, cluster) survivors.
 
     The pair stage is an equi-join on the cluster id with an id-order
-    predicate — no cartesian, no all-pairs. Its fan-out is |C|^2 on the
-    join key, so a degenerate hot cluster (near-identical vectors — the
-    exact population dedup targets) needs a bound the caller's choice of
-    k cannot give: ``MAX_CLUSTER_ANCHORS`` restricts the smaller-id
+    predicate — no cartesian, no all-pairs. It is not
+    ``functions.pairs.self_key_pairs``: its two sides differ (capped
+    anchors against all members) and both carry the vectors the scorer
+    reads, where the pair functions join one id column to itself. Its
+    fan-out is |C|^2 on the join key, so a degenerate hot cluster
+    (near-identical vectors — the exact population dedup targets) needs
+    a bound the caller's choice of k cannot give: ``MAX_CLUSTER_ANCHORS``
+    restricts the smaller-id
     ("anchor") side of each pair to the cap-many smallest ids per cluster
     (a rank<=cap window — Spark's InferWindowGroupLimit two-phases it, so
     no hot-key single task). Clusters at or under the cap are EXACT —
@@ -327,9 +331,14 @@ def semantic_dedup(
     # ONE kernel pass emits assignment AND vector/norm (keep_vec) — the
     # previous assign-then-self-join shape shuffled the corpus twice and
     # re-ran the argmin kernel once per plan reference. The tiny
-    # (id, cluster, _q, _n2) frame is persisted because the pair stage
-    # references it three times (anchors, right side, survivor base).
-    m = _assign_frame(df_q, centroids, keep_vec=True).drop("dist2").persist()
+    # (id, cluster, _q, _n2) frame is computed once because the pair
+    # stage references it three times (anchors, right side, survivor
+    # base). A lazy local checkpoint, not persist(): the session's
+    # CacheManager never holds it, and its blocks are freed with the
+    # returned frame instead of living until the session ends.
+    m = _assign_frame(df_q, centroids, keep_vec=True).drop("dist2").localCheckpoint(
+        eager=False
+    )
     a = m.select("vec_id", "cluster")
     from pyspark.sql import Window
 

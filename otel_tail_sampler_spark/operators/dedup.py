@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.functions.pairs import band_rows, self_key_pairs
+
 
 # --- exact dedup -------------------------------------------------------------
 
@@ -116,6 +118,19 @@ def minhash_signatures_agg(docs: DataFrame, num_hashes: int = 12) -> DataFrame:
     return sh.groupBy("doc_id").agg(*aggs)
 
 
+def minhash_band_keys(num_hashes: int, bands: int) -> list[Column]:
+    """The LSH band keys over :func:`minhash_signatures_agg`'s columns:
+    band b's key is the md5 of its ``num_hashes // bands`` minhashes, so
+    two docs share band b's key iff they agree on all of that band's
+    minhashes (up to an md5 collision)."""
+    assert num_hashes % bands == 0
+    r = num_hashes // bands
+    return [
+        F.md5(F.concat_ws(",", *[F.col(f"h{b * r + j}") for j in range(r)]))
+        for b in range(bands)
+    ]
+
+
 def minhash_lsh_pairs(
     docs: DataFrame, num_hashes: int = 12, bands: int = 4
 ) -> DataFrame:
@@ -124,38 +139,9 @@ def minhash_lsh_pairs(
     rows_per_band = num_hashes // bands; docs sharing ALL minhashes of any
     band collide. Output: (id_a, id_b, n_bands_shared).
     """
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
     sig = minhash_signatures_agg(docs, num_hashes=num_hashes)
-    band_rows = sig.select(
-        F.col("doc_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(",", *[F.col(f"h{b * r + j}") for j in range(r)])
-                        ).alias("key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
-    a = band_rows.select(
-        F.col("band"), F.col("key"), F.col("doc_id").alias("id_a")
-    )
-    b = band_rows.select(
-        F.col("band"), F.col("key"), F.col("doc_id").alias("id_b")
-    )
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_bands_shared"))
-    )
+    rows = band_rows(sig, minhash_band_keys(num_hashes, bands))
+    return self_key_pairs(rows, ["band", "key"], "doc_id", "n_bands_shared")
 
 
 def dedup_components(pairs: DataFrame, all_ids: DataFrame | None = None,
@@ -303,14 +289,7 @@ def ngram_jaccard_pairs(
             .agg(F.count(F.lit(1)).alias("inter"))
         )
     else:
-        a = sh.select(F.col("sh"), F.col("doc_id").alias("id_a"))
-        b = sh.select(F.col("sh"), F.col("doc_id").alias("id_b"))
-        inter = (
-            a.join(b, "sh")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
+        inter = self_key_pairs(sh, ["sh"], "doc_id", "inter")
     sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
     return (
@@ -354,6 +333,11 @@ def _containment_pairs(
     grams the cap pruned — 0 when no cap or nothing crossed it, so a
     capped (lower-bound) report is distinguishable from an exhaustive one
     in the output itself.
+
+    The intersection joins two corpora (eval rows against train rows),
+    not one corpus with itself, so it is written here and not on
+    ``functions.pairs.self_key_pairs``, whose id-order filter would
+    drop every pair whose eval id is the larger.
     """
     from otel_tail_sampler_spark.functions.spread import spread_small_input
 
@@ -750,9 +734,9 @@ def cosine_sim(a: Column, b: Column) -> Column:
 def embedding_dup_pairs(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Brute-force cosine pair filter (id_a < id_b, sim >= threshold).
 
-    Quadratic — the small-input / verify path. The scale path buckets by
-    hyperplane LSH first (operators.similarity.hyperplane_buckets) and runs
-    this within buckets.
+    Quadratic — the small-input / verify path. The scale path is
+    :func:`embedding_dup_pairs_lsh`, which pairs vectors sharing a
+    hyperplane-LSH band key first and scores only those pairs.
     """
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
@@ -800,32 +784,20 @@ def embedding_dup_pairs_lsh(
 
     planes = hyperplanes(dim, n_bands * band_bits, seed)
     emb = spread_small_input(emb)  # band projections run pre-exchange
+    # aliased like va/vb below, so the scan-and-spread exchange under
+    # the band rows is the one the vector join-back reuses
     base = emb.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
-    band_keys = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                _sign_bits(
-                    F.col("_v"), planes[b * band_bits : (b + 1) * band_bits]
-                ).alias("key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
+    keys = [
+        _sign_bits(F.col("_v"), planes[b * band_bits : (b + 1) * band_bits])
+        for b in range(n_bands)
+    ]
     # NOTE (r7): the sign-bit fold stays the sequential-fold EXPRESSION
     # (a vectorized kernel's pairwise summation could flip a near-zero
     # sign bit vs the oracle's replayed fold order), and the self-join
     # needs no persist — its two identical exchange children hit
     # ReusedExchange, so the projection runs once (persisting it was
     # measured ~0.3 s slower: pure cache-write overhead).
-    tagged = base.select("_id", F.explode(band_keys).alias("_bk"))
-    cand = (
-        tagged.alias("l")
-        .join(tagged.alias("r"), F.col("l._bk") == F.col("r._bk"))
-        .filter(F.col("l._id") < F.col("r._id"))
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .distinct()
-    )
+    cand = self_key_pairs(band_rows(base, keys), ["band", "key"], "_id", None)
     va = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
     vb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
     return (
@@ -1006,7 +978,10 @@ def reference_dup_pairs(
       batch is wasteful at scale — materialize
       :func:`minhash_signatures_agg` over the reference once and join
       new batches against it (this function recomputes both sides, the
-      one-shot shape).
+      one-shot shape). The band keys are :func:`minhash_band_keys`. The
+      join pairs the new side with the ref side on (band, key): two
+      corpora, not one, so it has no id-order filter and does not go
+      through ``functions.pairs.self_key_pairs``.
     """
     if method == "exact":
         rd = (
@@ -1028,8 +1003,7 @@ def reference_dup_pairs(
         raise ValueError(
             f"unknown method: {method!r} (want 'exact' or 'minhash')"
         )
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
+    keys = minhash_band_keys(num_hashes, bands)
 
     def sides(docs: DataFrame, tag: str):
         # one PACKED signature string rides the band explosion instead
@@ -1037,35 +1011,15 @@ def reference_dup_pairs(
         # component-wise compare happens post-aggregation over the small
         # candidate set, where an interpreted HOF costs nothing
         sig = minhash_signatures_agg(docs, num_hashes)
-        return sig.select(
+        packed = sig.select(
             F.col("doc_id").alias(f"id_{tag}"),
             F.concat_ws(
                 ",", *[F.col(f"h{i}") for i in range(num_hashes)]
             ).alias(f"sig_{tag}"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.md5(
-                                F.concat_ws(
-                                    ",",
-                                    *[
-                                        F.col(f"h{b * r + j}")
-                                        for j in range(r)
-                                    ],
-                                )
-                            ).alias("key"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select(
-            f"id_{tag}",
-            f"sig_{tag}",
-            F.col("bk.band").alias("band"),
-            F.col("bk.key").alias("key"),
+            *[f"h{i}" for i in range(num_hashes)],  # read by the band keys
+        )
+        return band_rows(packed, keys).select(
+            f"id_{tag}", f"sig_{tag}", "band", "key"
         )
 
     n_side = sides(new, "new")

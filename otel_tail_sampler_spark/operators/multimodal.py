@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.functions.pairs import band_rows, self_key_pairs
+
 MEDIA_SCHEMA = (
     "media_id string, kind string, payload binary, "
     "meta struct<width:int, height:int, n_frames:int, sample_rate:int, codec:string>"
@@ -388,31 +390,12 @@ def phash_pairs(hashes: DataFrame, tau: int = 3, n_bands: int = 4) -> DataFrame:
     width = 64 // n_bands
     mask = (1 << width) - 1
     hv = hashes.select(F.col("phash_d").alias("_h")).distinct()
-    bands = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright(F.col("_h"), b * width)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("key"),
-                )
-                for b in range(n_bands)
-            ]
-        )
-    )
-    br = hv.select("_h", bands.alias("bk")).select(
-        "_h", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    cand = (
-        br.select("band", "key", F.col("_h").alias("hash_a"))
-        .join(
-            br.select("band", "key", F.col("_h").alias("hash_b")),
-            ["band", "key"],
-        )
-        .where(F.col("hash_a") < F.col("hash_b"))
-        .select("hash_a", "hash_b")
-        .distinct()
+    keys = [
+        F.shiftright(F.col("_h"), b * width).bitwiseAND(F.lit(mask))
+        for b in range(n_bands)
+    ]
+    cand = self_key_pairs(band_rows(hv, keys), ["band", "key"], "_h", None).select(
+        F.col("id_a").alias("hash_a"), F.col("id_b").alias("hash_b")
     )
     ham = F.bit_count(
         F.col("hash_a").bitwiseXOR(F.col("hash_b"))

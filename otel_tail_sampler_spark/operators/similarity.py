@@ -6,7 +6,7 @@ Two tiers:
   against the corpus, score JVM-side (zip_with/aggregate — no Python), rank
   with a per-query window. Correctness baseline; linear scans of the corpus
   are actually fine at 100 TB IF the query set is small and broadcast.
-* ``hyperplane_buckets`` / ``lsh_topk`` — the scale path: sign-random-
+* ``with_bucket`` / ``lsh_topk`` — the scale path: sign-random-
   projection LSH. Deterministic hyperplanes (seeded numpy) ship as literals;
   corpus and queries hash to sign-bit buckets map-side; candidates = bucket
   collisions, then exact re-rank. Shuffle is bucket-sized, never all-pairs.

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.functions.pairs import self_key_pairs
 from otel_tail_sampler_spark.operators.dedup import words
 
 # tiny public stopword lists (top function words per language)
@@ -325,14 +326,8 @@ def _capped_fp_base_and_pairs(
             .select("_fp")
         )
         base = base.join(keep, "_fp", "semi")
-    a = base.select(F.col("_fp"), F.col("_id").alias("id_a"))
-    b = base.select(F.col("_fp"), F.col("_id").alias("id_b"))
-    pairs = (
-        a.join(b, "_fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+    pairs = self_key_pairs(base, ["_fp"], "_id", "n_shared").filter(
+        F.col("n_shared") >= min_shared
     )
     return base, pairs
 

@@ -13,10 +13,9 @@ idempotent primitives:
   split, which would tear traces apart);
 * sinks are written ``partitionBy(bucket, decision)`` with dynamic partition
   overwrite -> re-writing a bucket is idempotent;
-* the manifest (parquet under ``_checkpoint/``) gains one row per completed
-  bucket AFTER its sink data is committed; a resumed run reads the manifest
-  and filters completed buckets out of the scan, BEFORE the parse, so their
-  parse/assembly/join cost is never paid again;
+* the manifest (parquet under ``_checkpoint/``) records done buckets; a
+  resumed run reads it and filters those buckets out of the scan, BEFORE
+  the parse, so their parse/route cost is never paid again;
 * each manifest row records the bucket count it was hashed with: a bucket
   id names a different set of traces under another count, so a resume at
   another ``n_buckets`` raises instead of skipping spans it never wrote;
@@ -25,9 +24,16 @@ idempotent primitives:
   sink write like run_and_write's): the resumable job and the
   benchmarked job are one program.
 
-Crash window: between sink commit and manifest append a bucket may be
-rewritten on resume — harmless by idempotence (exactly the Iceberg
-write.target 'append-once discipline' called out in SURVEY.md §7.4.5).
+What a failure saves: every remaining bucket is written by ONE sink write,
+and the manifest gains a row for each of them once, after that write
+commits. A pass that fails anywhere before the commit records no bucket,
+so its resume redoes the whole pass. A completed pass records every
+bucket, so a resume that skips only some of them needs a manifest written
+some other way (the tests forge one). Per-bucket commits need the pass
+split into waves of buckets, each committing before the next. A crash
+between the sink commit and the manifest append rewrites those buckets
+on resume, which is harmless by idempotence (the Iceberg write.target
+'append-once discipline' called out in SURVEY.md §7.4.5).
 """
 
 from __future__ import annotations
@@ -104,9 +110,11 @@ def run_resumable(
     n_buckets: int = 16,
     force_rules: list[dict] | None = None,
 ) -> ResumableResult:
-    """One resumable pass: process all not-yet-committed buckets, commit
-    sinks, then append the checkpoint manifest. Re-running after any failure
-    completes exactly the remaining buckets."""
+    """One resumable pass: process all not-yet-committed buckets in one sink
+    write, then append a manifest row for each of them. The manifest only
+    changes after that write commits, so re-running after a failed pass
+    redoes every bucket the pass had; buckets the manifest marks done are
+    skipped."""
     ckpt_dir = os.path.join(out_dir, "_checkpoint")
     routed_dir = os.path.join(out_dir, "routed")
     done = read_manifest(spark, ckpt_dir, n_buckets)

@@ -100,7 +100,7 @@ def run_pipeline(
     input_path: str | DataFrame,
     cfg: SamplerConfig | None = None,
     force_rules: list[dict] | None = None,
-    salt_buckets: int | str | None = None,
+    salt_buckets: int | None = None,
 ) -> PipelineResult:
     """The flagship DAG over ``input_path`` as lazy frames. ``routed`` and
     ``decisions`` (one row per trace) come from the one-pass route;

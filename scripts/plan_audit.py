@@ -384,7 +384,9 @@ def main() -> None:
         "(no CartesianProduct / BroadcastNestedLoopJoin); the survivor\n"
         "filter is a broadcast-able anti join against the dropped-id set.\n"
         "Per-cluster fan-out is the knob k controls (SemDeDup sizes\n"
-        "k ~ N / target cluster size).",
+        "k ~ N / target cluster size). The assignment frame the plan reads\n"
+        "three times is a lazy local checkpoint (Scan ExistingRDD), not an\n"
+        "InMemoryRelation: nothing stays cached after the call.",
         semantic_dedup(q001, centroids=cents),
     )
 

@@ -65,50 +65,3 @@ def test_summary_invariants(spans_df):
     assert (t["min_timestamp_ms"] <= t["max_timestamp_ms"]).all()
     assert (t["has_error"] == (t["error_count"] > 0)).all()
     assert t["root_span_id"].notna().all()
-
-
-def test_auto_salt_detection(spark, spans_df):
-    """'auto' probes key skew: a planted heavy hitter triggers salting with a
-    sensibly-sized bucket count; uniform input stays unsalted (None)."""
-    from pyspark.sql import functions as F
-
-    from otel_tail_sampler_spark.operators.assembly import detect_salt_buckets
-
-    # uniform fixture: no heavy hitter -> no salting
-    assert detect_salt_buckets(spans_df) is None
-
-    # plant one 200k-span trace next to small ones
-    heavy = spark.range(200_000).select(
-        F.lit(-1).cast("long").alias("trace_k1"),
-        F.lit(-1).cast("long").alias("trace_k2"),
-        F.format_string("h%06d", F.col("id")).alias("span_id"),
-        F.lit(None).cast("string").alias("parent_span_id"),
-        F.lit("svc").alias("service_name"),
-        F.lit("op").alias("operation_name"),
-        F.col("id").alias("timestamp_ms"),
-        F.lit(10).alias("duration_ms"),
-        F.lit(0).alias("status_code"),
-    )
-    small = spark.range(1000).select(
-        F.col("id").alias("trace_k1"),
-        F.lit(0).cast("long").alias("trace_k2"),
-        F.format_string("s%06d", F.col("id")).alias("span_id"),
-        F.lit(None).cast("string").alias("parent_span_id"),
-        F.lit("svc").alias("service_name"),
-        F.lit("op").alias("operation_name"),
-        F.col("id").alias("timestamp_ms"),
-        F.lit(10).alias("duration_ms"),
-        F.lit(0).alias("status_code"),
-    )
-    skewed = heavy.unionByName(small)
-    buckets = detect_salt_buckets(skewed)
-    assert buckets is not None and 2 <= buckets <= 64
-
-    # 'auto' end-to-end equals the unsalted result
-    from otel_tail_sampler_spark.operators.assembly import assemble_traces
-
-    a = assemble_traces(skewed, salt_buckets="auto").orderBy("trace_id").toPandas()
-    b = assemble_traces(skewed).orderBy("trace_id").toPandas()
-    pd.testing.assert_frame_equal(
-        a.reset_index(drop=True), b.reset_index(drop=True), check_dtype=False
-    )

@@ -115,6 +115,18 @@ def test_semantic_dedup_below_threshold_kept(spark):
     assert sorted(r["vec_id"] for r in out.collect()) == [0, 1]
 
 
+def test_semantic_dedup_leaves_no_cached_frame(spark):
+    """The frame semantic_dedup reuses three times lives as long as the
+    frame it returns: running the result registers nothing with the
+    session's CacheManager, which would otherwise hold it until the
+    session ends."""
+    spark.catalog.clearCache()
+    vecs = [[100, 0], [0, 100], [100, 0], [99, 5], [0, 0]]
+    out = semantic_dedup(_qdf(spark, vecs), k=2, iters=1, tau=(19, 20))
+    assert sorted(r["vec_id"] for r in out.collect()) == [0, 1, 4]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_kmeans_assign_plan_is_pure_projection(spark):
     df = _qdf(spark, [[1, 2], [3, 4], [5, 6]])
     plan = kmeans_assign(df, [[1, 2], [3, 4]])._jdf.queryExecution().executedPlan().toString()
