@@ -24,8 +24,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 SECONDARY = [
     "tpch_q1_pricing", "events_session_agg", "orders_enrich_join",
     "lineitem_semi_join", "span_service_stats", "minhash_lsh_pairs",

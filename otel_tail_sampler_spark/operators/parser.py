@@ -6,7 +6,7 @@ input of FIXTURES.md §1.
 
 * ``parse_spans_jvm`` — pure whole-stage-codegen expressions (slot math,
   hex/lpad, char() payload decode). The only parser of the batch job
-  (plans.pipeline.run_pipeline, which the resumable job also runs) and of
+  (plans.pipeline.route, which run_and_write writes and resumes) and of
   the streaming job; the batch DAG has ZERO Python stages. Whether it
   beats the Arrow kernel depends on the names: measured on a 4-core VM
   (sf0.1, 600k spans, local[4]), it is faster when the service/operation
@@ -281,16 +281,6 @@ def parse_ok_expr(tokens: Column) -> Column:
     )
 
 
-def trace_key_exprs(tokens: Column) -> tuple[Column, Column]:
-    """JVM-side 128-bit trace key as two int64 — pure integer ops, no string
-    allocation per span (the hot-path join key)."""
-    ok = parse_ok_expr(tokens)
-    return (
-        F.when(ok, _i64_word(tokens, 0)),
-        F.when(ok, _i64_word(tokens, 2)),
-    )
-
-
 def day_expr(tokens: Column) -> Column:
     """JVM-side UTC day from the timestamp header slots (8,9) — the
     reference's ``day(timestamp_ms)`` Iceberg partition dimension
@@ -352,8 +342,7 @@ def with_routing_key(tokenized: DataFrame) -> DataFrame:
     shares a real trace's window, and decide() routes it to 'malformed' —
     and leaving them ungated means the validity predicate, whose payload
     scan is the expensive part, is evaluated once per row instead of three
-    times (measured 1.75x on the routing stage; see trace_key_exprs for the
-    gated variant used where nulled keys matter)."""
+    times (measured 1.75x on the routing stage)."""
     return tokenized.withColumns(
         {
             "trace_k1": _i64_word(F.col("tokens"), 0),

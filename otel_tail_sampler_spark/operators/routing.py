@@ -8,6 +8,7 @@ partitioned write:
     routed = spans + summary OVER (trace key, parse_ok)  # one exchange, no join
                    -> decide() per row                   # narrow
     write routed partitioned by decision  (keep / drop / overflow / malformed)
+                           and bucket      (the exchange's partition)
 
 The window is the reference's own model (BufferedSpan/TraceMetadata,
 SURVEY.md §1.1): each span row carries its trace's summary, so the
@@ -119,26 +120,41 @@ def write_routed(
     out_dir: str,
     fmt: str = "parquet",
     day_partition: bool = False,
+    dynamic: bool = False,
 ) -> None:
     """Single-pass fan-out: one partitioned write, every sink.
 
-    Writing ``partitionBy('decision')`` produces keep/ drop/ overflow/
-    malformed/ directories in one job instead of one filtered write per
-    sink (one scan, not four). Iceberg deployments replace this with
-    per-sink ``writeTo(...)`` appends or a partitioned table on the
-    decision column.
+    Writing ``partitionBy('decision', 'bucket')`` produces keep/ drop/
+    overflow/ malformed/ directories in one job instead of one filtered
+    write per sink (one scan, not four), each split by the ``bucket``
+    column (plans.checkpoint.bucket_col, the route's own shuffle
+    partition, so one task writes all of a bucket: one file per sink and
+    bucket). Iceberg deployments
+    replace this with per-sink ``writeTo(...)`` appends or a partitioned
+    table on the decision column.
 
     ``day_partition=True`` adds the reference's time dimension
-    (``day(timestamp_ms)``, iceberg.rs:317-334): the day is derived
-    JVM-side from the token header slots (parser.day_expr — the routing
-    path stays Arrow-free), so every time-ranged sink read gets partition
-    pruning instead of a full scan. Rows without a decodable timestamp
-    (malformed) land in the null default partition of their sink.
+    (``day(timestamp_ms)``, iceberg.rs:317-334) between the two: the day
+    is derived JVM-side from the token header slots (parser.day_expr — the
+    routing path stays Arrow-free), so every time-ranged sink read gets
+    partition pruning instead of a full scan. Rows without a decodable
+    timestamp (malformed) land in the null default partition of their
+    sink.
+
+    The overwrite mode is pinned at this write: static replaces the whole
+    directory; ``dynamic=True`` (a resume) replaces only the partitions
+    this write produces, and keeps the buckets committed before.
     """
-    df, cols = routed, ["decision"]
+    df, cols = routed, ["decision", "bucket"]
     if day_partition and "tokens" in routed.columns:
         from otel_tail_sampler_spark.operators.parser import day_expr
 
         df = routed.withColumn("day", day_expr(F.col("tokens")))
-        cols = ["decision", "day"]
-    df.write.mode("overwrite").partitionBy(*cols).format(fmt).save(out_dir)
+        cols = ["decision", "day", "bucket"]
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
+        .partitionBy(*cols)
+        .format(fmt)
+        .save(out_dir)
+    )

@@ -4,22 +4,23 @@ Stage layout (SURVEY.md §3.2 re-expression), one pass and one job:
 
     spans   = read(tokenized).with_routing_key().parse()    # narrow, JVM only
     routed  = summary OVER (trace key, parse_ok) -> decide() # one exchange
-    write keep/drop/overflow/malformed, observed:           # partitioned write
+    write keep/drop/overflow/malformed by bucket, observed: # partitioned write
         per-sink rows, traces, per-(policy, decision) traces
-    metric tables from the observed counts                  # driver rows
+    checkpoint += the pass's buckets and counts              # JSON marker
+    metric tables from the checkpoint's summed counts       # driver rows
     exported manifest = keep sink's trace ids, read back
 
-Replaces the reference's evaluator loop (/root/reference/src/sampling/
-evaluator.rs:150-336) with one deterministic DAG, built by ``route``
-alone: ``run_and_write`` writes it,
-plans.checkpoint.run_resumable runs it over the not-yet-committed buckets,
-and ``run_pipeline`` exposes it as lazy frames next to the assembled
-TraceSummary.
+Replaces the reference's evaluator loop (evaluator.rs:150-336) with one
+deterministic DAG, built by ``route`` alone: ``run_and_write`` writes it
+and resumes it by bucket (plans.checkpoint), and ``run_pipeline`` exposes
+it as lazy frames next to the assembled TraceSummary.
 """
 
 from __future__ import annotations
 
 import os
+import time
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -42,6 +43,11 @@ from otel_tail_sampler_spark.operators.policies import (
     decision_labels,
 )
 from otel_tail_sampler_spark.operators.routing import REP, route_spans, write_routed
+from otel_tail_sampler_spark.plans.checkpoint import (
+    bucket_col,
+    open_checkpoint,
+    save_checkpoint,
+)
 
 
 @dataclass
@@ -83,15 +89,22 @@ DECISION_FIELDS = [
 
 
 def route(
-    tokenized: DataFrame, cfg: SamplerConfig, force_rules: list[dict] | None = None
+    tokenized: DataFrame,
+    cfg: SamplerConfig,
+    force_rules: list[dict] | None = None,
+    n_buckets: int | None = None,
 ) -> DataFrame:
     """The flagship DAG: ``tokenized`` routed in one pass
     (operators.routing.route_spans), sink columns plus the ``REP`` trace
     marker. The parse is the whole-stage-codegen expression parser over
     ``with_routing_key``'s ungated key, so the DAG has ZERO Python stages;
     Catalyst prunes the parse to the fields the decision reads, and the
-    wide token column passes through untouched."""
+    wide token column passes through untouched. ``n_buckets`` plans the
+    window's one exchange at that many partitions instead of the
+    session's (a resume's recorded bucket count)."""
     spans = parse_spans_jvm(with_routing_key(tokenized), fields=DECISION_FIELDS)
+    if n_buckets is not None:
+        spans = spans.repartition(n_buckets, *TRACE_KEY, "parse_ok")
     return route_spans(spans, cfg, force_rules)
 
 
@@ -144,7 +157,8 @@ def observe_sinks(marked: DataFrame, cfg: SamplerConfig) -> tuple[DataFrame, Obs
     """``marked`` (route's output) as the sink frame, with an Observation
     that the sink write fills: routed rows, rows per sink, ``traces`` and
     one trace counter per :func:`decision_labels` pair, all counted on the
-    write's own pass. Read it with :func:`trace_counts`."""
+    write's own pass. Its counts, summed over passes, go to
+    :func:`trace_counts`."""
     rep = F.col(REP)
     obs = Observation()
     observed = marked.observe(
@@ -166,16 +180,14 @@ def observe_sinks(marked: DataFrame, cfg: SamplerConfig) -> tuple[DataFrame, Obs
     return observed.drop(REP), obs
 
 
-def trace_counts(obs: Observation, cfg: SamplerConfig) -> tuple[int, list[tuple]]:
+def trace_counts(counts: Counter, cfg: SamplerConfig) -> tuple[int, list[tuple]]:
     """(traces, [(decision_policy, sink, trace_count)] of the non-zero
-    pairs) from :func:`observe_sinks`' filled Observation. Raises when the
-    pair counts do not add up to ``traces``: a trace whose decision has no
-    label would otherwise be missing from the metrics silently."""
-    counts = obs.get
-    traces = int(counts["traces"] or 0)
+    pairs) from :func:`observe_sinks`' counts. Raises when the pair counts
+    do not add up to ``traces``: a trace whose decision has no label would
+    otherwise be missing from the metrics silently."""
+    traces = counts["traces"]
     pairs = [
-        (p, d, int(counts[f"pair_{i}"] or 0))
-        for i, (p, d) in enumerate(decision_labels(cfg))
+        (p, d, counts[f"pair_{i}"]) for i, (p, d) in enumerate(decision_labels(cfg))
     ]
     pairs = [r for r in pairs if r[2] > 0]
     if sum(r[2] for r in pairs) != traces:
@@ -207,18 +219,47 @@ def run_and_write(
     table is written from driver-held rows as a JVM ``LocalTableScan``
     (functions.tables.local_table), so the job starts no Python task. The
     three returned frames are those tables: reading them never re-scans
-    the input."""
-    import time
+    the input.
 
+    The job resumes by bucket (plans.checkpoint): the sinks are partitioned
+    by the route's own shuffle partition, and the checkpoint records each
+    committed pass's buckets and counts. Rerun with the same arguments
+    after a failure, it writes only the buckets no pass committed, none at
+    all when the failure came after the sink write, and the metric tables
+    from every pass's counts. A rerun of a finished run starts over."""
     t0 = time.time()
     cfg = cfg or SamplerConfig()
     routed_dir = os.path.join(out_dir, "routed")
-    routed, obs = observe_sinks(
-        route(read_tokenized(spark, input_path), cfg, force_rules), cfg
-    )
-    write_routed(routed, routed_dir, day_partition=day_partition)
-    counts = obs.get  # available after the write action
-    traces, dm_rows = trace_counts(obs, cfg)
+    inputs = {
+        "input_path": input_path,
+        "cfg": repr(cfg),
+        "force_rules": force_rules or [],
+        "day_partition": day_partition,
+    }
+    state = open_checkpoint(spark, out_dir, inputs)
+    n = state["n_buckets"]
+    done = sorted(b for p in state["passes"] for b in p["buckets"])
+    if len(done) < n:
+        # a resume plans the exchange at the recorded bucket count and
+        # filters the done buckets out below it (the filter is on the
+        # exchange's keys, so Catalyst pushes it down to the scan)
+        marked = route(
+            read_tokenized(spark, input_path), cfg, force_rules,
+            n_buckets=n if done else None,
+        ).withColumn("bucket", bucket_col(n))
+        if done:
+            marked = marked.filter(~F.col("bucket").isin(done))
+        routed, obs = observe_sinks(marked, cfg)
+        write_routed(routed, routed_dir, day_partition=day_partition, dynamic=bool(done))
+        state["passes"].append({
+            "buckets": [b for b in range(n) if b not in done],
+            "counts": {k: int(v or 0) for k, v in obs.get.items()},
+        })
+        save_checkpoint(spark, out_dir, state)
+    counts = Counter()
+    for p in state["passes"]:
+        counts.update(p["counts"])
+    traces, dm_rows = trace_counts(counts, cfg)
 
     dm = local_table(
         spark, dm_rows,
@@ -227,8 +268,7 @@ def run_and_write(
     dm.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "metrics_decisions"))
     rm = local_table(
         spark,
-        [(s, int(counts[f"{s}_rows"] or 0)) for s in SINK_NAMES
-         if (counts[f"{s}_rows"] or 0) > 0],
+        [(s, counts[f"{s}_rows"]) for s in SINK_NAMES if counts[f"{s}_rows"] > 0],
         "sink string, row_count long",
     )
     rm.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "metrics_rows"))
@@ -240,6 +280,7 @@ def run_and_write(
     kept = (
         spark.read.schema("trace_k1 long, trace_k2 long, decision string")
         .parquet(routed_dir)
+        .select("trace_k1", "trace_k2", "decision")
         .distinct()
         .select(
             hex_from_keys(F.col("trace_k1"), F.col("trace_k2")).alias("trace_id"),
@@ -250,9 +291,9 @@ def run_and_write(
         os.path.join(out_dir, "exported")
     )
     run_rows = [
-        ("input_rows", int(counts["routed_rows"] or 0)),
+        ("input_rows", counts["routed_rows"]),
         ("traces", traces),
-        *[(f"routed_{s}", int(counts[f"{s}_rows"] or 0)) for s in SINK_NAMES],
+        *[(f"routed_{s}", counts[f"{s}_rows"]) for s in SINK_NAMES],
         ("wall_ms", int((time.time() - t0) * 1000)),
         ("finished_at_ms", int(time.time() * 1000)),
     ]
@@ -260,6 +301,8 @@ def run_and_write(
     run_metrics.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(out_dir, "metrics_run")
     )
+    state["finished"] = True
+    save_checkpoint(spark, out_dir, state)
     return {
         "decision_metrics": dm,
         "row_metrics": rm,

@@ -1,8 +1,8 @@
 """SparkSession factory for the tail-sampling jobs.
 
 It sets only what Spark does not default to and every job needs. A job
-that needs more pins it at its own write (``run_resumable`` pins dynamic
-partition overwrite). Master and shuffle partitions come from the
+that needs more pins it at its own write (``write_routed`` pins the
+partition overwrite mode). Master and shuffle partitions come from the
 launcher unless the caller passes them.
 """
 

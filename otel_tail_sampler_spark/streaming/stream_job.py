@@ -96,11 +96,12 @@ def assemble_sessions(
 ) -> DataFrame:
     """Streaming trace assembly: session_window(gap) == inactivity timeout.
 
-    Event time = timestamp_ms as timestamp. One trace can in principle span
-    multiple sessions if its spans pause longer than the gap — matching the
+    Event time = timestamp_ms as timestamp. One trace can span multiple
+    sessions if its spans pause longer than the gap — matching the
     reference, which force-exports a trace after inactivity and treats late
-    spans as a fresh trace (evaluator re-export is prevented by the Redis
-    dedup key, here by the exported-manifest anti-join).
+    spans as a fresh trace. The reference stops the re-export with its
+    Redis dedup key; this job does not yet: each session of such a trace
+    is decided and exported on its own (ROADMAP direction 2).
 
     The input carries the service/operation payloads as raw code-point
     CSVs (``_svc_csv``/``_op_csv``, parser.name_csv_exprs); the aggregates
@@ -422,7 +423,8 @@ def run_streaming_pipeline(
 ):
     """Bounded streaming run (Trigger.AvailableNow): emits decided trace
     summaries for every session the watermark closed, written per micro-batch
-    via foreachBatch into decided/ (append-only, idempotent by batch id).
+    via foreachBatch into decided/ as plain appends: a micro-batch replayed
+    after a failure appends its rows a second time (ROADMAP direction 2).
 
     ``strategy``: 'session_window' (watermarked session aggregation) or
     'state' (applyInPandasWithState per-trace timeout, state.rs:293-325).

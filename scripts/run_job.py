@@ -12,6 +12,13 @@ otel_tail_sampler_spark/config.py (sampling policies + force rules).
 Emits ONE JSON line of run metrics (per-sink routed rows,
 trace count, wall ms) on stdout so a scheduler can assert per-sink parity
 without reading the lake.
+
+A rerun with the same arguments after a failure resumes from the
+checkpoint in ``--out`` (plans/checkpoint.py): it writes only the buckets
+the failed run did not commit, and reports the same metrics as a run that
+never failed. A rerun with other arguments raises until the unfinished
+run's checkpoint and routed output are deleted; a rerun of a finished run
+starts over.
 """
 
 from __future__ import annotations

@@ -73,16 +73,6 @@ ALLOWED = {
     ("otel_tail_sampler_spark/operators/rule_store.py",
      "apply_rules_from_table", "now_ms"):
         "clock injection: lets a caller evaluate rule expiry at a fixed time",
-    ("otel_tail_sampler_spark/plans/checkpoint.py", "run_resumable",
-     "force_rules"):
-        "job input: the resumable job's rule set, matching run_and_write's",
-    ("otel_tail_sampler_spark/plans/checkpoint.py", "run_resumable", "cfg"):
-        "job input: the resumable job's sampler config, matching "
-        "run_and_write's",
-    ("otel_tail_sampler_spark/plans/checkpoint.py", "run_resumable",
-     "n_buckets"):
-        "deployment setting: the resume granularity, sized to the input "
-        "(the checkpoint manifest records it)",
     ("otel_tail_sampler_spark/plans/corpus_prep.py", "run_corpus_prep",
      "rates"):
         "job input: the per-source mixture rates of the prep run",
@@ -107,8 +97,6 @@ ALLOWED = {
 # repository. Each reason is a job entry, a deployment source or sink, or
 # an admin API.
 ENTRY_POINTS = {
-    ("otel_tail_sampler_spark/plans/checkpoint.py", "run_resumable"):
-        "job entry: the resumable run of the sampling job",
     ("otel_tail_sampler_spark/streaming/stream_job.py", "read_kafka_stream"):
         "deployment source: the Kafka span topic (gated by its jar)",
     ("otel_tail_sampler_spark/sources/iceberg.py", "read_iceberg"):

@@ -4,7 +4,7 @@ Contract under test (FIXTURES.md §1 + parser.py): on ARBITRARY int32 arrays
 the parser must (1) never raise, (2) conserve rows, (3) set parse_ok iff the
 row satisfies the documented layout with ASCII string payloads, (4) decode
 valid rows exactly, (5) null every field of malformed rows, and (6) agree
-bit-for-bit with the JVM routing fast path (parse_ok_expr / trace_key_exprs)
+bit-for-bit with the JVM routing fast path (parse_ok_expr / with_routing_key)
 on every input — the two predicates routing and parsing must never diverge,
 or a span could be decided by one path and quarantined by the other.
 

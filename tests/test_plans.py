@@ -27,13 +27,34 @@ def plans(spark, small_dataset):
     }
 
 
-def test_route_is_one_pass(spark, small_dataset):
+def _final_plan_nodes(desc):
+    """Node details of an executed plan description's final adaptive plan,
+    in tree order (a node before its children), each starting with its
+    name."""
+    import re
+
+    outline, details = desc.split("\n\n", 1)
+    final = outline.split("== Initial Plan ==")[0]
+    ids = re.findall(r"\((\d+)\)(?:, Statistics\(.*\))?$", final, re.M)
+    by_id = dict(re.findall(r"^\((\d+)\) (.*?)(?=^\(\d+\) |\Z)", details, re.M | re.S))
+    return [by_id[i] for i in ids]
+
+
+def test_route_is_one_pass(spark, small_dataset, tmp_path):
     """The route reads the input once and shuffles it once: one parquet
     scan, one hash exchange on the trace key (plus parse_ok, which keeps a
     malformed row out of a real trace's window), no join and nothing
     cached. A second scan, a join back on the trace key or a cached
-    decisions frame would each bring back a pass this plan removed."""
+    decisions frame would each bring back a pass this plan removed.
+
+    The same holds for the routed write that run_and_write executes, the
+    first SQL execution of a fresh run, and for a resume with some buckets
+    done: there the exchange is planned at the checkpoint's bucket count
+    and the done-bucket filter sits below it."""
     import re
+
+    from otel_tail_sampler_spark.plans.pipeline import run_and_write
+    from tests.test_checkpoint import DONE, _executed_plans, _forge_unfinished
 
     res = run_pipeline(spark, small_dataset["tokenized"], E.ENTRY_CFG)
     plan = _explain(res.routed, "simple")
@@ -46,6 +67,44 @@ def test_route_is_one_pass(spark, small_dataset):
     for node in ("Join", "InMemoryRelation", "InMemoryTableScan"):
         assert node not in plan, (node, plan)
 
+    src = small_dataset["tokenized"]
+    fresh, resumed = str(tmp_path / "fresh"), str(tmp_path / "resumed")
+    cfg = E.ENTRY_CFG
+    writes = {
+        "fresh": _executed_plans(spark, lambda: run_and_write(spark, src, fresh, cfg))[0],
+    }
+    _forge_unfinished(fresh, resumed, DONE, cfg)
+    key = "spark.sql.shuffle.partitions"
+    n = spark.conf.get(key)
+    spark.conf.set(key, "3")  # the resume keeps the checkpoint's count
+    try:
+        writes["resumed"] = _executed_plans(
+            spark, lambda: run_and_write(spark, src, resumed, cfg)
+        )[0]
+    finally:
+        spark.conf.set(key, n)
+    for kind, desc in writes.items():
+        assert "InsertIntoHadoopFsRelationCommand" in desc and "/routed" in desc, kind
+        nodes = _final_plan_nodes(desc)
+        names = [d.split("\n", 1)[0] for d in nodes]
+        assert sum(nm.startswith("Scan parquet") for nm in names) == 1, (kind, names)
+        ex = [i for i, nm in enumerate(names) if nm.startswith("Exchange")]
+        assert len(ex) == 1, (kind, names)
+        args = re.search(r"Arguments: hashpartitioning\(([^)]*)\)", nodes[ex[0]]).group(1)
+        keys = [re.sub(r"#\d+L?$", "", k.strip()) for k in args.split(",")]
+        assert keys == ["trace_k1", "trace_k2", "parse_ok", n], (kind, keys)
+        for nm in names:
+            for node in ("Join", "InMemoryRelation", "InMemoryTableScan"):
+                assert node not in nm, (kind, nm)
+        done_filters = [
+            i for i, d in enumerate(nodes)
+            if d.startswith("Filter") and "pmod(hash(" in d
+        ]
+        if kind == "resumed":
+            assert done_filters and min(done_filters) > ex[0], (kind, names)
+        else:
+            assert not done_filters, (kind, names)
+
 
 PYTHON_NODES = ("ExistingRDD", "MapInArrow", "MapInPandas", "EvalPython")
 
@@ -55,26 +114,23 @@ def test_pipeline_is_pure_jvm(plans, spark, small_dataset, tmp_path):
     parser replaced the Arrow kernel — the corpus crossing the JVM<->Python
     socket was ~60% of the skewed headline; tests/test_parser.py keeps the
     two parsers equal field by field). The same holds for every SQL
-    execution of a whole run_and_write and run_resumable call, metric
+    execution of a whole run_and_write call, fresh and resumed, metric
     tables and manifest included: a driver-built table planned as
     ``Scan ExistingRDD`` starts Python worker tasks on every write."""
-    from otel_tail_sampler_spark.plans.checkpoint import run_resumable
     from otel_tail_sampler_spark.plans.pipeline import run_and_write
-    from tests.test_checkpoint import _executed_plans
+    from tests.test_checkpoint import DONE, _executed_plans, _forge_unfinished
 
     src = small_dataset["tokenized"]
+    fresh, resumed = str(tmp_path / "flagship"), str(tmp_path / "resumed")
     executed = {
         "run_and_write": _executed_plans(
-            spark,
-            lambda: run_and_write(spark, src, str(tmp_path / "flagship"), E.ENTRY_CFG),
-        ),
-        "run_resumable": _executed_plans(
-            spark,
-            lambda: run_resumable(
-                spark, src, str(tmp_path / "resumable"), E.ENTRY_CFG, n_buckets=4
-            ),
+            spark, lambda: run_and_write(spark, src, fresh, E.ENTRY_CFG)
         ),
     }
+    _forge_unfinished(fresh, resumed, DONE, E.ENTRY_CFG)
+    executed["resume"] = _executed_plans(
+        spark, lambda: run_and_write(spark, src, resumed, E.ENTRY_CFG)
+    )
     assert all(executed.values())
     for key in ("routed", "decided"):
         for node in PYTHON_NODES:
