@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.functions.pairs import band_rows, self_key_pairs
+from otel_tail_sampler_spark.functions.tables import local_table
 
 MEDIA_SCHEMA = (
     "media_id string, kind string, payload binary, "
@@ -206,7 +207,7 @@ def _gen_one(i: int, seed: int) -> tuple:
 def synthetic_media(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFrame:
     """Deterministic media table of valid PPM/WAV/VID0 payloads."""
     rows = [_gen_one(i, seed)[0] for i in range(n)]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_table(spark, rows, MEDIA_SCHEMA)
 
 
 TRUTH_COLUMNS = [
@@ -486,7 +487,7 @@ def synthetic_media_neardup(
         )
         for mid, arr in _gen_neardup_arrays(n_base, seed)
     ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_table(spark, rows, MEDIA_SCHEMA)
 
 
 def ensure_media_phash_truth(n_base: int = 48, seed: int = 7) -> str:

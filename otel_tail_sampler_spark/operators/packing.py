@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.functions.hashing import hash_frac
+from otel_tail_sampler_spark.functions.tables import local_table
 
 # Hard ceiling on the _subrange_rank offsets collect: one row per
 # (group value, hex prefix), so at sub_prefix_len=2 this admits ~4096
@@ -524,12 +525,7 @@ def _subrange_rank(
         per_group[g] = off + n
         acc += n
     gtype = df.schema[group_col].dataType.simpleString()
-    schema = f"{group_col} {gtype}, _sub string, _off long"
-    offsets = (
-        spark.createDataFrame(rows, schema)
-        if rows
-        else spark.createDataFrame([], schema)
-    )
+    offsets = local_table(spark, rows, f"{group_col} {gtype}, _sub string, _off long")
     w = Window.partitionBy(group_col, "_sub").orderBy("_h", id_col)
     if value_col is None:
         local = F.row_number().over(w) - 1
@@ -786,12 +782,8 @@ def enforce_token_budget(df: DataFrame, budget) -> DataFrame:
     )
     gtype = df.schema["source"].dataType.simpleString()
     if isinstance(budget, dict):
-        brows = [(g, int(b)) for g, b in budget.items()]
-        bschema = f"source {gtype}, _budget long"
-        bdf = (
-            spark.createDataFrame(brows, bschema)
-            if brows
-            else spark.createDataFrame([], bschema)
+        bdf = local_table(
+            spark, [(g, int(b)) for g, b in budget.items()], f"source {gtype}, _budget long"
         )
         withb = ranked.join(F.broadcast(bdf), "source", "left").withColumn(
             "_budget", F.coalesce("_budget", F.lit(0))
@@ -914,7 +906,7 @@ def interleave_key(df: DataFrame, weights: dict) -> DataFrame:
     spark = df.sparkSession
     gtype = df.schema["source"].dataType.simpleString()
     strides = F.broadcast(
-        spark.createDataFrame(stride_pairs, f"source {gtype}, _stride long")
+        local_table(spark, stride_pairs, f"source {gtype}, _stride long")
     )
     joined = ranked.join(strides, "source", "left")
     missing = F.when(

@@ -53,6 +53,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.functions.tables import local_table
+
 SCALE_BITS = 20
 
 
@@ -229,7 +231,7 @@ def _bm25_topk_arrow(
         f"doc_id {corpus.schema[id_col].dataType.simpleString()}, "
         "score_fp long"
     )
-    empty = spark.createDataFrame([], out_schema + ", rank int")
+    empty = local_table(spark, [], out_schema + ", rank int")
     if not terms or not q_ids:
         if corpus.isEmpty():
             raise ValueError("bm25: empty corpus")

@@ -118,7 +118,6 @@ def decision_metrics(decided: DataFrame) -> DataFrame:
 def write_routed(
     routed: DataFrame,
     out_dir: str,
-    fmt: str = "parquet",
     day_partition: bool = False,
     dynamic: bool = False,
 ) -> None:
@@ -129,9 +128,8 @@ def write_routed(
     write per sink (one scan, not four), each split by the ``bucket``
     column (plans.checkpoint.bucket_col, the route's own shuffle
     partition, so one task writes all of a bucket: one file per sink and
-    bucket). Iceberg deployments
-    replace this with per-sink ``writeTo(...)`` appends or a partitioned
-    table on the decision column.
+    bucket). Iceberg deployments write through
+    ``sources.iceberg.write_routed_iceberg`` instead.
 
     ``day_partition=True`` adds the reference's time dimension
     (``day(timestamp_ms)``, iceberg.rs:317-334) between the two: the day
@@ -146,7 +144,7 @@ def write_routed(
     this write produces, and keeps the buckets committed before.
     """
     df, cols = routed, ["decision", "bucket"]
-    if day_partition and "tokens" in routed.columns:
+    if day_partition:
         from otel_tail_sampler_spark.operators.parser import day_expr
 
         df = routed.withColumn("day", day_expr(F.col("tokens")))
@@ -155,6 +153,5 @@ def write_routed(
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
         .partitionBy(*cols)
-        .format(fmt)
-        .save(out_dir)
+        .parquet(out_dir)
     )

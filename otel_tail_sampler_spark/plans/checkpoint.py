@@ -65,8 +65,9 @@ def open_checkpoint(spark: SparkSession, out_dir: str, inputs: dict) -> dict:
     saved = read_marker(spark, path)
     if saved is None and path_exists(spark, path):
         raise ValueError(
-            f"checkpoint {path} does not read as JSON: delete it and the "
-            "routed output to start over"
+            f"checkpoint {path} does not read as JSON or fails its checksum "
+            "(rewritten outside the job?): delete it and the routed output "
+            "to start over"
         )
     if saved is not None and not saved["finished"]:
         if saved["inputs"] != inputs:

@@ -1,27 +1,206 @@
-"""N-vs-4N scaling protocol (BASELINE.md / north rule, sandbox form).
+"""N-vs-4N scaling protocols (BASELINE.md / north rule, sandbox form).
 
-Runs the identical spark-submit job on the same input at local[8] (N) and
-local[32] (4N), separate JVMs, and reports throughput at both plus scaling
-efficiency T(4N)-rate / (4 x T(N)-rate). Writes BENCH/BASELINE.md.
+Runs the identical spark-submit job (scripts/scaling_job.py) on the same
+input at each parallelism level, each in its own capped JVM, and reports
+throughput at every level plus the scaling efficiency of each step,
+rate(b) / ((b / a) x rate(a)). The first pair is the gated one (>= 0.8).
+Three protocols, each writing its own record under BENCH/:
 
-Usage: python scripts/bench_scaling.py [dataset] [repeats]
+* ``pipeline`` (default) — the span decision pipeline -> BASELINE.md;
+* ``prep`` — the tokens-tier pack + shard permutation -> PREP_SCALING.md;
+* ``selection`` — DSIR score + top-k select -> SELECTION_SCALING.md.
+
+Usage: python scripts/bench_scaling.py [--protocol P] [dataset] [repeats] [levels...]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+# protocol -> its defaults, the rate its efficiency is computed on, and its
+# record: the prose up to the table's header and after its gate lines
+# (str.format templates), and the level keys of the columns after cores
+# and warm sec
+PROTOCOLS = {
+    "pipeline": {
+        "metric": "spans/sec decision throughput at multiple core counts",
+        "rate": "spans_per_sec",
+        "dataset": "bench1.6",
+        "repeats": 4,
+        "levels": [2, 8, 32],
+        "artifact": "BASELINE.md",
+        "columns": ["traces_per_sec", "spans_per_sec"],
+        "intro": """# BENCH/BASELINE — two-parallelism scaling protocol
+
+Per the north rule, the two-cluster-size criterion is evidenced by running the
+identical `spark-submit` job (full decision pipeline: vectorized parse ->
+trace assembly -> policy decisions -> route -> per-sink counts) on the SAME
+input at multiple parallelism levels in separate JVMs (each JVM capped with
+-XX:ActiveProcessorCount so a local[N] run is a faithful N-core executor
+analog). Warm time = min of {repeats} in-JVM repeats (first-run
+page-fault/codegen cost excluded; the steady-state engine rate is the metric).
+
+Dataset: `{dataset}` — {n[n_spans]:,} spans / {n[n_traces]:,} traces,
+heavy-hitter skew shape (1% of traces with 2000 spans,
+scripts/load_simulation.rs:52-55).
+
+| cores | warm sec | traces/sec | spans/sec |
+|---|---|---|---|
+""",
+        "outro": """
+Also measured (published, not the headline — see below):
+{extra_pairs}
+
+Reference anchor (BASELINE.md): claimed 100K-500K spans/sec single node
+(README.md:443-444). This build reaches {n4[spans_per_sec]:,.0f} spans/sec
+at {n4[cores]} cores on the skewed shape.
+
+## Why the primary pair is {a} vs {b} cores (and 8 vs 32 is published but not the gate)
+
+The protocol stands in for N vs 4N EXECUTORS (north rule). On this single box,
+thread counts past ~16 REGRESS absolute throughput because all threads share
+one memory bus and the sandbox's page-fault path serializes under concurrency
+(measured above and in the full sweep below) — a multi-socket cluster of
+separate executors does not have this artifact (each executor brings its own
+memory bandwidth and page-fault path). {a} vs {b} cores is
+the largest 4x step where per-core memory bandwidth is not the binding
+constraint, making it the faithful single-box analog of adding executors; the
+8 vs 32 pair is reported above so the hardware ceiling is visible rather than
+hidden. Full sweep (bench0.1, 3.08M spans, warm):
+2c=12.8s, 4c=6.6s, 8c=5.1s, 16c=4.4s, 32c=8.9s.
+
+Raw:
+{raw}
+""",
+    },
+    "prep": {
+        "metric": "tokens/sec pack+shard throughput at multiple core counts",
+        "rate": "tokens_per_sec",
+        "dataset": "bench0.1",
+        "repeats": 3,
+        "levels": [2, 8],
+        "artifact": "PREP_SCALING.md",
+        "columns": ["n_examples", "tokens_per_sec"],
+        "intro": """# BENCH/PREP_SCALING — tokens-tier two-parallelism protocol
+
+The training-prep permutation core (`pack_sequences` -> `assign_shards`:
+every token moves exactly once through the example-assembly exchange, the
+shard window's exchange doubles as the write partitioning) on the SAME
+tokenized input at multiple parallelism levels in separate JVMs, each capped
+with -XX:ActiveProcessorCount as a faithful N-core executor analog — the
+axis-B counterpart of the span-pipeline protocol in BENCH/BASELINE.md,
+which also documents why the primary 4x pair stays below this box's
+memory-bus ceiling. Warm time = min of {repeats} in-JVM repeats.
+
+Dataset: `{dataset}` — {n[n_rows]:,} sequences / {n[n_tokens]:,} tokens
+packed into {n[n_examples]:,} 512-token examples.
+
+| cores | warm sec | examples | tokens/sec |
+|---|---|---|---|
+""",
+        # the attribution of the sub-gate efficiency, measured 2026-08-17
+        # (all runs min-of-2+ in separate capped JVMs)
+        "outro": """
+Raw:
+{raw}
+
+## Attribution — why the permutation core sits below the 0.8 gate HERE
+
+Measured, in order:
+
+1. **The box's movement bandwidth is not the binding limit.** A pure-movement
+   control (repartition the same tokenized corpus on doc_id + sum(size),
+   one job, zero pack logic; bench0.1 = 154.4M tokens) scales 1->4 at
+   **0.898** (6.766s -> 1.883s).
+2. **The Python piece-cutting stage was the worst scaler and is gone.** The
+   original Arrow-batched mapInPandas emit put ~2x corpus bytes through the
+   JVM<->Python socket per run; it scaled 1->4 at ~0.58 and dominated cost.
+   Rewriting the piece cut as pure JVM expressions (window cumsum over the
+   range bucket + sequence/explode/slice) halved absolute time at every
+   level (1c 235s -> 118s) — that rewrite is the shipped `pack_sequences`.
+3. **What remains below the gate is the full-row shard exchange.** Stage
+   decomposition on bench0.4 (min-of-2 per stage, separate JVMs):
+   bounds+totals scans 24.0s -> 8.7s (eff 0.69); the offsets window
+   53.6s -> 15.7s (0.85); full pack 62.6s -> 23.2s (0.67); pack+shards
+   101.0s -> 44.5s (0.57). The `assign_shards` increment — an exchange +
+   sort of the packed ~2 KB/row examples — is the worst scaler at
+   38.4s -> 21.3s (**0.45**).
+4. **Slimming the rank does not help, by measurement.** A variant that ranks
+   md5 keys over an example_id-only projection and joins shard/shard_pos
+   back was wall-time identical at 4c (39.3s vs 40.7s): the full rows must
+   cross the exchange anyway to land in shard order, so the window
+   formulation (whose exchange doubles as the write partitioning) is kept.
+
+Reading for a real cluster: every 4x step adds 4x memory buses and shuffle
+disks, so the full-row exchange tracks the 0.898 movement control rather
+than this box's shared-bus 0.45-0.57. The north-rule GATE workload
+(BASELINE.json metric: the decision pipeline) passes its 1->4 pair at 1.04
+in BENCH/BASELINE.md; this artifact documents the tokens-tier permutation
+core honestly instead of substituting a compute-dense proxy.
+""",
+    },
+    "selection": {
+        "metric": "docs/sec DSIR score+select at multiple core counts",
+        "rate": "docs_per_sec",
+        "dataset": "0.1",
+        "repeats": 3,
+        "levels": [1, 4, 8],
+        "artifact": "SELECTION_SCALING.md",
+        "columns": ["docs_per_sec", "draws"],
+        "intro": """# BENCH/SELECTION_SCALING — selection-tier two-parallelism protocol
+
+DSIR importance scoring + top-k select on the SAME corpus at multiple
+parallelism levels in separate JVMs, each capped with
+-XX:ActiveProcessorCount as a faithful N-core executor analog — the
+selection-tier counterpart of BENCH/BASELINE.md (span pipeline) and
+BENCH/PREP_SCALING.md (pack+shard permutation). The bucket model is a
+STANDING artifact (built + collected once per JVM, untimed — the
+deployment shape the streaming gate uses); the timed pass scores every
+document through the broadcast Arrow kernel (shuffle-free; the corpus
+crosses the JVM<->Python socket once) and takes the global top-k.
+Warm time = min of {repeats} in-JVM repeats; all draws embedded.
+
+Dataset: `{dataset}` x8 deterministic replication —
+{n[n_docs]:,} documents scored per pass. (Unreplicated, the corpus
+finishes in ~3 s on ONE core, so fixed job overhead — driver, Arrow
+batch setup, the TakeOrdered merge — floors any efficiency ratio; the
+replication makes the kernel the measured quantity. A first protocol
+run without it measured 0.36 "efficiency" that was pure Amdahl floor,
+not kernel behavior — kept here as the cautionary note.)
+
+| cores | warm sec | docs/sec | draws |
+|---|---|---|---|
+""",
+        "outro": """
+What this measures: mapInPandas worker-pool scaling — one Python worker
+per core, each consuming Arrow batches independently; there is no
+exchange in the scored leg, so the only shared resources are the local
+socket pairs and the memory bus (see the bus-ceiling analysis in
+BENCH/BASELINE.md for why 8->32 flattens on this box).
+""",
+    },
+}
+
+GATE = """{rows}
+
+**Primary N-vs-4N pair: {a} vs {b} cores.**
+Scaling efficiency = rate({b}c) / ({ratio} x
+rate({a}c)) = **{e}**
+(gate: >= 0.8 -> {verdict})
+"""
 
 
-def run_level(job: str, cores: int, dataset: str, repeats: int) -> dict:
-    """Run ``scripts/<job>`` under spark-submit at local[cores] in its own
-    capped JVM; return the last JSON line it prints. The scaling protocols
-    (this one, prep_scaling.py, selection_scaling.py) all measure through
-    this."""
+def run_level(protocol: str, cores: int, dataset: str, repeats: int) -> dict:
+    """Run ``scripts/scaling_job.py`` for ``protocol`` under spark-submit at
+    local[cores] in its own capped JVM; return the last JSON line it
+    prints."""
     cmd = [
         "spark-submit",
         "--master", f"local[{cores}]",
@@ -34,12 +213,10 @@ def run_level(job: str, cores: int, dataset: str, repeats: int) -> dict:
         f"-XX:ActiveProcessorCount={cores} "
         f"-XX:MaxDirectMemorySize={max(2, cores // 4)}g",
         "--driver-memory", "16g",
-        os.path.join(REPO, "scripts", job),
-        str(cores), dataset, str(repeats),
+        os.path.join(REPO, "scripts", "scaling_job.py"),
+        protocol, str(cores), dataset, str(repeats),
     ]
-    out = subprocess.run(
-        cmd, capture_output=True, text=True, cwd=REPO, timeout=1800
-    )
+    out = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO, timeout=1800)
     for line in reversed(out.stdout.strip().splitlines()):
         if line.startswith("{"):
             return json.loads(line)
@@ -47,20 +224,28 @@ def run_level(job: str, cores: int, dataset: str, repeats: int) -> dict:
 
 
 def main() -> None:
-    dataset = sys.argv[1] if len(sys.argv) > 1 else "bench1.6"
-    repeats = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    levels = [int(x) for x in sys.argv[3:]] or [2, 8, 32]
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("--protocol", choices=sorted(PROTOCOLS), default="pipeline")
+    ap.add_argument("dataset", nargs="?")
+    ap.add_argument("repeats", nargs="?", type=int)
+    ap.add_argument("levels", nargs="*", type=int)
+    args = ap.parse_args()
+    p = PROTOCOLS[args.protocol]
+    dataset = args.dataset or p["dataset"]
+    repeats = args.repeats or p["repeats"]
+    levels = args.levels or p["levels"]
 
     # generate once up front so no level pays generation cost
-    sys.path.insert(0, REPO)
-    from otel_tail_sampler_spark.sources.generator import ensure_dataset
+    from otel_tail_sampler_spark.sources import generator
 
-    ensure_dataset(dataset)
+    generator.ensure_dataset(dataset)
 
     runs = {}
     for c in levels:
         try:
-            runs[c] = run_level("scaling_job.py", c, dataset, repeats)
+            runs[c] = run_level(args.protocol, c, dataset, repeats)
             print(json.dumps(runs[c]))
         except Exception as ex:  # a failed level must not void the others
             print(f"LEVEL {c} FAILED: {str(ex)[:500]}")
@@ -68,87 +253,37 @@ def main() -> None:
     if len(levels) < 2:
         raise SystemExit("need at least two successful levels")
 
-    def eff(a: int, b: int) -> float:
-        return round(
-            (runs[b]["spans_per_sec"] / runs[a]["spans_per_sec"]) / (b / a), 3
-        )
-
-    pairs = [(levels[i], levels[i + 1]) for i in range(len(levels) - 1)]
-    effs = {f"{a}->{b}": eff(a, b) for a, b in pairs}
-    primary = pairs[0]
-    e_primary = effs[f"{primary[0]}->{primary[1]}"]
-    result = {
-        "metric": "spans/sec decision throughput at multiple core counts",
-        "dataset": dataset,
-        "levels": runs,
-        "scaling_efficiency": effs,
-        "primary_pair": list(primary),
-        "pass_0.8_gate": e_primary >= 0.8,
+    pairs = list(zip(levels, levels[1:]))
+    effs = {
+        f"{a}->{b}": round((runs[b][p["rate"]] / runs[a][p["rate"]]) / (b / a), 3)
+        for a, b in pairs
     }
-    print(json.dumps(result, indent=2))
+    a, b = pairs[0]
+    e = effs[f"{a}->{b}"]
+    print(json.dumps({
+        "metric": p["metric"], "dataset": dataset, "levels": runs,
+        "scaling_efficiency": effs, "primary_pair": [a, b], "pass_0.8_gate": e >= 0.8,
+    }, indent=2))
 
-    n, n4 = runs[primary[0]], runs[primary[1]]
-    rows = "\n".join(
-        f"| {c} | {r['warm_sec']} | {r['traces_per_sec']:,} | {r['spans_per_sec']:,} |"
-        for c, r in runs.items()
+    def cell(v):
+        return str(v) if isinstance(v, list) else f"{v:,}"
+
+    record = (p["intro"] + GATE + p["outro"]).format(
+        repeats=repeats, dataset=dataset, n=runs[a], n4=runs[b], a=a, b=b,
+        ratio=b // a, e=e, verdict="PASS" if e >= 0.8 else "FAIL",
+        rows="\n".join(
+            f"| {c} | {r['warm_sec']} | " + " | ".join(cell(r[k]) for k in p["columns"]) + " |"
+            for c, r in runs.items()
+        ),
+        extra_pairs="\n".join(
+            f"* {x} -> {y} cores: efficiency **{effs[f'{x}->{y}']}**" for x, y in pairs[1:]
+        ),
+        raw="\n".join(f"`{json.dumps(r)}`" for r in runs.values()),
     )
-    extra_pairs = "\n".join(
-        f"* {a} -> {b} cores: efficiency **{effs[f'{a}->{b}']}**"
-        for a, b in pairs[1:]
-    )
-    raw = "\n".join(f"`{json.dumps(r)}`" for r in runs.values())
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as fh:
-        fh.write(
-            f"""# BENCH/BASELINE — two-parallelism scaling protocol
-
-Per the north rule, the two-cluster-size criterion is evidenced by running the
-identical `spark-submit` job (full decision pipeline: vectorized parse ->
-trace assembly -> policy decisions -> route -> per-sink counts) on the SAME
-input at multiple parallelism levels in separate JVMs (each JVM capped with
--XX:ActiveProcessorCount so a local[N] run is a faithful N-core executor
-analog). Warm time = min of {repeats} in-JVM repeats (first-run
-page-fault/codegen cost excluded; the steady-state engine rate is the metric).
-
-Dataset: `{dataset}` — {n['n_spans']:,} spans / {n['n_traces']:,} traces,
-heavy-hitter skew shape (1% of traces with 2000 spans,
-scripts/load_simulation.rs:52-55).
-
-| cores | warm sec | traces/sec | spans/sec |
-|---|---|---|---|
-{rows}
-
-**Primary N-vs-4N pair: {primary[0]} vs {primary[1]} cores.**
-Scaling efficiency = rate({primary[1]}c) / ({primary[1] // primary[0]} x
-rate({primary[0]}c)) = **{e_primary}**
-(gate: >= 0.8 -> {"PASS" if e_primary >= 0.8 else "FAIL"})
-
-Also measured (published, not the headline — see below):
-{extra_pairs}
-
-Reference anchor (BASELINE.md): claimed 100K-500K spans/sec single node
-(README.md:443-444). This build reaches {n4['spans_per_sec']:,.0f} spans/sec
-at {n4['cores']} cores on the skewed shape.
-
-## Why the primary pair is {primary[0]} vs {primary[1]} cores (and 8 vs 32 is published but not the gate)
-
-The protocol stands in for N vs 4N EXECUTORS (north rule). On this single box,
-thread counts past ~16 REGRESS absolute throughput because all threads share
-one memory bus and the sandbox's page-fault path serializes under concurrency
-(measured above and in the full sweep below) — a multi-socket cluster of
-separate executors does not have this artifact (each executor brings its own
-memory bandwidth and page-fault path). {primary[0]} vs {primary[1]} cores is
-the largest 4x step where per-core memory bandwidth is not the binding
-constraint, making it the faithful single-box analog of adding executors; the
-8 vs 32 pair is reported above so the hardware ceiling is visible rather than
-hidden. Full sweep (bench0.1, 3.08M spans, warm):
-2c=12.8s, 4c=6.6s, 8c=5.1s, 16c=4.4s, 32c=8.9s.
-
-Raw:
-{raw}
-"""
-        )
-    print("wrote BENCH/BASELINE.md")
+    with open(os.path.join(REPO, "BENCH", p["artifact"]), "w") as fh:
+        fh.write(record)
+    print(f"wrote BENCH/{p['artifact']}")
 
 
 if __name__ == "__main__":

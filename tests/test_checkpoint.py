@@ -236,6 +236,37 @@ def test_unreadable_manifest_raises(spark, small_dataset, tmp_path):
         run_and_write(spark, small_dataset["tokenized"], str(out), CFG)
 
 
+def test_checkpoint_edited_outside_the_job_raises(spark, small_dataset, tmp_path):
+    """A checkpoint rewritten by anything but the job (here a plain open())
+    no longer matches the checksum file the job wrote beside it. The rerun
+    raises ValueError naming the checkpoint, not a Hadoop checksum error."""
+    src = small_dataset["tokenized"]
+    out = str(tmp_path / "out")
+    _crash_after_commit(spark, src, out)
+    path = os.path.join(out, CHECKPOINT)
+    with open(path) as fh:
+        state = json.load(fh)
+    with open(path, "w") as fh:
+        json.dump(state, fh, indent=1)
+    with pytest.raises(ValueError, match=CHECKPOINT):
+        run_and_write(spark, src, out, CFG)
+
+
+def test_marker_rewrite_replaces_whole(spark, tmp_path):
+    """write_marker replaces a marker through a temp file: a rewrite reads
+    back whole and leaves no temp file, and a temp file left by a write
+    that crashed before its rename does not touch the marker."""
+    from otel_tail_sampler_spark.functions.fs import read_marker, write_marker
+
+    path = str(tmp_path / "_m.json")
+    write_marker(spark, path, {"n": 1})
+    write_marker(spark, path, {"n": 22})
+    assert read_marker(spark, path) == {"n": 22}
+    assert sorted(os.listdir(tmp_path)) == ["._m.json.crc", "_m.json"]
+    (tmp_path / "_m.json.tmp").write_text('{"n": 3')
+    assert read_marker(spark, path) == {"n": 22}
+
+
 def test_bucket_is_trace_aligned(one_shot):
     """All spans of a trace share a bucket (decisions are per-trace), and a
     one-shot run writes one file per (sink, bucket): the bucket is the

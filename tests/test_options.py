@@ -50,9 +50,6 @@ TESTS = "tests/"
 # Each reason is a deployment setting, a clock injection, a job input or a
 # safety record.
 ALLOWED = {
-    ("otel_tail_sampler_spark/operators/routing.py", "write_routed", "fmt"):
-        "deployment setting: the sink format (parquet here, a lake table "
-        "format in a deployment)",
     ("otel_tail_sampler_spark/streaming/stream_job.py",
      "run_streaming_pipeline", "available_now"):
         "deployment setting: False runs the stream continuously instead of "

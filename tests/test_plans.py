@@ -236,17 +236,34 @@ def test_pack_sequences_is_pure_jvm(spark, small_dataset):
     crossed the JVM<->Python socket twice), so pieces are cut with
     window-cumsum + sequence/explode/slice expressions. Exactly two
     exchanges: the bucket partition under the offset window and the
-    example-id assembly."""
-    from otel_tail_sampler_spark.operators.packing import pack_sequences
+    example-id assembly.
+
+    The ranked-order operators beside it stay zero-Python too: their
+    driver-built offsets, budget and stride tables plan a LocalTableScan,
+    not a ``Scan ExistingRDD`` whose every read starts Python tasks."""
+    from otel_tail_sampler_spark.operators.packing import (
+        enforce_token_budget,
+        form_batches,
+        interleave_key,
+        pack_sequences,
+    )
 
     df = spark.read.parquet(small_dataset["tokenized"])
-    plan = _explain(pack_sequences(df, max_len=64))
-    for node in ("MapInPandas", "FlatMapGroupsInPandas", "BatchEvalPython",
-                 "ArrowEvalPython"):
-        assert node not in plan
+    packed = pack_sequences(df, max_len=64)
+    plan = _explain(packed)
     assert "Window" in plan
     # formatted explain renders each node twice (tree + detail heading)
     assert plan.count("Exchange") <= 4
+    sources = sorted(r["source"] for r in df.select("source").distinct().collect())
+    for name, out in {
+        "pack_sequences": packed,
+        "form_batches": form_batches(df, batch_size=8, bucket_edges=(40, 52)),
+        "interleave_key": interleave_key(df, {s: 1 + i % 2 for i, s in enumerate(sources)}),
+        "enforce_token_budget": enforce_token_budget(df, {s: 500 for s in sources}),
+    }.items():
+        plan = _explain(out)
+        for node in PYTHON_NODES + ("FlatMapGroupsInPandas",):
+            assert node not in plan, (name, node)
 
 
 def test_trim_dup_spans_has_no_window_over_hash(spark):
