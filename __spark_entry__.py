@@ -2539,7 +2539,7 @@ def oracle_sql() -> dict[str, str]:
     agree12 = " + ".join(f"(sn.h{i} = sr.h{i})::INT" for i in range(12))
     lsh_ctes = f"""sh AS (
               SELECT doc_id, {_shingle_sql(3)} AS shingles
-              FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents)
+              FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM documents)
             ),
             sigs AS (SELECT doc_id, {sig12} FROM sh),
             bands AS (SELECT doc_id, {band_keys} FROM sigs),
@@ -2971,7 +2971,7 @@ def oracle_sql() -> dict[str, str]:
         "minhash_signatures": f"""
             WITH sh AS (
               SELECT doc_id, {_shingle_sql(3)} AS shingles
-              FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents)
+              FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM documents)
             )
             SELECT doc_id,
                    array_to_string([{minhash8}], ',') AS minhash_csv
@@ -3002,7 +3002,7 @@ def oracle_sql() -> dict[str, str]:
         "simhash": f"""
             WITH ex AS (
               SELECT doc_id,
-                     ('0x' || substring(md5(unnest(string_split_regex(trim(text), '\s+'))), 1, 4))::BIGINT AS h
+                     ('0x' || substring(md5(unnest(string_split_regex(trim(text), '\\s+'))), 1, 4))::BIGINT AS h
               FROM documents
             ),
             bits AS (SELECT doc_id, {', '.join(simhash_bits)} FROM ex GROUP BY 1)
@@ -3011,7 +3011,7 @@ def oracle_sql() -> dict[str, str]:
         "ngram_jaccard": f"""
             WITH sh AS (
               SELECT doc_id, unnest(list_distinct({_shingle_sql(3)})) AS s
-              FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents)
+              FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM documents)
             ),
             sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
             inter AS (
@@ -3027,7 +3027,7 @@ def oracle_sql() -> dict[str, str]:
             WHERE i / (sa.sz + sb.sz - i) >= 0.35
         """,
         "contamination": f"""
-            WITH d AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
+            WITH d AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM documents),
             ev AS (
               SELECT doc_id AS eval_id, unnest(list_distinct({_shingle_sql(8)})) AS s
               FROM d WHERE doc_id % 10 = 0
@@ -3112,7 +3112,7 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN reb USING (doc_id)
         """,
         "decontaminate_corpus": f"""
-            WITH d AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
+            WITH d AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w FROM documents),
             ev AS (
               SELECT doc_id AS eval_id, unnest(list_distinct({_shingle_sql(8)})) AS s
               FROM d WHERE doc_id % 10 = 0
@@ -3188,12 +3188,12 @@ def oracle_sql() -> dict[str, str]:
             WITH t AS (
               SELECT doc_id,
                      CASE WHEN text IS NULL
-                            OR trim(regexp_replace(text, '\s+', ' ', 'g')) = '' THEN []::INTEGER[]
+                            OR trim(regexp_replace(text, '\\s+', ' ', 'g')) = '' THEN []::INTEGER[]
                           ELSE [(('0x' || substring(md5(x), 1, 8))::BIGINT % 4096)::INT
-                                for x in string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')] END AS tokens,
+                                for x in string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')] END AS tokens,
                      (CASE WHEN text IS NULL
-                            OR trim(regexp_replace(text, '\s+', ' ', 'g')) = '' THEN 0
-                          ELSE len(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) END)::INT AS n_tok
+                            OR trim(regexp_replace(text, '\\s+', ' ', 'g')) = '' THEN 0
+                          ELSE len(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) END)::INT AS n_tok
               FROM documents
             )
             SELECT doc_id,
@@ -3205,8 +3205,8 @@ def oracle_sql() -> dict[str, str]:
             WITH tok AS (
               SELECT doc_id,
                      [(('0x' || substring(md5(x), 1, 8))::BIGINT % 4096)::INT
-                      for x in string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')] AS tokens
-              FROM documents WHERE trim(regexp_replace(text, '\s+', ' ', 'g')) <> ''
+                      for x in string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')] AS tokens
+              FROM documents WHERE trim(regexp_replace(text, '\\s+', ' ', 'g')) <> ''
             ),
             ex AS (
               SELECT doc_id, unnest(range(0, greatest(len(tokens) - 15, 0), 8)) AS s,
@@ -3224,9 +3224,9 @@ def oracle_sql() -> dict[str, str]:
         "corpus_to_shards": """
             WITH tok AS (
               SELECT doc_id,
-                     CASE WHEN trim(regexp_replace(text, '\s+', ' ', 'g')) = '' THEN []::INTEGER[]
+                     CASE WHEN trim(regexp_replace(text, '\\s+', ' ', 'g')) = '' THEN []::INTEGER[]
                           ELSE [(('0x' || substring(md5(x), 1, 8))::BIGINT % 4096)::INT
-                                for x in string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')] END AS tokens
+                                for x in string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')] END AS tokens
               FROM documents
             ),
             o AS (
@@ -3271,9 +3271,9 @@ def oracle_sql() -> dict[str, str]:
         "trim_dup_spans": """
             WITH tok AS (
               SELECT doc_id,
-                     CASE WHEN trim(regexp_replace(text, '\s+', ' ', 'g')) = '' THEN []::INTEGER[]
+                     CASE WHEN trim(regexp_replace(text, '\\s+', ' ', 'g')) = '' THEN []::INTEGER[]
                           ELSE [(('0x' || substring(md5(x), 1, 8))::BIGINT % 4096)::INT
-                                for x in string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')] END AS tokens
+                                for x in string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')] END AS tokens
               FROM documents
             ),
             ex AS (
@@ -3456,7 +3456,7 @@ def oracle_sql() -> dict[str, str]:
               FROM documents d JOIN winners USING (doc_id)
             ),
             w AS (
-              SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w FROM base
+              SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w FROM base
             ),
             per_w AS (SELECT doc_id, w, count(*) AS c FROM w GROUP BY 1, 2),
             wa AS (
@@ -3664,7 +3664,7 @@ def oracle_sql() -> dict[str, str]:
         "redact_pii": redact_sql,
         "repetition_signals": """
             WITH w AS (
-              SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w FROM documents
+              SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w FROM documents
             ),
             per_w AS (SELECT doc_id, w, count(*) AS c FROM w GROUP BY 1, 2),
             wa AS (
@@ -3675,7 +3675,7 @@ def oracle_sql() -> dict[str, str]:
             b AS (
               SELECT doc_id,
                      unnest([wl[i] || ' ' || wl[i+1] for i in range(1, len(wl))]) AS bg
-              FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS wl FROM documents)
+              FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS wl FROM documents)
               WHERE len(wl) >= 2
             ),
             per_b AS (SELECT doc_id, bg, count(*) AS c FROM b GROUP BY 1, 2),

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from otel_tail_sampler_spark.functions.tables import local_table
 from otel_tail_sampler_spark.operators.assembly import assemble_traces
 from otel_tail_sampler_spark.operators.enrichment import mark_exported
-from otel_tail_sampler_spark.operators.force_rules import apply_force_rules
+from otel_tail_sampler_spark.operators.force_rules import active_rules, apply_force_rules
 from otel_tail_sampler_spark.operators.parser import (
     SPAN_FIELDS,
     TRACE_KEY,
@@ -119,8 +119,10 @@ def run_pipeline(
     ``decisions`` (one row per trace) come from the one-pass route;
     ``traces`` and ``decided`` are the assembled TraceSummary and its
     decisions, for callers that read the summary (analytics, the traced
-    benchmark layers). Nothing is cached."""
+    benchmark layers). Nothing is cached. ``force_rules`` expired at the
+    time of the call do not apply."""
     cfg = cfg or SamplerConfig()
+    force_rules = active_rules(force_rules or [], int(time.time() * 1000))
     tokenized = (
         input_path
         if isinstance(input_path, DataFrame)
@@ -237,6 +239,10 @@ def run_and_write(
         "day_partition": day_partition,
     }
     state = open_checkpoint(spark, out_dir, inputs)
+    # the rule clock is the run's start, recorded with a fresh checkpoint,
+    # so a resume applies the rules its first pass applied
+    state.setdefault("now_ms", int(t0 * 1000))
+    force_rules = active_rules(force_rules or [], state["now_ms"])
     n = state["n_buckets"]
     done = sorted(b for p in state["passes"] for b in p["buckets"])
     if len(done) < n:

@@ -16,6 +16,12 @@ the inherent streaming tail: sessions newer than (max_ts - gap - delay) stay
 open at stream end (the reference has the same behavior — its buffer holds
 unexpired traces until shutdown).
 
+The second strategy (``assemble_with_state``) keeps the reference's
+running TraceState per trace: a partial summary in bucketed
+applyInPandasWithState state, which each micro-batch's spans fold into
+through one vectorized partial-aggregate kernel and which is emitted
+when the watermark passes the trace's inactivity deadline.
+
 The parse stage is the batch job's JVM expression parser
 (parser.parse_spans_jvm), pruned to the fields assembly reads; the
 session-window strategy reuses the batch TraceSummary aggregates
@@ -25,7 +31,11 @@ session-window strategy reuses the batch TraceSummary aggregates
 from __future__ import annotations
 
 import os
+from itertools import chain
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -127,10 +137,11 @@ def assemble_sessions(
 
 # Bucketed state: ONE state row per hash bucket holding the parallel-array
 # trace map (the reference's shard-local HashMap<trace_id, TraceState>,
-# memory.rs:185-228, expressed as Spark state). `dl` is each trace's armed
-# deadline (max(last_ts + gap, watermark + 1) at its last update) — the
-# exact per-trace timeout the one-row-per-trace formulation kept in Spark's
-# own timer, persisted here because the bucket carries many traces with
+# memory.rs:185-228, expressed as Spark state). Each trace's entry is a
+# partial of its summary. `dl` is each trace's armed deadline
+# (max(last_ts + gap, watermark + 1) at its last update) — the exact
+# per-trace timeout the one-row-per-trace formulation kept in Spark's own
+# timer, persisted here because the bucket carries many traces with
 # different deadlines. `rts = 2^63-1 AND rsid = ''` encodes "no root seen"
 # (a real root at ts = 2^63-1 is outside any clock this pipeline parses).
 BUCKET_STATE_SCHEMA = (
@@ -149,97 +160,159 @@ SUMMARY_SCHEMA = (
     "operations array<string>, root_span_id string"
 )
 
+# Partials in memory: a dict of the state row's fields as parallel
+# columns — int64 arrays, object arrays for the strings, and ``ops`` as a
+# pyarrow list<string> array.
+_FIELDS = tuple(c.split()[0] for c in BUCKET_STATE_SCHEMA.split(", "))
+_STRINGS = ("fsid", "fsvc", "rsid")
+_KEY = np.dtype((np.void, 16))  # a (k1, k2) pair as one comparable value
 
-def _bucket_partials(pdf, out: dict) -> None:
-    """Fold one grouped-bucket pandas batch into ``out``, a dict
-    ``(k1, k2) -> [sc, ec, mx, mn, mxts, fts, fsid, fsvc, rts, rsid,
-    dl, ops_set]`` (``dl`` left None here; armed by the caller). All
-    per-span work is vectorized: ONE lexsort by (k1, k2, ts, sid) makes
-    every election a boundary/reduceat read — the first sorted row per
-    trace IS the (ts, span_id)-min first span, the first root row per
-    trace IS the root election, min/max timestamps are the segment
-    endpoints."""
-    import numpy as np
-    import pandas as pd
 
+def _from_state(value: tuple) -> dict:
+    p = {
+        f: np.asarray(v, object if f in _STRINGS else np.int64)
+        for f, v in zip(_FIELDS[:-1], value)
+    }
+    lens = np.fromiter(map(len, value[-1]), np.int64, len(value[-1]))
+    p["ops"] = pa.ListArray.from_arrays(
+        pa.array(np.r_[0, np.cumsum(lens)], pa.int32()),
+        pa.array(list(chain.from_iterable(value[-1])), pa.string()),
+    )
+    return p
+
+
+def _to_state(p: dict) -> tuple:
+    names = p["ops"].values.to_numpy(zero_copy_only=False).tolist()
+    off = p["ops"].offsets.to_numpy().tolist()
+    ops = list(map(names.__getitem__, map(slice, off[:-1], off[1:])))
+    return (*(p[f].tolist() for f in _FIELDS[:-1]), ops)
+
+
+_EMPTY = _from_state(([],) * len(_FIELDS))
+
+
+def _take(p: dict, mask: np.ndarray) -> dict:
+    idx = np.flatnonzero(mask)
+    return {f: v.take(idx) for f, v in p.items()}
+
+
+def _cat(a: dict, b: dict) -> dict:
+    return {
+        f: pa.concat_arrays([a[f], b[f]]) if f == "ops"
+        else np.concatenate([a[f], b[f]])
+        for f in _FIELDS
+    }
+
+
+def _keys(p: dict) -> np.ndarray:
+    return np.stack([p["k1"], p["k2"]], 1).view(_KEY).ravel()
+
+
+def _lift(pdf) -> dict:
+    """A micro-batch's spans as one-span partials: each span counts once,
+    is its own first span and min/max timestamp, and its own root when it
+    has no parent."""
     n = len(pdf)
-    if not n:
-        return
-    k1 = pdf["trace_k1"].to_numpy(np.int64)
-    k2 = pdf["trace_k2"].to_numpy(np.int64)
     ts = pdf["timestamp_ms"].to_numpy(np.int64)
-    dur = pdf["duration_ms"].to_numpy(np.int64)
-    err = (pdf["status_code"].to_numpy() == 2).astype(np.int64)
     sid = pdf["span_id"].to_numpy(object)
-    svc = pdf["service_name"].to_numpy(object)
-    ops = pdf["operation_name"].to_numpy(object)
     root = pdf["parent_span_id"].isna().to_numpy()
+    return {
+        "k1": pdf["trace_k1"].to_numpy(np.int64),
+        "k2": pdf["trace_k2"].to_numpy(np.int64),
+        "sc": np.ones(n, np.int64),
+        "ec": (pdf["status_code"].to_numpy() == 2).astype(np.int64),
+        "mx": pdf["duration_ms"].to_numpy(np.int64),
+        "mn": ts, "mxts": ts, "fts": ts, "fsid": sid,
+        "fsvc": pdf["service_name"].to_numpy(object),
+        "rts": np.where(root, ts, _NO_ROOT_TS),
+        "rsid": np.where(root, sid, ""),
+        "dl": np.zeros(n, np.int64),
+        "ops": pa.ListArray.from_arrays(
+            pa.array(np.arange(n + 1), pa.int32()),
+            pa.array(pdf["operation_name"].to_numpy(object), pa.string()),
+        ),
+    }
 
-    order = np.lexsort((sid, ts, k2, k1))
-    k1s, k2s, tss = k1[order], k2[order], ts[order]
-    sids, svcs, opss = sid[order], svc[order], ops[order]
-    new_grp = np.empty(n, bool)
-    new_grp[0] = True
-    new_grp[1:] = (k1s[1:] != k1s[:-1]) | (k2s[1:] != k2s[:-1])
-    starts = np.flatnonzero(new_grp)
+
+def _fold(p: dict) -> dict:
+    """Merge partials into one per trace key (``dl`` is left to the
+    caller). ONE stable lexsort by (key, fts, fsid) makes every aggregate
+    a segment read: counts sum, extremes reduce, and a trace's first row
+    is its (ts, span_id)-first span, the earlier row winning an exact tie.
+    The root is the (rts, rsid)-first partial that saw one; operations
+    are the distinct (trace, op) pairs, sorted within a trace."""
+    n = len(p["k1"])
+    if not n:
+        return p
+    order = np.lexsort((p["fsid"], p["fts"], p["k2"], p["k1"]))
+    k1, k2 = p["k1"][order], p["k2"][order]
+    new = np.r_[True, (k1[1:] != k1[:-1]) | (k2[1:] != k2[:-1])]
+    starts = np.flatnonzero(new)
+    grp = np.empty(n, np.int64)
+    grp[order] = np.cumsum(new) - 1
     g = len(starts)
-    ends = np.append(starts[1:], n)
-    gidx = np.cumsum(new_grp) - 1
-    cnt = ends - starts
-    ecg = np.add.reduceat(err[order], starts)
-    mxg = np.maximum.reduceat(dur[order], starts)
-    # ts is sorted ascending within each trace -> endpoints are min/max
-    mng, mxts_g = tss[starts], tss[ends - 1]
-    fts_g, fsid_g, fsvc_g = tss[starts], sids[starts], svcs[starts]
-    rts_g = np.full(g, _NO_ROOT_TS, np.int64)
-    rsid_g = np.full(g, "", object)
-    ridx = np.flatnonzero(root[order])
-    if ridx.size:
-        rg, first = np.unique(gidx[ridx], return_index=True)
-        sel = ridx[first]  # first root row in sort order = (ts, sid) min
-        rts_g[rg] = tss[sel]
-        rsid_g[rg] = sids[sel]
-    # distinct operation sets per trace: unique (trace, op-code) pairs
-    codes, uniq = pd.factorize(pd.Series(opss), sort=False)
-    pk = gidx * np.int64(len(uniq)) + codes
-    upairs = np.unique(pk)
-    pg = (upairs // len(uniq)).astype(np.int64)
-    pc = upairs % len(uniq)
-    uvals = uniq.to_numpy(object)
-    bounds = np.flatnonzero(np.r_[True, pg[1:] != pg[:-1]])
-    op_lists = np.split(uvals[pc], bounds[1:])
-
-    for i in range(g):
-        key = (int(k1s[starts[i]]), int(k2s[starts[i]]))
-        new = [
-            int(cnt[i]), int(ecg[i]), int(mxg[i]), int(mng[i]),
-            int(mxts_g[i]), int(fts_g[i]), fsid_g[i], fsvc_g[i],
-            int(rts_g[i]), rsid_g[i], None, set(op_lists[i]),
-        ]
-        old = out.get(key)
-        if old is None:
-            out[key] = new
-        else:
-            _merge_trace(old, new)
+    out = {f: p[f][order[starts]] for f in ("k1", "k2", "fts", "fsid", "fsvc", "dl")}
+    for f, ufunc in (
+        ("sc", np.add), ("ec", np.add), ("mx", np.maximum),
+        ("mn", np.minimum), ("mxts", np.maximum),
+    ):
+        out[f] = ufunc.reduceat(p[f][order], starts)
+    cand = np.flatnonzero(p["rts"] != _NO_ROOT_TS)
+    cand = cand[np.lexsort((p["rsid"][cand], p["rts"][cand], grp[cand]))]
+    rg, at = np.unique(grp[cand], return_index=True)
+    out["rts"] = np.full(g, _NO_ROOT_TS, np.int64)
+    out["rsid"] = np.full(g, "", object)
+    out["rts"][rg], out["rsid"][rg] = p["rts"][cand[at]], p["rsid"][cand[at]]
+    ops = p["ops"]
+    codes, names = pd.factorize(ops.flatten().to_numpy(zero_copy_only=False), sort=True)
+    pairs = np.unique(grp[ops.value_parent_indices().to_numpy()] * len(names) + codes)
+    out["ops"] = pa.ListArray.from_arrays(
+        pa.array(np.searchsorted(pairs // len(names), np.arange(g + 1)), pa.int32()),
+        pa.array(names[pairs % len(names)], pa.string()),
+    )
+    return out
 
 
-def _merge_trace(old: list, new: list) -> None:
-    """Fold partial ``new`` into ``old`` (layout per _bucket_partials).
-    Every aggregate is associative/commutative, so fold order across
-    batches cannot change the emitted summary."""
-    old[0] += new[0]
-    old[1] += new[1]
-    if new[2] > old[2]:
-        old[2] = new[2]
-    if new[3] < old[3]:
-        old[3] = new[3]
-    if new[4] > old[4]:
-        old[4] = new[4]
-    if (new[5], new[6]) < (old[5], old[6]):
-        old[5], old[6], old[7] = new[5], new[6], new[7]
-    if (new[8], new[9]) < (old[8], old[9]):
-        old[8], old[9] = new[8], new[9]
-    old[11].update(new[11])
+def _step(held: dict, spans: dict, wm: int, gap_ms: int) -> tuple[dict, dict]:
+    """One bucket's trigger, as (traces to hold, traces to emit). The held
+    traces that ``spans`` touch fold with them, held partials first, and
+    re-arm at ``max(last_ts + gap, wm + 1)`` (never in the past — the
+    clamp Spark imposes on its own timer API). The others pass through,
+    and those whose deadline the watermark STRICTLY passed fire (Spark's
+    timer condition, timeoutTimestamp < watermark)."""
+    touched = np.isin(_keys(held), _keys(spans))
+    merged = _fold(_cat(_take(held, touched), spans))
+    merged["dl"] = np.maximum(merged["mxts"] + gap_ms, wm + 1)
+    rest = _take(held, ~touched)
+    fire = rest["dl"] < wm
+    return _cat(_take(rest, ~fire), merged), _take(rest, fire)
+
+
+def _dec(csv: str) -> str:
+    return bytes(map(int, csv.split(","))).decode("ascii") if csv else ""
+
+
+def _emit_frame(p: dict):
+    """SUMMARY_SCHEMA rows of the partials; the code-point CSV names
+    decode here, once per distinct value per trace."""
+    m = (1 << 64) - 1
+    return pd.DataFrame({
+        "trace_k1": p["k1"],
+        "trace_k2": p["k2"],
+        "trace_id": [
+            f"{a & m:016X}{b & m:016X}"
+            for a, b in zip(p["k1"].tolist(), p["k2"].tolist())
+        ],
+        "service_name": [_dec(s) for s in p["fsvc"]],
+        "span_count": p["sc"],
+        "has_error": p["ec"] > 0,
+        "error_count": p["ec"],
+        "max_duration_ms": p["mx"],
+        "min_timestamp_ms": p["mn"],
+        "max_timestamp_ms": p["mxts"],
+        "operations": [sorted(map(_dec, o)) for o in p["ops"].to_pylist()],
+        "root_span_id": np.where(p["rts"] != _NO_ROOT_TS, p["rsid"], None),
+    })
 
 
 def assemble_with_state(
@@ -249,32 +322,30 @@ def assemble_with_state(
 ) -> DataFrame:
     """Custom per-trace state with event-time timeout — the second
     streaming strategy, mirroring the reference's TraceState inactivity
-    expiry (/root/reference/src/state.rs:293-325): each trace holds a row
-    of running aggregates; a span batch folds into it and re-arms its
-    deadline at last_span_ts + gap; when the watermark passes that, the
-    summary is emitted exactly once and the trace forgotten.
+    expiry (/root/reference/src/state.rs:293-325): each trace holds a
+    partial of its summary; a span batch folds into it and re-arms its
+    deadline at last_span_ts + gap; when the watermark strictly passes
+    that, the summary is emitted exactly once and the trace forgotten.
+
+    The update is a partial aggregate, so ONE merge serves spans and held
+    traces alike (``_step``): a micro-batch lifts its spans to one-span
+    partials, appends them after the held partials of the traces they
+    touch and folds the lot with one vectorized kernel (``_fold``), while
+    untouched traces pass through as arrays.
 
     State LAYOUT is the reference's shard-local trace map
     (memory.rs:185-228 keeps ONE HashMap of TraceState per shard, not one
-    Redis row per trace): traces hash into buckets and each
-    bucket keys ONE Spark state row holding its traces as parallel
-    arrays. The earlier one-state-row-per-trace formulation paid the
-    applyInPandasWithState per-group protocol cost (state decode, pandas
-    slice, fn call, state encode — measured ~10 ms/trace at sf0.1) once
-    per TRACE per micro-batch: 120k traces made the bounded sf0.1 run
-    ~86 s of pure per-group overhead. Bucketing pays it once per BUCKET
-    (2x shuffle partitions — sized by the same knob that scales the
-    cluster; run_streaming_pipeline records the count in the checkpoint
-    and refuses a resume at another one) and folds each bucket's spans with ONE vectorized
-    lexsort kernel per Arrow batch; measured 89.8 -> 9.2 s wall on the
-    same input with identical emitted rows (tests pin batch parity).
-
-    Per-trace timeout semantics are unchanged: each trace's armed
-    deadline ``max(last_ts + gap, watermark + 1)`` is stored in the
-    bucket row, the bucket's Spark timer fires at the MIN deadline, and
-    both branches (data arrival / timer) emit exactly the traces whose
-    deadline the watermark strictly passed — the same rows, in the same
-    micro-batch, as the per-trace-timer formulation.
+    Redis row per trace): traces hash into buckets and each bucket keys
+    ONE Spark state row holding its traces as parallel arrays. One state
+    row per trace would pay the applyInPandasWithState per-group protocol
+    cost (state decode, pandas slice, fn call, state encode — measured
+    ~10 ms/trace at sf0.1) once per TRACE per micro-batch; bucketing pays
+    it once per BUCKET (2x shuffle partitions — sized by the same knob
+    that scales the cluster; run_streaming_pipeline records the count in
+    the checkpoint and refuses a resume at another one). Each trace's
+    armed deadline is stored in the bucket row and the bucket's Spark
+    timer fires at the MIN deadline, so a trace fires in the same
+    micro-batch as it would under a timer of its own.
 
     Equivalent to assemble_sessions when no trace pauses longer than the
     gap (one session per trace); differs by design when a trace pauses —
@@ -282,8 +353,6 @@ def assemble_with_state(
     everything seen until the trace finally goes quiet (the reference's
     one-buffer-entry-per-trace behavior).
     """
-    import pandas as pd
-
     gap_ms = gap_seconds * 1000
     n_buckets = state_buckets(spans.sparkSession)
 
@@ -308,97 +377,19 @@ def assemble_with_state(
         "event_time",
     )
 
-    def _dec(csv: str) -> str:
-        return bytes(map(int, csv.split(","))).decode("ascii") if csv else ""
-
-    def _emit_frame(rows: list):
-        m = (1 << 64) - 1
-        return pd.DataFrame(
-            {
-                "trace_k1": [t[0] for t, _ in rows],
-                "trace_k2": [t[1] for t, _ in rows],
-                "trace_id": [
-                    f"{t[0] & m:016X}{t[1] & m:016X}" for t, _ in rows
-                ],
-                "service_name": [_dec(p[7]) for _, p in rows],
-                "span_count": [p[0] for _, p in rows],
-                "has_error": [p[1] > 0 for _, p in rows],
-                "error_count": [p[1] for _, p in rows],
-                "max_duration_ms": [p[2] for _, p in rows],
-                "min_timestamp_ms": [p[3] for _, p in rows],
-                "max_timestamp_ms": [p[4] for _, p in rows],
-                "operations": [
-                    sorted(_dec(o) for o in p[11]) for _, p in rows
-                ],
-                "root_span_id": [
-                    p[9] if p[8] != _NO_ROOT_TS else None for _, p in rows
-                ],
-            }
-        )
-
     def fn(key, pdfs, state):
         wm = state.getCurrentWatermarkMs()
-        traces: dict = {}
-        if state.exists:
-            (k1a, k2a, sca, eca, mxa, mna, mxtsa, ftsa, fsida, fsvca,
-             rtsa, rsida, dla, opsa) = state.get
-            for i in range(len(k1a)):
-                traces[(k1a[i], k2a[i])] = [
-                    sca[i], eca[i], mxa[i], mna[i], mxtsa[i], ftsa[i],
-                    fsida[i], fsvca[i], rtsa[i], rsida[i], dla[i],
-                    set(opsa[i]),
-                ]
-
-        if state.hasTimedOut:
-            updated: set = set()
-        else:
-            batch: dict = {}
-            for pdf in pdfs:
-                _bucket_partials(pdf, batch)
-            updated = set(batch)
-            for k, p in batch.items():
-                old = traces.get(k)
-                if old is None:
-                    traces[k] = p
-                else:
-                    _merge_trace(old, p)
-                # re-arm THIS trace: fire when the watermark passes
-                # last-span-ts + gap; never arm in the past (same clamp
-                # Spark imposes on its own timer API)
-                traces[k][10] = max(traces[k][4] + gap_ms, wm + 1)
-
-        # a trace with no data this batch whose deadline the watermark
-        # STRICTLY passed fires now — Spark's own event-time timer
-        # condition (timeoutTimestamp < watermark); updated traces were
-        # re-armed above the watermark and cannot fire
-        expired = [
-            (k, p) for k, p in traces.items()
-            if k not in updated and p[10] < wm
-        ]
-        for k, _ in expired:
-            del traces[k]
-
-        if traces:
-            ks = list(traces)
-            ps = [traces[k] for k in ks]
-            state.update((
-                [k[0] for k in ks], [k[1] for k in ks],
-                [p[0] for p in ps], [p[1] for p in ps],
-                [p[2] for p in ps], [p[3] for p in ps],
-                [p[4] for p in ps], [p[5] for p in ps],
-                [p[6] for p in ps], [p[7] for p in ps],
-                [p[8] for p in ps], [p[9] for p in ps],
-                [p[10] for p in ps],
-                [sorted(p[11]) for p in ps],
-            ))
-            state.setTimeoutTimestamp(
-                max(min(p[10] for p in ps), wm + 1)
-            )
+        held = _from_state(state.get) if state.exists else _EMPTY
+        frames = [] if state.hasTimedOut else list(pdfs)
+        spans = _lift(pd.concat(frames)) if frames else _EMPTY
+        live, fired = _step(held, spans, wm, gap_ms)
+        if len(live["k1"]):
+            state.update(_to_state(live))
+            state.setTimeoutTimestamp(max(int(live["dl"].min()), wm + 1))
         elif state.exists:
             state.remove()
-
-        if expired:
-            yield _emit_frame(expired)
+        if len(fired["k1"]):
+            yield _emit_frame(fired)
 
     return with_ts.groupBy("_bucket").applyInPandasWithState(
         fn,
@@ -443,7 +434,7 @@ def run_streaming_pipeline(
     """
     from otel_tail_sampler_spark.operators.parser import name_csv_exprs
 
-    cfg = cfg or SamplerConfig(rate_limit_per_key=None)
+    cfg = cfg or SamplerConfig()
     stream = read_tokenized_stream(spark, input_path, max_files_per_trigger)
     # slim parse: decode only the fields the assembly aggregates on; the
     # service/operation payloads ride as raw code-point CSVs and decode

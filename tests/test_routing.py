@@ -188,3 +188,42 @@ def test_heavy_trace_routes_whole(spark, tmp_path):
     assert all(
         np.array_equal(a, b) for a, b in zip(merged["tokens"], merged["tokens_src"])
     )
+
+
+def test_expired_force_rule_does_not_apply(spark, small_dataset, tmp_path):
+    """A force rule past its ``expires_at_ms`` applies nowhere (the
+    reference drops expired rules, force_sampling.rs:519,632): with a
+    force_drop rule that matches every trace and expired long ago, the
+    sinks and metric tables equal a run with no rules, and the assembled
+    decisions carry no force_drop."""
+    rule = {
+        "id": "expired-drop-all",
+        "priority": 100,
+        "expires_at_ms": 1,
+        "resource_matchers": [],
+        "span_matchers": [],
+        "action": "force_drop",
+    }
+    src = small_dataset["tokenized"]
+
+    def written(out, rules):
+        run_and_write(spark, src, str(out), E.ENTRY_CFG, force_rules=rules)
+        sinks = pd.read_parquet(out / "routed", columns=["doc_id", "decision"])
+        run = pq.read_table(str(out / "metrics_run")).to_pylist()
+        return (
+            sorted(zip(sinks["doc_id"], sinks["decision"].astype(str))),
+            sorted(map(str, pq.read_table(str(out / "metrics_decisions")).to_pylist())),
+            sorted(map(str, pq.read_table(str(out / "metrics_rows")).to_pylist())),
+            sorted(
+                (r["metric"], r["value"]) for r in run
+                if r["metric"] not in ("wall_ms", "finished_at_ms")
+            ),
+        )
+
+    assert written(tmp_path / "expired", [rule]) == written(tmp_path / "none", None)
+    policies = {
+        r["decision_policy"]
+        for r in run_pipeline(spark, src, E.ENTRY_CFG, force_rules=[rule])
+        .decided.select("decision_policy").distinct().collect()
+    }
+    assert "force_drop" not in policies

@@ -164,6 +164,160 @@ def test_state_decisions_match_batch_decide(state_stream_result):
         assert row["decision"] == decided_o.loc[row["trace_id"], "decision"]
 
 
+def test_state_folds_traces_across_micro_batches(spark, tmp_path):
+    """Each trace's 5 spans are spread over 24 s in shuffled order (the
+    root is not always first), the span rows are sorted by timestamp into
+    10 files and read one file per micro-batch, so most traces reach the
+    state in one batch and fold more spans into it in later ones. Every
+    field of every emitted summary equals the pandas oracle's over the
+    whole trace. All timestamps are distinct: no (ts, span_id) ties."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from otel_tail_sampler_spark.sources.generator import (
+        BASE_EPOCH_MS,
+        build_token_arrays,
+        fields_to_oracle_table,
+        generate_fields,
+    )
+
+    n_traces, per = 300, 5
+    f = generate_fields(
+        GenSpec(n_traces=n_traces, spans_per_trace=per, error_rate=0.2, seed=11)
+    )
+    rng = np.random.default_rng(3)
+    slot = np.concatenate([rng.permutation(per) for _ in range(n_traces)])
+    trace_row = np.repeat(np.arange(n_traces), per)
+    f["timestamp_ms"] = BASE_EPOCH_MS + trace_row * 1_000 + slot * 6_007
+    n = len(trace_row)
+    doc_id = np.char.add("span-", np.char.zfill(np.arange(n).astype("U6"), 6))
+    source = np.full(n, "x")
+    order = np.argsort(f["timestamp_ms"], kind="stable")
+    tok_dir = tmp_path / "tokenized"
+    tok_dir.mkdir()
+    file_of = np.empty(n, np.int64)
+    for i, rows in enumerate(np.array_split(order, 10)):
+        file_of[rows] = i
+        tokens = build_token_arrays({k: v[rows] for k, v in f.items()})
+        offs = tokens.offsets.to_numpy()
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array(doc_id[rows], pa.string()),
+                "tokens": tokens,
+                "n_tok": pa.array((offs[1:] - offs[:-1]).astype(np.int32)),
+                "source": pa.array(source[rows], pa.string()),
+            }),
+            str(tok_dir / f"part-{i:04d}.parquet"),
+        )
+        # the file source takes files in modification-time order: pin it,
+        # or a later file read first would make earlier spans late
+        os.utime(tok_dir / f"part-{i:04d}.parquet", (1_700_000_000 + i,) * 2)
+    spans = fields_to_oracle_table(f, doc_id, source).to_pandas()
+    assert spans["timestamp_ms"].is_unique
+    spans["file"] = file_of
+
+    out_dir = tmp_path / "out"
+    run_streaming_pipeline(
+        spark, str(tok_dir), str(out_dir), CFG, gap_seconds=GAP_S,
+        watermark_delay=f"{DELAY_S} seconds", max_files_per_trigger=1,
+        strategy="state",
+    )
+    emitted = pd.read_parquet(out_dir / "decided")
+    assert emitted["trace_id"].is_unique
+
+    per_trace = spans.groupby("trace_id").agg(
+        last=("timestamp_ms", "max"), files=("file", "nunique")
+    )
+    final_wm = spans["timestamp_ms"].max() - DELAY_S * 1000
+    closed = set(per_trace.index[per_trace["last"] + GAP_S * 1000 < final_wm])
+    assert set(emitted["trace_id"]) == closed
+    assert (per_trace.loc[list(closed), "files"] > 1).mean() > 0.5
+
+    want = O.assemble(spans.drop(columns="file")).set_index("trace_id")
+    fields = [
+        "service_name", "span_count", "has_error", "error_count",
+        "max_duration_ms", "min_timestamp_ms", "max_timestamp_ms",
+        "operations", "root_span_id",
+    ]
+    for _, row in emitted.iterrows():
+        w = want.loc[row["trace_id"]]
+        got = {c: row[c] for c in fields}
+        got["operations"] = list(got["operations"])
+        assert got == {c: w[c] for c in fields}, row["trace_id"]
+
+
+def test_state_step_matches_span_by_span_fold():
+    """The bucket step (stream_job._step) against a scalar reference that
+    folds spans one at a time in arrival order, over random micro-batches
+    with many (ts, span_id) ties within and across batches: the held
+    partials, their deadlines and the fired traces agree, and on a tie
+    the first arrival stays the trace's first span and root."""
+    import random
+
+    import numpy as np
+
+    from otel_tail_sampler_spark.streaming import stream_job as S
+
+    gap = 1000
+    for seed in range(60):
+        rng = random.Random(seed)
+        ref: dict = {}
+        dl: dict = {}
+        held, t, wm = S._EMPTY, 0, -1
+        for _ in range(rng.randint(2, 7)):
+            n = rng.randint(0, 12)
+            batch = pd.DataFrame({
+                "trace_k1": np.array([rng.choice([1, -2**63]) for _ in range(n)], np.int64),
+                "trace_k2": np.array([rng.randint(0, 3) for _ in range(n)], np.int64),
+                "span_id": [rng.choice("AB") for _ in range(n)],
+                "parent_span_id": [rng.choice([None, "P"]) for _ in range(n)],
+                "timestamp_ms": np.array([t + rng.randint(0, 2) for _ in range(n)], np.int64),
+                "duration_ms": np.array([rng.randint(0, 9) for _ in range(n)], np.int64),
+                "status_code": np.array([rng.choice([0, 2]) for _ in range(n)], np.int32),
+                "service_name": [rng.choice(["97", "98,99"]) for _ in range(n)],
+                "operation_name": [rng.choice(["111", "112", ""]) for _ in range(n)],
+            })
+            t += rng.choice([0, 1, 700, 1500])
+            wm += rng.choice([0, 1, 700, 1500])
+            touched = set()
+            for r in batch.itertuples(index=False):
+                k = (r.trace_k1, r.trace_k2)
+                ts, sid = r.timestamp_ms, r.span_id
+                root = (ts, sid) if r.parent_span_id is None else (S._NO_ROOT_TS, "")
+                new = [1, int(r.status_code == 2), r.duration_ms, ts, ts,
+                       (ts, sid), r.service_name, root, {r.operation_name}]
+                o = ref.get(k)
+                if o is None:
+                    ref[k] = new
+                else:
+                    o[0] += 1
+                    o[1] += new[1]
+                    o[2], o[3], o[4] = max(o[2], new[2]), min(o[3], ts), max(o[4], ts)
+                    if (ts, sid) < o[5]:
+                        o[5], o[6] = (ts, sid), r.service_name
+                    o[7] = min(o[7], root)
+                    o[8] |= new[8]
+                touched.add(k)
+            for k in touched:
+                dl[k] = max(ref[k][4] + gap, wm + 1)
+            fired_ref = {k for k in ref if k not in touched and dl[k] < wm}
+
+            held, fired = S._step(held, S._lift(batch), wm, gap)
+            assert set(zip(fired["k1"].tolist(), fired["k2"].tolist())) == fired_ref
+            for k in fired_ref:
+                del ref[k], dl[k]
+            state = S._to_state(held)
+            got = {
+                (r[0], r[1]): [r[2], r[3], r[4], r[5], r[6], (r[7], r[8]), r[9],
+                               (r[10], r[11]), set(r[13])]
+                for r in zip(*state)
+            }
+            assert got == ref, seed
+            assert dict(zip(zip(state[0], state[1]), state[12])) == dl, seed
+            held = S._from_state(state)
+
+
 def test_streaming_routed_keep_export(spark, tmp_path_factory):
     """route_spans_from: every kept trace's spans land in routed_keep/ with
     token arrays verbatim (lake-as-span-buffer export), exactly once, and
