@@ -426,9 +426,16 @@ def run_streaming_pipeline(
     decision" move (evaluator.rs:244, spans buffered in Redis/memory) with
     the lake as the span buffer: a stream-static semi-join per batch instead
     of a stateful span buffer, which is the piece that cannot scale to
-    10^12 spans of state. At scale the bronze table should be
-    day-partitioned (operators.routing.write_routed day_partition) so the
-    decided batch's time bounds prune the static side's scan.
+    10^12 spans of state. Every export batch scans the whole bronze table
+    today: no code derives time bounds from the decided batch to prune a
+    day-partitioned bronze (ROADMAP direction 1).
+
+    ``cfg.rate_limit_per_key`` is a budget per micro-batch: ``sink_batch``
+    runs ``decide`` (and so ``apply_rate_limit``) on each batch's emitted
+    traces alone, so every batch keeps its own top traces per key and the
+    overflow set depends on how the input splits into batches. This is the
+    streaming analog of the reference's token bucket (state.rs:629-682),
+    refilled once per batch; the batch job ranks over its whole input.
 
     Returns the StreamingQuery after awaiting termination.
     """

@@ -356,17 +356,32 @@ def test_streaming_routed_keep_export(spark, tmp_path_factory):
     )
 
 
+def _copy_in_order(files, to):
+    """Copy generated files into a stream source with their modification
+    times one second apart in name order. The file source takes files in
+    modification-time order: copies that share one come in any order, and
+    a later file read first would make earlier spans late."""
+    import shutil
+
+    for f in files:
+        dst = shutil.copy(f, to)
+        n = int(os.path.basename(f).split("-")[1].split(".")[0])
+        os.utime(dst, (1_700_000_000 + n,) * 2)
+
+
 def test_state_resume_at_another_bucket_count_raises(spark, tmp_path_factory):
     """The state strategy hashes traces into 2 x shuffle-partitions
     buckets. A resume under another partition count would re-bucket the
     state and emit traces split, so it must fail fast; a resume at the
-    recorded count goes on and emits each trace once."""
+    recorded count goes on and emits the traces and span counts of a
+    one-shot run over the same files at that count."""
     import glob
-    import shutil
 
     data_dir = tmp_path_factory.mktemp("rebucket_in")
     src = tmp_path_factory.mktemp("rebucket_src")
+    once_src = tmp_path_factory.mktemp("rebucket_once_src")
     out_dir = str(tmp_path_factory.mktemp("rebucket_out"))
+    once_dir = str(tmp_path_factory.mktemp("rebucket_once_out"))
     paths = generate_dataset(
         GenSpec(n_traces=300, spans_per_trace=5, error_rate=0.2, seed=11),
         str(data_dir),
@@ -374,9 +389,9 @@ def test_state_resume_at_another_bucket_count_raises(spark, tmp_path_factory):
     files = sorted(glob.glob(f"{paths['tokenized']}/*.parquet"))
     assert len(files) >= 2
 
-    def run():
+    def run(in_dir, out):
         run_streaming_pipeline(
-            spark, str(src), out_dir, CFG, gap_seconds=GAP_S,
+            spark, str(in_dir), out, CFG, gap_seconds=GAP_S,
             watermark_delay=f"{DELAY_S} seconds", strategy="state",
         )
 
@@ -384,20 +399,63 @@ def test_state_resume_at_another_bucket_count_raises(spark, tmp_path_factory):
     saved = spark.conf.get(conf)
     try:
         spark.conf.set(conf, "2")
-        for f in files[: len(files) // 2]:
-            shutil.copy(f, src)
-        run()
-        for f in files[len(files) // 2:]:
-            shutil.copy(f, src)
+        _copy_in_order(files[: len(files) // 2], src)
+        run(src, out_dir)
+        _copy_in_order(files[len(files) // 2:], src)
         spark.conf.set(conf, "4")
         with pytest.raises(ValueError, match="n_buckets"):
-            run()
+            run(src, out_dir)
         spark.conf.set(conf, "2")
-        run()
+        run(src, out_dir)
+        _copy_in_order(files, once_src)
+        run(once_src, once_dir)
     finally:
         spark.conf.set(conf, saved)
     emitted = pd.read_parquet(os.path.join(out_dir, "decided"))
+    once = pd.read_parquet(os.path.join(once_dir, "decided"))
     assert len(emitted) and emitted["trace_id"].is_unique
+    got = emitted.set_index("trace_id")["span_count"].sort_index()
+    want = once.set_index("trace_id")["span_count"].sort_index()
+    pd.testing.assert_series_equal(got, want)
+
+
+def test_stream_rate_limit_is_a_budget_per_micro_batch(spark, tmp_path_factory):
+    """On the streaming leg ``rate_limit_per_key`` applies per micro-batch:
+    each batch keeps its own top-1 trace per service (smallest
+    md5(trace_id|rate_limit), then trace_id) and overflows the rest, so a
+    service keeps a trace in every batch that emits one. The batch job
+    ranks over its whole input instead and would keep one in all."""
+    import dataclasses
+    import glob
+    import hashlib
+
+    data_dir = tmp_path_factory.mktemp("rl_in")
+    src = tmp_path_factory.mktemp("rl_src")
+    out_dir = str(tmp_path_factory.mktemp("rl_out"))
+    paths = generate_dataset(
+        GenSpec(n_traces=300, spans_per_trace=5, error_rate=0.2, seed=11),
+        str(data_dir),
+    )
+    _copy_in_order(sorted(glob.glob(f"{paths['tokenized']}/*.parquet")), src)
+    run_streaming_pipeline(
+        spark, str(src), out_dir, dataclasses.replace(CFG, rate_limit_per_key=1),
+        gap_seconds=GAP_S, watermark_delay=f"{DELAY_S} seconds",
+        max_files_per_trigger=2,
+    )
+    emitted = pd.read_parquet(os.path.join(out_dir, "decided"))
+    passed = emitted[emitted["decision"].isin(["keep", "overflow"])].copy()
+    passed["md5"] = [
+        hashlib.md5(f"{t}|rate_limit".encode()).hexdigest() for t in passed["trace_id"]
+    ]
+    top1 = (
+        passed.sort_values(["md5", "trace_id"])
+        .groupby(["batch_id", "service_name"])["trace_id"].first()
+    )
+    kept = emitted[emitted["decision"] == "keep"]
+    assert set(kept["trace_id"]) == set(top1)
+    assert (emitted["decision"] == "overflow").any()
+    per_service = kept.groupby("service_name")["batch_id"].nunique()
+    assert (per_service > 1).any(), "expected a service kept in two batches"
 
 
 def test_dedup_stream_first_wins_across_batches(spark, tmp_path_factory):
