@@ -87,9 +87,7 @@ def delete_rule(spark: SparkSession, path: str, rule_id: str) -> int:
     return v
 
 
-def load_rules(
-    spark: SparkSession, path: str, now_ms: int | None = None
-) -> list[dict]:
+def load_rules(spark: SparkSession, path: str) -> list[dict]:
     """Latest-version-wins snapshot of the rule table, as the dict shape
     operators.force_rules consumes (force_sampling.rs:519-558 load_rules;
     expiry/enabled filtering happens downstream in active_rules so callers

@@ -1,14 +1,15 @@
-"""The bucket count of the bucketed streaming state machines
-(``assemble_with_state``, ``dedup_stream``): each hashes its keys into
-``state_buckets`` buckets that key one state row each. Spark restores its
-own state partitioning from a checkpoint, but the bucket hash follows the
-live session, so the job that owns the checkpoint pins the count."""
+"""The state bucket of the streaming state machines (``assemble_with_state``,
+``dedup_stream``), computed here and nowhere else: each hashes its keys
+into ``state_buckets`` buckets that key one state row each. Spark restores
+its own state partitioning from a checkpoint, but the bucket hash follows
+the live session, so the job that owns the checkpoint pins the count."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
+from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.functions.fs import read_marker, write_marker
 
@@ -16,6 +17,12 @@ from otel_tail_sampler_spark.functions.fs import read_marker, write_marker
 def state_buckets(spark: SparkSession) -> int:
     # 2x the shuffle partitions, the knob that also sizes the state store
     return 2 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def bucket_of(spark: SparkSession, *keys) -> Column:
+    """The int state bucket of a row: the 64-bit xxHash of its ``keys``
+    modulo the session's ``state_buckets``."""
+    return F.pmod(F.xxhash64(*keys), F.lit(state_buckets(spark))).cast("int")
 
 
 def pin_state_buckets(spark: SparkSession, ckpt: str) -> None:

@@ -6,19 +6,20 @@ needs the STREAMING form: the first arrival of each content digest passes
 through, every later arrival is dropped — the same first-wins contract as
 the reference's Redis exported-manifest (SETNX semantics,
 /root/reference/src/sampling/evaluator.rs:358-401), expressed as
-``applyInPandasWithState`` keyed by the md5 digest.
+``applyInPandasWithState`` over digest buckets.
 
-State shape: ONE tiny row (first_id) per DISTINCT digest — the
-streaming analog of the Redis key set, partitioned by digest hash
-across executors, and the natural skew-free key (digests are uniform by
-construction). Content never enters the state store; the wide text/token
-columns ride the emitted row only. Cross-batch duplicate counts are NOT
-maintained: append mode only emits on first arrival, so an accumulated
-counter would be write-only dead state updated on every duplicate
-forever — the emitted ``dup_count`` covers same-batch duplicates only.
-Digests never expire (there is no SETEX analog): state grows with the
-stream's distinct digests, minus any the ``ref_digests`` anti join
-drops before the state machine.
+State layout is the reference's shard-local key set: digests hash into
+buckets (``streaming.buckets.bucket_of``) and each bucket keys ONE state
+row holding its known digests and their first ids as parallel arrays,
+so the applyInPandasWithState per-group cost is paid once per bucket,
+not once per digest. Content never enters the state store; the wide
+text/token columns ride the emitted row only. Cross-batch duplicate
+counts are NOT maintained: append mode only emits on first arrival, so
+an accumulated counter would be write-only state updated on every
+duplicate forever — the emitted ``dup_count`` covers same-batch
+duplicates only. Digests never expire (there is no SETEX analog): state
+grows with the stream's distinct digests, minus any the ``ref_digests``
+anti join drops before the state machine.
 
 Within one micro-batch, ties break to the MIN id (same representative
 the batch operator elects); across batches, arrival order decides — that
@@ -27,10 +28,38 @@ is the defining semantic difference of the streaming form.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from otel_tail_sampler_spark.streaming.buckets import state_buckets
+from otel_tail_sampler_spark.streaming.buckets import bucket_of
+
+
+def _step(held: tuple, batch: pd.DataFrame) -> tuple[tuple, pd.DataFrame]:
+    """One bucket's trigger, as (state to hold, rows to emit). ``held`` is
+    the bucket's (digests, first_ids); ``batch`` its (digest, doc_id,
+    *payload) rows. Rows of a held digest drop; ONE stable sort by
+    (digest, doc_id), in the id's own type (numeric ids order
+    numerically, like batch F.min), elects each new digest's first row —
+    its min id, the earlier arrival on an exact tie. The elected rows
+    emit with their digest's other rows counted as ``dup_count``, and
+    their (digest, doc_id) pairs append to the state."""
+    digests, ids = held
+    new = batch[~batch["digest"].isin(digests)]
+    dg = pd.factorize(new["digest"], sort=True, use_na_sentinel=False)[0]
+    order = np.lexsort((pd.factorize(new["doc_id"], sort=True)[0], dg))
+    dg = dg[order]
+    starts = np.flatnonzero(np.diff(dg, prepend=-1))
+    out = new.iloc[order[starts]].assign(
+        dup_count=np.diff(starts, append=len(dg)) - 1
+    )
+    if out.empty:
+        return held, out
+    return (
+        [*digests, *out["digest"].tolist()],
+        [*ids, *out["doc_id"].tolist()],
+    ), out
 
 
 def dedup_stream(
@@ -53,118 +82,44 @@ def dedup_stream(
     md5(text) — for inputs whose raw text was already projected away
     (the streaming prep leg keys on the digest it took before
     tokenizing). ``payload_cols`` ride the ELECTED row through to the
-    output (state still holds only first_id — payload never enters the
+    output (state holds only first ids — payload never enters the
     state store). ``ref_digests`` (a STATIC one-``digest``-column batch
     DataFrame over the standing corpus) drops already-known texts via a
     stream-static anti join BEFORE the state machine — the streaming
     face of ``reference_dup_pairs``: known texts neither emit nor cost
     a state row, so state is bounded by the stream's novelty, not the
-    corpus. There is exactly ONE copy of this first-wins state
-    machine; wrappers parameterize it rather than re-implement it.
+    corpus.
 
-    STATE LAYOUT (round 7): digests hash into ``2 x shuffle-partitions``
-    buckets and each bucket keys ONE state row holding its known digests
-    as parallel arrays — the Redis-shard analog (one key SET per shard,
-    not one Spark state row per digest). The earlier one-row-per-digest
-    formulation paid the applyInPandasWithState per-group protocol cost
-    (~10 ms: state decode, pandas slice, fn call, state encode) once per
-    DISTINCT DIGEST per micro-batch, which at sf0.1 was most of the
-    bounded run's wall time. Per-digest first-wins semantics are
-    unchanged: the same rows are emitted.
-
-    CHECKPOINT COMPATIBILITY: the state row ``(digests, first_ids)``
-    replaces the round-4 per-digest rows and the round-7 rows with an
-    always-zero ``deadlines`` array; a checkpoint written by any earlier
-    version needs a FRESH checkpointLocation (already-seen digests
-    re-emit once). The caller that owns the checkpoint pins the bucket
-    count (``streaming.buckets.pin_state_buckets``, as run_prep_stream
-    does)."""
-    import pandas as pd
-
+    The caller that owns the checkpoint pins the bucket count
+    (``streaming.buckets.pin_state_buckets``, as run_prep_stream does)."""
     id_type = docs.schema["doc_id"].dataType.simpleString()
-    ptypes = {
-        c: docs.schema[c].dataType.simpleString() for c in payload_cols
-    }
     out_schema = ", ".join(
         [f"digest string, doc_id {id_type}"]
-        + [f"{c} {ptypes[c]}" for c in payload_cols]
+        + [f"{c} {docs.schema[c].dataType.simpleString()}" for c in payload_cols]
         + ["dup_count int"]
     )
     state_schema = f"digests array<string>, first_ids array<{id_type}>"
-    n_buckets = state_buckets(docs.sparkSession)
 
     digest = F.col(digest_col) if digest_col else F.md5(F.col("text"))
-    keyed = docs.select(
-        digest.alias("_digest"),
-        F.col("doc_id").alias("_id"),
-        *[F.col(c) for c in payload_cols],
-    )
+    keyed = docs.select(digest.alias("digest"), "doc_id", *payload_cols)
     if ref_digests is not None:
-        # standing-corpus awareness (the incremental-ingestion case the
-        # batch reference_dup_pairs answers): a stream-STATIC left-anti
-        # join drops every digest the existing corpus already holds
-        # BEFORE the state machine, so known texts neither emit on first
-        # arrival nor cost a state row — state stays bounded by the
-        # stream's own novelty, not the corpus. The static side must be
-        # a batch DataFrame with one ``digest`` column (e.g.
-        # select(md5(text)) over the corpus, or its stored manifest).
+        # a stream-STATIC left-anti join: the static side is a batch
+        # DataFrame with one ``digest`` column (e.g. select(md5(text))
+        # over the corpus, or its stored manifest)
         keyed = keyed.join(
-            F.broadcast(ref_digests.select(F.col("digest"))),
-            keyed["_digest"] == F.col("digest"),
-            "left_anti",
+            F.broadcast(ref_digests.select("digest")), "digest", "left_anti"
         )
-    keyed = keyed.withColumn(
-        "_bucket",
-        F.pmod(F.xxhash64(F.col("_digest")), F.lit(n_buckets)).cast("int"),
-    )
 
     def fn(key, pdfs, state):
-        known: dict = {}
-        if state.exists:
-            dgs, fids = state.get
-            known = dict(zip(dgs, fids))
-        new: dict = {}  # digest -> [min_id_row_vals, dup_count]
-        for pdf in pdfs:
-            cols = [pdf["_id"].to_numpy()] + [
-                pdf[c].to_numpy(object) for c in payload_cols
-            ]
-            for vals in zip(pdf["_digest"], *cols):
-                d = vals[0]
-                if d in known:
-                    continue
-                cur = new.get(d)
-                if cur is None:
-                    new[d] = [vals[1:], 0]
-                else:
-                    cur[1] += 1
-                    # same-batch ties -> min id in the column's NATIVE
-                    # ordering (numeric ids compare numerically, exactly
-                    # like batch F.min)
-                    if vals[1] < cur[0][0]:
-                        cur[0] = vals[1:]
-        for d, (vals, _dups) in new.items():
-            fid = vals[0]
-            if hasattr(fid, "item"):  # numpy scalar -> python
-                fid = fid.item()
-            known[d] = fid
-        if new:
-            ks = list(known)
-            state.update((ks, [known[d] for d in ks]))
-            ds = list(new)
-            out = {
-                "digest": [str(d) for d in ds],
-                "doc_id": [
-                    v[0][0].item()
-                    if hasattr(v[0][0], "item") else v[0][0]
-                    for v in (new[d] for d in ds)
-                ],
-            }
-            for j, c in enumerate(payload_cols):
-                out[c] = [new[d][0][1 + j] for d in ds]
-            out["dup_count"] = [new[d][1] for d in ds]
-            yield pd.DataFrame(out)
+        held = state.get if state.exists else ([], [])
+        held, out = _step(held, pd.concat(pdfs).drop(columns="_bucket"))
+        if len(out):
+            state.update(held)
+            yield out
 
-    return keyed.groupBy("_bucket").applyInPandasWithState(
+    return keyed.withColumn(
+        "_bucket", bucket_of(docs.sparkSession, "digest")
+    ).groupBy("_bucket").applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=state_schema,

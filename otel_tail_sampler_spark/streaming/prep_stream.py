@@ -6,11 +6,13 @@ streaming/stream_job.py's span pipeline.
       -> stateless quality gate               (word-count bounds + dup-word
                                                ratio: per-row expressions,
                                                legal in a streaming plan)
-      -> hash tokenize                        (pure projection)
-      -> cross-batch first-wins exact dedup   (applyInPandasWithState keyed
-                                               by content digest; state =
-                                               ONE tiny first_id row per
-                                               distinct digest, tokens ride
+      -> hash tokenize                        (pure projection; the
+                                               content digest is taken
+                                               first)
+      -> optional DSIR gate                   (offline model, per-row
+                                               importance resample)
+      -> cross-batch first-wins exact dedup   (dedup_stream: bucketed
+                                               digest state, tokens ride
                                                the emitted row only)
       -> parquet append sink                  (checkpointed file sink:
                                                exactly-once manifest commit,
@@ -37,7 +39,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.operators.selection import dsir_sample
+from otel_tail_sampler_spark.operators.text import hash_tokenize
 from otel_tail_sampler_spark.streaming.buckets import pin_state_buckets
+from otel_tail_sampler_spark.streaming.dedup_stream import dedup_stream
 
 
 def _quality_gate(docs: DataFrame) -> DataFrame:
@@ -64,49 +69,6 @@ def _quality_gate(docs: DataFrame) -> DataFrame:
         (n_words >= 5)
         & (n_words <= 5000)
         & (dup_frac <= 0.6)
-    )
-
-
-def tokenize_dedup_stream(
-    docs: DataFrame,
-    vocab_size: int = 65536,
-    select_fn=None,
-    extra_payload_cols: tuple = (),
-    ref_digests: DataFrame | None = None,
-) -> DataFrame:
-    """Tokenized, cross-batch-deduplicated document stream:
-    -> (digest, doc_id, source, tokens array<int>, n_tok int,
-    dup_count int), one row per FIRST ARRIVAL of each content digest.
-
-    A thin wrapper over dedup_stream — the ONE first-wins/TTL state
-    machine — keyed on the digest taken BEFORE tokenizing (the raw text
-    is projected away by the tokenizer), with the tokenized payload
-    riding the elected row via ``payload_cols``. Tokens never enter the
-    state store — state stays O(distinct digests), not O(corpus bytes).
-
-    ``select_fn`` (optional): a STATELESS tokenized-stream transform
-    applied between tokenize and dedup — the hook run_prep_stream's
-    DSIR gate uses. It must preserve (id, source, tokens, n_tok,
-    _digest) and may only drop rows / add columns that are pure row
-    functions (streaming-legal, and selection-before-dedup keeps the
-    state store from ever holding digests of docs the gate discards).
-    """
-    from otel_tail_sampler_spark.operators.text import hash_tokenize
-    from otel_tail_sampler_spark.streaming.dedup_stream import dedup_stream
-
-    with_digest = docs.withColumn("_digest", F.md5(F.col("text")))
-    toks = hash_tokenize(
-        with_digest,
-        vocab_size=vocab_size,
-        keep_cols=("source", "_digest"),
-    )
-    if select_fn is not None:
-        toks = select_fn(toks)
-    return dedup_stream(
-        toks,
-        digest_col="_digest",
-        payload_cols=("source", "tokens", "n_tok", *extra_payload_cols),
-        ref_digests=ref_digests,
     )
 
 
@@ -154,24 +116,25 @@ def run_prep_stream(
     if schema is None:
         schema = spark.read.parquet(documents_dir).schema
     docs = spark.readStream.schema(schema).parquet(documents_dir)
-    gated = _quality_gate(docs)
-    select_fn = None
-    if dsir_model is not None:
-        from otel_tail_sampler_spark.operators.selection import dsir_sample
-
-        def select_fn(toks):  # noqa: F811 — the documented hook
-            return dsir_sample(
-                toks,
-                dsir_model,
-                rate=dsir_rate,
-                keep_cols=("source", "n_tok", "tokens", "_digest"),
-            ).drop("n_feat", "target_mass", "raw_mass")
-
-    deduped = tokenize_dedup_stream(
-        gated,
+    # the digest is taken before tokenizing projects the text away
+    toks = hash_tokenize(
+        _quality_gate(docs).withColumn("digest", F.md5(F.col("text"))),
         vocab_size=vocab_size,
-        select_fn=select_fn,
-        extra_payload_cols=("ratio_fp",) if dsir_model is not None else (),
+        keep_cols=("source", "digest"),
+    )
+    payload_cols = ("source", "tokens", "n_tok")
+    if dsir_model is not None:
+        toks = dsir_sample(
+            toks,
+            dsir_model,
+            rate=dsir_rate,
+            keep_cols=("source", "n_tok", "tokens", "digest"),
+        )
+        payload_cols += ("ratio_fp",)
+    deduped = dedup_stream(
+        toks,
+        digest_col="digest",
+        payload_cols=payload_cols,
         ref_digests=ref_digests,
     )
     ckpt = f"{out_dir}/_checkpoint"

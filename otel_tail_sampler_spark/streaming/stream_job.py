@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from otel_tail_sampler_spark.operators.assembly import summary_aggs, summary_columns
 from otel_tail_sampler_spark.operators.parser import parse_spans_jvm
 from otel_tail_sampler_spark.operators.policies import SamplerConfig, decide
-from otel_tail_sampler_spark.streaming.buckets import pin_state_buckets, state_buckets
+from otel_tail_sampler_spark.streaming.buckets import bucket_of, pin_state_buckets
 
 
 def read_tokenized_stream(
@@ -99,14 +99,10 @@ def read_kafka_stream(
     return decode_kafka_value(raw)
 
 
-def assemble_sessions(
-    spans: DataFrame,
-    gap_seconds: int = 30,
-    watermark_delay: str = "10 seconds",
-) -> DataFrame:
-    """Streaming trace assembly: session_window(gap) == inactivity timeout.
-
-    Event time = timestamp_ms as timestamp. One trace can span multiple
+def assemble_sessions(spans: DataFrame, gap_seconds: int = 30) -> DataFrame:
+    """Streaming trace assembly: session_window(gap) == inactivity timeout,
+    over spans that carry the watermarked ``event_time``
+    (run_streaming_pipeline). One trace can span multiple
     sessions if its spans pause longer than the gap — matching the
     reference, which force-exports a trace after inactivity and treats late
     spans as a fresh trace. The reference stops the re-export with its
@@ -121,11 +117,8 @@ def assemble_sessions(
     """
     from otel_tail_sampler_spark.operators.parser import csv_name_expr
 
-    with_ts = spans.withColumn(
-        "event_time", F.timestamp_millis(F.col("timestamp_ms"))
-    ).withWatermark("event_time", watermark_delay)
     return (
-        with_ts.groupBy(
+        spans.groupBy(
             F.session_window("event_time", f"{gap_seconds} seconds"),
             F.col("trace_k1"),
             F.col("trace_k2"),
@@ -315,11 +308,7 @@ def _emit_frame(p: dict):
     })
 
 
-def assemble_with_state(
-    spans: DataFrame,
-    gap_seconds: int = 30,
-    watermark_delay: str = "10 seconds",
-) -> DataFrame:
+def assemble_with_state(spans: DataFrame, gap_seconds: int = 30) -> DataFrame:
     """Custom per-trace state with event-time timeout — the second
     streaming strategy, mirroring the reference's TraceState inactivity
     expiry (/root/reference/src/state.rs:293-325): each trace holds a
@@ -354,16 +343,8 @@ def assemble_with_state(
     one-buffer-entry-per-trace behavior).
     """
     gap_ms = gap_seconds * 1000
-    n_buckets = state_buckets(spans.sparkSession)
-
-    with_ts = spans.withColumn(
-        "event_time", F.timestamp_millis(F.col("timestamp_ms"))
-    ).withWatermark("event_time", watermark_delay).withColumn(
-        "_bucket",
-        F.pmod(
-            F.xxhash64(F.col("trace_k1"), F.col("trace_k2")),
-            F.lit(n_buckets),
-        ).cast("int"),
+    bucketed = spans.withColumn(
+        "_bucket", bucket_of(spans.sparkSession, "trace_k1", "trace_k2")
     ).select(
         # guide §4.1: the grouped batches are opaque to Catalyst — ship
         # only the columns the fold reads (plus the watermark column).
@@ -391,7 +372,7 @@ def assemble_with_state(
         if len(fired["k1"]):
             yield _emit_frame(fired)
 
-    return with_ts.groupBy("_bucket").applyInPandasWithState(
+    return bucketed.groupBy("_bucket").applyInPandasWithState(
         fn,
         outputStructType=SUMMARY_SCHEMA,
         stateStructType=BUCKET_STATE_SCHEMA,
@@ -467,13 +448,15 @@ def run_streaming_pipeline(
         )
         .drop("tokens")
         .filter(F.col("parse_ok"))
+        .withColumn("event_time", F.timestamp_millis(F.col("timestamp_ms")))
+        .withWatermark("event_time", watermark_delay)
     )
     ckpt = os.path.join(out_dir, "_stream_checkpoint")
     if strategy == "state":
         pin_state_buckets(spark, ckpt)
-        sessions = assemble_with_state(spans, gap_seconds, watermark_delay)
+        sessions = assemble_with_state(spans, gap_seconds)
     elif strategy == "session_window":
-        sessions = assemble_sessions(spans, gap_seconds, watermark_delay)
+        sessions = assemble_sessions(spans, gap_seconds)
     else:
         raise ValueError(f"unknown streaming strategy: {strategy}")
 

@@ -26,6 +26,12 @@ are matched to functions by name only, so functions that share a name
 across modules are matched together; that errs towards keeping a
 parameter.
 
+Every parameter of a top-level library def, or of a method of a
+top-level class, must be read by its body: a ``Name`` load of it, which
+counts in a nested def or lambda too. A method's ``self`` or ``cls`` is
+exempt, and so is every nested def, whose signature Spark fixes
+(``fn(key, pdfs, state)``).
+
 Every import in the library, ``scripts/`` and ``perfbench/`` must be
 used: its bound name is referenced in the module, named in ``__all__``,
 or used in a string annotation. ``__future__`` imports are exempt, and
@@ -64,9 +70,6 @@ ALLOWED = {
     ("otel_tail_sampler_spark/operators/export.py", "span_export_projection",
      "env"):
         "deployment setting: the environment tag of exported spans",
-    ("otel_tail_sampler_spark/operators/rule_store.py", "load_rules",
-     "now_ms"):
-        "clock injection: lets a caller evaluate rule expiry at a fixed time",
     ("otel_tail_sampler_spark/operators/rule_store.py",
      "apply_rules_from_table", "now_ms"):
         "clock injection: lets a caller evaluate rule expiry at a fixed time",
@@ -248,6 +251,37 @@ def never_passed(trees: dict[str, ast.Module]) -> set[tuple[str, str, str]]:
     return unset - passed
 
 
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def unread_params(trees: dict[str, ast.Module]) -> set[tuple[str, str, str]]:
+    """(module, function, parameter) for every parameter of a top-level
+    library def, or of a method of a top-level class, that its body never
+    reads."""
+    out = set()
+    for path, tree in trees.items():
+        if not path.startswith(PACKAGE):
+            continue
+        fns = [(n, 0) for n in tree.body if isinstance(n, _DEFS)]
+        for cls in tree.body:
+            if isinstance(cls, ast.ClassDef):
+                fns += [
+                    (m, 0 if any(_callee_name(d) == "staticmethod"
+                                 for d in m.decorator_list) else 1)
+                    for m in cls.body if isinstance(m, _DEFS)
+                ]
+        for fn, bound in fns:
+            a = fn.args
+            params = (a.posonlyargs + a.args)[bound:] + a.kwonlyargs
+            params += [p for p in (a.vararg, a.kwarg) if p]
+            read = {
+                n.id for stmt in fn.body for n in ast.walk(stmt)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+            }
+            out |= {(path, fn.name, p.arg) for p in params if p.arg not in read}
+    return out
+
+
 def unused_imports(trees: dict[str, ast.Module]) -> set[tuple[str, str]]:
     """(module, name) for every name an import binds in ``CALLER_DIRS``
     that its module never uses."""
@@ -387,6 +421,14 @@ def test_allowlist_is_current():
     assert not stale, f"ALLOWED entries that now have a caller: {stale}"
 
 
+def test_every_parameter_is_read():
+    unread = sorted(unread_params(_repo()))
+    assert not unread, (
+        "parameters their function never reads — delete each:\n"
+        + "\n".join(f"  {m}: {f}({p})" for m, f, p in unread)
+    )
+
+
 def test_every_import_is_used():
     unused = sorted(unused_imports(_repo()))
     assert not unused, "imports nothing uses — delete each:\n" + "\n".join(
@@ -478,6 +520,30 @@ def test_audit_rules_on_planted_sources():
         ),
     }
     assert {(f, p) for _m, f, p in never_passed(_parse(dc))} == {("Cfg", "unset")}
+
+    # the read rule: a read in a closure counts, a write does not; self
+    # and cls are exempt, a staticmethod's first parameter is not, and
+    # nested defs (Spark callbacks) and files outside the library are not
+    # scanned
+    rd = {
+        lib: (
+            "def f(a, b, *args, c, d=0, **kw):\n"
+            "    b = 1\n"
+            "    def cb(key, pdfs, state):\n"
+            "        return a + d\n"
+            "    return cb, lambda: c\n"
+            "class K:\n"
+            "    def m(self, x, y):\n        return x\n"
+            "    @classmethod\n"
+            "    def k(cls):\n        pass\n"
+            "    @staticmethod\n"
+            "    def s(v):\n        pass\n"
+        ),
+        "scripts/planted.py": "def g(unused):\n    pass\n",
+    }
+    assert {(f, p) for _m, f, p in unread_params(_parse(rd))} == {
+        ("f", "b"), ("f", "args"), ("f", "kw"), ("m", "y"), ("s", "v")
+    }
     assert unused_imports(_parse(dc)) == {
         (lib, "json"), ("scripts/planted.py", "sys")
     }

@@ -458,30 +458,108 @@ def test_stream_rate_limit_is_a_budget_per_micro_batch(spark, tmp_path_factory):
     assert (per_service > 1).any(), "expected a service kept in two batches"
 
 
+def _write_in_order(batches, to):
+    """Write each batch of (doc_id, text) rows as one parquet file of a
+    stream source, with modification times one second apart in batch
+    order (see _copy_in_order): read one file per trigger, the batches
+    then arrive in this order."""
+    for i, rows in enumerate(batches, 1):
+        dst = os.path.join(to, f"f{i}.parquet")
+        pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(dst, index=False)
+        os.utime(dst, (1_700_000_000 + i,) * 2)
+
+
+def _first_wins_by_row(held, batch, payload_cols):
+    """Scalar reference of dedup_stream's bucket step: one pass over the
+    rows in arrival order, a digest the state holds dropping, a new one's
+    min id winning with its payload (a strictly smaller id replaces, so an
+    exact tie keeps the first arrival). -> (state as {digest: first_id},
+    emitted rows as (digest, doc_id, *payload, dup_count) tuples)."""
+    known = dict(zip(*held))
+    new: dict = {}
+    cols = [batch[c] for c in ("digest", "doc_id", *payload_cols)]
+    for d, *vals in zip(*cols):
+        if d in known:
+            continue
+        cur = new.get(d)
+        if cur is None:
+            new[d] = [vals, 0]
+        else:
+            cur[1] += 1
+            if vals[0] < cur[0][0]:
+                cur[0] = vals
+    known.update({d: vals[0] for d, (vals, _n) in new.items()})
+    return known, {(d, *vals, n) for d, (vals, n) in new.items()}
+
+
+def test_dedup_step_matches_row_by_row_loop():
+    """The dedup bucket step (dedup_stream._step) against the scalar
+    reference, on planted cases and random micro-batches with many
+    repeated digests and equal ids, over long and string ids."""
+    import random
+
+    from otel_tail_sampler_spark.streaming.dedup_stream import _step
+
+    def step(held, rows):
+        batch = pd.DataFrame(rows, columns=["digest", "doc_id", "pay"])
+        new, out = _step(held, batch)
+        assert list(out.columns) == ["digest", "doc_id", "pay", "dup_count"]
+        want_state, want_out = _first_wins_by_row(held, batch, ("pay",))
+        assert dict(zip(*new)) == want_state
+        assert set(out.itertuples(index=False, name=None)) == want_out
+        return new, out
+
+    # a held digest drops; same-batch duplicates count; long ids 2 and 10
+    # elect 2; the payload rides the elected row
+    held = (["h"], [1])
+    held, out = step(held, [
+        ("a", 10, "a10"), ("h", 0, "h0"), ("b", 3, "b3"), ("a", 2, "a2"),
+        ("a", 11, "a11"),
+    ])
+    assert set(out.itertuples(index=False, name=None)) == {
+        ("a", 2, "a2", 2), ("b", 3, "b3", 0)
+    }
+    assert held == (["h", "a", "b"], [1, 2, 3])
+    # equal ids keep the first arrival
+    _, out = step(held, [("c", 5, "first"), ("c", 5, "second")])
+    assert out["pay"].tolist() == ["first"]
+    # string ids order as strings: "10" < "2"
+    _, out = step(([], []), [("s", "2", "x"), ("s", "10", "y")])
+    assert out["doc_id"].tolist() == ["10"]
+    # nothing new: no state update and no output
+    new, out = step(held, [("a", 1, "a1"), ("h", 7, "h7")])
+    assert new is held and out.empty
+
+    for seed in range(60):
+        rng = random.Random(seed)
+        as_str = seed % 2 == 1
+        held = ([], [])
+        for _ in range(rng.randint(1, 5)):
+            rows = []
+            for j in range(rng.randint(0, 12)):
+                i = rng.choice([2, 3, 10, 10, 21])
+                d = rng.choice(["a", "b", "c", "d", None])
+                rows.append((d, str(i) if as_str else i, f"p{j}"))
+            held, _ = step(held, rows)
+
+
 def test_dedup_stream_first_wins_across_batches(spark, tmp_path_factory):
     """Streaming exact-dedup: first arrival of a digest passes, later
     arrivals (across micro-batches) drop; same-batch ties elect min id."""
-    import glob
-
     from otel_tail_sampler_spark.streaming.dedup_stream import dedup_stream
 
-    in_dir = tmp_path_factory.mktemp("dd_in")
     out_dir = str(tmp_path_factory.mktemp("dd_out"))
-    # batch 1: A(ids 2 and 10 — the pair a stringified min would order
-    # wrong: "10" < "2" lexicographically), B(id 3)
-    spark.createDataFrame(
-        [(10, "alpha text"), (3, "beta text"), (2, "alpha text")],
-        "doc_id long, text string",
-    ).coalesce(1).write.mode("overwrite").parquet(str(in_dir / "b1"))
     stream_in = str(tmp_path_factory.mktemp("dd_stream"))
-    import shutil
-
-    shutil.copy(glob.glob(f"{in_dir}/b1/*.parquet")[0], f"{stream_in}/f1.parquet")
-    # batch 2: dup of A again (id 5) + new C (id 7)
-    spark.createDataFrame(
-        [(5, "alpha text"), (7, "gamma text")], "doc_id long, text string"
-    ).coalesce(1).write.mode("overwrite").parquet(str(in_dir / "b2"))
-    shutil.copy(glob.glob(f"{in_dir}/b2/*.parquet")[0], f"{stream_in}/f2.parquet")
+    _write_in_order(
+        [
+            # A (ids 2 and 10 — the pair a stringified min would order
+            # wrong: "10" < "2" lexicographically), B (id 3)
+            [(10, "alpha text"), (3, "beta text"), (2, "alpha text")],
+            # a dup of A again (id 5) + new C (id 7)
+            [(5, "alpha text"), (7, "gamma text")],
+        ],
+        stream_in,
+    )
 
     src = (
         spark.readStream.schema("doc_id long, text string")
@@ -751,9 +829,6 @@ def test_dedup_stream_against_standing_corpus(spark, tmp_path_factory):
     """ref_digests: texts the standing corpus already holds never emit
     (not even on first arrival) and never cost a state row; novel texts
     still dedup first-wins within the stream."""
-    import glob
-    import shutil
-
     from pyspark.sql import functions as F
 
     from otel_tail_sampler_spark.streaming.dedup_stream import dedup_stream
@@ -762,19 +837,15 @@ def test_dedup_stream_against_standing_corpus(spark, tmp_path_factory):
         [(1, "known alpha"), (2, "known beta")], "doc_id long, text string"
     )
     ref_digests = ref.select(F.md5("text").alias("digest"))
-    in_dir = tmp_path_factory.mktemp("rd_in")
     stream_in = str(tmp_path_factory.mktemp("rd_stream"))
     out_dir = str(tmp_path_factory.mktemp("rd_out"))
-    b1 = [(10, "known alpha"), (11, "novel gamma")]
-    b2 = [(12, "novel gamma"), (13, "known beta"), (14, "novel delta")]
-    for i, rows in enumerate((b1, b2), 1):
-        spark.createDataFrame(
-            rows, "doc_id long, text string"
-        ).coalesce(1).write.mode("overwrite").parquet(str(in_dir / f"b{i}"))
-        shutil.copy(
-            glob.glob(f"{in_dir}/b{i}/*.parquet")[0],
-            f"{stream_in}/f{i}.parquet",
-        )
+    _write_in_order(
+        [
+            [(10, "known alpha"), (11, "novel gamma")],
+            [(12, "novel gamma"), (13, "known beta"), (14, "novel delta")],
+        ],
+        stream_in,
+    )
     src = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
