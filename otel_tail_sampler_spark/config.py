@@ -25,46 +25,36 @@ can express the same knobs here:
 from __future__ import annotations
 
 import json
+from dataclasses import replace
 
 from otel_tail_sampler_spark.operators.policies import (
-    CardinalityPolicy,
     ConfigurablePolicy,
-    ErrorPolicy,
-    LatencyPolicy,
     SamplerConfig,
 )
 
 
 def sampler_config_from_dict(d: dict) -> SamplerConfig:
-    s = d.get("sampling", d)
-    err = s.get("error", {})
-    lat = s.get("latency", {})
-    card = s.get("cardinality", {})
-    rl = s.get("rate_limit", {})
-    extra = tuple(
-        ConfigurablePolicy(
-            name=p["name"],
-            conditions=tuple(p.get("conditions", [])),
-            sample_rate=p.get("sample_rate", 1.0),
+    """``SamplerConfig`` from the keys of ``d``'s ``sampling`` block (or of
+    ``d`` itself, ``force_rules`` aside): a key the dict lacks keeps the
+    default of ``SamplerConfig()``, down to a policy field, and an unknown
+    key raises ``TypeError``. ``rate_limit.<k>`` sets ``rate_limit_<k>``
+    and ``policies`` sets ``extra_policies``."""
+    if "sampling" in d:
+        s = dict(d["sampling"])
+    else:
+        s = {k: v for k, v in d.items() if k != "force_rules"}
+    base = SamplerConfig()
+    for name in ("error", "latency", "cardinality"):
+        if name in s:
+            s[name] = replace(getattr(base, name), **s[name])
+    for k, v in s.pop("rate_limit", {}).items():
+        s[f"rate_limit_{k}"] = v
+    if "policies" in s:
+        s["extra_policies"] = tuple(
+            ConfigurablePolicy(**{**p, "conditions": tuple(p.get("conditions", ()))})
+            for p in s.pop("policies")
         )
-        for p in s.get("policies", [])
-    )
-    return SamplerConfig(
-        error=ErrorPolicy(sample_rate=err.get("sample_rate", 1.0)),
-        latency=LatencyPolicy(
-            threshold_ms=lat.get("threshold_ms", 30_000),
-            sample_rate=lat.get("sample_rate", 1.0),
-        ),
-        cardinality=CardinalityPolicy(
-            max_span_count=card.get("max_span_count", 100)
-        ),
-        extra_policies=extra,
-        strategy=s.get("strategy", "any_match"),
-        consensus_threshold=s.get("consensus_threshold", 0.5),
-        always_sample_errors=s.get("always_sample_errors", False),
-        rate_limit_key=rl.get("key", "service_name"),
-        rate_limit_per_key=rl.get("per_key"),
-    )
+    return SamplerConfig(**s)
 
 
 def force_rules_from_dict(d: dict) -> list[dict]:

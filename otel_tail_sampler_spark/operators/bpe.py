@@ -67,6 +67,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
+from otel_tail_sampler_spark.functions.hashing import hash_key
+
 END = "</w>"
 
 
@@ -147,7 +149,7 @@ def _sample_texts(df: DataFrame, sample_docs: int) -> list[str | None]:
             F.col("doc_id").cast("string").alias("_id"),
             F.col("text").alias("_t"),
         )
-        .withColumn("_r", F.md5(F.concat_ws("|", F.col("_id"), F.lit("bpe"))))
+        .withColumn("_r", hash_key("_id", "bpe"))
         .orderBy("_r", "_id")
         .limit(int(sample_docs))
         .collect()

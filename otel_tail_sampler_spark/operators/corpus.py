@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from otel_tail_sampler_spark.functions.hashing import hash_frac
+from otel_tail_sampler_spark.functions.hashing import hash_frac, hash_key
+from otel_tail_sampler_spark.functions.ranking import top_per_key
 
 # hash_frac salt shared by mixture_sample and mixture_upsample, so a doc's
 # keep draw is the same fraction in both
@@ -696,41 +697,19 @@ def chunk_documents(
     )
 
 
-def stratified_sample(
-    df: DataFrame, quota: int, salt_buckets: int = 64
-) -> DataFrame:
+def stratified_sample(df: DataFrame, quota: int) -> DataFrame:
     """Exactly min(``quota``, group size) rows per ``source`` group:
     the ``quota`` smallest md5(doc_id|'strat') survive — deterministic uniform
     selection, identical across engines/partitionings (md5-hex ranking).
     The per-group counterpart of mixture_sample's per-group RATES, for
     eval-set carving and per-domain caps where the quota is absolute.
 
-    Scale shape: two-level selection, same scheme as the rate-limit
-    policy (policies.apply_rate_limit D8): rank within (group, salt)
-    first — a row ranked > quota inside any salt bucket is provably
-    outside the group's global top-quota — then exact-rank the
-    <= quota * salt_buckets survivors. No single task ever holds a whole
-    hot group: the salted exchange spreads it, and the second exchange
-    (on the bare group key, as the captured plan in PLANS.md shows)
-    moves only the quota-bounded survivors.
+    Scale shape: ``functions.ranking.top_per_key``'s two-level selection
+    (the same as the rate-limit policy D8): no single task ever holds a
+    whole hot group.
     """
-    from pyspark.sql import Window
-
-    ordv = F.md5(
-        F.concat_ws("|", F.col("doc_id").cast("string"), F.lit("strat"))
-    )
-    w1 = Window.partitionBy("source", "_salt").orderBy(ordv, F.col("doc_id"))
-    lvl1 = df.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(salt_buckets)),
-    ).withColumn("_r1", F.row_number().over(w1))
-    w2 = Window.partitionBy("source").orderBy(ordv, F.col("doc_id"))
-    return (
-        lvl1.filter(F.col("_r1") <= quota)
-        .withColumn("_r2", F.row_number().over(w2))
-        .filter(F.col("_r2") <= quota)
-        .drop("_salt", "_r1", "_r2")
-    )
+    order = [hash_key(F.col("doc_id").cast("string"), "strat"), F.col("doc_id")]
+    return top_per_key(df, "source", order, quota, F.row_number)[0]
 
 
 def pmi_collocations(

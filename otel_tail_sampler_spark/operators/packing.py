@@ -40,14 +40,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from otel_tail_sampler_spark.functions.hashing import hash_frac
+from otel_tail_sampler_spark.functions.hashing import hash_frac, hash_key
 from otel_tail_sampler_spark.functions.tables import local_table
 
-# Hard ceiling on the _subrange_rank offsets collect: one row per
-# (group value, hex prefix), so at sub_prefix_len=2 this admits ~4096
-# distinct group values — far above every in-repo caller (curriculum
-# metrics are quantized to <= a few hundred bins) while converting the
-# high-cardinality foot-gun into a sizing error instead of a driver OOM.
+# Hard ceiling on the _exact_positions offsets collect: one row per chunk,
+# i.e. per (group value, hex prefix) in _subrange_rank, so at
+# SUB_PREFIX_LEN=2 this admits ~4096 distinct group values — far above
+# every in-repo caller (curriculum metrics are quantized to <= a few
+# hundred bins) while converting the high-cardinality foot-gun into a
+# sizing error instead of a driver OOM.
 _MAX_OFFSET_ROWS = 1 << 20
 
 
@@ -110,13 +111,13 @@ def pack_sequences(
     boundaries; spans derive from the same sorted piece structs the
     tokens flatten from, so they cannot disagree with the token layout.
 
-    Pure-JVM formulation: global offsets come from a window cumsum
-    PARTITIONED BY the deterministic range bucket (bucket-sized partitions
-    — never the single-task global window the module docstring warns
-    about) plus driver-prefix-summed per-bucket base offsets; each
-    document then explodes into its <= n_tok/max_len + 1 (doc x example)
-    intersections with `slice` arithmetic — every expression whole-stage-
-    codegen-friendly, no Python stage. An earlier formulation computed
+    Pure-JVM formulation: global offsets come from ``_exact_positions``
+    chunked by the deterministic range bucket (bucket-sized window
+    partitions — never the single-task global window the module
+    docstring warns about); each document then explodes into its
+    <= n_tok/max_len + 1 (doc x example) intersections with `slice`
+    arithmetic — every expression whole-stage-codegen-friendly, no
+    Python stage. An earlier formulation computed
     the same pieces in an Arrow-batched mapInPandas stage; profiling on
     the 600M-token scaling protocol showed the JVM<->Python Arrow
     round-trip of the whole corpus (~2x corpus bytes over local sockets,
@@ -132,8 +133,6 @@ def pack_sequences(
     appears only in the piece pass fails fast (raise_error) instead.
     The earlier persist-pinned formulation was immune but kept a second
     resident copy of the corpus — untenable at 10^12 tokens."""
-    from pyspark.sql import Window
-
     # one range bucket per shuffle partition of the session
     n_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     bounds = _pack_bucket_bounds(df.select(id_col), id_col, n_buckets, n_rows)
@@ -141,59 +140,19 @@ def pack_sequences(
         F.col(id_col).alias("_id"),
         F.col("tokens").alias("_t"),
         _bucket_of(F.col(id_col), bounds).alias("_pid"),
+        F.size("tokens").alias("_len"),
     )
-    # pass 1: one tiny row per bucket -> driver prefix sum -> map literal.
-    # _pid is a pure function of the id, so this pass and the piece pass
-    # agree no matter how either one is partitioned or recomputed.
-    totals = {
-        r["_pid"]: r["_n"]
-        for r in base.groupBy("_pid").agg(F.sum(F.size("_t")).alias("_n")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(totals):
-        offsets[pid] = acc
-        acc += int(totals[pid] or 0)
-    if offsets:
-        pairs: list = []
-        for pid, off0 in offsets.items():
-            # values uniformly long: global token offsets overflow int32
-            pairs += [F.lit(int(pid)), F.lit(int(off0)).cast("long")]
-        # try_element_at: NULL (not an ANSI error) on a missing key, so the
-        # clear raise_error below owns the failure message
-        base_off = F.try_element_at(F.create_map(*pairs), F.col("_pid"))
-    else:
-        base_off = F.lit(0).cast("long")
-    # a bucket unseen by the totals pass => the input changed between jobs
-    base_off = F.when(
-        base_off.isNull(),
-        F.raise_error(
-            F.concat(
-                F.lit("pack_sequences: bucket "),
-                F.col("_pid").cast("string"),
-                F.lit(
-                    " absent from the offsets pass — the input changed "
-                    "between the totals job and the piece job (see the "
-                    "determinism precondition in the docstring)"
-                ),
-            )
-        ).cast("long"),
-    ).otherwise(base_off)
-
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy("_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off = (base_off + F.coalesce(F.sum(F.size("_t")).over(w), F.lit(0))).cast(
-        "long"
-    )
-    n = F.size("_t").cast("long")
+    # _pid is a pure function of the id, so the offsets pass and the piece
+    # pass agree no matter how either one is partitioned or recomputed
+    ranked, _, _ = _exact_positions(base, ["_pid"], ["_id"], "_len", None)
+    off = (F.col("_pos") - F.col("_len")).cast("long")
+    n = F.col("_len").cast("long")
     first_ex = F.floor(off / max_len)
     last_ex = F.floor((off + n - F.lit(1)) / max_len)
     ks = F.when(
         n > 0, F.sequence(first_ex, last_ex)
     ).otherwise(F.array().cast("array<long>"))
-    with_off = base.select("_t", off.alias("_off"), n.alias("_n"), ks.alias("_ks"))
+    with_off = ranked.select("_t", off.alias("_off"), n.alias("_n"), ks.alias("_ks"))
     exploded = with_off.select(
         "_t", "_off", "_n", F.explode("_ks").alias("example_id")
     )
@@ -276,7 +235,7 @@ def assign_shards(
     """
     from pyspark.sql import Window
 
-    h = F.md5(F.concat_ws("|", F.col(id_col).cast("string"), F.lit("shards")))
+    h = hash_key(F.col(id_col).cast("string"), "shards")
     out = examples.withColumn("_h", h).withColumn(
         "shard",
         F.pmod(
@@ -447,6 +406,103 @@ def pack_documents_greedy(
 SUB_PREFIX_LEN = 2
 
 
+def _exact_positions(
+    base: DataFrame,
+    chunks: list[str],
+    order: list[str],
+    value_col: str | None,
+    reset_col: str | None,
+):
+    """Exact position of every row in the (``chunks``, ``order``) total
+    order with no single-task window and no corpus-wide sort: ``_pos`` is
+    the 0-based rank (``value_col=None``) or the running sum of
+    ``value_col`` INCLUDING the row. ``reset_col`` (a chunk column whose
+    values lead the chunk order) restarts the count at each of its
+    values; None accumulates globally.
+
+    Two passes over ``base``. The offsets pass collects one total per
+    chunk, prefix-sums them on the driver in chunk order and broadcasts
+    the offsets back as a TABLE (plan size independent of the chunk
+    count — the k-literal lesson); the position pass adds its chunk's
+    offset to each row's rank or sum in a window over its chunk only.
+    The chunk columns must be orderable primitives of bounded distinct
+    cardinality (the collect is BOUNDED by ``_MAX_OFFSET_ROWS`` and
+    raises a sizing error instead of growing into a driver OOM; the limit
+    probe costs no extra job) and NULL-free (raises — a NULL would
+    silently sort nowhere).
+
+    Determinism precondition: both passes must see the same input; a
+    chunk unseen by the offsets pass fails fast (raise_error) instead of
+    silently dropping rows.
+
+    -> (base + ``_pos`` long, grand total, per-``reset_col`` totals dict).
+    """
+    spark = base.sparkSession
+    agg_expr = F.count(F.lit(1)) if value_col is None else F.sum(value_col)
+    counts = (
+        base.groupBy(*chunks)
+        .agg(agg_expr.alias("_n"))
+        .limit(_MAX_OFFSET_ROWS + 1)
+        .collect()
+    )
+    if len(counts) > _MAX_OFFSET_ROWS:
+        raise ValueError(
+            f"_exact_positions: the offsets pass produced more than "
+            f"{_MAX_OFFSET_ROWS} rows — {chunks} has too many distinct "
+            "values for an exact driver-side offsets table. Quantize the "
+            "group metric upstream (e.g. bucket a continuous score into "
+            "bounded integer bins, as curriculum_order's contract "
+            "requires) and retry."
+        )
+    if any(r[c] is None for r in counts for c in chunks):
+        raise ValueError(
+            f"_exact_positions: NULL values in {chunks} — rank them "
+            "explicitly (filter or sentinel) before ranking"
+        )
+    rows, acc, per_group = [], 0, {}
+    for r in sorted(counts, key=lambda r: tuple(r[c] for c in chunks)):
+        n = int(r["_n"] or 0)
+        off = acc
+        if reset_col is not None:
+            off = per_group.get(r[reset_col], 0)
+            per_group[r[reset_col]] = off + n
+        rows.append((*(r[c] for c in chunks), off))
+        acc += n
+    ddl = ", ".join(f"{c} {base.schema[c].dataType.simpleString()}" for c in chunks)
+    offsets = local_table(spark, rows, f"{ddl}, _off long")
+    w = Window.partitionBy(*chunks).orderBy(*order)
+    if value_col is None:
+        local = F.row_number().over(w) - 1
+    else:
+        local = F.sum(F.col(value_col).cast("long")).over(
+            w.rowsBetween(Window.unboundedPreceding, 0)
+        )
+    off = F.when(
+        F.col("_off").isNull(),
+        F.raise_error(
+            F.concat(
+                F.lit("_exact_positions: chunk ("),
+                F.concat_ws(", ", *[F.col(c).cast("string") for c in chunks]),
+                F.lit(
+                    ") absent from the offsets pass — the input changed "
+                    "between the two jobs (see the determinism "
+                    "precondition)"
+                ),
+            )
+        ).cast("long"),
+    ).otherwise(F.col("_off"))
+    # the offsets join runs after the window: joined before it (offsets
+    # riding the chunk exchange), pack_sequences' piece pass over sf0.1
+    # documents ran ~30% slower on a 4-core VM (local[4])
+    ranked = (
+        base.withColumn("_pos", local)
+        .join(F.broadcast(offsets), chunks, "left")
+        .withColumn("_pos", (off + F.col("_pos")).cast("long"))
+        .drop("_off")
+    )
+    return ranked, acc, per_group
+
+
 def _subrange_rank(
     df: DataFrame,
     group_col: str,
@@ -456,107 +512,27 @@ def _subrange_rank(
     reset_per_group: bool,
     value_col: str | None = None,
 ):
-    """Shared exact-rank/running-sum machinery of ``form_batches``,
-    ``curriculum_order``, and ``enforce_token_budget``: md5(id|seed)
-    rank key, subdivided by its own ``sub_prefix_len``-char hex prefix.
-    Because the prefix refines the ``group_col`` value, concatenating
-    (group, prefix) chunks in driver-sorted order IS the
-    order-by-(group, hash, id) total order, so per-chunk local
-    ranks/sums + driver-prefix-summed offsets reconstruct the exact
-    global quantity with no single-task window and no corpus-wide sort;
-    a degenerate group still spreads over 16^``sub_prefix_len``
-    subranges. Offsets ride a broadcast-joined TABLE (plan size
-    independent of group count — the k-literal lesson).
-    ``reset_per_group`` restarts the offset at each group (within-group
-    quantity) vs. accumulating globally. ``value_col=None`` ranks rows
-    (``_pos`` = 0-based rank); a column name sums it (``_pos`` = the
-    running total INCLUDING the row).
-
-    -> (df + ``_pos`` long, grand total, per-group totals dict).
-    Driver-side work is one row per (group value, prefix): the group
-    column must be an orderable primitive of bounded distinct
-    cardinality (its type is taken from the schema) and NULL-free
-    (raises — a NULL would silently sort nowhere). The offsets collect
-    is BOUNDED (``_MAX_OFFSET_ROWS``): a high-cardinality group column
-    raises a sizing error naming the quantize-upstream remedy instead
-    of silently growing into a driver OOM (VERDICT r5 #3 — the limit
-    probe costs no extra job: the same agg runs, only the fetch is
-    capped). Determinism precondition (as pack_sequences): the offsets
-    pass and the rank pass must see the same input; a (group, prefix)
-    chunk unseen by the offsets pass fails fast (raise_error) instead
-    of silently dropping rows.
+    """``_exact_positions`` in (``group_col``, md5(id|seed), id) order,
+    the rank/running-sum of ``form_batches``, ``curriculum_order``,
+    ``enforce_token_budget``, ``assign_shards_stratified`` and
+    ``interleave_key``. Each group is chunked by the first
+    ``sub_prefix_len`` hex digits of the md5 key: the prefix refines the
+    group value, so (group, prefix) chunks in sorted order ARE the total
+    order, and a degenerate group still spreads over 16^sub_prefix_len
+    window partitions. ``reset_per_group`` restarts the count at each
+    group. Driver-side work is one row per (group value, prefix).
     """
-    spark = df.sparkSession
-    h = F.md5(
-        F.concat_ws("|", F.col(id_col).cast("string"), F.lit(seed))
+    base = df.withColumn(
+        "_h", hash_key(F.col(id_col).cast("string"), seed)
+    ).withColumn("_sub", F.substring("_h", 1, int(sub_prefix_len)))
+    ranked, total, per_group = _exact_positions(
+        base,
+        [group_col, "_sub"],
+        ["_h", id_col],
+        value_col,
+        group_col if reset_per_group else None,
     )
-    base = df.withColumn("_h", h).withColumn(
-        "_sub", F.substring("_h", 1, int(sub_prefix_len))
-    )
-    agg_expr = (
-        F.count(F.lit(1)) if value_col is None else F.sum(value_col)
-    )
-    counts = (
-        base.groupBy(group_col, "_sub")
-        .agg(agg_expr.alias("_n"))
-        .limit(_MAX_OFFSET_ROWS + 1)
-        .collect()
-    )
-    if len(counts) > _MAX_OFFSET_ROWS:
-        raise ValueError(
-            f"_subrange_rank: the offsets pass produced more than "
-            f"{_MAX_OFFSET_ROWS} (group, prefix) rows — {group_col!r} "
-            "has too many distinct values for an exact driver-side "
-            "offsets table. Quantize the group metric upstream (e.g. "
-            "bucket a continuous score into bounded integer bins, as "
-            "curriculum_order's contract requires) and retry."
-        )
-    if any(r[group_col] is None for r in counts):
-        raise ValueError(
-            f"_subrange_rank: NULL values in {group_col!r} — rank them "
-            "explicitly (filter or sentinel) before ranking"
-        )
-    rows, acc, per_group = [], 0, {}
-    for r in sorted(counts, key=lambda r: (r[group_col], r["_sub"])):
-        g = r[group_col]
-        off = per_group.get(g, 0) if reset_per_group else acc
-        rows.append((g, r["_sub"], off))
-        n = int(r["_n"] or 0)
-        per_group[g] = off + n
-        acc += n
-    gtype = df.schema[group_col].dataType.simpleString()
-    offsets = local_table(spark, rows, f"{group_col} {gtype}, _sub string, _off long")
-    w = Window.partitionBy(group_col, "_sub").orderBy("_h", id_col)
-    if value_col is None:
-        local = F.row_number().over(w) - 1
-    else:
-        local = F.sum(F.col(value_col).cast("long")).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        )
-    # a chunk absent from the offsets pass == the input changed between
-    # the two jobs (pack_sequences' fail-fast contract, not a silent drop)
-    off = F.when(
-        F.col("_off").isNull(),
-        F.raise_error(
-            F.concat(
-                F.lit("_subrange_rank: ("),
-                F.col(group_col).cast("string"),
-                F.lit(", "),
-                F.col("_sub"),
-                F.lit(
-                    ") absent from the offsets pass — the input changed "
-                    "between the two jobs (see the determinism "
-                    "precondition)"
-                ),
-            )
-        ).cast("long"),
-    ).otherwise(F.col("_off"))
-    ranked = (
-        base.join(F.broadcast(offsets), [group_col, "_sub"], "left")
-        .withColumn("_pos", (off + local).cast("long"))
-        .drop("_h", "_sub", "_off")
-    )
-    return ranked, acc, per_group
+    return ranked.drop("_h", "_sub"), total, per_group
 
 
 def form_batches(
@@ -577,10 +553,8 @@ def form_batches(
     like ``assign_shards``' within-shard order; the final (possibly
     short) batch per bucket holds the rank tail.
 
-    Partition-count independence + scale shape: the within-bucket rank
-    is ``_subrange_rank`` with per-group offset reset — see its
-    docstring for the prefix-property correctness argument, the
-    no-single-task-window guarantee, and the determinism precondition.
+    Scale shape: the within-bucket rank is ``_subrange_rank`` with
+    per-group reset (see there).
     """
     if int(batch_size) <= 0:
         # div/pmod by 0 would emit NULL batch ids silently, not error
@@ -659,9 +633,7 @@ def curriculum_order(
     ranking on it.
 
     Scale shape: ``_subrange_rank`` WITHOUT per-group reset — the
-    global rank; see its docstring for the prefix-property correctness
-    argument, the degenerate-metric spread, and the determinism
-    precondition.
+    global rank (see there).
     """
     if n_phases <= 0:
         raise ValueError("n_phases must be positive")
@@ -764,10 +736,8 @@ def enforce_token_budget(df: DataFrame, budget) -> DataFrame:
     documents).
 
     Scale shape: ``_subrange_rank`` in VALUE-SUM mode with per-group
-    reset — see its docstring for the prefix-property argument, the
-    no-single-task-window guarantee, the fail-fast two-job drift
-    contract, and the driver-work bound (group cardinality x 256 rows:
-    sources/domains, not documents). The group column's type is taken
+    reset (see there); driver work is group cardinality x 256 rows
+    (sources/domains, not documents). The group column's type is taken
     from the schema, so integer domain ids work as well as strings.
     """
     spark = df.sparkSession

@@ -63,6 +63,9 @@ SPAN_FIELDS = [
 # the only trace key downstream operators group and join on
 TRACE_KEY = ["trace_k1", "trace_k2"]
 
+# the tokenized row every source yields and the parser reads (FIXTURES.md §1)
+TOKENIZED_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
+
 PARSED_DDL = (
     "trace_k1 long, trace_k2 long, "
     "trace_id string, span_id string, parent_span_id string, "

@@ -22,13 +22,11 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import ClassVar
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from otel_tail_sampler_spark.functions.hashing import hash_frac
-
-# salt buckets of apply_rate_limit's first (salted) ranking level
-RATE_LIMIT_SALT_BUCKETS = 64
+from otel_tail_sampler_spark.functions.hashing import hash_frac, hash_key
+from otel_tail_sampler_spark.functions.ranking import top_per_key
 
 KEEP, DROP, OVERFLOW, MALFORMED = "keep", "drop", "overflow", "malformed"
 
@@ -312,56 +310,18 @@ def apply_rate_limit(decided: DataFrame, key: str, limit: int) -> DataFrame:
     smallest md5(trace_id||'rate_limit') per key survive (md5-hex ordering,
     not xxhash64, keeps the selection engine-portable).
 
-    Batch analog of the reference's token bucket (state.rs:629-682),
-    implemented as a TWO-LEVEL limit so no single task ever sees a whole hot
-    key (a window over a bare low-cardinality key funnels every kept trace of
-    a hot service through one task forever — AQE skew handling applies to
-    joins/aggregations, not windows):
-
-    1. salt level: rank within
-       (key, salt=xxhash64(trace_id) % RATE_LIMIT_SALT_BUCKETS).
-       A trace ranked > limit inside ANY salt bucket already has ``limit``
-       same-key traces with smaller md5, so it is provably outside the global
-       top-``limit`` — eliminated without ever co-locating the full key.
-    2. exact level: the survivors (<= limit * buckets per key) get the
-       global per-key rank. Input to this window is bounded by the limit, not
-       by the key's row count, so the single-task stage is O(limit * buckets).
-
-    The two stages share one exchange (the salted shuffle is reused across
-    branches); the result is exactly the global top-``limit`` selection and
-    is independent of partitioning.
-
-    Ranks are ``dense_rank`` over (md5, trace_id): every row of one trace
-    gets that trace's rank, so the limit applies unchanged to per-span
-    rows (the one-pass route) and, on one-row-per-trace frames, equals a
-    row number.
+    Batch analog of the reference's token bucket (state.rs:629-682), as
+    ``functions.ranking.top_per_key``'s two-level limit (no single task
+    ever sees a whole hot key). Ranks are ``dense_rank`` over (md5,
+    trace_id): every row of one trace gets that trace's rank, so the
+    limit applies unchanged to per-span rows (the one-pass route) and,
+    on one-row-per-trace frames, equals a row number.
     """
-    ordv = F.md5(F.concat_ws("|", F.col("trace_id"), F.lit("rate_limit")))
-    aux = ["_rl_salt", "_r1", "_r2"]
-
+    order = [hash_key("trace_id", "rate_limit"), F.col("trace_id")]
     kept = decided.filter(F.col("decision") == KEEP)
     others = decided.filter(F.col("decision") != KEEP)
-
-    w1 = Window.partitionBy(key, "_rl_salt").orderBy(ordv, F.col("trace_id"))
-    lvl1 = kept.withColumn(
-        "_rl_salt", F.pmod(F.xxhash64("trace_id"), F.lit(RATE_LIMIT_SALT_BUCKETS))
-    ).withColumn("_r1", F.dense_rank().over(w1))
-
-    w2 = Window.partitionBy(key).orderBy(ordv, F.col("trace_id"))
-    ranked = lvl1.filter(F.col("_r1") <= limit).withColumn(
-        "_r2", F.dense_rank().over(w2)
+    top, rest = top_per_key(kept, key, order, limit, F.dense_rank)
+    overflow = rest.withColumns(
+        {"decision": F.lit(OVERFLOW), "decision_policy": F.lit("rate_limit")}
     )
-
-    kept_final = ranked.filter(F.col("_r2") <= limit).drop(*aux)
-    overflow = (
-        lvl1.filter(F.col("_r1") > limit)
-        .drop(*aux)
-        .unionByName(ranked.filter(F.col("_r2") > limit).drop(*aux))
-        .withColumns(
-            {
-                "decision": F.lit(OVERFLOW),
-                "decision_policy": F.lit("rate_limit"),
-            }
-        )
-    )
-    return kept_final.unionByName(overflow).unionByName(others)
+    return top.unionByName(overflow).unionByName(others)

@@ -56,6 +56,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from otel_tail_sampler_spark.functions.hashing import hash_key
+
 _DEFAULT_BUCKETS = 1 << 16
 # fixed-point scale of the DSIR importance ratio: S = 2^DSIR_SCALE_BITS is 1.0
 DSIR_SCALE_BITS = 20
@@ -334,13 +336,7 @@ def dsir_sample(
     r_fp = int(round(rate * (1 << 20)))
     scored = dsir_score(df, model, n_buckets=n_buckets, keep_cols=keep_cols)
     h32 = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws("|", F.col("doc_id").cast("string"), F.lit("dsir"))
-            ),
-            1,
-            8,
-        ),
+        F.substring(hash_key(F.col("doc_id").cast("string"), "dsir"), 1, 8),
         16,
         10,
     ).cast("long")

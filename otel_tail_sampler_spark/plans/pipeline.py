@@ -32,6 +32,7 @@ from otel_tail_sampler_spark.operators.enrichment import mark_exported
 from otel_tail_sampler_spark.operators.force_rules import active_rules, apply_force_rules
 from otel_tail_sampler_spark.operators.parser import (
     SPAN_FIELDS,
+    TOKENIZED_DDL,
     TRACE_KEY,
     hex_from_keys,
     parse_spans_jvm,
@@ -57,9 +58,6 @@ class PipelineResult:
     decided: DataFrame  # traces + policy flags + decision (lazy)
     decisions: DataFrame  # one routed row per trace: key, decision, policy (lazy)
     routed: DataFrame
-
-
-TOKENIZED_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
 
 
 def read_tokenized(spark: SparkSession, path: str) -> DataFrame:

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.operators.assembly import summary_aggs, summary_columns
-from otel_tail_sampler_spark.operators.parser import parse_spans_jvm
+from otel_tail_sampler_spark.operators.parser import TOKENIZED_DDL, parse_spans_jvm
 from otel_tail_sampler_spark.operators.policies import SamplerConfig, decide
 from otel_tail_sampler_spark.streaming.buckets import bucket_of, pin_state_buckets
 
@@ -50,11 +50,7 @@ def read_tokenized_stream(
 ) -> DataFrame:
     """File-source stream over the tokenized table directory (S1 streaming
     analog; a Kafka deployment swaps this for readStream.format('kafka'))."""
-    reader = (
-        spark.readStream.schema(
-            "doc_id string, tokens array<int>, n_tok int, source string"
-        )
-    )
+    reader = spark.readStream.schema(TOKENIZED_DDL)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
@@ -70,10 +66,7 @@ def decode_kafka_value(raw: DataFrame) -> DataFrame:
     JSON decodes to all-NULL fields, which the parser's malformed sink
     then routes, mirroring the reference's skip-on-decode-error."""
     return raw.select(
-        F.from_json(
-            F.col("value").cast("string"),
-            "doc_id string, tokens array<int>, n_tok int, source string",
-        ).alias("r")
+        F.from_json(F.col("value").cast("string"), TOKENIZED_DDL).alias("r")
     ).select("r.*")
 
 

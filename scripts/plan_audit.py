@@ -98,7 +98,7 @@ def main() -> None:
         "Two-level rate limit",
         "What to check: the window over the bare (skewable) key appears only\n"
         "ABOVE the `_r1 <= limit` filter (bounded input); the full kept set\n"
-        "is only ever windowed per (key, _rl_salt) — no single-task hot key.",
+        "is only ever windowed per (key, _salt) — no single-task hot key.",
         apply_rate_limit(
             res.decided.select(
                 "trace_id", "service_name", "decision", "decision_policy"
@@ -180,11 +180,13 @@ def main() -> None:
 
     section(
         "Sequence packing",
-        "What to check: exactly TWO exchanges — the hash partition on the\n"
-        "DETERMINISTIC bucket id feeding the per-bucket offset window (pure\n"
-        "function of doc_id + sampled-once boundary literals; no\n"
+        "What to check: exactly TWO shuffle exchanges — the hash partition\n"
+        "on the DETERMINISTIC bucket id feeding the per-bucket offset window\n"
+        "(pure function of doc_id + sampled-once boundary literals; no\n"
         "repartitionByRange, no InMemoryRelation pin) and the example-id\n"
-        "aggregation that moves each token once. NO python stage anywhere:\n"
+        "aggregation that moves each token once — plus ONE BroadcastExchange\n"
+        "of the driver-built per-bucket offsets (a LocalTableScan).\n"
+        "NO python stage anywhere:\n"
         "piece-cutting is sequence/explode/slice JVM expressions, and the\n"
         "Generate is per document x example intersection (<= n/max_len + 1\n"
         "rows per doc), never per token.",
@@ -301,15 +303,14 @@ def main() -> None:
     section(
         "Stratified per-group quota sample",
         "What to check: the exchange below the exact per-group window\n"
-        "moves ONLY the <= quota * salt_buckets survivors of the salted\n"
+        "moves ONLY the <= quota * SALT_BUCKETS survivors of the salted\n"
         "first-level rank (group, salt) — a hot group spreads over\n"
-        "salt_buckets tasks and is pre-filtered before any single task\n"
+        "SALT_BUCKETS (64) tasks and is pre-filtered before any single task\n"
         "sees it whole; same scheme as the rate-limit policy. Spark's\n"
         "WindowGroupLimit additionally top-k-prunes map-side before BOTH\n"
         "exchanges.",
         stratified_sample(
-            spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
-            quota=10, salt_buckets=8
+            spark.read.parquet("/root/testdata/sf0.001/documents.parquet"), quota=10
         ),
     )
 

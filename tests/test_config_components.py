@@ -8,7 +8,7 @@ from otel_tail_sampler_spark.config import (
     sampler_config_from_dict,
 )
 from otel_tail_sampler_spark.operators.dedup import dedup_components
-from otel_tail_sampler_spark.operators.policies import decide
+from otel_tail_sampler_spark.operators.policies import SamplerConfig, decide
 
 CONFIG = {
     "sampling": {
@@ -53,6 +53,17 @@ def test_config_round_trip(spark):
     df = spark.createDataFrame(rows, cols)
     out = decide(df, cfg).collect()[0]
     assert out["decision"] == "keep" and out["decision_policy"] == "payments"
+
+
+def test_config_defaults_and_unknown_keys():
+    # a key the dict lacks keeps SamplerConfig's default, including the
+    # 30 s latency threshold of a partial latency block
+    assert sampler_config_from_dict({}) == SamplerConfig()
+    cfg = sampler_config_from_dict({"sampling": {"latency": {"sample_rate": 0.5}}})
+    assert cfg.latency.threshold_ms == 30_000 and cfg.latency.sample_rate == 0.5
+    # a misspelled key raises instead of falling back to the default
+    with pytest.raises(TypeError, match="treshold_ms"):
+        sampler_config_from_dict({"sampling": {"latency": {"treshold_ms": 500}}})
 
 
 def test_dedup_components_basic(spark):

@@ -212,10 +212,15 @@ RANK_ROWS = st.lists(
 def test_subrange_rank_matches_scalar_order(spark, rows, reset, use_value):
     """Property: _subrange_rank's reconstructed _pos equals the scalar
     rank / inclusive running sum over the (group[, global], md5, id)
-    total order, for every combination of reset and value mode."""
+    total order, for every combination of reset and value mode; and
+    _exact_positions over one chunk column, as pack_sequences calls it,
+    gives the exclusive running sum over the (group, id) order."""
     import hashlib
 
-    from otel_tail_sampler_spark.operators.packing import _subrange_rank
+    from otel_tail_sampler_spark.operators.packing import (
+        _exact_positions,
+        _subrange_rank,
+    )
 
     df = spark.createDataFrame(
         rows, "doc_id string, grp int, val int"
@@ -249,6 +254,17 @@ def test_subrange_rank_matches_scalar_order(spark, rows, reset, use_value):
         glob += q
     assert got == want
     assert got_total == glob  # the returned grand total
+
+    packed, _, _ = _exact_positions(df, ["grp"], ["doc_id"], "val", None)
+    got = {
+        r["doc_id"]: r["_off"]
+        for r in packed.selectExpr("doc_id", "_pos - val AS _off").collect()
+    }
+    want, run = {}, 0
+    for did, _g, v in sorted(rows, key=lambda t: (t[1], t[0])):
+        want[did] = run  # exclusive running sum
+        run += v
+    assert got == want
 
 
 # ---------------------------------------------------------------------------

@@ -20,9 +20,10 @@ function sets it: by keyword, by a positional argument at or past its index, or 
 ``*args``/``**kw`` (which counts as setting every parameter).
 ``functools.partial(f, ...)`` counts as a call of ``f``. Each field with a
 default of a library dataclass counts as a parameter too. It is passed by
-a constructor keyword, a positional argument at its index, ``**`` or a
-``dataclasses.replace(x, field=)``; a ``ClassVar`` is not a field. Calls
-are matched to functions by name only, so functions that share a name
+a constructor keyword, a positional argument at its index, a constructor
+``**`` or a ``dataclasses.replace(x, field=)``; a ``**`` into ``replace``
+names no class, so it sets nothing, and a ``ClassVar`` is not a field.
+Calls are matched to functions by name only, so functions that share a name
 across modules are matched together; that errs towards keeping a
 parameter.
 
@@ -31,6 +32,11 @@ top-level class, must be read by its body: a ``Name`` load of it, which
 counts in a nested def or lambda too. A method's ``self`` or ``cls`` is
 exempt, and so is every nested def, whose signature Spark fixes
 (``fn(key, pdfs, state)``).
+
+The md5 order key ``md5(concat_ws("|", key, seed))`` is written once, as
+``functions.hashing.hash_key``: no other file of the library, ``scripts/``,
+``perfbench/`` or the benchmark files calls ``md5`` on a ``"|"``
+``concat_ws``.
 
 Every import in the library, ``scripts/`` and ``perfbench/`` must be
 used: its bound name is referenced in the module, named in ``__all__``,
@@ -51,6 +57,8 @@ PACKAGE = "otel_tail_sampler_spark"
 CALLER_DIRS = (PACKAGE, "scripts", "perfbench")
 CALLER_FILES = ("bench.py", "bench_extra.py", "__spark_entry__.py")
 TESTS = "tests/"
+# the one module that spells the md5 order key
+ORDER_KEY_HOME = f"{PACKAGE}/functions/hashing.py"
 
 # (module, function, parameter) -> why the option has no non-test caller.
 # Each reason is a deployment setting, a clock injection, a job input or a
@@ -241,7 +249,11 @@ def never_passed(trees: dict[str, ast.Module]) -> set[tuple[str, str, str]]:
             for npos, kws, star, bound in calls.get(name, ()):
                 # obj.method(a) fills the parameter after self
                 off = 1 if is_method and bound and fname != "__init__" else 0
-                if star or pname in kws or (idx is not None and npos + off > idx):
+                if (
+                    (star and name != "replace")
+                    or pname in kws
+                    or (idx is not None and npos + off > idx)
+                ):
                     passed.add((path, fname, pname))
                     break
             else:
@@ -313,6 +325,28 @@ def unused_imports(trees: dict[str, ast.Module]) -> set[tuple[str, str]]:
             else:
                 continue
             out |= {(path, b) for b in bound if b not in used}
+    return out
+
+
+def inline_order_keys(trees: dict[str, ast.Module]) -> set[tuple[str, int]]:
+    """(module, line) of every ``md5(concat_ws("|", ...))`` call outside
+    ``ORDER_KEY_HOME``."""
+    out = set()
+    for path, tree in trees.items():
+        if path == ORDER_KEY_HOME:
+            continue
+        for n in ast.walk(tree):
+            if not (isinstance(n, ast.Call) and _callee_name(n.func) == "md5"):
+                continue
+            inner = n.args[0] if n.args else None
+            if (
+                isinstance(inner, ast.Call)
+                and _callee_name(inner.func) == "concat_ws"
+                and inner.args
+                and isinstance(inner.args[0], ast.Constant)
+                and inner.args[0].value == "|"
+            ):
+                out.add((path, n.lineno))
     return out
 
 
@@ -436,6 +470,14 @@ def test_every_import_is_used():
     )
 
 
+def test_order_key_is_written_once():
+    inline = sorted(inline_order_keys(_repo()))
+    assert not inline, (
+        'md5(concat_ws("|", ...)) outside functions/hashing.py — call '
+        "hash_key instead:\n" + "\n".join(f"  {m}:{n}" for m, n in inline)
+    )
+
+
 def test_audit_rules_on_planted_sources():
     lib = f"{PACKAGE}/operators/planted.py"
     src = {
@@ -486,10 +528,11 @@ def test_audit_rules_on_planted_sources():
     assert {("op", "b"), ("op", "e")} <= got
 
     # dataclass fields: a positional argument at the field's index, a
-    # keyword, dataclasses.replace and ** set a field; a ClassVar and a
-    # field without a default are no option. The import rule: json and
-    # sys are bound and never used; a string annotation, an attribute
-    # base and __all__ use a name, and __future__ is exempt.
+    # keyword, dataclasses.replace and a constructor ** set a field, a **
+    # into replace does not; a ClassVar and a field without a default are
+    # no option. The import rule: json and sys are bound and never used; a
+    # string annotation, an attribute base and __all__ use a name, and
+    # __future__ is exempt.
     dc = {
         lib: (
             "from dataclasses import dataclass\n"
@@ -517,6 +560,7 @@ def test_audit_rules_on_planted_sources():
             "Cfg(1, 2, kw=3)\n"
             "dataclasses.replace(c, rep=4)\n"
             "Spread(**opts)\n"
+            "dataclasses.replace(c, **opts)\n"
         ),
     }
     assert {(f, p) for _m, f, p in never_passed(_parse(dc))} == {("Cfg", "unset")}
@@ -547,3 +591,17 @@ def test_audit_rules_on_planted_sources():
     assert unused_imports(_parse(dc)) == {
         (lib, "json"), ("scripts/planted.py", "sys")
     }
+
+    # the order-key rule: md5 over a "|" concat_ws, as a function or a
+    # method, anywhere outside hashing.py; another separator, a bare md5
+    # and the home module are no finding
+    ok = {
+        ORDER_KEY_HOME: 'F.md5(F.concat_ws("|", key, F.lit(seed)))\n',
+        lib: (
+            'a = F.md5(F.concat_ws("|", F.col("id"), F.lit("s")))\n'
+            'b = F.md5(F.concat_ws(",", F.col("id")))\n'
+            'c = F.md5(F.col("text"))\n'
+        ),
+        "scripts/planted.py": 'md5(concat_ws("|", x, lit("s")))\n',
+    }
+    assert inline_order_keys(_parse(ok)) == {(lib, 1), ("scripts/planted.py", 1)}

@@ -235,8 +235,9 @@ def test_pack_sequences_is_pure_jvm(spark, small_dataset):
     efficiency ~0.58 vs 0.90 for a JVM movement control — the corpus
     crossed the JVM<->Python socket twice), so pieces are cut with
     window-cumsum + sequence/explode/slice expressions. Exactly two
-    exchanges: the bucket partition under the offset window and the
-    example-id assembly.
+    shuffle exchanges, the bucket partition under the offset window and
+    the example-id assembly, and one broadcast of the driver-built
+    offsets table.
 
     The ranked-order operators beside it stay zero-Python too: their
     driver-built offsets, budget and stride tables plan a LocalTableScan,
@@ -248,12 +249,28 @@ def test_pack_sequences_is_pure_jvm(spark, small_dataset):
         pack_sequences,
     )
 
+    import re
+
     df = spark.read.parquet(small_dataset["tokenized"])
     packed = pack_sequences(df, max_len=64)
     plan = _explain(packed)
     assert "Window" in plan
-    # formatted explain renders each node twice (tree + detail heading)
-    assert plan.count("Exchange") <= 4
+    # formatted explain's detail section: one "(k) <node>" block per node,
+    # whose Arguments line names an exchange's partitioning
+    exchanges = []
+    for block in plan.split("\n\n"):
+        m = re.match(r"\(\d+\) (\w*Exchange)\b", block.strip())
+        if m:
+            args = re.search(r"^Arguments: (.*)$", block, re.M)
+            exchanges.append((m.group(1), args.group(1)))
+    shuffled = sorted(
+        re.match(r"hashpartitioning\((\w+)#\d+L?, \d+\)", a).group(1)
+        for n, a in exchanges
+        if n == "Exchange"
+    )
+    assert shuffled == ["_pid", "example_id"], exchanges
+    assert [n for n, _ in exchanges if n != "Exchange"] == ["BroadcastExchange"]
+    assert re.search(r"BroadcastExchange \(\d+\)\n\s*\+- LocalTableScan", plan)
     sources = sorted(r["source"] for r in df.select("source").distinct().collect())
     for name, out in {
         "pack_sequences": packed,
@@ -376,18 +393,20 @@ def test_scan_prunes_tokens_for_counts(spark, small_dataset):
     # at least one scan must have dropped doc_id (proves pruning reaches scans)
     assert "ReadSchema" in plan
 
-def test_stratified_sample_windows_are_salted_then_bounded(spark):
+def test_stratified_sample_windows_are_salted_then_bounded(spark, monkeypatch):
     """stratified_sample's scale contract: the window over the bare
     (skewable) group key runs only above the `_r1 <= quota` filter, and
     the bottom-most exchange partitions on (group, salt) — a hot group
     never funnels whole through one task (same scheme as the rate-limit
     policy guard)."""
+    from otel_tail_sampler_spark.functions import ranking
     from otel_tail_sampler_spark.operators.corpus import stratified_sample
 
     df = spark.createDataFrame(
         [(i, f"s{i % 3}") for i in range(30)], "doc_id long, source string"
     )
-    plan = _explain(stratified_sample(df, quota=2, salt_buckets=4))
+    monkeypatch.setattr(ranking, "SALT_BUCKETS", 4)
+    plan = _explain(stratified_sample(df, quota=2))
     assert plan.count("Window") >= 2
     # detail sections list nodes bottom-up: the FIRST hashpartitioning is
     # the bottom exchange and must be the salted one; the exact-rank

@@ -208,7 +208,7 @@ def test_rate_limit_two_level_exact_and_plan_shape(spark, monkeypatch):
     the bare key sits above the _r1 <= limit filter (bounded input)."""
     import re
 
-    from otel_tail_sampler_spark.operators import policies
+    from otel_tail_sampler_spark.functions import ranking
     from otel_tail_sampler_spark.operators.policies import apply_rate_limit
 
     rows = [_row(f"T{i:03d}", err=True, errs=1) for i in range(60)]
@@ -221,7 +221,7 @@ def test_rate_limit_two_level_exact_and_plan_shape(spark, monkeypatch):
     # brute-force expected winners: 7 smallest md5(trace_id||'rate_limit')
     got_sets = []
     for buckets in (1, 4, 64):
-        monkeypatch.setattr(policies, "RATE_LIMIT_SALT_BUCKETS", buckets)
+        monkeypatch.setattr(ranking, "SALT_BUCKETS", buckets)
         out = apply_rate_limit(df, "service_name", 7)
         got_sets.append(
             frozenset(
@@ -248,7 +248,7 @@ def test_rate_limit_two_level_exact_and_plan_shape(spark, monkeypatch):
     blocks = plan.split("Window ")
     for blk in blocks[1:]:
         spec = blk.split("\n")[0]
-        if "_rl_salt" not in spec:
+        if "_salt" not in spec:
             assert re.search(r"_r1#\d+ <= 7", blk), f"unsalted window w/o cap:\n{blk[:400]}"
 
 

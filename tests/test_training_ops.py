@@ -1177,14 +1177,16 @@ def test_chunk_documents_is_pure_scan(spark):
     assert "Exchange" not in plan and "InPandas" not in plan
 
 
-def test_stratified_sample_exact_quota_and_reference(spark, docs):
+def test_stratified_sample_exact_quota_and_reference(spark, docs, monkeypatch):
     """Per-group count == min(quota, group size); the two-level salted
     selection equals the naive single-window reference exactly."""
     from pyspark.sql import Window
 
+    from otel_tail_sampler_spark.functions import ranking
     from otel_tail_sampler_spark.operators.corpus import stratified_sample
 
-    got = stratified_sample(docs, quota=7, salt_buckets=8).toPandas()
+    monkeypatch.setattr(ranking, "SALT_BUCKETS", 8)
+    got = stratified_sample(docs, quota=7).toPandas()
     sizes = docs.groupBy("source").count().toPandas()
     want_n = {r["source"]: min(7, r["count"]) for _, r in sizes.iterrows()}
     got_n = got.groupby("source")["doc_id"].count().to_dict()
