@@ -149,12 +149,15 @@ def pack_sequences(
     n = F.col("_len").cast("long")
     first_ex = F.floor(off / max_len)
     last_ex = F.floor((off + n - F.lit(1)) / max_len)
-    ks = F.when(
-        n > 0, F.sequence(first_ex, last_ex)
-    ).otherwise(F.array().cast("array<long>"))
-    with_off = ranked.select("_t", off.alias("_off"), n.alias("_n"), ks.alias("_ks"))
+    # without empty documents every sequence is non-empty: explode_outer
+    # emits what explode would, minus the size(_ks) > 0 Filter Catalyst
+    # infers from explode, which builds each sequence a second time
+    with_off = ranked.filter(F.col("_len") > 0).select(
+        "_t", off.alias("_off"), n.alias("_n"),
+        F.sequence(first_ex, last_ex).alias("_ks"),
+    )
     exploded = with_off.select(
-        "_t", "_off", "_n", F.explode("_ks").alias("example_id")
+        "_t", "_off", "_n", F.explode_outer("_ks").alias("example_id")
     )
     gs = F.greatest(F.col("_off"), F.col("example_id") * max_len)
     ge = F.least(F.col("_off") + F.col("_n"), (F.col("example_id") + 1) * max_len)

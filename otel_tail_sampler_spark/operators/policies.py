@@ -321,7 +321,7 @@ def apply_rate_limit(decided: DataFrame, key: str, limit: int) -> DataFrame:
     kept = decided.filter(F.col("decision") == KEEP)
     others = decided.filter(F.col("decision") != KEEP)
     top, rest = top_per_key(kept, key, order, limit, F.dense_rank)
-    overflow = rest.withColumns(
+    overflow = rest().withColumns(
         {"decision": F.lit(OVERFLOW), "decision_policy": F.lit("rate_limit")}
     )
     return top.unionByName(overflow).unionByName(others)

@@ -18,9 +18,10 @@ unexpired traces until shutdown).
 
 The second strategy (``assemble_with_state``) keeps the reference's
 running TraceState per trace: a partial summary in bucketed
-applyInPandasWithState state, which each micro-batch's spans fold into
-through one vectorized partial-aggregate kernel and which is emitted
-when the watermark passes the trace's inactivity deadline.
+applyInPandasWithState state (one Arrow table of ``PARTIAL`` rows per
+bucket), which each micro-batch's spans fold into through one vectorized
+partial-aggregate kernel and which is emitted when the watermark passes
+the trace's inactivity deadline.
 
 The parse stage is the batch job's JVM expression parser
 (parser.parse_spans_jvm), pruned to the fields assembly reads; the
@@ -31,7 +32,6 @@ session-window strategy reuses the batch TraceSummary aggregates
 from __future__ import annotations
 
 import os
-from itertools import chain
 
 import numpy as np
 import pandas as pd
@@ -121,21 +121,25 @@ def assemble_sessions(spans: DataFrame, gap_seconds: int = 30) -> DataFrame:
     )
 
 
-# Bucketed state: ONE state row per hash bucket holding the parallel-array
-# trace map (the reference's shard-local HashMap<trace_id, TraceState>,
-# memory.rs:185-228, expressed as Spark state). Each trace's entry is a
-# partial of its summary. `dl` is each trace's armed deadline
-# (max(last_ts + gap, watermark + 1) at its last update) — the exact
-# per-trace timeout the one-row-per-trace formulation kept in Spark's own
-# timer, persisted here because the bucket carries many traces with
-# different deadlines. `rts = 2^63-1 AND rsid = ''` encodes "no root seen"
-# (a real root at ts = 2^63-1 is outside any clock this pipeline parses).
-BUCKET_STATE_SCHEMA = (
-    "k1 array<long>, k2 array<long>, sc array<long>, ec array<long>, "
-    "mx array<long>, mn array<long>, mxts array<long>, fts array<long>, "
-    "fsid array<string>, fsvc array<string>, rts array<long>, "
-    "rsid array<string>, dl array<long>, ops array<array<string>>"
-)
+# Bucketed state: ONE state row per hash bucket holding the bucket's trace
+# map (the reference's shard-local HashMap<trace_id, TraceState>,
+# memory.rs:185-228, expressed as Spark state) as one Arrow table of
+# PARTIAL rows, one per trace: a partial of its summary. `dl` is each
+# trace's armed deadline (max(last_ts + gap, watermark + 1) at its last
+# update) — the exact per-trace timeout the one-row-per-trace formulation
+# kept in Spark's own timer, persisted here because the bucket carries
+# many traces with different deadlines. `rts = 2^63-1 AND rsid = ''`
+# encodes "no root seen" (a real root at ts = 2^63-1 is outside any clock
+# this pipeline parses). Spark stores the table's IPC stream in one binary
+# field and checks only that field, so _from_state checks the stream's.
+PARTIAL = pa.schema([
+    ("k1", pa.int64()), ("k2", pa.int64()), ("sc", pa.int64()),
+    ("ec", pa.int64()), ("mx", pa.int64()), ("mn", pa.int64()),
+    ("mxts", pa.int64()), ("fts", pa.int64()), ("fsid", pa.string()),
+    ("fsvc", pa.string()), ("rts", pa.int64()), ("rsid", pa.string()),
+    ("dl", pa.int64()), ("ops", pa.list_(pa.string())),
+])
+BUCKET_STATE_SCHEMA = "partials binary"
 
 _NO_ROOT_TS = (1 << 63) - 1
 
@@ -146,55 +150,29 @@ SUMMARY_SCHEMA = (
     "operations array<string>, root_span_id string"
 )
 
-# Partials in memory: a dict of the state row's fields as parallel
-# columns — int64 arrays, object arrays for the strings, and ``ops`` as a
-# pyarrow list<string> array.
-_FIELDS = tuple(c.split()[0] for c in BUCKET_STATE_SCHEMA.split(", "))
-_STRINGS = ("fsid", "fsvc", "rsid")
 _KEY = np.dtype((np.void, 16))  # a (k1, k2) pair as one comparable value
+_EMPTY = PARTIAL.empty_table()
 
 
-def _from_state(value: tuple) -> dict:
-    p = {
-        f: np.asarray(v, object if f in _STRINGS else np.int64)
-        for f, v in zip(_FIELDS[:-1], value)
-    }
-    lens = np.fromiter(map(len, value[-1]), np.int64, len(value[-1]))
-    p["ops"] = pa.ListArray.from_arrays(
-        pa.array(np.r_[0, np.cumsum(lens)], pa.int32()),
-        pa.array(list(chain.from_iterable(value[-1])), pa.string()),
-    )
-    return p
+def _from_state(value: tuple) -> pa.Table:
+    t = pa.ipc.open_stream(value[0]).read_all()
+    if t.schema != PARTIAL:
+        raise ValueError(f"bucket state holds\n{t.schema}\nnot PARTIAL\n{PARTIAL}")
+    return t
 
 
-def _to_state(p: dict) -> tuple:
-    names = p["ops"].values.to_numpy(zero_copy_only=False).tolist()
-    off = p["ops"].offsets.to_numpy().tolist()
-    ops = list(map(names.__getitem__, map(slice, off[:-1], off[1:])))
-    return (*(p[f].tolist() for f in _FIELDS[:-1]), ops)
+def _to_state(t: pa.Table) -> tuple:
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, PARTIAL) as w:
+        w.write_table(t)
+    return (sink.getvalue().to_pybytes(),)
 
 
-_EMPTY = _from_state(([],) * len(_FIELDS))
+def _keys(t: pa.Table) -> np.ndarray:
+    return np.stack([t["k1"].to_numpy(), t["k2"].to_numpy()], 1).view(_KEY).ravel()
 
 
-def _take(p: dict, mask: np.ndarray) -> dict:
-    idx = np.flatnonzero(mask)
-    return {f: v.take(idx) for f, v in p.items()}
-
-
-def _cat(a: dict, b: dict) -> dict:
-    return {
-        f: pa.concat_arrays([a[f], b[f]]) if f == "ops"
-        else np.concatenate([a[f], b[f]])
-        for f in _FIELDS
-    }
-
-
-def _keys(p: dict) -> np.ndarray:
-    return np.stack([p["k1"], p["k2"]], 1).view(_KEY).ravel()
-
-
-def _lift(pdf) -> dict:
+def _lift(pdf) -> pa.Table:
     """A micro-batch's spans as one-span partials: each span counts once,
     is its own first span and min/max timestamp, and its own root when it
     has no parent."""
@@ -202,7 +180,7 @@ def _lift(pdf) -> dict:
     ts = pdf["timestamp_ms"].to_numpy(np.int64)
     sid = pdf["span_id"].to_numpy(object)
     root = pdf["parent_span_id"].isna().to_numpy()
-    return {
+    return pa.table({
         "k1": pdf["trace_k1"].to_numpy(np.int64),
         "k2": pdf["trace_k2"].to_numpy(np.int64),
         "sc": np.ones(n, np.int64),
@@ -217,19 +195,20 @@ def _lift(pdf) -> dict:
             pa.array(np.arange(n + 1), pa.int32()),
             pa.array(pdf["operation_name"].to_numpy(object), pa.string()),
         ),
-    }
+    }, schema=PARTIAL)
 
 
-def _fold(p: dict) -> dict:
-    """Merge partials into one per trace key (``dl`` is left to the
-    caller). ONE stable lexsort by (key, fts, fsid) makes every aggregate
+def _fold(t: pa.Table, gap_ms: int, wm: int) -> pa.Table:
+    """Merge partials into one per trace key, armed at max(last_ts + gap,
+    wm + 1). ONE stable lexsort by (key, fts, fsid) makes every aggregate
     a segment read: counts sum, extremes reduce, and a trace's first row
     is its (ts, span_id)-first span, the earlier row winning an exact tie.
     The root is the (rts, rsid)-first partial that saw one; operations
     are the distinct (trace, op) pairs, sorted within a trace."""
-    n = len(p["k1"])
+    n = t.num_rows
     if not n:
-        return p
+        return t
+    p = {f: t[f].to_numpy() for f in PARTIAL.names[:-1]}
     order = np.lexsort((p["fsid"], p["fts"], p["k2"], p["k1"]))
     k1, k2 = p["k1"][order], p["k2"][order]
     new = np.r_[True, (k1[1:] != k1[:-1]) | (k2[1:] != k2[:-1])]
@@ -237,29 +216,32 @@ def _fold(p: dict) -> dict:
     grp = np.empty(n, np.int64)
     grp[order] = np.cumsum(new) - 1
     g = len(starts)
-    out = {f: p[f][order[starts]] for f in ("k1", "k2", "fts", "fsid", "fsvc", "dl")}
+    out = {f: p[f][order[starts]] for f in ("k1", "k2", "fts", "fsid", "fsvc")}
     for f, ufunc in (
         ("sc", np.add), ("ec", np.add), ("mx", np.maximum),
         ("mn", np.minimum), ("mxts", np.maximum),
     ):
         out[f] = ufunc.reduceat(p[f][order], starts)
+    out["dl"] = np.maximum(out["mxts"] + gap_ms, wm + 1)
     cand = np.flatnonzero(p["rts"] != _NO_ROOT_TS)
     cand = cand[np.lexsort((p["rsid"][cand], p["rts"][cand], grp[cand]))]
     rg, at = np.unique(grp[cand], return_index=True)
     out["rts"] = np.full(g, _NO_ROOT_TS, np.int64)
     out["rsid"] = np.full(g, "", object)
     out["rts"][rg], out["rsid"][rg] = p["rts"][cand[at]], p["rsid"][cand[at]]
-    ops = p["ops"]
+    ops = t["ops"].combine_chunks()
     codes, names = pd.factorize(ops.flatten().to_numpy(zero_copy_only=False), sort=True)
     pairs = np.unique(grp[ops.value_parent_indices().to_numpy()] * len(names) + codes)
     out["ops"] = pa.ListArray.from_arrays(
         pa.array(np.searchsorted(pairs // len(names), np.arange(g + 1)), pa.int32()),
         pa.array(names[pairs % len(names)], pa.string()),
     )
-    return out
+    return pa.table(out, schema=PARTIAL)
 
 
-def _step(held: dict, spans: dict, wm: int, gap_ms: int) -> tuple[dict, dict]:
+def _step(
+    held: pa.Table, spans: pa.Table, wm: int, gap_ms: int
+) -> tuple[pa.Table, pa.Table]:
     """One bucket's trigger, as (traces to hold, traces to emit). The held
     traces that ``spans`` touch fold with them, held partials first, and
     re-arm at ``max(last_ts + gap, wm + 1)`` (never in the past — the
@@ -267,21 +249,21 @@ def _step(held: dict, spans: dict, wm: int, gap_ms: int) -> tuple[dict, dict]:
     and those whose deadline the watermark STRICTLY passed fire (Spark's
     timer condition, timeoutTimestamp < watermark)."""
     touched = np.isin(_keys(held), _keys(spans))
-    merged = _fold(_cat(_take(held, touched), spans))
-    merged["dl"] = np.maximum(merged["mxts"] + gap_ms, wm + 1)
-    rest = _take(held, ~touched)
-    fire = rest["dl"] < wm
-    return _cat(_take(rest, ~fire), merged), _take(rest, fire)
+    merged = _fold(pa.concat_tables([held.filter(touched), spans]), gap_ms, wm)
+    rest = held.filter(~touched)
+    fire = rest["dl"].to_numpy() < wm
+    return pa.concat_tables([rest.filter(~fire), merged]), rest.filter(fire)
 
 
 def _dec(csv: str) -> str:
     return bytes(map(int, csv.split(","))).decode("ascii") if csv else ""
 
 
-def _emit_frame(p: dict):
+def _emit_frame(t: pa.Table):
     """SUMMARY_SCHEMA rows of the partials; the code-point CSV names
     decode here, once per distinct value per trace."""
     m = (1 << 64) - 1
+    p = {f: t[f].to_numpy() for f in PARTIAL.names[:-1]}
     return pd.DataFrame({
         "trace_k1": p["k1"],
         "trace_k2": p["k2"],
@@ -296,7 +278,7 @@ def _emit_frame(p: dict):
         "max_duration_ms": p["mx"],
         "min_timestamp_ms": p["mn"],
         "max_timestamp_ms": p["mxts"],
-        "operations": [sorted(map(_dec, o)) for o in p["ops"].to_pylist()],
+        "operations": [sorted(map(_dec, o)) for o in t["ops"].to_pylist()],
         "root_span_id": np.where(p["rts"] != _NO_ROOT_TS, p["rsid"], None),
     })
 
@@ -313,13 +295,14 @@ def assemble_with_state(spans: DataFrame, gap_seconds: int = 30) -> DataFrame:
     traces alike (``_step``): a micro-batch lifts its spans to one-span
     partials, appends them after the held partials of the traces they
     touch and folds the lot with one vectorized kernel (``_fold``), while
-    untouched traces pass through as arrays.
+    untouched traces pass through as rows of the table.
 
     State LAYOUT is the reference's shard-local trace map
     (memory.rs:185-228 keeps ONE HashMap of TraceState per shard, not one
     Redis row per trace): traces hash into buckets and each bucket keys
-    ONE Spark state row holding its traces as parallel arrays. One state
-    row per trace would pay the applyInPandasWithState per-group protocol
+    ONE Spark state row holding its traces as an Arrow table of
+    ``PARTIAL`` rows, as that table's IPC stream in one binary field.
+    One state row per trace would pay the applyInPandasWithState per-group protocol
     cost (state decode, pandas slice, fn call, state encode — measured
     ~10 ms/trace at sf0.1) once per TRACE per micro-batch; bucketing pays
     it once per BUCKET (2x shuffle partitions — sized by the same knob
@@ -357,12 +340,12 @@ def assemble_with_state(spans: DataFrame, gap_seconds: int = 30) -> DataFrame:
         frames = [] if state.hasTimedOut else list(pdfs)
         spans = _lift(pd.concat(frames)) if frames else _EMPTY
         live, fired = _step(held, spans, wm, gap_ms)
-        if len(live["k1"]):
+        if live.num_rows:
             state.update(_to_state(live))
-            state.setTimeoutTimestamp(max(int(live["dl"].min()), wm + 1))
+            state.setTimeoutTimestamp(max(int(live["dl"].to_numpy().min()), wm + 1))
         elif state.exists:
             state.remove()
-        if len(fired["k1"]):
+        if fired.num_rows:
             yield _emit_frame(fired)
 
     return bucketed.groupBy("_bucket").applyInPandasWithState(
@@ -393,6 +376,11 @@ def run_streaming_pipeline(
 
     ``strategy``: 'session_window' (watermarked session aggregation) or
     'state' (applyInPandasWithState per-trace timeout, state.rs:293-325).
+    A 'state' checkpoint holds each bucket's partials as one Arrow IPC
+    stream in a binary field; a checkpoint written with the earlier
+    layout of one array field per partial field does not resume: Spark
+    refuses it at the first batch (STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE).
+    Delete the checkpoint and the output to start over.
 
     ``route_spans_from``: path of the bronze tokenized table. When set, each
     micro-batch also exports the KEPT traces' raw span rows (token arrays

@@ -71,7 +71,7 @@ def test_top_per_key_matches_scalar_sort(spark, rank, rows, limit):
                 df, "key", order, limit, getattr(F, rank)
             )
             both = top.withColumn("_top", F.lit(True)).unionByName(
-                rest.withColumn("_top", F.lit(False))
+                rest().withColumn("_top", F.lit(False))
             )
             got = (Counter(), Counter())
             for r in both.collect():

@@ -304,18 +304,46 @@ def test_state_step_matches_span_by_span_fold():
             fired_ref = {k for k in ref if k not in touched and dl[k] < wm}
 
             held, fired = S._step(held, S._lift(batch), wm, gap)
-            assert set(zip(fired["k1"].tolist(), fired["k2"].tolist())) == fired_ref
+            fired = fired.to_pydict()
+            assert set(zip(fired["k1"], fired["k2"])) == fired_ref
             for k in fired_ref:
                 del ref[k], dl[k]
-            state = S._to_state(held)
+            held = S._from_state(S._to_state(held))
+            h = held.to_pydict()
+            keys = list(zip(h["k1"], h["k2"]))
+            assert len(set(keys)) == len(keys), seed
             got = {
-                (r[0], r[1]): [r[2], r[3], r[4], r[5], r[6], (r[7], r[8]), r[9],
-                               (r[10], r[11]), set(r[13])]
-                for r in zip(*state)
+                k: [sc, ec, mx, mn, mxts, (fts, fsid), fsvc, (rts, rsid), set(ops)]
+                for k, sc, ec, mx, mn, mxts, fts, fsid, fsvc, rts, rsid, ops in zip(
+                    keys, h["sc"], h["ec"], h["mx"], h["mn"], h["mxts"], h["fts"],
+                    h["fsid"], h["fsvc"], h["rts"], h["rsid"], h["ops"],
+                )
             }
             assert got == ref, seed
-            assert dict(zip(zip(state[0], state[1]), state[12])) == dl, seed
-            held = S._from_state(state)
+            assert dict(zip(keys, h["dl"])) == dl, seed
+
+
+def test_state_of_another_schema_raises():
+    """Spark checks only the bucket state's binary field, so the Arrow
+    stream inside it is checked on read: a stream whose schema drops or
+    retypes one PARTIAL field raises a ValueError naming both schemas,
+    instead of folding (or failing deep inside the fold) on it."""
+    import pyarrow as pa
+
+    from otel_tail_sampler_spark.streaming import stream_job as S
+
+    i = S.PARTIAL.get_field_index("dl")
+    for schema in (
+        S.PARTIAL.remove(i),
+        S.PARTIAL.set(i, pa.field("dl", pa.int32())),
+    ):
+        sink = pa.BufferOutputStream()
+        with pa.ipc.new_stream(sink, schema) as w:
+            w.write_table(schema.empty_table())
+        with pytest.raises(ValueError, match="PARTIAL") as e:
+            S._from_state((sink.getvalue().to_pybytes(),))
+        assert str(schema) in str(e.value) and str(S.PARTIAL) in str(e.value)
+    assert S._from_state(S._to_state(S._EMPTY)).equals(S._EMPTY)
 
 
 def test_streaming_routed_keep_export(spark, tmp_path_factory):
