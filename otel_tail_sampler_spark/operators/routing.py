@@ -8,7 +8,8 @@ partitioned write:
     routed = spans + summary OVER (trace key, parse_ok)  # one exchange, no join
                    -> decide() per row                   # narrow
     write routed partitioned by decision  (keep / drop / overflow / malformed)
-                           and bucket      (the exchange's partition)
+                           and bucket      (the exchange's partition,
+                                            Spark's bucket id on the key)
 
 The window is the reference's own model (BufferedSpan/TraceMetadata,
 SURVEY.md §1.1): each span row carries its trace's summary, so the
@@ -33,11 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from otel_tail_sampler_spark.operators.assembly import summary_aggs, summary_columns
-from otel_tail_sampler_spark.operators.force_rules import (
-    active_rules,
-    force_columns,
-    span_flag_aggs,
-)
+from otel_tail_sampler_spark.operators.force_rules import force_columns, span_flag_aggs
 from otel_tail_sampler_spark.operators.parser import SPAN_FIELDS, TRACE_KEY
 from otel_tail_sampler_spark.operators.policies import SamplerConfig, decide
 
@@ -58,7 +55,8 @@ def route_spans(
     passthrough columns (``tokens`` and the other input columns). The
     result is the passthrough columns with the key first, then
     ``parse_ok``, trace_id, decision, decision_policy and ``REP``. ``trace_id`` is null on
-    default drops and malformed rows.
+    default drops and malformed rows. ``force_rules`` arrive active and
+    sorted by priority (force_rules.active_rules, at the run's clock).
 
     The summary aggregates run as windows over (trace key, parse_ok):
     malformed rows (parse_ok=false) share no window with a real trace,
@@ -67,7 +65,7 @@ def route_spans(
     of aborting or vanishing. Catalyst drops every window aggregate that
     no policy, force rule or rate-limit key reads.
     """
-    rules = active_rules(force_rules or [])
+    rules = force_rules or []
     by_trace = Window.partitionBy(*TRACE_KEY, "parse_ok").orderBy("doc_id")
     whole = by_trace.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     fields = {n for n, _ in SPAN_FIELDS} - {*TRACE_KEY, "parse_ok"}
@@ -126,8 +124,9 @@ def write_routed(
     Writing ``partitionBy('decision', 'bucket')`` produces keep/ drop/
     overflow/ malformed/ directories in one job instead of one filtered
     write per sink (one scan, not four), each split by the ``bucket``
-    column (plans.checkpoint.bucket_col, the route's own shuffle
-    partition, so one task writes all of a bucket: one file per sink and
+    column (plans.checkpoint.bucket_col: Spark's bucket id on the trace
+    key, which is the route's own shuffle partition and the silver table's
+    bucket, so one task writes all of a bucket: one file per sink and
     bucket). Iceberg deployments write through
     ``sources.iceberg.write_routed_iceberg`` instead.
 

@@ -6,15 +6,15 @@ reference's analog is its exported:{trace_id} keys across restarts
 (evaluator.rs:358-401); Spark batch has no native per-partition resume
 (SURVEY.md §7.4.5), so the job builds it from idempotent primitives:
 
-* the unit of work is a bucket, the route's own shuffle partition
-  ``pmod(hash(trace_k1, trace_k2, parse_ok), n)`` (``bucket_col``). It is
-  trace-aligned, because the window holds each trace in one partition, so
-  a bucket is decidable alone, and each task of the route writes exactly
-  one bucket of each sink;
+* the unit of work is a bucket, Spark's bucket id on the trace key
+  ``pmod(hash(trace_k1, trace_k2), n)`` (``bucket_col``, also the silver
+  table's). It is trace-aligned, so a bucket is decidable alone, and each
+  task of the route writes exactly one bucket of each sink;
 * a first run takes ``n`` from the session's shuffle partitions and
-  records it. A resume plans the route's exchange at the recorded ``n``,
-  so a changed session partition count neither re-hashes the buckets nor
-  spreads one over several tasks;
+  records it, with the bucket keys among its inputs. Fresh and resumed
+  runs plan the route's one exchange at the recorded ``n``, so a changed
+  session partition count neither re-hashes the buckets nor spreads one
+  over several tasks;
 * ``routed/`` is partitioned by (decision, [day,] bucket). A first run
   overwrites it statically. A resume filters the done buckets out on the
   bucket expression (Catalyst pushes the filter below the exchange, to the
@@ -50,18 +50,18 @@ CHECKPOINT = "_checkpoint.json"
 
 
 def bucket_col(n_buckets: int) -> Column:
-    # the partition id of hashpartitioning(trace_k1, trace_k2, parse_ok, n)
-    return F.pmod(F.hash(*TRACE_KEY, "parse_ok"), F.lit(n_buckets))
+    # the partition id of hashpartitioning(trace_k1, trace_k2, n)
+    return F.pmod(F.hash(*TRACE_KEY), F.lit(n_buckets))
 
 
 def open_checkpoint(spark: SparkSession, out_dir: str, inputs: dict) -> dict:
     """The checkpoint of the unfinished run in ``out_dir``, or a new one at
     the session's shuffle partitions when there is none or the last run
     finished. Raises ValueError when the marker does not read, or when
-    the unfinished run had other ``inputs``: its resume would put two
-    configs' decisions into one ``routed/``."""
+    the unfinished run had other ``inputs`` or bucket keys: its resume
+    would mix two configs' decisions or two bucket functions in ``routed/``."""
     path = os.path.join(out_dir, CHECKPOINT)
-    inputs = json.loads(json.dumps(inputs, sort_keys=True))
+    inputs = json.loads(json.dumps({**inputs, "bucket_keys": TRACE_KEY}, sort_keys=True))
     saved = read_marker(spark, path)
     if saved is None and path_exists(spark, path):
         raise ValueError(

@@ -89,21 +89,21 @@ DECISION_FIELDS = [
 def route(
     tokenized: DataFrame,
     cfg: SamplerConfig,
-    force_rules: list[dict] | None = None,
-    n_buckets: int | None = None,
+    force_rules: list[dict],
+    n_buckets: int,
 ) -> DataFrame:
     """The flagship DAG: ``tokenized`` routed in one pass
     (operators.routing.route_spans), sink columns plus the ``REP`` trace
     marker. The parse is the whole-stage-codegen expression parser over
     ``with_routing_key``'s ungated key, so the DAG has ZERO Python stages;
     Catalyst prunes the parse to the fields the decision reads, and the
-    wide token column passes through untouched. ``n_buckets`` plans the
-    window's one exchange at that many partitions instead of the
-    session's (a resume's recorded bucket count)."""
+    wide token column passes through untouched. The one exchange is
+    ``hashpartitioning(trace_k1, trace_k2, n_buckets)``, so partition
+    ``b`` holds bucket ``b`` (plans.checkpoint.bucket_col); it satisfies
+    the window's clustering on (trace key, parse_ok). ``force_rules``
+    arrive active and sorted by priority."""
     spans = parse_spans_jvm(with_routing_key(tokenized), fields=DECISION_FIELDS)
-    if n_buckets is not None:
-        spans = spans.repartition(n_buckets, *TRACE_KEY, "parse_ok")
-    return route_spans(spans, cfg, force_rules)
+    return route_spans(spans.repartition(n_buckets, *TRACE_KEY), cfg, force_rules)
 
 
 def run_pipeline(
@@ -126,7 +126,8 @@ def run_pipeline(
         if isinstance(input_path, DataFrame)
         else read_tokenized(spark, input_path)
     )
-    marked = route(tokenized, cfg, force_rules)
+    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    marked = route(tokenized, cfg, force_rules, n_buckets)
 
     # assembly side: all span fields of the parse-ok rows, the wide token
     # column decoded into nothing (dropped inside the parse projection)
@@ -244,13 +245,11 @@ def run_and_write(
     n = state["n_buckets"]
     done = sorted(b for p in state["passes"] for b in p["buckets"])
     if len(done) < n:
-        # a resume plans the exchange at the recorded bucket count and
-        # filters the done buckets out below it (the filter is on the
-        # exchange's keys, so Catalyst pushes it down to the scan)
-        marked = route(
-            read_tokenized(spark, input_path), cfg, force_rules,
-            n_buckets=n if done else None,
-        ).withColumn("bucket", bucket_col(n))
+        # fresh and resumed runs plan the exchange at the recorded bucket
+        # count; a resume filters the done buckets out below it (the filter
+        # is on the exchange's keys, so Catalyst pushes it down to the scan)
+        marked = route(read_tokenized(spark, input_path), cfg, force_rules, n)
+        marked = marked.withColumn("bucket", bucket_col(n))
         if done:
             marked = marked.filter(~F.col("bucket").isin(done))
         routed, obs = observe_sinks(marked, cfg)

@@ -3,13 +3,15 @@ re-decide shuffle-free.
 
 The expensive STAGE of the pipeline is the parse (parse_spans_jvm, whose
 per-character name decode runs interpreted); the expensive EXCHANGE is the
-assembly groupBy on (trace_k1, trace_k2). Materializing the
-parsed spans once as a Spark bucketed table on exactly that key makes every
-later pass over them — re-assembly under a new policy config (the common
-operation: rule updates arrive through operators.rule_store), force-rule
-re-evaluation, analytics — scan co-located buckets with NO exchange before
-the aggregation. This is the sandbox-available analog of the reference's
-Iceberg partition spec ``bucket(trace_id, 16)``
+assembly groupBy on (trace_k1, trace_k2). Materializing the parsed spans
+once as a Spark bucketed table on exactly that key (Spark's bucket id
+``pmod(hash(trace_k1, trace_k2), n)``, the batch route's bucket_col in
+plans.checkpoint) makes every later pass over them — re-assembly under a
+new policy config (the common operation: rule updates arrive through
+operators.rule_store), force-rule re-evaluation, analytics — scan
+co-located buckets with NO exchange before the aggregation. This is the
+sandbox-available analog of the reference's Iceberg partition spec
+``bucket(trace_id, 16)``
 (/root/reference/src/storage/iceberg.rs:317-334), which serves the same
 role in its V2 storage design; sources/iceberg.py carries the gated
 Iceberg form of the same idea.
@@ -25,10 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from otel_tail_sampler_spark.operators.assembly import assemble_traces
-from otel_tail_sampler_spark.operators.parser import parse_spans_jvm
+from otel_tail_sampler_spark.operators.parser import TRACE_KEY, parse_spans_jvm
 from otel_tail_sampler_spark.operators.policies import SamplerConfig, decide
-
-BUCKET_KEYS = ["trace_k1", "trace_k2"]
 
 
 def materialize_parsed(
@@ -48,8 +48,8 @@ def materialize_parsed(
     writer = (
         parsed.write.mode("overwrite")
         .format("parquet")
-        .bucketBy(buckets, *BUCKET_KEYS)
-        .sortBy(*BUCKET_KEYS)
+        .bucketBy(buckets, *TRACE_KEY)
+        .sortBy(*TRACE_KEY)
     )
     if path is not None:
         writer = writer.option("path", path)

@@ -49,10 +49,12 @@ def main() -> None:
     section(
         "Flagship pipeline: routed output",
         "What to check: ONE pass — one parquet scan, one Exchange\n"
-        "hashpartitioning on (trace_k1, trace_k2, parse_ok) under one\n"
-        "Window, no join and no cached frame. The window computes only the\n"
-        "summary aggregates the policies read (count, max status, max\n"
-        "duration; Catalyst drops the rest) and decide() runs per row.\n"
+        "hashpartitioning on (trace_k1, trace_k2) (its partition is the\n"
+        "checkpoint's bucket_col) under one Window over (trace_k1,\n"
+        "trace_k2, parse_ok), no join and no cached frame. The window\n"
+        "computes only the summary aggregates the policies read (count,\n"
+        "max status, max duration; Catalyst drops the rest) and decide()\n"
+        "runs per row.\n"
         "ZERO Python stages (the decode is whole-stage-codegen expressions).",
         res.routed,
     )

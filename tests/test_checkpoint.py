@@ -16,7 +16,7 @@ from otel_tail_sampler_spark.operators.policies import (
     decision_labels,
 )
 from otel_tail_sampler_spark.plans import pipeline
-from otel_tail_sampler_spark.plans.checkpoint import CHECKPOINT
+from otel_tail_sampler_spark.plans.checkpoint import CHECKPOINT, bucket_col
 from otel_tail_sampler_spark.plans.pipeline import SINK_NAMES, run_and_write
 
 CFG = SamplerConfig(
@@ -168,6 +168,38 @@ def test_resume_with_another_config_raises(spark, small_dataset, tmp_path):
     assert snapshot() == before
 
 
+def test_unfinished_run_of_the_old_bucket_function_is_refused(
+    spark, small_dataset, tmp_path, one_shot
+):
+    """An unfinished checkpoint whose inputs lack the bucket keys was
+    written under the former bucket function (the trace key plus
+    parse_ok): resumed, its done buckets would hold other traces than the
+    resume's. It raises the inputs ValueError and writes nothing. Marked
+    finished, the same checkpoint starts over."""
+    src = small_dataset["tokenized"]
+    out = tmp_path / "out"
+    _forge_unfinished(one_shot, str(out), DONE)
+    path = out / CHECKPOINT
+    state = json.loads(path.read_text())
+    state["inputs"].pop("bucket_keys", None)
+    path.write_text(json.dumps(state))
+
+    def snapshot():
+        return {
+            str(f): (f.stat().st_mtime_ns, f.read_bytes())
+            for f in out.rglob("*") if f.is_file()
+        }
+
+    before = snapshot()
+    with pytest.raises(ValueError, match="unfinished run"):
+        run_and_write(spark, src, str(out), CFG)
+    assert snapshot() == before
+
+    path.write_text(json.dumps(dict(state, finished=True)))
+    run_and_write(spark, src, str(out), CFG)
+    assert _outputs(str(out)) == _outputs(one_shot)
+
+
 def test_partial_resume_completes_remaining(spark, small_dataset, tmp_path, one_shot):
     """A resume from a checkpoint that marks some buckets done writes only
     the others and leaves the done ones on disk as they were; the result
@@ -267,13 +299,18 @@ def test_marker_rewrite_replaces_whole(spark, tmp_path):
     assert read_marker(spark, path) == {"n": 22}
 
 
-def test_bucket_is_trace_aligned(one_shot):
-    """All spans of a trace share a bucket (decisions are per-trace), and a
-    one-shot run writes one file per (sink, bucket): the bucket is the
-    partition of the route's exchange."""
+def test_bucket_is_trace_aligned(spark, one_shot):
+    """Every routed row's bucket is bucket_col, Spark's bucket id on the
+    trace key, so all rows of a key share a bucket (decisions are
+    per-trace), and a one-shot run writes one file per (sink, bucket): the
+    bucket is the partition of the route's exchange."""
+    from pyspark.sql import functions as F
+
+    routed = spark.read.parquet(f"{one_shot}/routed")
+    assert routed.filter(F.col("bucket") != bucket_col(N_BUCKETS)).count() == 0
     split = duckdb.sql(
         "select count(*) from (select trace_k1, trace_k2 "
-        f"from {_routed(one_shot)} where parse_ok group by 1, 2 "
+        f"from {_routed(one_shot)} group by 1, 2 "
         "having count(distinct bucket) > 1)"
     ).fetchone()[0]
     assert split == 0

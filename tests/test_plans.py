@@ -42,27 +42,32 @@ def _final_plan_nodes(desc):
 
 def test_route_is_one_pass(spark, small_dataset, tmp_path):
     """The route reads the input once and shuffles it once: one parquet
-    scan, one hash exchange on the trace key (plus parse_ok, which keeps a
-    malformed row out of a real trace's window), no join and nothing
+    scan, one hash exchange on the trace key at the run's bucket count
+    (its partition is plans.checkpoint.bucket_col, and it satisfies the
+    window's clustering on the key plus parse_ok), no join and nothing
     cached. A second scan, a join back on the trace key or a cached
     decisions frame would each bring back a pass this plan removed.
 
-    The same holds for the routed write that run_and_write executes, the
-    first SQL execution of a fresh run, and for a resume with some buckets
-    done: there the exchange is planned at the checkpoint's bucket count
-    and the done-bucket filter sits below it."""
+    run_pipeline's routed frame, the routed write of a fresh run_and_write
+    (its first SQL execution) and that of a resume with some buckets done
+    plan the same exchange, ``hashpartitioning(trace_k1, trace_k2, n)`` at
+    the checkpoint's ``n``. Only the resume has the done-bucket filter,
+    below the exchange."""
     import re
 
     from otel_tail_sampler_spark.plans.pipeline import run_and_write
     from tests.test_checkpoint import DONE, _executed_plans, _forge_unfinished
 
+    def keys(args):
+        return [re.sub(r"#\d+L?$", "", k.strip()) for k in args.split(",")]
+
+    n = spark.conf.get("spark.sql.shuffle.partitions")
     res = run_pipeline(spark, small_dataset["tokenized"], E.ENTRY_CFG)
     plan = _explain(res.routed, "simple")
     assert plan.count("FileScan parquet") == 1, plan
     exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
     assert len(exchanges) == 1, plan
-    keys = [re.sub(r"#\d+L?$", "", k.strip()) for k in exchanges[0].split(",")]
-    assert keys[:-1] == ["trace_k1", "trace_k2", "parse_ok"], keys
+    assert keys(exchanges[0]) == ["trace_k1", "trace_k2", n], exchanges
     assert "Exchange" not in plan.replace("Exchange hashpartitioning", "", 1)
     for node in ("Join", "InMemoryRelation", "InMemoryTableScan"):
         assert node not in plan, (node, plan)
@@ -75,7 +80,6 @@ def test_route_is_one_pass(spark, small_dataset, tmp_path):
     }
     _forge_unfinished(fresh, resumed, DONE, cfg)
     key = "spark.sql.shuffle.partitions"
-    n = spark.conf.get(key)
     spark.conf.set(key, "3")  # the resume keeps the checkpoint's count
     try:
         writes["resumed"] = _executed_plans(
@@ -91,8 +95,7 @@ def test_route_is_one_pass(spark, small_dataset, tmp_path):
         ex = [i for i, nm in enumerate(names) if nm.startswith("Exchange")]
         assert len(ex) == 1, (kind, names)
         args = re.search(r"Arguments: hashpartitioning\(([^)]*)\)", nodes[ex[0]]).group(1)
-        keys = [re.sub(r"#\d+L?$", "", k.strip()) for k in args.split(",")]
-        assert keys == ["trace_k1", "trace_k2", "parse_ok", n], (kind, keys)
+        assert keys(args) == ["trace_k1", "trace_k2", n], (kind, args)
         for nm in names:
             for node in ("Join", "InMemoryRelation", "InMemoryTableScan"):
                 assert node not in nm, (kind, nm)

@@ -19,6 +19,7 @@ CFG = SamplerConfig(
     latency=LatencyPolicy(threshold_ms=4000, sample_rate=1.0),
     cardinality=CardinalityPolicy(max_span_count=100),
 )
+BUCKETS = 8
 
 
 @pytest.fixture(scope="module")
@@ -26,7 +27,7 @@ def silver_table(spark, small_dataset, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("silver") / "parsed")
     spark.sql("DROP TABLE IF EXISTS parsed_silver_test")
     S.materialize_parsed(
-        spark, small_dataset["tokenized"], "parsed_silver_test", buckets=8, path=path
+        spark, small_dataset["tokenized"], "parsed_silver_test", buckets=BUCKETS, path=path
     )
     yield "parsed_silver_test"
     spark.sql("DROP TABLE IF EXISTS parsed_silver_test")
@@ -36,6 +37,23 @@ def test_silver_roundtrip_counts(spark, silver_table, small_dataset):
     raw = spark.read.parquet(small_dataset["tokenized"])
     assert spark.table(silver_table).count() == raw.count()
     assert "tokens" not in spark.table(silver_table).columns
+
+
+def test_silver_layout_is_bucket_col(spark, silver_table):
+    """The silver table and the batch route share one bucket function:
+    every row's bucket id, parsed from its file name the way Spark reads
+    it back, equals plans.checkpoint.bucket_col on that row."""
+    from otel_tail_sampler_spark.plans.checkpoint import bucket_col
+
+    rows = spark.table(silver_table).select(
+        F.regexp_extract("_metadata.file_name", r".*_(\d+)(?:\..*)?$", 1)
+        .cast("int")
+        .alias("file_bucket"),
+        bucket_col(BUCKETS).alias("bucket"),
+    )
+    assert rows.filter(F.col("file_bucket").isNull()).count() == 0
+    assert rows.filter(F.col("file_bucket") != F.col("bucket")).count() == 0
+    assert rows.select("bucket").distinct().count() > 1
 
 
 def test_assembly_exchange_disappears(spark, silver_table, small_dataset):
